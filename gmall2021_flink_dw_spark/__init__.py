@@ -20,3 +20,12 @@ docstrings are parity pointers (file:line in /root/reference) only.
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# Inside a PySpark worker only: stop every task from re-reading the
+# unchanged pyspark.zip / spark-core jar directories (worker_imports.py).
+if _sys.version_info < (3, 13) and "pyspark.worker" in _sys.modules:
+    from gmall2021_flink_dw_spark import worker_imports as _worker_imports
+
+    _worker_imports.install()

@@ -123,15 +123,16 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inserts no further exchange — measured 2.1x over the naive two-
     # shuffle form at sf0.1, and strictly half the shuffle IO at 100 TB.
     # (Partial map-side agg is useless here anyway: (day, sku, orderkey)
-    # is nearly unique per fact row.) Day-wide tumbling windows of a DATE
-    # column are the date itself, so the window struct reduces to
-    # l_shipdate with edt = date_add(1).
+    # is nearly unique per fact row.) A day-wide tumbling window is the
+    # calendar day of l_shipdate (time of day dropped), so the window
+    # struct reduces to that date with edt = date_add(1).
     # The part dim joins AFTER both phases: p_brand is functionally
     # dependent on l_partkey, so enriching the (day, sku) result rows
     # beats dragging the brand string through the fact-row shuffle.
     pre = (
-        li.repartition(F.col("l_shipdate"), F.col("l_partkey"))
-        .groupBy("l_shipdate", "l_partkey", "l_orderkey")
+        li.withColumn("day", F.to_date("l_shipdate"))
+        .repartition(F.col("day"), F.col("l_partkey"))
+        .groupBy("day", "l_partkey", "l_orderkey")
         .agg(
             F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("_qty"),
             F.sum(
@@ -142,7 +143,7 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        pre.groupBy("l_shipdate", "l_partkey")
+        pre.groupBy("day", "l_partkey")
         .agg(
             F.sum("_qty").cast("double").alias("sku_num"),
             F.sum("_amount").cast("double").alias("order_amount"),
@@ -151,9 +152,9 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(part), F.col("l_partkey") == part.p_partkey)
         .select(
-            F.date_format("l_shipdate", "yyyy-MM-dd HH:mm:ss").alias("stt"),
+            F.date_format("day", "yyyy-MM-dd HH:mm:ss").alias("stt"),
             F.date_format(
-                F.date_add("l_shipdate", 1), "yyyy-MM-dd HH:mm:ss"
+                F.date_add("day", 1), "yyyy-MM-dd HH:mm:ss"
             ).alias("edt"),
             "l_partkey",
             "p_brand",

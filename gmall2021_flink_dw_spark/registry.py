@@ -101,81 +101,73 @@ def register(
 # commit (VERDICT r04 item 1: the handover state must be green; the
 # forcing function moves to the start-of-round bump, asserted by
 # test_window_round_is_bumped).
-_WINDOW_ROUND = 14
+_WINDOW_ROUND = 15
 
-# r14 window (VERDICT r13 item 1): executes the rebuild the r13 judge
-# mandated, led by the 25-name list pre-committed in r13 (commit
-# 8f51e25). Census entering r14: 159 registered queries (held, VERDICT
-# r13 item 7); staleness bound stays at ceil(159/50) - 1 = 3
-# successful driver rounds.
+# r15 window, rebuilt late: round 15 ran on the r14 window, so the 9
+# names spilled from r14 still lead. Census 159 registered queries;
+# staleness bound ceil(159/50) - 1 = 3 successful driver rounds.
 #
-# Layout: (a) the 25 names whose newest driver row is r10, effective
-# staleness 3 entering r14, AT the bound (spilled from the r13
-# rebuild, pre-committed there to lead this one): the 17 TPC-H shapes
-# plus sample_leakage_free_split, dws_keyword_stats_zh,
-# cdc_asof_enrich, dws_funnel_conversion, dws_retention_cohorts,
-# ads_top_parts_per_brand, dws_sales_rollup, ads_order_quantiles;
-# (b) the remaining 25 slots fill from the 34-name r11 cohort in
-# registration order. The 9 r11 names that do not fit sit at
-# effective staleness 3 after r14 (exactly the bound, still legal)
-# and MUST lead the r15 rebuild: cdc_scd2, streaming_visitor_stats,
-# streaming_exact_distinct, streaming_interval_join,
-# streaming_session_window, streaming_keyword_stats,
-# dws_keyword_stats, dws_visitor_stats, dws_product_stats.
+# Layout: (a) the 9 names whose newest driver row is r11, over the
+# bound without a slot; (b) the r12 cohort in registration order, 41
+# of its 50 names. The 9 r12 names that do not fit sit at effective
+# staleness 3 (exactly the bound) and MUST lead the next rebuild:
+# dwm_session_stats, dwm_order_wide, dwm_order_wide_missdrop,
+# dwm_payment_wide, ads_gmv_by_day, ads_top_brands, ads_top_types,
+# ads_top_parts, dws_sales_cube.
 _DRIVER_WINDOW = (
-    # (a) newest driver row r10, at the staleness bound of 3
-    "sample_leakage_free_split",
-    "dws_keyword_stats_zh",
-    "cdc_asof_enrich",
-    "dws_funnel_conversion",
-    "dws_retention_cohorts",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q4_semi",
-    "tpch_q16_anti",
-    "tpch_q12_caseagg",
-    "tpch_q14_promo",
-    "tpch_q18_bigorders",
-    "tpch_q19_disjunct",
-    "ads_top_parts_per_brand",
-    "dws_sales_rollup",
-    "ads_order_quantiles",
-    "tpch_q2_mincost",
-    "tpch_q8_marketshare",
-    "tpch_q9_profit",
-    "tpch_q11_importance",
-    "tpch_q13_custdist",
-    "tpch_q17_smallqty",
-    "tpch_q21_waiting",
-    "tpch_q22_inactive",
-    "tpch_q20_excess",
-    # (b) the r11 cohort, registration order; the 9 spilled names
-    # listed above MUST lead the r15 rebuild
-    "text_stats",
-    "lang_id",
-    "dedup_exact",
-    "multimodal_decode",
-    "multimodal_decode_real",
-    "quality_classifier",
-    "text_perplexity",
-    "sample_hash_bucket",
-    "dedup_embedding_lsh",
-    "multimodal_embed",
-    "sample_curriculum_rank",
-    "streaming_dedup_ingest",
-    "corpus_length_histogram",
-    "corpus_filter_pipeline",
-    "sample_ccnet_buckets",
-    "dedup_substring_clean_hashed",
-    "dedup_substring_keepfirst_hashed",
-    "tokenizer_train_bpe",
-    "tokenizer_apply_bpe",
-    "tokenizer_tokenize_docs",
-    "cdc_changelog",
-    "cdc_route",
-    "cdc_route_projected",
-    "cdc_snapshot_at",
-    "cdc_dim_snapshot",
+    # (a) newest driver row r11
+    "cdc_scd2",
+    "streaming_visitor_stats",
+    "streaming_exact_distinct",
+    "streaming_interval_join",
+    "streaming_session_window",
+    "streaming_keyword_stats",
+    "dws_keyword_stats",
+    "dws_visitor_stats",
+    "dws_product_stats",
+    # (b) the r12 cohort, registration order; the 9 spilled names
+    # listed above MUST lead the next rebuild
+    "multimodal_decode_jpeg_ac",
+    "multimodal_audio_features",
+    "multimodal_image_stats",
+    "dedup_substring_spans",
+    "dedup_substring_clean",
+    "sample_weighted",
+    "dedup_substring_clean_keepfirst",
+    "source_jsonl_events",
+    "source_orc_events",
+    "source_csv_docs",
+    "text_normalize",
+    "shard_balance",
+    "source_schema_evolution",
+    "lake_compact_events",
+    "dws_event_pivot",
+    "ads_gmv_trailing_7d",
+    "source_variant_props",
+    "text_heavy_hitters",
+    "vocab_coverage",
+    "lake_zorder_layout",
+    "embedding_gram",
+    "cdc_incremental_agg",
+    "streaming_hopping_stats",
+    "streaming_topic_router",
+    "streaming_late_data_drop",
+    "streaming_dws_sink",
+    "streaming_gmv_dashboard",
+    "streaming_gmv_update_log",
+    "dws_keyword_stats_udf",
+    "dws_province_stats",
+    "dws_product_stats_approx",
+    "dws_order_quantiles_approx",
+    "dws_promo_window_stats",
+    "dws_visitor_stats_compat",
+    "dws_event_measures",
+    "dwd_clean_events",
+    "kafka_wire_events",
+    "dwd_event_split_counts",
+    "dwm_unique_visit",
+    "dwd_new_user_flag",
+    "dwm_user_jump",
 )
 
 # Queries registered AFTER the upcoming round's 50-slot window filled.

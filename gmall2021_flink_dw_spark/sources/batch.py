@@ -13,6 +13,7 @@ storage; the loader API is path-based so that swap is a config change.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,15 +115,17 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     if env is not None:
         target = int(env)
     else:
-        per_part = int(
-            float(os.environ.get("SPARK_GRAFT_SPREAD_MB", "1"))
-            * SPREAD_BYTES_PER_PART
-        )
+        spread_mb = float(os.environ.get("SPARK_GRAFT_SPREAD_MB", "1"))
+        if not spread_mb > 0:
+            raise ValueError(
+                f"SPARK_GRAFT_SPREAD_MB must be > 0 MB per partition, "
+                f"got {spread_mb}"
+            )
+        per_part = max(1, int(spread_mb * SPREAD_BYTES_PER_PART))
         try:
             total = 0
             for uri in df.inputFiles():
-                path = uri[7:] if uri.startswith("file:") else uri
-                total += os.path.getsize(path)
+                total += os.path.getsize(unquote(urlparse(uri).path))
         except Exception:
             return df
         target = min(sc.defaultParallelism * factor, total // per_part)

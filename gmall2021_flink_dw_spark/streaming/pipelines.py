@@ -85,7 +85,8 @@ def product_stats_transform(df: DataFrame, window_s: int = 3600) -> DataFrame:
     )
 
 
-_MEMORY_CKPTS: list[str] = []
+# checkpoint dir -> the query writing it (None until start() returns)
+_MEMORY_CKPTS: dict[str, StreamingQuery | None] = {}
 
 
 def run_to_memory(
@@ -99,8 +100,9 @@ def run_to_memory(
     The checkpoint goes under scratch.stream_scratch_base() (r14):
     without an explicit location Spark creates the temp checkpoint under
     java.io.tmpdir, whose per-batch WAL/commit fsyncs cost ~1 s of pure
-    latency per replay on this box's ext4 /tmp (see scratch.py). Same
-    reclaim-at-next-call lifecycle as the topic scratch dirs.
+    latency per replay on this box's ext4 /tmp (see scratch.py). Each
+    call reclaims the checkpoints of earlier calls whose query has
+    stopped; a still-running query keeps its checkpoint.
 
     final_flush=False (r15, guide §1/§2 — measure first, then remove
     the pass): skip the trailing NO-DATA micro-batch
@@ -123,11 +125,12 @@ def run_to_memory(
 
     from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 
-    for stale in list(_MEMORY_CKPTS):
-        shutil.rmtree(stale, ignore_errors=True)
-        _MEMORY_CKPTS.remove(stale)
+    for stale, prev in list(_MEMORY_CKPTS.items()):
+        if prev is None or not prev.isActive:
+            shutil.rmtree(stale, ignore_errors=True)
+            del _MEMORY_CKPTS[stale]
     ckpt = tempfile.mkdtemp(prefix=f"memckpt_{name}_", dir=stream_scratch_base())
-    _MEMORY_CKPTS.append(ckpt)
+    _MEMORY_CKPTS[ckpt] = None
     atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
     spark = stream_df.sparkSession
     conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -147,6 +150,7 @@ def run_to_memory(
             # the query captured a CLONED conf at start; restoring here
             # cannot re-enable no-data batches for the running query
             spark.conf.set(conf_key, orig)
+    _MEMORY_CKPTS[ckpt] = q
     q.processAllAvailable()
     return q
 

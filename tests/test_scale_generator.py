@@ -9,7 +9,13 @@ from __future__ import annotations
 import numpy as np
 import pyarrow.parquet as pq
 
-from tools.gen_scale_data import gen_documents, gen_embeddings, gen_orders
+from tools.gen_scale_data import (
+    gen_documents,
+    gen_embeddings,
+    gen_lineitem,
+    gen_orders,
+    gen_part,
+)
 
 
 def test_documents_match_driver_distributions():
@@ -57,3 +63,32 @@ def test_generator_is_deterministic():
     a = gen_documents(np.random.default_rng(71), 300)
     b = gen_documents(np.random.default_rng(71), 300)
     assert a.equals(b)
+
+
+def test_product_stats_parity_on_generated_lineitem(spark, tmp_path):
+    """gen_lineitem emits l_shipdate with a time of day (the driver data
+    is all midnights): dws_product_stats must still bucket by calendar
+    day, exactly as its DuckDB oracle does."""
+    import duckdb
+
+    from gmall2021_flink_dw_spark.registry import load_all
+    from tests.test_oracle_parity import canon
+
+    rng = np.random.default_rng(71)
+    tables = {
+        "lineitem": gen_lineitem(rng, 400, 5, 10),
+        "part": gen_part(rng, 5),
+    }
+    shipdate = tables["lineitem"].column("l_shipdate").to_numpy()
+    assert (shipdate != shipdate.astype("datetime64[D]")).any()
+    con = duckdb.connect()
+    for name, t in tables.items():
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(t, path)
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+    spec = load_all()["dws_product_stats"]
+    got = canon(spec.fn(spark, str(tmp_path)).toPandas())
+    want = canon(con.execute(spec.oracle).df())
+    con.close()
+    assert len(got) == len(want)
+    assert (got.astype(str).values == want.astype(str).values).all()

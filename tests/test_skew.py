@@ -58,8 +58,13 @@ def test_aqe_splits_skewed_join(spark, skew_confs):
     right = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
+    # sum(length(pay)) keeps the payload live: otherwise column pruning
+    # drops it before the shuffle, and at a few map splits the hot
+    # partition compresses under the skew threshold
     joined = left.join(right, "k").groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv")
+        F.count(F.lit(1)).alias("n"),
+        F.sum("v").alias("sv"),
+        F.sum(F.length("pay")).alias("pay_len"),
     )
     [row] = joined.collect()  # execute so AQE finalizes the plan
     assert row.n == 40_000

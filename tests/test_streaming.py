@@ -703,3 +703,39 @@ def test_uv_dedup_no_final_flush_parity(spark):
     assert spark.conf.get(key) == before
     assert len(out[True]) > 0
     pd.testing.assert_frame_equal(out[True], out[False])
+
+
+def test_run_to_memory_keeps_running_queries_checkpoints(spark):
+    """run_to_memory reclaims only checkpoints of stopped queries: a
+    second call must not delete the first, still-running query's
+    checkpoint. Both queries then take a newly landed file."""
+    import os
+
+    events = load_table(spark, SF, "events").select("event_id", "user_id")
+    src = tempfile.mkdtemp(prefix="memckpt_live_")
+    queries = []
+    try:
+        events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
+            os.path.join(src, "b1")
+        )
+        schema = spark.read.parquet(os.path.join(src, "b1")).schema
+        for name in ("memlive_a", "memlive_b"):
+            stream = spark.readStream.schema(schema).parquet(
+                os.path.join(src, "b*")
+            )
+            queries.append(run_to_memory(stream, name))
+        events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
+            os.path.join(src, "b2")
+        )
+        for q in queries:
+            q.processAllAvailable()
+        assert all(q.isActive for q in queries)
+        want = _canon(events.toPandas())
+        for name in ("memlive_a", "memlive_b"):
+            pd.testing.assert_frame_equal(
+                _canon(spark.table(name).toPandas()), want
+            )
+    finally:
+        for q in queries:
+            q.stop()
+        shutil.rmtree(src, ignore_errors=True)

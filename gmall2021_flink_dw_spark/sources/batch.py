@@ -79,7 +79,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # Size-derived spread width: one round-robin partition per this many
 # input bytes (env-tunable). Calibrated by a 3-way intra-session A/B
-# (r15, plans/r15/dedup_skew_audit.txt + OPTIMIZATION_r15.md): the
+# (r15, OPTIMIZATION_r15.md "Dedup-family skew audit"): the
 # per-row compute of the tokenize/shingle/kernel stages is ~1-2 MB/s
 # per core, so ~1 MB per task amortizes the exchange + task-scheduling
 # overhead at every SF tested — at sf0.1 (0.6 MB corpus) the policy
@@ -108,30 +108,23 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     exchange-free and real-scale scans are untouched. Batch-only:
     streaming frames cannot enumerate input files pre-execution."""
     sc = df.sparkSession.sparkContext
-    # parameterised (optimization-round rule: scale-dependent settings
-    # stay conf/env-tunable): SPARK_GRAFT_SPREAD_PARTS forces a width
-    # (0 disables); SPARK_GRAFT_SPREAD_MB re-tunes bytes-per-partition.
-    env = os.environ.get("SPARK_GRAFT_SPREAD_PARTS")
-    if env is not None:
-        target = int(env)
-    else:
-        spread_mb = float(os.environ.get("SPARK_GRAFT_SPREAD_MB", "1"))
-        if not spread_mb > 0:
-            raise ValueError(
-                f"SPARK_GRAFT_SPREAD_MB must be > 0 MB per partition, "
-                f"got {spread_mb}"
-            )
-        per_part = max(1, int(spread_mb * SPREAD_BYTES_PER_PART))
-        try:
-            total = 0
-            for uri in df.inputFiles():
-                total += os.path.getsize(unquote(urlparse(uri).path))
-        except Exception:
-            return df
-        target = min(sc.defaultParallelism * factor, total // per_part)
-    if target <= 1:
+    # SPARK_GRAFT_SPREAD_MB re-tunes bytes-per-partition.
+    spread_mb = float(os.environ.get("SPARK_GRAFT_SPREAD_MB", "1"))
+    if not spread_mb > 0:
+        raise ValueError(
+            f"SPARK_GRAFT_SPREAD_MB must be > 0 MB per partition, "
+            f"got {spread_mb}"
+        )
+    per_part = max(1, int(spread_mb * SPREAD_BYTES_PER_PART))
+    try:
+        total = sum(
+            os.path.getsize(unquote(urlparse(uri).path))
+            for uri in df.inputFiles()
+        )
+    except OSError:  # non-local or vanished input: leave the scan as is
         return df
-    if df.rdd.getNumPartitions() < target:
+    target = min(sc.defaultParallelism * factor, total // per_part)
+    if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 

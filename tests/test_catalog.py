@@ -1,170 +1,14 @@
-"""CATALOG.md lockstep + driver-window rotation invariants.
-
-The VERDICT r03 finding: five queries landed after the 50-entry driver
-window filled and went three rounds with zero driver evidence. These
-tests turn the rotation discipline from a comment in registry.py into
-an asserted invariant: projecting the upcoming round's _DRIVER_WINDOW
-onto the CORRECTNESS history, no registered query may be more than 2
-rounds stale, and nothing outside the window may be stale enough to
-have been forgotten.
-
-Round-boundary lifecycle (VERDICT r04 item 1): the driver writes
-CORRECTNESS_r{N}.json AFTER the builder's last r{N} commit, so tests
-that read all artifacts on disk necessarily fail in the handover state.
-Fix: registry._WINDOW_ROUND pins the round the committed window targets,
-and these tests (plus CATALOG.md generation) count only artifacts from
-rounds < _WINDOW_ROUND — the artifact for the window's own round is the
-NEXT round's input. The forcing function moves to the start-of-round
-bump: test_window_round_is_bumped goes red only if a round starts
-without rebuilding the window.
-"""
+"""CATALOG.md lockstep: the committed catalog equals what
+tools/gen_catalog.py renders from the registry."""
 
 from __future__ import annotations
 
-import glob
-import os
-import re
-
-from gmall2021_flink_dw_spark.registry import (
-    _DRIVER_WINDOW,
-    _PENDING_FIRST_WINDOW,
-    _WINDOW_ROUND,
-    load_all,
-)
-
-# Staleness bound: how many SUCCESSFUL driver rounds a query may go
-# without a fresh row. The driver records a 50-entry prefix per round,
-# so a census of N registered queries cannot cycle faster than
-# ceil(N/50) rounds — the bound is structural, not a preference:
-# at 150 queries the old bound of 2 was exactly feasible; the r09
-# census (152) exceeds 3x50, so the feasible bound is
-# ceil(N/50) - 1 = 3. Floored at 2 so shrinking the registry never
-# silently loosens expectations below the historical bound.
-def _max_staleness() -> int:
-    import math
-
-    return max(2, math.ceil(len(load_all()) / 50) - 1)
-
-
-MAX_STALENESS = _max_staleness()
+import tools.gen_catalog as g
 
 
 def test_catalog_is_current():
-    import tools.gen_catalog as g
-
-    with open("CATALOG.md") as f:
+    with open(g.CATALOG) as f:
         on_disk = f.read()
     assert on_disk == g.render(), (
         "CATALOG.md is stale — run: python tools/gen_catalog.py"
     )
-
-
-def test_window_is_driver_prefix_sized():
-    reg = load_all()
-    assert len(_DRIVER_WINDOW) == 50, len(_DRIVER_WINDOW)
-    assert list(reg)[:50] == list(_DRIVER_WINDOW)
-    assert len(set(_DRIVER_WINDOW)) == 50, "duplicate window entries"
-
-
-def test_window_round_is_bumped():
-    """_WINDOW_ROUND must be at least (newest artifact round): an
-    artifact from a round NEWER than the committed window means a round
-    started without rebuilding _DRIVER_WINDOW — bump _WINDOW_ROUND in
-    registry.py, rebuild the window, and regenerate CATALOG.md as the
-    round's first commit. An artifact whose round == _WINDOW_ROUND is
-    the expected end-of-round driver drop and stays green."""
-    newest = 0
-    for path in glob.glob(os.path.join(os.getcwd(), "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if m:
-            newest = max(newest, int(m.group(1)))
-    assert _WINDOW_ROUND >= newest, (
-        f"CORRECTNESS_r{newest:02d}.json is newer than the committed "
-        f"window (round {_WINDOW_ROUND}) — rebuild _DRIVER_WINDOW for "
-        f"round {newest + 1} and run: python tools/gen_catalog.py"
-    )
-
-
-def test_no_query_exceeds_staleness_bound():
-    """With the upcoming round's window applied, every query's driver
-    row is at most MAX_STALENESS SUCCESSFUL driver rounds old. Queries
-    in the window are projected to get a row in round _WINDOW_ROUND;
-    everything else keeps its newest recorded row from rounds <
-    _WINDOW_ROUND. Distance is measured in the sequence of rounds whose
-    artifact actually has rows (gen_catalog.successful_rounds): a
-    crashed driver run (r08 — empty ``{}`` artifact) refreshed nothing
-    and is skipped, otherwise one lost round leaves more stale queries
-    than window slots forever. A failure here means the window rebuild
-    neglected a query — fix _DRIVER_WINDOW, not this test."""
-    import tools.gen_catalog as g
-
-    reg = load_all()
-    rounds = g.driver_rounds()  # counts rounds < _WINDOW_ROUND only
-    upcoming = _WINDOW_ROUND
-    # Effective index: position in the successful-round sequence, with
-    # the upcoming round projected as the next success. Never-seen
-    # queries get index 0 (always stale unless windowed).
-    seq = g.successful_rounds() + [upcoming]
-    eff = {rnd: i for i, rnd in enumerate(seq, start=1)}
-    window = set(_DRIVER_WINDOW)
-    stale = {}
-    for name in reg:
-        if name in _PENDING_FIRST_WINDOW:
-            continue  # projected to _WINDOW_ROUND + 1, checked below
-        projected = upcoming if name in window else rounds.get(name, 0)
-        if eff[upcoming] - eff.get(projected, 0) > MAX_STALENESS:
-            stale[name] = rounds.get(name, None)
-    assert not stale, (
-        f"queries left > {MAX_STALENESS} successful driver rounds "
-        f"without a row (name -> newest row): {stale}"
-    )
-
-
-def test_pending_first_window_is_small_and_genuine():
-    """_PENDING_FIRST_WINDOW is the escape hatch for queries registered
-    after the upcoming window's 50 slots filled: each name must be
-    registered, must NOT be in the window (else the exemption is
-    stale), must have no driver evidence yet (else it doesn't need the
-    exemption), and the list stays small — it represents at most one
-    extra round of waiting, so letting it grow would recreate the
-    VERDICT r03 rotation hole the window tests exist to prevent."""
-    import tools.gen_catalog as g
-
-    reg = load_all()
-    rounds = g.driver_rounds()
-    assert len(_PENDING_FIRST_WINDOW) <= 5
-    for name in _PENDING_FIRST_WINDOW:
-        assert name in reg, f"{name}: pending but not registered"
-        assert name not in _DRIVER_WINDOW, f"{name}: already windowed"
-        assert name not in rounds, f"{name}: already has driver evidence"
-
-
-def test_census_governor_capacity_arithmetic():
-    """Pin the capacity() arithmetic (VERDICT r09 item 6) and fail CI
-    the moment the census would push the staleness bound past 3 — the
-    r10 level. Growing past 200 registered queries means a query can
-    legally wait FOUR successful driver rounds between checks; that is
-    a policy decision, not a side effect of adding one more query, so
-    the grower must consciously raise this pin together with a new
-    window pre-commitment in registry.py."""
-    import tools.gen_catalog as g
-
-    # arithmetic pins: bound floors at 2, steps at multiples of 50
-    assert g.capacity(100) == (2, 50)
-    assert g.capacity(150) == (2, 0)
-    assert g.capacity(151) == (3, 49)
-    assert g.capacity(200) == (3, 0)
-    assert g.capacity(201) == (4, 49)
-
-    n = len(load_all())
-    bound, headroom = g.capacity(n)
-    assert bound <= 3, (
-        f"census {n} pushes the staleness bound to {bound}; raise the "
-        "policy pin consciously (registry.py window pre-commitment + "
-        "this test) or retire queries"
-    )
-    # the CATALOG header must surface the governor's numbers
-    with open(os.path.join(os.path.dirname(g.__file__), os.pardir,
-                           "CATALOG.md")) as f:
-        head = f.read(2000)
-    assert f"census {n}" in head and f"headroom {headroom}" in head

@@ -64,7 +64,6 @@ def canon(df):
 # one per execution family: codegen agg over events (ts handling),
 # Arrow pandas-UDF (worker import), stateful streaming (watermark type),
 # foreachBatch delta-log (temp-dir lifecycle), composed multi-window DAG
-# (the r04 driver-window head)
 for name in ("dws_visitor_stats", "dws_keyword_stats_udf", "streaming_uv_dedup",
              "streaming_cdc_upsert", "corpus_train_pipeline"):
     got = canon(qs[name](spark, "/root/testdata/sf0.01").toPandas())

@@ -1,16 +1,15 @@
 """Spark-vs-DuckDB oracle parity — the same gate the driver runs.
 
-For every registered query with an oracle: run the Spark plan and the
-DuckDB SQL on the same parquet tables, canonicalize (columns sorted by
-name, rows sorted by all columns), and require exact equality. Floats are
-compared exactly on purpose: the determinism rules in registry.py are
-supposed to make them bit-identical, and any drift should fail here
-before it fails at the driver.
+For every registered query with an oracle, in registration order: run
+the Spark plan and the DuckDB SQL on the same parquet tables,
+canonicalize (columns sorted by name, rows sorted by all columns), and
+require exact equality. Floats are compared exactly on purpose: the
+determinism rules in registry.py are supposed to make them
+bit-identical, and any drift should fail here before it fails at the
+driver.
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 import pytest
@@ -21,57 +20,6 @@ from tests.conftest import ORACLE_SF
 REGISTRY = load_all()
 WITH_ORACLE = [n for n, s in REGISTRY.items() if s.oracle is not None]
 ROWS_ONLY = [n for n, s in REGISTRY.items() if s.oracle is None]
-
-# Tiering (VERDICT r14 item 2): the driver's pytest gate timed out at
-# 96% on a degraded box — a gate that can't finish isn't run. This
-# module is, by design, a per-query duplicate of the driver's OWN
-# DuckDB correctness gate (same oracles, same canonicalization), so it
-# is the blessed module to tier: by default only a cross-family smoke
-# subset runs (the parity MACHINERY plus one representative per query
-# family stays exercised); the full 160-query sweep runs with
-# SPARK_GRAFT_FULL_TESTS=1 (CI / pre-commit for plan-touching changes).
-FULL_TIER = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
-
-# One representative per family / execution machinery: TPC-H scan-agg
-# and multi-join, DW layer, windowed DWS, dedup sketch (recall_checked
-# + Arrow kernel), hashed substring spans, streaming stateful kernel,
-# streaming watermark closure (restaged r14/r15), CDC routing, text-LM
-# sampling + multi-stage corpus pipeline, tokenizer, multimodal codec.
-SMOKE = {
-    "tpch_q6",
-    "tpch_q9_profit",
-    "dwm_order_wide",
-    "dws_product_stats",
-    "dedup_simhash",
-    "dedup_substring_spans_hashed",
-    "streaming_jump_detect",
-    "streaming_late_data_drop",
-    "cdc_route",
-    "sample_ccnet_buckets",
-    "corpus_filter_pipeline",
-    "tokenizer_train_bpe",
-    "multimodal_decode_real",
-}
-
-PARAMS = [
-    n
-    if (FULL_TIER or n in SMOKE)
-    else pytest.param(
-        n,
-        marks=pytest.mark.skip(
-            reason="full-tier oracle-parity duplicate of the driver's "
-            "DuckDB gate (VERDICT r14 item 2); set "
-            "SPARK_GRAFT_FULL_TESTS=1 to run all"
-        ),
-    )
-    for n in WITH_ORACLE
-]
-
-
-def test_smoke_names_are_registered():
-    missing = SMOKE - set(WITH_ORACLE)
-    assert not missing, f"SMOKE names not registered/oracled: {missing}"
-
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -87,7 +35,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-@pytest.mark.parametrize("name", PARAMS)
+@pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_parity(spark, duck, name):
     spec = REGISTRY[name]
     got = canon(spec.fn(spark, ORACLE_SF).toPandas())

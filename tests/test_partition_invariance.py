@@ -97,48 +97,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-# Tiering (VERDICT r14 item 2, same contract as test_oracle_parity):
-# each entry here re-runs a full query twice at sf0.01, so the sweep is
-# one of the gate's biggest line items. By default run the subset whose
-# MECHANISMS are the distinct layout-leak risks (partition-id-derived
-# ranks, per-partition offset synthesis, iterative argmax, CC
-# iteration, batch-boundary kernels, byte reassembly, file round trip,
-# monotonically_increasing_id); the full 30-query sweep runs with
-# SPARK_GRAFT_FULL_TESTS=1.
-import os  # noqa: E402
-
-FULL_TIER = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
-SMOKE = {
-    "dws_salted_agg",
-    "sample_curriculum_rank",
-    "kafka_wire_events",
-    "dedup_clusters",
-    "tokenizer_train_bpe",
-    "multimodal_decode_real",
-    "dedup_substring_clean",
-    "streaming_dws_sink",
-    "corpus_filter_pipeline",
-}
-
-PARAMS = [
-    n
-    if (FULL_TIER or n in SMOKE)
-    else pytest.param(
-        n,
-        marks=pytest.mark.skip(
-            reason="full-tier invariance sweep (VERDICT r14 item 2); "
-            "set SPARK_GRAFT_FULL_TESTS=1 to run all"
-        ),
-    )
-    for n in INVARIANT_QUERIES
-]
-
-
-def test_smoke_subset_is_registered():
-    assert SMOKE <= set(INVARIANT_QUERIES)
-
-
-@pytest.mark.parametrize("name", PARAMS)
+@pytest.mark.parametrize("name", INVARIANT_QUERIES)
 def test_partition_count_invariance(spark, name):
     fn = REGISTRY[name].fn
     base = canon(fn(spark, ORACLE_SF).toPandas())

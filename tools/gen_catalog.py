@@ -2,139 +2,49 @@
 
 Run: python tools/gen_catalog.py
 The catalog is the user-facing index of every registered query — name,
-tags, one-line summary, oracle status, and the newest round in which the
-GRADING DRIVER recorded a green CORRECTNESS row for it — kept in
-lockstep with the code by regenerating instead of hand-editing
-(tests/test_catalog.py asserts it is current, and asserts the rotation
-invariant: with the upcoming round's _DRIVER_WINDOW applied, no query's
-driver row is ever more than 2 rounds stale).
+tags, one-line summary and oracle status, in registration order. It is
+a pure function of the registry, kept in lockstep with the code by
+regenerating instead of hand-editing (tests/test_catalog.py asserts it
+is current).
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-from gmall2021_flink_dw_spark.registry import _WINDOW_ROUND, load_all
+from gmall2021_flink_dw_spark.registry import load_all
 
-
-def driver_rounds(through: int | None = None) -> dict[str, int]:
-    """name -> newest round with a driver CORRECTNESS row (parsed from
-    the CORRECTNESS_r*.json artifacts the driver writes each round).
-
-    ``through`` bounds which artifacts count (rounds > through are
-    ignored). The default is ``_WINDOW_ROUND - 1``: the catalog and the
-    rotation tests describe the state the current window was built FROM,
-    so the artifact the driver writes for the window's own round —
-    which lands after the builder's last commit — does not flip the
-    committed tree red (VERDICT r04 item 1)."""
-    if through is None:
-        through = _WINDOW_ROUND - 1
-    newest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if rnd > through:
-            continue
-        with open(path) as f:
-            for name in json.load(f):
-                newest[name] = max(newest.get(name, 0), rnd)
-    return newest
-
-
-def successful_rounds(through: int | None = None) -> list[int]:
-    """Sorted rounds whose driver CORRECTNESS artifact has >= 1 row.
-
-    A crashed driver run (e.g. r08: load_all() raised before any query
-    ran, leaving an empty ``{}`` artifact) provides no freshness
-    evidence and consumes no rotation capacity, so the staleness
-    invariant (tests/test_catalog.py) counts distance in THIS sequence
-    rather than in calendar rounds — otherwise one lost round makes the
-    bound permanently unsatisfiable (76 stale queries, 50 slots)."""
-    if through is None:
-        through = _WINDOW_ROUND - 1
-    out = []
-    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if rnd > through:
-            continue
-        with open(path) as f:
-            if json.load(f):
-                out.append(rnd)
-    return out
-
-
-def capacity(n: int) -> tuple[int, int]:
-    """Census governor (VERDICT r09 item 6): the driver refreshes a
-    50-query prefix per successful round, so a census of n queries
-    forces a staleness bound of max(2, ceil(n/50) - 1) rounds. Returns
-    (bound at census n, headroom = how many more registrations keep
-    that bound). Growth past the headroom is a conscious trade — the
-    CATALOG header surfaces it and tests/test_catalog.py fails CI when
-    a round would push the bound past 3 (the r10 level)."""
-    import math
-
-    bound = max(2, math.ceil(n / 50) - 1)
-    ceiling = 50 * (bound + 1)  # largest census that keeps this bound
-    return bound, ceiling - n
+CATALOG = os.path.join(_REPO, "CATALOG.md")
 
 
 def render() -> str:
     reg = load_all()
-    rounds = driver_rounds()
-    latest = max(rounds.values(), default=0)
     lines = [
         "# CATALOG — every registered query",
         "",
         f"{len(reg)} queries; each pairs a Spark callable "
         "`(spark, sf_dir) -> DataFrame` with a DuckDB oracle "
         "(tests/test_oracle_parity.py = the driver's gate). "
-        f"'Driver' = newest round (of {latest} counted — artifacts "
-        f"from r{_WINDOW_ROUND} onward are the upcoming window's "
-        "input, not this catalog's) whose driver CORRECTNESS artifact "
-        "has a row for the query; 'next' = front-loaded in round "
-        f"{_WINDOW_ROUND}'s _DRIVER_WINDOW. "
         "Generated by tools/gen_catalog.py — do not hand-edit.",
         "",
-        (lambda b, h: (
-            f"Rotation capacity: census {len(reg)} -> staleness bound "
-            f"{b} successful driver rounds (max(2, ceil(n/50)-1)); "
-            f"headroom {h} more queries before the bound rises to "
-            f"{b + 1}."
-        ))(*capacity(len(reg))),
-        "",
-        "| # | Query | Tags | Oracle | Driver | Summary |",
-        "|---|---|---|---|---|---|",
+        "| # | Query | Tags | Oracle | Summary |",
+        "|---|---|---|---|---|",
     ]
-    window = set(list(reg)[:50])  # the driver records a 50-entry prefix
     for i, (name, spec) in enumerate(reg.items(), 1):
         doc = " ".join((spec.doc or "").split())
         head = doc.split(". ")[0][:140] if doc else ""
         tags = " ".join(spec.tags)
         oracle = "yes" if spec.oracle else "rows-only"
-        seen = f"r{rounds[name]}" if name in rounds else "never"
-        if name in window:
-            seen += " → next"
-        lines.append(
-            f"| {i} | `{name}` | {tags} | {oracle} | {seen} | {head} |"
-        )
+        lines.append(f"| {i} | `{name}` | {tags} | {oracle} | {head} |")
     lines.append("")
     return "\n".join(lines)
 
 
 if __name__ == "__main__":
-    out = os.path.join(_REPO, "CATALOG.md")
-    with open(out, "w") as f:
+    with open(CATALOG, "w") as f:
         f.write(render())
-    print(f"wrote {out}")
+    print(f"wrote {CATALOG}")

@@ -7,6 +7,13 @@ vs ~0.02 ms against /dev/shm (tmpfs) — measured via
 ``tools/``-style probes, r14 — and a one-batch replay query pays
 ~1.2 s of pure checkpoint latency (walCommit 451 ms + commitOffsets
 411 ms + latestOffset 352 ms in the instrumented run, OPTIMIZATION_r14.md).
+Not all of that was fsync. Without libhadoop, Hadoop forks a child
+process for local-FS metadata calls: Spark's default FileContext-based
+checkpoint manager ran `readlink` once or more per checkpoint-file
+rename (~690 per warm stream_ingest chunk), and `chmod` still runs once
+per checkpoint file and per `.crc` sidecar. ``session.get_spark`` pins
+the FileSystem-based manager, which forks no `readlink`;
+``tests/test_session.py::test_micro_batch_forks_no_readlink`` pins that.
 
 The checkpoints written here are per-invocation scaffolding: every
 registered streaming query creates a fresh uuid-named checkpoint,

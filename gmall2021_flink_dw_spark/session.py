@@ -38,12 +38,7 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         )
         _PKG_ZIP = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir),
                                        os.path.basename(pkg_dir))
-    try:
-        spark.sparkContext.addPyFile(_PKG_ZIP)
-    except Exception:
-        # already added in this context — Spark raises on re-add of the
-        # same filename in some versions; safe to ignore.
-        pass
+    spark.sparkContext.addPyFile(_PKG_ZIP)
 
 
 def get_spark(
@@ -112,6 +107,21 @@ def get_spark(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
             ".enabled",
             "true",
+        )
+        # Streaming checkpoint files (offset/commit logs, file-source and
+        # file-sink logs, state-store changelogs) go through the
+        # FileSystem-based manager. The default FileContext-based one
+        # calls RawLocalFileSystem.getFileLinkStatus on every rename, and
+        # without libhadoop Hadoop answers that by forking `readlink`:
+        # ~690 child processes per warm stream_ingest chunk. On file:
+        # both managers check the destination, then File.renameTo, and
+        # both refuse to overwrite an existing log entry. FileContext's
+        # atomic no-overwrite rename exists only on HDFS, so a cluster
+        # deployment checkpointing to HDFS should keep Spark's default.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
     )
     if extra_conf:

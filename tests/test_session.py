@@ -1,0 +1,163 @@
+"""The session factory (gmall2021_flink_dw_spark/session.py).
+
+`get_spark` pins Structured Streaming's checkpoint file manager to the
+FileSystem-based one. These tests pin that choice, that it still
+refuses to overwrite a committed log entry, and that a micro-batch on a
+`get_spark` session starts no `readlink` process: the default
+FileContext-based manager forks one for every checkpoint-file rename
+when libhadoop is absent.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import stat
+import subprocess
+import sys
+
+import pytest
+from py4j.protocol import Py4JJavaError
+
+from gmall2021_flink_dw_spark.session import ensure_workers_can_import
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_checkpoint_manager_is_filesystem_based_and_refuses_overwrite(
+    spark, tmp_path
+):
+    """Every checkpoint log gets its manager from
+    CheckpointFileManager.create. A second no-overwrite atomic write of
+    an existing entry must still fail and leave the first in place:
+    that is the metadata log's guard against a concurrent writer."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    assert mgr.getClass().getName() == _FS_MANAGER
+
+    entry = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    out = mgr.createAtomic(entry, False)
+    out.write(1)
+    out.close()
+    out = mgr.createAtomic(entry, False)
+    out.write(2)
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    refused = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert refused.isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == b"\x01"
+
+
+_FORK_PROBE = r"""
+import os, sys
+repo, src, ckpt, log = sys.argv[1:5]
+sys.path.insert(0, repo)
+from pyspark.sql import functions as F
+from gmall2021_flink_dw_spark.session import get_spark
+
+spark = get_spark("readlink-probe", shuffle_partitions=2)
+schema = "ts timestamp, k int"
+
+
+def land(name, secs):
+    # written beside the source dir, then renamed in: the stream sees
+    # the whole file in one step
+    stage = src + "_stage_" + name
+    spark.createDataFrame(
+        [(f"2021-01-01 00:00:{s:02d}", 1) for s in secs], "ts string, k int"
+    ).select(F.col("ts").cast("timestamp").alias("ts"), "k").coalesce(1) \
+        .write.parquet(stage)
+    [part] = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+    os.rename(os.path.join(stage, part), os.path.join(src, name + ".parquet"))
+
+
+def calls():
+    with open(log) as f:
+        return sum(1 for _ in f)
+
+
+land("a", list(range(0, 16)))
+q = (
+    spark.readStream.schema(schema).parquet(src)
+    .withWatermark("ts", "0 seconds")
+    .groupBy(F.window("ts", "10 seconds"))
+    .agg(F.count(F.lit(1)).alias("n"))
+    .select(F.date_format("window.start", "ss").alias("w"), "n")
+    .writeStream.outputMode("append").format("memory").queryName("rl_probe")
+    .option("checkpointLocation", ckpt)
+    .start()
+)
+q.processAllAvailable()
+before = calls()
+land("b", [30, 31])
+q.processAllAvailable()
+after = calls()
+batches = len(q.recentProgress)
+q.stop()
+rows = sorted((r.w, r.n) for r in spark.table("rl_probe").collect())
+print("PROBE", after - before, batches, rows)
+spark.stop()
+"""
+
+
+def test_micro_batch_forks_no_readlink(tmp_path):
+    """A windowed file-stream query on a get_spark session runs with a
+    counting `readlink` first on its PATH. Landing one file and draining
+    its micro-batches (offset WAL, state-store changelog, commit log)
+    must start no `readlink`. Counting starts after the first drain:
+    the launcher and the session start-up may run it before that."""
+    real = shutil.which("readlink")
+    assert real, "no readlink on PATH"
+    log = tmp_path / "readlink.log"
+    log.write_text("")
+    bindir = tmp_path / "bin"
+    bindir.mkdir()
+    wrapper = bindir / "readlink"
+    wrapper.write_text(f'#!/bin/sh\necho "$@" >> {log}\nexec {real} "$@"\n')
+    wrapper.chmod(wrapper.stat().st_mode | stat.S_IXUSR)
+    src = tmp_path / "src"
+    src.mkdir()
+    env = dict(os.environ, PATH=f"{bindir}{os.pathsep}{os.environ['PATH']}",
+               SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", _FORK_PROBE, _REPO, str(src),
+         str(tmp_path / "ckpt"), str(log)],
+        cwd="/tmp", env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    [line] = [ln for ln in res.stdout.splitlines() if ln.startswith("PROBE")]
+    forks, batches, rows = line.split(" ", 3)[1:]
+    assert int(batches) >= 2
+    # windows [0,10) and [10,20) closed once the watermark passed 30 s;
+    # [30,40) is still open
+    assert rows == repr([("00", 10), ("10", 6)]), line
+    assert int(forks) == 0, log.read_text()[-2000:]
+
+
+def test_ensure_workers_can_import_twice(spark):
+    """Re-adding the package archive to the same context does not
+    raise, and Python workers still import the package afterwards."""
+    ensure_workers_can_import(spark)
+    ensure_workers_can_import(spark)
+
+    def probe(it):
+        import pandas as pd
+
+        import gmall2021_flink_dw_spark
+
+        for _ in it:
+            pass
+        yield pd.DataFrame({"pkg": [gmall2021_flink_dw_spark.__name__]})
+
+    [row] = spark.range(1).coalesce(1).mapInPandas(probe, "pkg string").collect()
+    assert row.pkg == "gmall2021_flink_dw_spark"

@@ -216,7 +216,8 @@ def test_uv_dedup_ttl_multibatch(spark, form):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_checkpoint_restart_recovery(spark):
+@pytest.mark.parametrize("form", ["per_key", "bucketed"])
+def test_checkpoint_restart_recovery(spark, form):
     """W9 exactly-once across a RESTART: run the stateful UV-dedup
     stream over the first half of the data with a checkpointed parquet
     sink, stop the query (simulated process death), land more files,
@@ -224,11 +225,18 @@ def test_checkpoint_restart_recovery(spark):
     contents must equal the batch first-per-(user,day) oracle exactly —
     duplicates would mean per-key state (applyInPandasWithState) was
     lost on restore; missing rows would mean source offsets replayed
-    wrong."""
+    wrong. The bucketed form is the kernel stream_ingest runs: RocksDB
+    state restored from its changelog checkpoints."""
     import os
 
     from pyspark.sql import Window
-    from gmall2021_flink_dw_spark.streaming.stateful import uv_dedup_ttl_stream
+    from gmall2021_flink_dw_spark.streaming.stateful import (
+        uv_dedup_ttl_stream,
+        uv_dedup_ttl_stream_bucketed,
+    )
+
+    kernel = (uv_dedup_ttl_stream if form == "per_key"
+              else uv_dedup_ttl_stream_bucketed)
 
     events = load_table(spark, SF, "events")
     root = tempfile.mkdtemp(prefix="ckpt_restart_")
@@ -254,7 +262,7 @@ def test_checkpoint_restart_recovery(spark):
                 .parquet(os.path.join(src, "b*"))
             )
             q = (
-                uv_dedup_ttl_stream(stream)
+                kernel(stream)
                 .writeStream.outputMode("append")
                 .format("parquet")
                 .option("path", out)

@@ -1,13 +1,15 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints the FULL
-per-query JSON on an early stdout line (and writes BENCH_FULL.json),
-then a compact FINAL line {"metric", "value", "unit",
-"queries": slowest-10, "floors", "sf", "n_queries"} — the driver
-captures only a ~2KB stdout tail, so the last line must stay small
-(asserted < 1500 chars; r03's full-map final line overflowed the tail
-and the artifact recorded parsed=null).
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]: one warm-up query,
+then three full passes with the per-query min wall time. Prints the FULL
+per-query JSON on an early stdout line (and writes BENCH_FULL.json, or
+BENCH_FULL_sf{sf}.json at other scale factors), then a compact FINAL
+line {"metric", "value", "unit", "queries": slowest-10, "probe", "sf",
+"cpus", "n_queries", "full"} (+ "anchors_skipped"). The driver captures
+only a ~2KB stdout tail, so the last line must stay under 1500 chars
+(r03's full-map final line overflowed the tail and the artifact
+recorded parsed=null); `final_line` enforces that.
 
 Each query is materialized through the noop sink — full execution, no
 driver-side collect (what a cluster run would do writing to object
@@ -19,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import subprocess
 import sys
 import time
 
@@ -27,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gmall2021_flink_dw_spark.registry import load_all
 from gmall2021_flink_dw_spark.session import get_spark
+
 
 HEADLINE = [
     "tpch_q1",
@@ -205,48 +207,17 @@ EMB_DIM = 64
 ANCHOR_MAC_CEILING = 1 << 30
 
 
-# Pinned re-floor requests (VERDICT r06 item 3): queries whose last
-# artifact carried an uncertified drift get a guaranteed solo floor
-# this round regardless of the top-5/2x selection rules. r12 pin:
-# sample_dsir — its floor inverted in the r10 AND r11 final artifacts
-# (VERDICT r11 item 3, third round rolling). The three bigram-LM
-# consumers pinned in r11 certified in-artifact and are unpinned.
-PINNED_FLOORS = ("sample_dsir",)
-
-# Mid-session floor certification for fast pinned queries (VERDICT r11
-# item 3, protocol change): end-of-session solo re-times routinely
-# INVERT for sub-2s queries — contention/GC pressure accumulated over a
-# ~15-minute session exceeds the whole cost of a 1-2s query, so the
-# "uncontended" re-time lands above the pass time and certifies
-# nothing (sample_dsir inverted this way in the r10 and r11 final
-# artifacts). Fix the measurement, not the query: pinned queries whose
-# pass-1 time is under this bound get their solo floor measured
-# IMMEDIATELY after pass 1 (warm JIT, minimal accumulated heap), and
-# the artifact records both the early value and its session-relative
-# timestamp (floors_early / floors_early_at_sec). End-of-session
-# re-times still run for the dynamic top-5/2x set; per-query evidence
-# is the MIN of the two measurements (merge_floor_measurements).
-EARLY_FLOOR_MAX_SEC = 2.0
-
-
-LEDGER_NAME = "BENCH_MINS.json"
-
-
-# Box-state probe (VERDICT r14 item 1): the r14 driver's 32-core run
-# was ambience-degraded (its own 8-core run beat it 2.3x) and nothing
-# in the artifact let a reader adjudicate that. This single-threaded
-# CPU burn is the probe the r14 session documented (which ran it at
-# module level via `python -c`, where global-name lookups make the
-# same loop ~2.5x slower: 0.35 s quiet / 0.65-0.86 s degraded). As a
-# function-local loop here the calibrated bands are ~0.17-0.25 s on a
-# quiet box of this VM class and ~0.35+ s with hypervisor steal /
-# co-tenant pressure. It runs before the suite, after every pass, and
-# before the floor re-times; every reading is stamped into
+# Box-state probe (VERDICT r14 item 1): a single-threaded CPU burn that
+# measures the box, never the queries. As a function-local loop the
+# calibrated bands are ~0.17-0.25 s on a quiet box of the r14 VM class
+# and ~0.35+ s with hypervisor steal / co-tenant pressure. It runs
+# before the suite and after every pass; every reading is stamped into
 # BENCH_FULL.json (`box_probe_sec`, with session-relative timestamps)
 # and the min/max pair rides the compact final line (`probe`), so the
-# artifact classifies its own ambience. The probe measures the box,
-# never the queries — it adds ~2 s total and touches no timed region.
+# artifact classifies its own ambience. perfbench copies PROBE_ITERS.
 PROBE_ITERS = 5_000_000
+
+FINAL_LINE_MAX = 1500
 
 
 def box_probe(iters: int = PROBE_ITERS) -> float:
@@ -259,362 +230,47 @@ def box_probe(iters: int = PROBE_ITERS) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def load_certification_priors(sf: float, repo_dir: str) -> dict[str, float]:
-    """Per-query certification priors for the 2x floor-selection rule,
-    the early-floor gate, and floor_anchor.
-
-    VERDICT r12 item 2: these used to be read from the immediately
-    prior committed artifact (BENCH_FULL.json), which RATCHETS — one
-    committed ambience-degraded artifact raised every query's
-    certification band and disabled the early-floor gate (sample_dsir
-    carried an uncertified floor four rounds because its prior read
-    2.177 s against a true ~0.95 s committed min). The prior is now the
-    monotone committed-minima ledger (BENCH_MINS.json, seeded from all
-    git history by tools/gen_bench_mins.py and min-merged by every
-    run): a slow committed artifact can no longer raise any band,
-    because ledger values only ever go DOWN — a query's entry resets
-    only on an intentional plan change (the ledger's `resets` section).
-
-    Falls back to the same-sf prior artifact only when the ledger has
-    no entries for this sf (fresh tree, pre-seed)."""
-    try:
-        with open(os.path.join(repo_dir, LEDGER_NAME)) as f:
-            doc = json.load(f)
-        mins = {
-            q: float(v)
-            for q, v in (doc.get(f"sf{sf}") or {}).items()
-            if isinstance(v, (int, float)) and v > 0
-        }
-        if mins:
-            return mins
-    except (OSError, ValueError):
-        pass
-    prior_name = "BENCH_FULL.json" if sf == 0.1 else f"BENCH_FULL_sf{sf}.json"
-    try:
-        with open(os.path.join(repo_dir, prior_name)) as f:
-            prior = json.load(f)
-        if prior.get("sf") == sf:
-            return {
-                q: float(v)
-                for q, v in (prior.get("queries") or {}).items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-    except (OSError, ValueError):
-        pass
-    return {}
-
-
-def update_ledger_mins(
-    sf: float, evidence: dict[str, float], repo_dir: str
-) -> dict[str, float]:
-    """Min-merge this run's per-query evidence into the ledger —
-    monotone: a value is written only when it is LOWER than the
-    existing entry (so a slow run, committed or not, cannot raise any
-    query's band). Returns the updated sf map. The write rides the
-    same working tree as BENCH_FULL.json: committing the artifact pair
-    commits the ledger update; reverting a plan reverts both. NOTE
-    (ADVICE r13): the merge runs against whatever plans are in the
-    working tree — if you revert an experimental plan file, revert the
-    BENCH_MINS.json change with it, or the ledger keeps a minimum the
-    committed plan cannot reach (monotone => only a manual reset
-    undoes it). A dirty-tree warning is printed at the call site."""
-    path = os.path.join(repo_dir, LEDGER_NAME)
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-    except FileNotFoundError:
-        doc = {"resets": {}}  # first run ever: seed a fresh ledger
-    except (OSError, ValueError) as ex:
-        # ADVICE r13: a present-but-corrupt ledger must NOT be treated
-        # like a missing one — overwriting it with only this run's
-        # evidence silently wipes every other sf bucket, all history
-        # minima, and the resets section. Divert this run's evidence to
-        # a side file and leave the ledger for a human (or
-        # tools/gen_bench_mins.py, which rebuilds it from git).
-        side = path + ".rejected"
-        with open(side, "w") as f:
-            json.dump(
-                {f"sf{sf}": dict(sorted(evidence.items()))}, f, indent=1
-            )
-            f.write("\n")
-        print(
-            f"WARNING: {LEDGER_NAME} exists but is unreadable "
-            f"({type(ex).__name__}: {ex}); ledger NOT updated — this "
-            f"run's evidence written to {side}; restore the ledger via "
-            "git or tools/gen_bench_mins.py",
-            file=sys.stderr,
-        )
-        return {}
-    key = f"sf{sf}"
-    bucket = doc.get(key) or {}
-    for q, v in evidence.items():
-        if isinstance(v, (int, float)) and v > 0:
-            cur = bucket.get(q)
-            if cur is None or v < cur:
-                bucket[q] = round(float(v), 3)
-    doc[key] = dict(sorted(bucket.items()))
-    with open(path, "w") as f:
-        json.dump(doc, f, indent=1, sort_keys=False)
-        f.write("\n")
-    return doc[key]
-
-
-def warn_if_tree_dirty(repo_dir: str) -> bool:
-    """ADVICE r13: the ledger min-merge runs against whatever plans are
-    in the working tree, including uncommitted experiments. That is the
-    intended flow (new plans earn their minima before the commit that
-    ships them), but selectively reverting a plan file while keeping
-    the BENCH_MINS.json change bakes in a minimum the committed plan
-    cannot reach. Warn when non-artifact files are modified so the run
-    log records that this merge carries uncommitted-plan evidence.
-    Returns True when dirty (for tests)."""
-    artifact = re.compile(r"(BENCH_FULL.*\.json|BENCH_MINS\.json.*)$")
-    try:
-        out = subprocess.run(
-            ["git", "status", "--porcelain"],
-            cwd=repo_dir,
-            capture_output=True,
-            text=True,
-            check=True,
-        ).stdout
-    except (OSError, subprocess.CalledProcessError):
-        return False  # not a git repo / git unavailable: nothing to say
-    dirty = [
-        ln[3:]
-        for ln in out.splitlines()
-        if ln[:2].strip() and not artifact.search(ln[3:].strip())
-    ]
-    if dirty:
-        print(
-            "WARNING: working tree has uncommitted non-artifact changes "
-            f"({len(dirty)} files, e.g. {dirty[:3]}); the BENCH_MINS.json "
-            "min-merge will include evidence from these uncommitted "
-            "plans — if you revert a plan file, revert the ledger change "
-            "with it (see update_ledger_mins docstring)",
-            file=sys.stderr,
-        )
-    return bool(dirty)
-
-
-def merge_floor_measurements(
-    early: dict[str, float], late: dict[str, float]
-) -> dict[str, float]:
-    """Per-query min across the mid-session and end-of-session solo
-    re-times — both are honest uncontended measurements of the same
-    plan; the lower one is simply the less-contended sample."""
-    merged = dict(late)
-    for n, v in early.items():
-        merged[n] = min(v, merged.get(n, float("inf")))
-    return merged
-
-
-# Noise tolerance for certifying SUB-2s floors (VERDICT r11 item 3,
-# second half of the protocol change): for a query whose pass min is
-# under EARLY_FLOOR_MAX_SEC, both the pass and the solo re-time are
-# mins of 3 samples from the same noise-dominated distribution, so
-# "floor <= pass" is a coin flip — sample_dsir's floor inverted by
-# 2-4% in three consecutive rounds while every sample sat well inside
-# the measured ±12% run-to-run envelope. A solo re-time within 10% of
-# a sub-2s pass REPRODUCES it (the same semantics as the existing
-# floor == pass case); for expensive queries the strict rule stands —
-# a 10% drift on a 15s plan is a real regression signal.
-FAST_FLOOR_TOL = 0.10
-
-
-def split_floors(
+def final_line(
     times: dict[str, float],
-    measured: dict[str, float],
-    priors: dict[str, float] | None = None,
-) -> tuple[dict[str, float], dict[str, float]]:
-    """Partition session-end floor re-times into evidence vs noise.
-
-    The floor rule assumes the end-of-session solo re-time is LESS
-    contended than the pass; the r05 driver artifact showed the inverted
-    regime (floors above their own pass times — contention grew through
-    the session), where the floor certifies nothing (VERDICT r05 item
-    3). A measured floor above its pass time is returned in the second
-    map ("unavailable": reported for transparency, excluded from
-    evidence) — EXCEPT:
-    - sub-2s queries, where a re-time within FAST_FLOOR_TOL of the pass
-      counts as reproducing it (see above), and
-    - (r13) a re-time inside the certification band itself — within 2x
-      of the query's ledger min (`priors`): the whole point of a floor
-      is proving the plan can run inside the band, and a solo sample
-      inside the band IS that proof regardless of where the (equally
-      noisy) pass landed. Without this clause a query whose pass is
-      already near its ledger min gets its floor "inverted" by
-      single-digit-percent noise and reads as uncertified when nothing
-      drifted at all (the r13 window-3 sample_dsir case: pass 1.109,
-      re-time 1.31, ledger min 0.954 — every number inside the band).
-
-    The stable certification anchor is the BENCH_MINS.json ledger min
-    (all-history committed, monotone), emitted alongside as
-    `floor_anchor`.
-    """
-    priors = priors or {}
-    floors = {
-        n: v
-        for n, v in measured.items()
-        if n in times
-        and (
-            v <= times[n]
-            or (
-                times[n] < EARLY_FLOOR_MAX_SEC
-                and v <= times[n] * (1.0 + FAST_FLOOR_TOL)
-            )
-            or v <= 2.0 * priors.get(n, 0.0)
-        )
+    probes: list[dict],
+    sf: float,
+    cpus: int,
+    anchors_skipped: list[str],
+    full_name: str,
+) -> str:
+    """The compact last stdout line: headline total, the slowest 10
+    queries and the probe min/max; the full per-query map and probe
+    series live in `full_name`. Raises when the line would outgrow the
+    driver's stdout tail."""
+    slowest = dict(sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:10])
+    final = {
+        "metric": "headline_queries_total",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "queries": slowest,
+        "probe": [min(p["sec"] for p in probes), max(p["sec"] for p in probes)],
+        "sf": sf,
+        "cpus": cpus,
+        "n_queries": len(times),
+        "full": full_name,
     }
-    unavailable = {n: v for n, v in measured.items() if n not in floors}
-    return floors, unavailable
-
-
-def classify_floors(
-    times: dict[str, float],
-    measured: dict[str, float],
-    priors: dict[str, float] | None = None,
-) -> dict[str, dict]:
-    """Self-adjudicating floor metadata (VERDICT r13 item 3): the r13
-    artifact listed dedup_simhash's 6.772 re-time in `floors` although
-    it sat OUTSIDE its 2x ledger band (it qualified via the
-    below-own-pass clause), and a reader had to cross-check
-    `floor_anchor` against git history to notice. Emit, for EVERY
-    measured re-time, which clause admitted it (or that none did) plus
-    its ratio to the ledger anchor, so the artifact classifies itself:
-
-      basis: "below_pass" | "fast_tol" | "in_band" | "inverted"
-             (first matching clause, in split_floors order;
-             "inverted" = admitted by no clause -> floors_unavailable)
-      band_ratio: measured / ledger-min, 3dp (None when no ledger
-             entry exists for the query at this sf)
-      in_band: band_ratio <= 2.0 (False when no anchor)
-    """
-    priors = priors or {}
-    out: dict[str, dict] = {}
-    for n, v in measured.items():
-        if n not in times:
-            continue
-        prior = priors.get(n)
-        if v <= times[n]:
-            basis = "below_pass"
-        elif times[n] < EARLY_FLOOR_MAX_SEC and v <= times[n] * (
-            1.0 + FAST_FLOOR_TOL
-        ):
-            basis = "fast_tol"
-        elif prior and v <= 2.0 * prior:
-            basis = "in_band"
-        else:
-            basis = "inverted"
-        ratio = round(v / prior, 3) if prior else None
-        out[n] = {
-            "basis": basis,
-            "band_ratio": ratio,
-            "in_band": bool(ratio is not None and ratio <= 2.0),
-        }
-    return out
-
-
-_BASIS_CODES = {
-    "below_pass": "bp",
-    "fast_tol": "ft",
-    "in_band": "ib",
-    "inverted": "inv",
-}
-
-
-def _compact_basis(
-    floors_basis: dict[str, dict], cap: int = 4
-) -> dict[str, str]:
-    """Compact floors_basis for the size-bounded final stdout line:
-    short clause codes, worst entries first (out-of-band before
-    in-band, then band-ratio descending, anchorless last within each
-    group), capped at `cap` names with a `+N` overflow marker."""
-    ranked = sorted(
-        floors_basis.items(),
-        key=lambda kv: (
-            kv[1]["in_band"],
-            -(kv[1]["band_ratio"] if kv[1]["band_ratio"] is not None else -1),
-        ),
-    )
-    out = {
-        n: (
-            _BASIS_CODES[b["basis"]]
-            if b["band_ratio"] is None
-            else f"{_BASIS_CODES[b['basis']]}:{b['band_ratio']}"
-        )
-        for n, b in ranked[:cap]
-    }
-    if len(ranked) > cap:
-        out["+"] = str(len(ranked) - cap)
-    return out
-
-
-def _solo_floor_subprocess(
-    name: str, sf_dir: str, reps: int = 3, timeout_s: int = 900
-) -> float | None:
-    """Re-time one query in a fresh python/JVM process (bench.py
-    --solo): warm-up rep + min-of-reps, nothing else in the session.
-    Returns None on any failure so the caller can fall back to the
-    in-JVM loop (honestly labeled)."""
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--solo", name,
-             str(reps)],
-            env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-            capture_output=True,
-            text=True,
-            timeout=timeout_s,
-        )
-        for ln in out.stdout.splitlines():
-            if ln.startswith("SOLO_RESULT "):
-                return float(json.loads(ln[len("SOLO_RESULT "):])["min"])
-    except (OSError, subprocess.TimeoutExpired, ValueError):
-        pass
-    return None
-
-
-def solo_main(name: str, reps: int) -> None:
-    """`bench.py --solo NAME [reps]`: the fresh-process floor protocol
-    (VERDICT r13 item 4). One query, own session: warm-up rep (JIT +
-    parquet footers), then min-of-reps with clearCache between."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    registry = load_all()
-    spark = get_spark("bench-solo")
-    fn = registry[name].fn
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-    samples = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(round(time.perf_counter() - t0, 3))
-        spark.catalog.clearCache()
-    print(
-        "SOLO_RESULT "
-        + json.dumps(
-            {
-                "query": name,
-                "min": min(samples),
-                "samples": samples,
-                # ambience reading for this fresh-process floor (same
-                # probe/bands as the suite's box_probe_sec)
-                "probe_sec": box_probe(),
-            }
-        )
-    )
+    if anchors_skipped:
+        final["anchors_skipped"] = anchors_skipped
+    line = json.dumps(final, separators=(",", ":"))
+    if len(line) >= FINAL_LINE_MAX:  # not assert: must survive python -O
+        raise RuntimeError(f"final bench line too long ({len(line)} chars)")
+    return line
 
 
 def main() -> None:
-    if len(sys.argv) > 2 and sys.argv[1] == "--solo":
-        solo_main(
-            sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 3
-        )
-        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     registry = load_all()
     spark = get_spark("bench")
+    # every number states its core count: the N of the local[N] master
+    # get_spark built the session with
+    cpus = int(re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master)[1])
 
     # Warm the JVM/parquet footers once with a trivial action so the first
     # timed query doesn't pay session startup.
@@ -646,22 +302,10 @@ def main() -> None:
     # stalls (measured: 2-4s of compiler time on cold queries); later
     # passes run warm and reflect the steady-state cost a cluster would
     # see. Back-to-back repeats of one query do NOT escape the stall,
-    # full passes do. min-of-3 also damps co-tenant contention: local[32]
-    # saturates the box, so any co-running JVM inflates a single pass
-    # 2-4x (documented in BASELINE.md).
-    # per-query certification priors, loaded BEFORE the passes: the
-    # early-floor gate and the 2x floor-selection rule both read them.
-    # Source: the monotone committed-minima ledger (VERDICT r12 item 2
-    # — see load_certification_priors; a slow committed artifact can
-    # no longer ratchet any query's band). Same-sf keyed (the r12
-    # lesson: an sf1.0 run reading the sf0.1 artifact left its 2x rule
-    # inert).
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prior_mins = load_certification_priors(sf, repo_dir)
-
+    # full passes do. min-of-3 also damps co-tenant contention.
     times: dict[str, float] = {}
     session_t0 = time.perf_counter()
-    probes: list[dict[str, float]] = []
+    probes: list[dict] = []
 
     def take_probe(label: str) -> None:
         p = box_probe()
@@ -672,15 +316,12 @@ def main() -> None:
         print(f"[bench] box_probe {label}: {p}s", file=sys.stderr, flush=True)
 
     take_probe("pre_suite")
-    floors_early: dict[str, float] = {}
-    floors_early_at: dict[str, float] = {}
     for _pass in range(3):
         for name in run_list:
             t0 = time.perf_counter()
             # stderr progress marker (stdout stays clean for the JSON
             # contract): ties failures/disk spikes in long scale runs
-            # to the query that caused them — the 100x ENOSPC hunts
-            # (r12-ext) had only stage numbers to go on without this.
+            # to the query that caused them.
             print(
                 f"[bench] pass={_pass} {name} "
                 f"t={time.perf_counter() - session_t0:.1f}s",
@@ -699,202 +340,28 @@ def main() -> None:
         # eviction/GC pressure instead of the plans.
         spark.catalog.clearCache()
         take_probe(f"after_pass{_pass}")
-        if _pass == 0:
-            # Mid-session floors for fast pinned queries (see
-            # EARLY_FLOOR_MAX_SEC above): solo min-of-3 right after
-            # pass 1, stamped with the session-relative time so the
-            # artifact shows WHEN the measurement ran.
-            for name in PINNED_FLOORS:
-                # gate on the WARM cost estimate: the committed prior
-                # min where one exists (pass-1 time is cold — JIT
-                # stalls push even a 1.4s query past 2s on its first
-                # execution, which is precisely why these floors keep
-                # inverting), falling back to pass-1 time on a first
-                # run at this sf. min-of-6, not min-of-3: solo re-times
-                # of kernel-bearing sub-2s queries converge to the
-                # warm steady state only around rep 3-5 (measured
-                # 1.30/1.28/1.36/1.17/1.16/1.12 for sample_dsir at
-                # sf0.1 — min-of-3 lands ~10-50% above the in-suite
-                # pass; the extra reps cost single-digit seconds and
-                # only for pinned fast queries).
-                known = min(
-                    prior_mins.get(name, float("inf")),
-                    times.get(name, float("inf")),
-                )
-                if name in times and known < EARLY_FLOOR_MAX_SEC:
-                    best = float("inf")
-                    for _ in range(6):
-                        t0 = time.perf_counter()
-                        registry[name].fn(spark, sf_dir).write.format(
-                            "noop"
-                        ).mode("overwrite").save()
-                        best = min(best, time.perf_counter() - t0)
-                    floors_early[name] = round(best, 3)
-                    floors_early_at[name] = round(
-                        time.perf_counter() - session_t0, 1
-                    )
-                    spark.catalog.clearCache()
 
-    # Contention evidence carried in the artifact itself: solo re-times
-    # (3 back-to-back runs, min) at the very end of the session, when no
-    # other headline work is interleaved. A floor far below the pass
-    # time says the pass number was co-tenant/driver contention, not the
-    # plan (the r02 simhash case: 12s driver pass vs 3.1s uncontended
-    # floor, BASELINE.md). Floor selection (VERDICT r04 item 7,
-    # self-certifying; prior source re-based in r13 per VERDICT r12
-    # item 2): the top-5 most expensive queries PLUS any query whose
-    # pass time exceeds 2x its ALL-HISTORY committed min (the
-    # BENCH_MINS.json ledger), capped at 10 — so a contended driver
-    # re-run carries its own exoneration for every inflated entry, not
-    # just the most expensive five, and one slow committed artifact
-    # cannot shrink the flagged set.
-    by_cost = sorted(times, key=lambda n: times[n], reverse=True)
-    floor_set = set(by_cost[:5]) | {
-        n for n in times if times[n] > 2 * prior_mins.get(n, float("inf"))
-    }
-    # Pinned re-floor requests: see PINNED_FLOORS at module level (the
-    # pinned names also got a mid-session early floor after pass 1).
-    floor_set |= set(PINNED_FLOORS) & set(times)
-    floor_names = sorted(floor_set, key=lambda n: times[n], reverse=True)[:10]
-    take_probe("pre_floors")
-    measured_floors: dict[str, float] = {}
-    floors_protocol: dict[str, str] = {}
-    for name in floor_names:
-        # VERDICT r13 item 4: the same-JVM session-end re-time
-        # penalizes precisely the stateful streaming queries — the
-        # session has accumulated memory-sink tables, state dirs, and
-        # GC pressure from three full passes (streaming_heavy_hitters
-        # read 8.811 vs its own in-suite pass of 4.497 in the r13
-        # driver artifact; jump_detect reps at 10x inverted 12 -> 107 s
-        # for the same reason, BASELINE.md). Streaming-tagged floors
-        # run in a FRESH PROCESS (the scaling protocol's rule); all
-        # other queries stay in-JVM where the shared warm-up is an
-        # advantage, not a bias.
-        if "streaming" in registry[name].tags:
-            solo = _solo_floor_subprocess(name, sf_dir)
-            if solo is not None:
-                measured_floors[name] = solo
-                floors_protocol[name] = "fresh_process"
-                continue
-            floors_protocol[name] = "in_jvm_fallback"
-        else:
-            floors_protocol[name] = "in_jvm"
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        measured_floors[name] = round(best, 3)
-        spark.catalog.clearCache()
-    # Inverted-regime guard + stable anchor (VERDICT r05 item 3): a
-    # floor above its own pass time is contention evidence AGAINST the
-    # session, not for the plan — report it as unavailable; the
-    # committed per-query min (prior_mins) is the certification anchor
-    # the judge should compare the pass against. Mid-session early
-    # floors (pinned fast queries) merge in as additional honest
-    # samples before the guard classifies.
-    floors, floors_unavailable = split_floors(
-        times,
-        merge_floor_measurements(floors_early, measured_floors),
-        prior_mins,
-    )
-    floors_basis = classify_floors(
-        times,
-        merge_floor_measurements(floors_early, measured_floors),
-        prior_mins,
-    )
-    floor_anchor = {
-        n: prior_mins[n] for n in floor_names if n in prior_mins
-    }
-
-    # Min-merge this run's evidence into the ledger (monotone: values
-    # only go down). Evidence per query = min(pass time, any solo
-    # floor) — all honest measurements of the current plans.
-    evidence = dict(times)
-    for n, v in merge_floor_measurements(floors_early, measured_floors).items():
-        evidence[n] = min(evidence.get(n, float("inf")), v)
-    warn_if_tree_dirty(repo_dir)
-    update_ledger_mins(sf, evidence, repo_dir)
-
-    total = round(sum(times.values()), 3)
-    # The driver records only a ~2KB tail of stdout; r03's single-line
-    # artifact (75 query entries) overflowed it and BENCH_r03.json lost
-    # the headline total (parsed: null). So: the FULL per-query map goes
-    # to BENCH_FULL.json in the repo AND an earlier stdout line, while
-    # the FINAL stdout line stays compact — headline total, floors, and
-    # only the slowest 10 queries — asserted well under the tail size.
+    # The driver records only a ~2KB tail of stdout, so the FULL
+    # per-query map goes to BENCH_FULL.json in the repo AND an earlier
+    # stdout line, while the FINAL stdout line stays compact.
     full = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
-        "floors": floors,
-        "floors_unavailable": floors_unavailable,
-        "floors_basis": floors_basis,
-        "floors_protocol": floors_protocol,
-        "floor_anchor": floor_anchor,
-        "floors_early": floors_early,
-        "floors_early_at_sec": floors_early_at,
         "anchors_skipped": anchors_skipped,
         "box_probe_sec": probes,
         "sf": sf,
+        "cpus": cpus,
     }
     # dev runs at other scale factors must not clobber the committed
-    # sf0.1 artifact (its per-query mins are the round-over-round and
-    # floor-rule baseline)
+    # sf0.1 artifact
     full_name = "BENCH_FULL.json" if sf == 0.1 else f"BENCH_FULL_sf{sf}.json"
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            full_name), "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
     print(json.dumps(full, separators=(",", ":")))
-    slowest = dict(
-        sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
-    final = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": slowest,
-        "floors": floors,
-        # self-adjudicating basis (VERDICT r13 item 3), compact form:
-        # "code" or "code:band-ratio" (bp=below_pass, ft=fast_tol,
-        # ib=in_band, inv=inverted) for the 4 MOST SEVERE entries —
-        # out-of-band first, then by ratio descending — so the
-        # driver-tail artifact classifies exactly the floors that
-        # would otherwise need git archaeology; the full per-floor
-        # dicts live in BENCH_FULL.json. Capped at 4 to hold the
-        # adversarial <1500-char final-line bound (test pinned).
-        "floors_basis": _compact_basis(floors_basis, cap=4),
-        # names only in the compact line (the measured-but-inverted
-        # values live in BENCH_FULL.json) to stay under the driver tail
-        "floors_unavailable": sorted(floors_unavailable),
-        # anchor only where the floor is NOT evidence (the fallback the
-        # judge needs); the full anchor map is in BENCH_FULL.json
-        "floor_anchor": {
-            n: v for n, v in floor_anchor.items() if n in floors_unavailable
-        },
-        # ambience self-adjudication (VERDICT r14 item 1): the min/max
-        # over every probe taken this session — quiet band for this VM
-        # class is ~0.17-0.25 s; readings past ~0.35 s mean the suite
-        # times are ambience-inflated and the ledger mins / floors are
-        # the numbers to trust. Full per-probe series with timestamps
-        # in BENCH_FULL.json.
-        "probe": [
-            min(p["sec"] for p in probes),
-            max(p["sec"] for p in probes),
-        ],
-        "sf": sf,
-        "n_queries": len(times),
-        "full": full_name,
-    }
-    if anchors_skipped:
-        final["anchors_skipped"] = anchors_skipped
-    line = json.dumps(final, separators=(",", ":"))
-    if len(line) >= 1500:  # not assert: must survive python -O (ADVICE r04)
-        raise RuntimeError(f"final bench line too long ({len(line)} chars)")
-    print(line)
+    print(final_line(times, probes, sf, cpus, anchors_skipped, full_name))
 
 
 if __name__ == "__main__":

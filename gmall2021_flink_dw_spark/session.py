@@ -25,7 +25,9 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     Queries that run Python UDF stages (pandas UDFs / mapInPandas) pickle
     functions by module reference; a driver process started outside the
     repo directory would otherwise hit ModuleNotFoundError in the worker.
-    Idempotent per process; cheap (small zip, cached by Spark).
+    Idempotent per context: pyspark's addPyFile appends to the include
+    list and to the driver's sys.path on every call, so a context that
+    already ships the archive is left alone.
     """
     global _PKG_ZIP
     if _PKG_ZIP is None:
@@ -38,7 +40,9 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         )
         _PKG_ZIP = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir),
                                        os.path.basename(pkg_dir))
-    spark.sparkContext.addPyFile(_PKG_ZIP)
+    sc = spark.sparkContext
+    if os.path.basename(_PKG_ZIP) not in sc._python_includes:
+        sc.addPyFile(_PKG_ZIP)
 
 
 def get_spark(

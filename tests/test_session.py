@@ -19,6 +19,7 @@ import sys
 import pytest
 from py4j.protocol import Py4JJavaError
 
+from gmall2021_flink_dw_spark import session
 from gmall2021_flink_dw_spark.session import ensure_workers_can_import
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -145,10 +146,15 @@ def test_micro_batch_forks_no_readlink(tmp_path):
 
 
 def test_ensure_workers_can_import_twice(spark):
-    """Re-adding the package archive to the same context does not
-    raise, and Python workers still import the package afterwards."""
+    """A second call on the same context adds nothing: the include list
+    holds the archive once, the driver's sys.path does not grow, and
+    Python workers still import the package afterwards."""
     ensure_workers_can_import(spark)
+    path_len = len(sys.path)
     ensure_workers_can_import(spark)
+    assert len(sys.path) == path_len
+    archive = os.path.basename(session._PKG_ZIP)
+    assert spark.sparkContext._python_includes.count(archive) == 1
 
     def probe(it):
         import pandas as pd

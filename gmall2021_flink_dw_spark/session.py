@@ -10,6 +10,7 @@ is a per-query formatting concern, not a session one.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -27,7 +28,8 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     repo directory would otherwise hit ModuleNotFoundError in the worker.
     Idempotent per context: pyspark's addPyFile appends to the include
     list and to the driver's sys.path on every call, so a context that
-    already ships the archive is left alone.
+    already ships the archive is left alone. The archive is removed at
+    interpreter exit.
     """
     global _PKG_ZIP
     if _PKG_ZIP is None:
@@ -40,6 +42,7 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         )
         _PKG_ZIP = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir),
                                        os.path.basename(pkg_dir))
+        atexit.register(os.remove, _PKG_ZIP)
     sc = spark.sparkContext
     if os.path.basename(_PKG_ZIP) not in sc._python_includes:
         sc.addPyFile(_PKG_ZIP)

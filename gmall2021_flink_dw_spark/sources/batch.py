@@ -12,6 +12,7 @@ storage; the loader API is path-based so that swap is a config change.
 
 from __future__ import annotations
 
+import json
 import os
 from urllib.parse import unquote, urlparse
 
@@ -42,39 +43,82 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     - nanosAsLong: events.parquet stores TIMESTAMP(NANOS) which Spark
       cannot read natively (PARQUET_TYPE_ILLEGAL otherwise);
     - UTC session tz + NTZ inference: date_format output strings must
-      match the (tz-naive) DuckDB oracle regardless of host timezone."""
+      match the (tz-naive) DuckDB oracle regardless of host timezone.
+    A conf that cannot be set raises: the loader would otherwise return
+    frames with the wrong ``ts`` type."""
     for k, v in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
         ("spark.sql.adaptive.enabled", "true"),
     ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+        spark.conf.set(k, v)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # Normalize events.ts to TIMESTAMP (LTZ; session tz is pinned UTC so
-    # values equal the tz-naive DuckDB reading) regardless of how the
-    # driver generated the parquet:
-    # - TIMESTAMP(NANOS): surfaced as long nanos under
-    #   spark.sql.legacy.parquet.nanosAsLong -> truncate to micros
-    #   (exactly what DuckDB does) with integer `div` (double division
-    #   would lose precision on ~1.7e18 nano values);
-    # - timestamp[us] without tz: surfaced as TIMESTAMP_NTZ under
-    #   inferTimestampNTZ -> cast to TIMESTAMP (interpreted in the UTC
-    #   session tz, value-identical), since watermarks/windows and the
-    #   epoch functions downstream expect the LTZ type.
-    for f in df.schema.fields:
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The Spark schema of the parquet table at ``path``, as
+    ``spark.read.parquet(path).schema`` infers it.
+
+    Inference is a one-task Spark job. For a single local file the
+    driver reads the footer itself and converts it with the calls that
+    job makes, so the session confs (``nanosAsLong``,
+    ``inferTimestampNTZ``, ``binaryAsString``, ``int96AsTimestamp``) and
+    a Spark-written row schema in the footer are honoured the same way.
+    Any other path (a directory of part files, a non-local URI) keeps
+    Spark's inference. Nothing is cached: the footer is re-read on every
+    call, so a rewritten file needs no invalidation rule."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    meta = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            hpath, state.newHadoopConf()
+        ),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS,
+    )
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(hpath, meta),
+        parquet.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return T.StructType.fromJson(json.loads(schema.json()))
+
+
+def normalize_ts(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Normalize a table's ``ts`` (``schema`` is the schema ``df`` was
+    read with) to TIMESTAMP (LTZ; session tz is pinned UTC so values
+    equal the tz-naive DuckDB reading) regardless of how the driver
+    generated the parquet:
+    - TIMESTAMP(NANOS): surfaced as long nanos under
+      spark.sql.legacy.parquet.nanosAsLong -> truncate to micros
+      (exactly what DuckDB does) with integer `div` (double division
+      would lose precision on ~1.7e18 nano values);
+    - timestamp[us] without tz: surfaced as TIMESTAMP_NTZ under
+      inferTimestampNTZ -> cast to TIMESTAMP (interpreted in the UTC
+      session tz, value-identical), since watermarks/windows and the
+      epoch functions downstream expect the LTZ type (withWatermark
+      rejects an NTZ event-time column).
+    withColumn on an existing column keeps field names and order."""
+    for f in schema.fields:
         if f.name == "ts" and isinstance(f.dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif f.name == "ts" and isinstance(f.dataType, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    _ensure_session_confs(spark)
+    path = table_path(sf_dir, name)
+    schema = table_schema(spark, path)
+    return normalize_ts(spark.read.schema(schema).parquet(path), schema)
 
 
 # Size-derived spread width: one round-robin partition per this many

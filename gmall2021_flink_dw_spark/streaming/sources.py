@@ -19,15 +19,21 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gmall2021_flink_dw_spark.sources.batch import _ensure_session_confs  # noqa: F401 (re-exported for stream_table)
+from gmall2021_flink_dw_spark.sources.batch import (
+    _ensure_session_confs,
+    normalize_ts,
+    table_path,
+    table_schema,
+)
 
 
 def _as_stream_dir(sf_dir: str, name: str) -> str:
     """The file-stream source needs a DIRECTORY; expose the single table
-    file through a symlink in a stable temp dir (testdata is read-only)."""
+    file through a symlink in a stable temp dir (testdata is read-only).
+    The dir is keyed by the sf dir's basename only, so a link left by
+    another sf dir of that name is replaced, never reused."""
     d = os.path.join(
         tempfile.gettempdir(),
         "spark_graft_streams",
@@ -36,48 +42,23 @@ def _as_stream_dir(sf_dir: str, name: str) -> str:
     )
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, f"{name}.parquet")
-    src = os.path.join(sf_dir, f"{name}.parquet")
-    if not os.path.exists(link):
+    src = table_path(sf_dir, name)
+    if os.path.lexists(link) and os.readlink(link) != src:
+        os.remove(link)
+    if not os.path.lexists(link):
         os.symlink(src, link)
     return d
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """File-stream the given table with the batch loader's schema (incl.
-    the nanos->micros ts conversion for events).
-
-    r15 (guide §1.2 per-task work): ONE parquet footer read per
-    invocation. This used to ALSO call load_table() — a second full
-    footer read — solely to assert name parity, but the batch loader's
-    ts normalization preserves field names and order by construction
-    (withColumn on an existing column), so the stream's names always
-    equal the raw schema's names and the assert reduces to the identity
-    below. Every streaming replay pays this builder; ~60-90 ms saved
-    per invocation across 17 registered streaming queries. Name parity
-    with the batch loader is still pinned by
-    tests/test_streaming.py (schema equality assertions)."""
+    """File-stream the given table with the batch loader's schema and
+    ``ts`` normalization (``sources.batch``: one footer read on the
+    driver for a single-file table, no Spark job). Name and type parity
+    with the batch loader is pinned by tests/test_streaming.py."""
     _ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
-    stream = spark.readStream.schema(raw_schema).parquet(
-        _as_stream_dir(sf_dir, name)
-    )
-    # mirror load_table's ts normalization: long nanos -> micros when the
-    # parquet stores TIMESTAMP(NANOS) (surfaced as long under
-    # nanosAsLong); TIMESTAMP_NTZ -> TIMESTAMP when it stores tz-naive
-    # timestamp[us] (withWatermark rejects NTZ event-time columns, and
-    # the session tz is pinned UTC so the cast is value-identical).
-    for fld in raw_schema.fields:
-        if fld.name == "ts" and isinstance(fld.dataType, T.LongType):
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif fld.name == "ts" and isinstance(fld.dataType, T.TimestampNTZType):
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    # sanity: the ts normalization must preserve field names/order
-    assert [f.name for f in stream.schema.fields] == [
-        f.name for f in raw_schema.fields
-    ]
-    return stream
+    schema = table_schema(spark, table_path(sf_dir, name))
+    stream = spark.readStream.schema(schema).parquet(_as_stream_dir(sf_dir, name))
+    return normalize_ts(stream, schema)
 
 
 def socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:

@@ -167,3 +167,31 @@ def test_ensure_workers_can_import_twice(spark):
 
     [row] = spark.range(1).coalesce(1).mapInPandas(probe, "pkg string").collect()
     assert row.pkg == "gmall2021_flink_dw_spark"
+
+
+_ARCHIVE_PROBE = r"""
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from gmall2021_flink_dw_spark import session
+
+spark = session.get_spark("archive-probe", shuffle_partitions=1)
+session.ensure_workers_can_import(spark)
+print("ARCHIVE", os.path.exists(session._PKG_ZIP), session._PKG_ZIP)
+"""
+
+
+def test_package_archive_removed_at_exit(tmp_path):
+    """The per-process package archive that ensure_workers_can_import
+    writes is deleted when the driver process exits."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g",
+               TMPDIR=str(tmp_path))
+    res = subprocess.run(
+        [sys.executable, "-c", _ARCHIVE_PROBE, _REPO],
+        cwd="/tmp", env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    [line] = [ln for ln in res.stdout.splitlines() if ln.startswith("ARCHIVE")]
+    _, existed, archive = line.split(" ", 2)
+    assert existed == "True"
+    assert os.path.dirname(archive) == str(tmp_path)
+    assert not os.path.exists(archive)

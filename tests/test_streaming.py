@@ -7,16 +7,27 @@ Uses the sf0.001 slice — streaming drains synchronously per test.
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 import tempfile
+import time
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gmall2021_flink_dw_spark.operators.cep import detect_jumps
 from gmall2021_flink_dw_spark.operators.routing import route, routing_config
-from gmall2021_flink_dw_spark.sources.batch import load_table
+from gmall2021_flink_dw_spark.sources.batch import (
+    _ensure_session_confs,
+    load_table,
+    register_views,
+    table_schema,
+)
 from gmall2021_flink_dw_spark.sources.cdc import orders_changelog
 from gmall2021_flink_dw_spark.streaming.pipelines import (
     foreach_batch_router,
@@ -25,7 +36,7 @@ from gmall2021_flink_dw_spark.streaming.pipelines import (
     uv_dedup_transform,
     visitor_stats_transform,
 )
-from gmall2021_flink_dw_spark.streaming.sources import stream_table
+from gmall2021_flink_dw_spark.streaming.sources import _as_stream_dir, stream_table
 from gmall2021_flink_dw_spark.streaming.stateful import jump_detect_stream
 
 SF = "/root/testdata/sf0.001"
@@ -674,10 +685,20 @@ def test_late_data_drop_empty_bulk_group(spark, tmp_path):
     assert out.count() == 0
 
 
-def test_stream_table_schema_matches_batch_loader(spark):
-    """stream_table no longer builds the batch frame per invocation
-    (r15: one footer read); pin the schema parity the removed runtime
-    assert used to check — names AND types after ts normalization."""
+def test_stream_table_schema_matches_batch_loader(spark, tmp_path):
+    """The driver-side footer schema equals Spark's own inference for
+    every single-file table, and stream_table and load_table agree on
+    names AND types after ts normalization. A TIMESTAMP(NANOS) ts reads
+    as long nanos and both loaders turn it into TIMESTAMP."""
+    paths = sorted(
+        p
+        for sf in ("sf0.001", "sf0.01", "sf0.1")
+        for p in glob.glob(os.path.join(os.path.dirname(SF), sf, "*.parquet"))
+    )
+    assert len(paths) == 30
+    for p in paths:
+        assert os.path.isfile(p), p
+        assert table_schema(spark, p).json() == spark.read.parquet(p).schema.json(), p
     for t in ("events", "orders", "documents"):
         s = stream_table(spark, SF, t).schema
         b = load_table(spark, SF, t).schema
@@ -685,6 +706,85 @@ def test_stream_table_schema_matches_batch_loader(spark):
         assert [f.dataType for f in s.fields] == [
             f.dataType for f in b.fields
         ], t
+
+    sf_dir = tmp_path / "sf_nanos"
+    sf_dir.mkdir()
+    nanos = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+        }),
+        str(sf_dir / "events.parquet"),
+        version="2.6",
+    )
+    raw = table_schema(spark, str(sf_dir / "events.parquet"))
+    assert raw["ts"].dataType == T.LongType()
+    assert raw.json() == spark.read.parquet(str(sf_dir / "events.parquet")).schema.json()
+    batch = load_table(spark, str(sf_dir), "events")
+    stream = stream_table(spark, str(sf_dir), "events")
+    assert batch.schema["ts"].dataType == T.TimestampType()
+    assert stream.schema["ts"].dataType == T.TimestampType()
+    assert [r.us for r in batch.select(F.unix_micros("ts").alias("us"))
+            .orderBy("event_id").collect()] == [n // 1000 for n in nanos]
+
+
+def test_stream_dir_link_follows_current_sf_dir(tmp_path):
+    """Two sf dirs with one basename share a stream dir: the link must
+    point at the sf dir of the latest call, not at an earlier one."""
+    links = []
+    for parent in ("a", "b"):
+        sf_dir = tmp_path / parent / "sf_same_name"
+        sf_dir.mkdir(parents=True)
+        (sf_dir / "events.parquet").write_bytes(b"")
+        d = _as_stream_dir(str(sf_dir), "events")
+        links.append(os.readlink(os.path.join(d, "events.parquet")))
+    assert links == [
+        str(tmp_path / p / "sf_same_name" / "events.parquet") for p in "ab"
+    ]
+
+
+def test_session_conf_failure_raises():
+    """A loader conf that cannot be set raises instead of leaving the
+    session reading ts with the wrong type."""
+
+    class RefusingConf:
+        def set(self, key, value):
+            raise RuntimeError(f"cannot set {key}")
+
+    class Session:
+        conf = RefusingConf()
+
+    with pytest.raises(RuntimeError, match="nanosAsLong"):
+        _ensure_session_confs(Session())
+
+
+def test_single_file_loaders_start_no_spark_job(spark):
+    """load_table, register_views and stream_table on single-file tables
+    read each schema from the parquet footer on the driver: no Spark
+    job. A sentinel job in a second group is seen by the status tracker
+    only after every earlier job start, so an empty first group means
+    none ran."""
+    sc = spark.sparkContext
+    group, sentinel = "loaders:no_jobs", "loaders:sentinel"
+    sc.setJobGroup(group, "schema reads")
+    try:
+        load_table(spark, SF, "events")
+        register_views(spark, SF, ("orders", "lineitem", "events"))
+        stream_table(spark, SF, "events")
+        sc.setJobGroup(sentinel, "sentinel")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        for t in ("orders", "lineitem", "events"):
+            spark.catalog.dropTempView(t)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never seen"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group) == []
 
 
 def test_uv_dedup_no_final_flush_parity(spark):

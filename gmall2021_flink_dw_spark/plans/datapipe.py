@@ -4629,10 +4629,15 @@ def lake_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = events.withColumn("z", z)
     # Layout width from session config, not a literal (VERDICT r11
     # item 6, same class as the ccnet sizing fix): file count scales
-    # with the session's shuffle parallelism, so the experiment keeps
+    # with the session's batch shuffle width, so the experiment keeps
     # one file per shuffle slot at any deployment size. Both layouts
     # use the SAME width so the files-hit comparison is apples-to-apples.
-    n_files = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # numShufflePartitions is the width batch shuffles really get (under
+    # AQE coalescing, initialPartitionNum); get_spark sets
+    # spark.sql.shuffle.partitions to the narrower streaming width.
+    n_files = int(
+        spark._jsparkSession.sessionState().conf().numShufflePartitions()
+    )
     # z layout: range-partition + sort on the Morton code -> each file
     # holds a contiguous z-range = a small rectangle in (user, hour)
     (

@@ -1004,6 +1004,20 @@ def test_zorder_layout_prunes_and_matches_region(spark):
     assert row.id_sum > 0
 
 
+def test_zorder_layout_sizes_files_by_batch_width(spark):
+    """The layout's file count is the batch shuffle width, not
+    spark.sql.shuffle.partitions: a 4-core get_spark session sets the
+    latter (its streaming width) to 1, which would give each layout one
+    file and nothing to prune."""
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        row = REGISTRY["lake_zorder_layout"].fn(spark, ORACLE_SF).head()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)
+    assert row.zorder_prunes
+
+
 def test_gram_partials_match_numpy(spark):
     """The distributed integer GEMM must equal a single-process numpy
     computation of the quantized X^T X, cell for cell."""

@@ -5,8 +5,11 @@ result under any shuffle partitioning. Anything that leaks
 partition-local state into results (per-partition ids used as values,
 first()/any_value() races resolved differently per layout, float sums
 whose grouping depends on partitioning) breaks this. We re-run a
-representative query per family with spark.sql.shuffle.partitions
-dropped from 32 to 5 and require canonical equality.
+representative query per family with the shuffle width dropped from the
+session's to 5 and require canonical equality. The width is set on both
+confs that carry it: under AQE coalescing batch shuffles start at
+spark.sql.adaptive.coalescePartitions.initialPartitionNum, while
+streaming and non-AQE shuffles read spark.sql.shuffle.partitions.
 
 (Float aggregates here are decimal-first per registry.py's determinism
 rules, so even sums are layout-independent.)
@@ -97,16 +100,30 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+WIDTH_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+)
+
+
 @pytest.mark.parametrize("name", INVARIANT_QUERIES)
 def test_partition_count_invariance(spark, name):
     fn = REGISTRY[name].fn
     base = canon(fn(spark, ORACLE_SF).toPandas())
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    orig = {k: spark.conf.get(k, None) for k in WIDTH_CONFS}
+    for k in WIDTH_CONFS:
+        spark.conf.set(k, "5")
     try:
+        # the width batch shuffles really get, AQE or not
+        assert spark._jsparkSession.sessionState().conf() \
+            .numShufflePartitions() == 5
         narrow = canon(fn(spark, ORACLE_SF).toPandas())
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
+        for k, v in orig.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     assert base.columns.tolist() == narrow.columns.tolist()
     assert len(base) == len(narrow), f"{name}: row count changed with partitioning"
     assert (base.values == narrow.values).all(), (

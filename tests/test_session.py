@@ -6,6 +6,12 @@ refuses to overwrite a committed log entry, and that a micro-batch on a
 `get_spark` session starts no `readlink` process: the default
 FileContext-based manager forks one for every checkpoint-file rename
 when libhadoop is absent.
+
+`get_spark` also gives batch and streaming shuffles their own widths:
+batch shuffles start `shuffle_partitions` wide and AQE coalesces them,
+while a stateful streaming query keeps one state store per four of
+them. These tests pin both widths, and that a restarted query keeps the
+width its checkpoint recorded.
 """
 
 from __future__ import annotations
@@ -15,9 +21,14 @@ import shutil
 import stat
 import subprocess
 import sys
+from contextlib import contextmanager
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark import session
 from gmall2021_flink_dw_spark.session import ensure_workers_can_import
@@ -195,3 +206,124 @@ def test_package_archive_removed_at_exit(tmp_path):
     assert existed == "True"
     assert os.path.dirname(archive) == str(tmp_path)
     assert not os.path.exists(archive)
+
+
+_WIDTH = "spark.sql.shuffle.partitions"
+
+
+def _land(srcs, name, secs):
+    """Land one parquet file of rows at second offsets `secs` into every
+    source dir: written beside the dir, then renamed in, so a stream
+    sees the whole file in one step."""
+    ts = [datetime(2021, 1, 1, 0, 0, s, tzinfo=timezone.utc) for s in secs]
+    table = pa.table({"ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+                      "k": pa.array([1] * len(secs), pa.int32())})
+    for src in srcs:
+        stage = f"{src}_stage_{name}.parquet"
+        pq.write_table(table, stage)
+        os.rename(stage, os.path.join(src, f"{name}.parquet"))
+
+
+def _window_counts(spark, src):
+    """Rows per 10-second window, append mode behind a 0 s watermark."""
+    return (
+        spark.readStream.schema("ts timestamp, k int").parquet(str(src))
+        .withWatermark("ts", "0 seconds")
+        .groupBy(F.window("ts", "10 seconds"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.date_format("window.start", "ss").alias("w"), "n")
+    )
+
+
+def _state_width(q):
+    """State stores per operator, from the last progress that ran the
+    stateful operator."""
+    ops = [p["stateOperators"] for p in q.recentProgress if p["stateOperators"]]
+    return ops[-1][0]["numShufflePartitions"]
+
+
+@contextmanager
+def _stream_width(spark, width):
+    """Run the block with spark.sql.shuffle.partitions at `width`
+    (None: leave it as it is)."""
+    orig = spark.conf.get(_WIDTH)
+    if width is not None:
+        spark.conf.set(_WIDTH, str(width))
+    try:
+        yield
+    finally:
+        spark.conf.set(_WIDTH, orig)
+
+
+def test_batch_and_stream_shuffle_widths(spark, tmp_path):
+    """On a get_spark(shuffle_partitions=8) session, batch shuffles are
+    8 wide (before AQE coalesces them), and a windowed streaming count
+    keeps 8 // 4 = 2 state stores."""
+    conf = spark._jsparkSession.sessionState().conf()
+    assert conf.numShufflePartitions() == 8
+    src = tmp_path / "src"
+    src.mkdir()
+    _land([src], "a", range(0, 16))
+    q = (
+        _window_counts(spark, src).writeStream.outputMode("append")
+        .format("memory").queryName("width_probe")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        width = _state_width(q)
+    finally:
+        q.stop()
+    assert width == 2
+    assert sorted(map(tuple, spark.table("width_probe").collect())) == [
+        ("00", 10)
+    ]
+
+
+@pytest.mark.parametrize("first_width", [None, 8],
+                         ids=["session_width", "cores_width"])
+def test_restart_keeps_recorded_state_width(spark, tmp_path, first_width):
+    """A stateful query drains one file and stops; the session's stream
+    width then changes to 5 and the query restarts on its checkpoint.
+    It must keep the width recorded at first start (the session's, or
+    the cores width that checkpoints written before the split carry),
+    and its parquet output must equal that of a query that ran through
+    both files without a restart."""
+    srcs = [tmp_path / "src_restart", tmp_path / "src_through"]
+    for src in srcs:
+        src.mkdir()
+    outs = [str(tmp_path / "out_restart"), str(tmp_path / "out_through")]
+    ckpts = [str(tmp_path / "ckpt_restart"), str(tmp_path / "ckpt_through")]
+
+    def start(i):
+        return (
+            _window_counts(spark, srcs[i]).writeStream.outputMode("append")
+            .format("parquet").option("path", outs[i])
+            .option("checkpointLocation", ckpts[i])
+            .start()
+        )
+
+    _land(srcs, "a", range(0, 16))
+    with _stream_width(spark, first_width):
+        recorded = int(spark.conf.get(_WIDTH))
+        restarted, through = start(0), start(1)
+    try:
+        restarted.processAllAvailable()
+        through.processAllAvailable()
+        restarted.stop()
+        with _stream_width(spark, 5):
+            restarted = start(0)
+            _land(srcs, "b", [30, 31])
+            restarted.processAllAvailable()
+            through.processAllAvailable()
+        width = _state_width(restarted)
+    finally:
+        restarted.stop()
+        through.stop()
+    assert recorded == (first_width or 2)
+    assert width == recorded
+    rows = [sorted(map(tuple, spark.read.parquet(o).collect())) for o in outs]
+    # [0,10) closed after the first file, [10,20) once the watermark
+    # passed 30 s; [30,40) is still open
+    assert rows[0] == rows[1] == [("00", 10), ("10", 6)]

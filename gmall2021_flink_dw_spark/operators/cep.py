@@ -15,9 +15,10 @@ window — one shuffle on the key, no NFA, and the same answer:
                 `jump_timeout` away
 
 The streaming twin (true per-event emission with event-time timers) is
-``streaming/stateful.py::jump_detect_stream`` via applyInPandasWithState;
-this batch operator is its oracle, mirroring how the reference's CEP
-variant and its commented transcript validate each other.
+``streaming/stateful.py::jump_detect_stream_bucketed`` via
+applyInPandasWithState; this batch operator is its oracle, mirroring how
+the reference's CEP variant and its commented transcript validate each
+other.
 
 Scale: one hash shuffle on the key; window sort is per-key (bounded by a
 user's event count); AQE handles skewed hot keys.

@@ -1,24 +1,38 @@
-"""Custom stateful streaming operator: CEP-style bounce detection (W7).
+"""Keyed-state streaming kernels: UV dedup with a 24 h TTL (W4), the
+new-user flag (W5) and CEP-style bounce detection (W7).
 
-The reference runs a Flink CEP NFA per device with strict contiguity and
-a 10 s within-timeout, unioning the matched and timed-out side outputs
-(``UserJumpDetailApp.java:77-134``). Spark has no CEP library; the
-Spark-first realization is ``applyInPandasWithState``:
+The reference keeps keyed Flink state for each: a per-device ValueState
+with a 24 h TTL (``UniqueVisitApp.java:43-78``), an unbounded per-device
+ValueState (``BaseLogApp.java:55-77``) and a CEP NFA per device with
+strict contiguity and a within-timeout, unioning the matched and
+timed-out side outputs (``UserJumpDetailApp.java:77-134``).
 
-state per key = (last event time, pending entry event). On every event:
-- a pending entry whose successor arrives later than `jump_timeout`
-  is emitted as a bounce (the CEP timeout side-output);
-- a pending entry with a successor inside the timeout is discarded
-  (strict contiguity: the visit continued);
-- an event starting a new session (gap > `session_gap`) becomes the new
-  pending entry.
-An event-time timer (watermark-driven) flushes a pending entry that
-never sees a successor — the reference's `within(10s)` timeout.
+The Spark form is ``applyInPandasWithState`` over BUCKET state:
 
-The batch oracle is operators/cep.py::detect_jumps (lag/lead form);
-tests/test_streaming.py asserts stream == batch on replay, mirroring how
-the reference validates CEP against its inline transcript
-(UserJumpDetailAppBak.java:28-43).
+- rows group by a hash bucket of the key,
+  ``pmod(xxhash64(user_id), n_buckets)``, not by the key itself;
+- a bucket's state is a set of parallel int64 arrays: the sorted,
+  unique member ids and one value per member in each other column;
+- a kernel sorts its batch by (user_id, ts_us, event_id), so each
+  member's rows form one contiguous segment, and runs the per-key
+  recurrence segment-wise in numpy across all members at once;
+- the per-key event-time timer becomes one bucket timer armed at the
+  earliest member bound, plus a sweep on every call that expires the
+  members whose own bound the current watermark has passed.
+
+Framework overhead (Arrow round-trip, state-store get/commit, output
+DataFrame ctor: ~1.3 ms per group, profiled r12) thus scales with
+n_buckets, a knob, not with the key count. This is Flink's key-group
+layout (keys hash into a fixed number of key groups and state is
+tracked per group; Carbone et al., VLDB 2017), which the reference
+inherits from Flink's runtime.
+
+The batch oracles are operators/cep.py::detect_jumps (lag/lead),
+operators/dedup.py::correct_new_user_flag and the first-per-(key, day)
+row_number of dwm_unique_visit. tests/test_streaming.py asserts stream
+== batch on replay and across a checkpoint restart;
+tests/test_state_machines.py drives the kernels directly under
+micro-batch cuts, Arrow chunking and timer firings.
 
 Note on transformWithStateInPandas (Spark 4's state-v2 API with native
 value-state TTL): it would express the 24 h OnCreateAndWrite TTL of
@@ -43,26 +57,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 SESSION_GAP_S = 1800
 JUMP_TIMEOUT_S = 600
 
-
-def _sorted_key_batch(
-    pdfs: Iterator[pd.DataFrame], extra: tuple[str, ...] = ()
-) -> tuple:
-    """Concat a key's Arrow chunks and sort by (ts_us, event_id),
-    returning int64 numpy arrays (ts, ev, *extra columns). Chunks are
-    arbitrary slices in arbitrary order (the `pdfs` iterator contract),
-    so concat-then-sort is required before any order-dependent logic.
-    numpy lexsort on the int64 columns instead of DataFrame.sort_values:
-    at one-replayed-micro-batch scale the state function runs once per
-    key, and sort_values' per-call overhead was 44% of the whole
-    query's Python time (profiled r12, 15k keys at 10x)."""
-    chunks = list(pdfs)
-    rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-    ts = rows["ts_us"].to_numpy(np.int64)
-    ev = rows["event_id"].to_numpy(np.int64)
-    order = np.lexsort((ev, ts))
-    cols = tuple(rows[c].to_numpy()[order] for c in extra)
-    return (ts[order], ev[order], *cols)
-
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -70,83 +64,6 @@ OUTPUT_SCHEMA = T.StructType(
         T.StructField("ts_us", T.LongType()),
     ]
 )
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_us", T.LongType()),
-        T.StructField("pend_us", T.LongType()),
-        T.StructField("pend_event", T.LongType()),
-    ]
-)
-
-
-def _jump_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    gap_us = SESSION_GAP_S * 1_000_000
-    timeout_us = JUMP_TIMEOUT_S * 1_000_000
-    user_id = key[0]
-
-    if state.exists:
-        last_us, pend_us, pend_event = state.get
-    else:
-        last_us, pend_us, pend_event = None, None, None
-
-    out: list[tuple[int, int, int]] = []
-
-    if state.hasTimedOut:
-        # watermark passed pending+timeout with no successor -> bounce.
-        # Keep the session context (last_us): dropping the whole state
-        # here would make a later event arriving within session_gap of
-        # the previous activity look like a fresh session entry — a
-        # bounce the batch oracle never emits. No timer re-armed:
-        # nothing is pending.
-        if pend_us is not None:
-            out.append((user_id, pend_event, pend_us))
-        state.update((last_us, None, None))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "event_id", "ts_us"])
-        return
-
-    ts, ev = _sorted_key_batch(pdfs)
-
-    # Vectorized state-machine transition (was a per-row Python loop; at
-    # one-micro-batch replay scale the per-group pandas overhead was 44%
-    # sort + 28% output-ctor of the whole query's Python time — profiled
-    # r12). The loop's recurrence flattens because `pend` never survives
-    # past the NEXT event: an entry at i either bounces (successor gap >
-    # timeout) or is discarded at i+1, so in-batch bounces = entries
-    # whose successor gap exceeds the timeout; only the LAST row's entry
-    # state carries out of the batch. Chunking/multi-batch equivalence
-    # is property-tested in tests/test_state_machines.py.
-    if len(ts):
-        # prev gap: carry-in last_us for row 0 (None -> always an entry)
-        prev = np.empty(len(ts), dtype=np.int64)
-        prev[1:] = ts[:-1]
-        prev[0] = last_us if last_us is not None else ts[0] - gap_us - 1
-        is_entry = (ts - prev) > gap_us
-        # carry-in pending from the previous batch: checked against the
-        # first event of this batch, then cleared either way
-        if pend_us is not None:
-            if int(ts[0]) - pend_us > timeout_us:
-                out.append((user_id, pend_event, pend_us))
-            pend_us, pend_event = None, None
-        # in-batch bounces: entry rows (except the last) whose successor
-        # arrives later than the jump timeout
-        if len(ts) > 1:
-            bounce = is_entry[:-1] & ((ts[1:] - ts[:-1]) > timeout_us)
-            for i in np.flatnonzero(bounce):
-                out.append((user_id, int(ev[i]), int(ts[i])))
-        if is_entry[-1]:
-            pend_us, pend_event = int(ts[-1]), int(ev[-1])
-        last_us = int(ts[-1])
-
-    state.update((last_us, pend_us, pend_event))
-    if pend_us is not None:
-        # flush via event-time timer once the watermark passes the bound
-        state.setTimeoutTimestamp((pend_us + timeout_us) // 1000 + 1)
-    if out:
-        yield pd.DataFrame(out, columns=["user_id", "event_id", "ts_us"])
-
 
 NEW_USER_SCHEMA = T.StructType(
     [
@@ -156,36 +73,6 @@ NEW_USER_SCHEMA = T.StructType(
         T.StructField("is_new", T.StringType()),
     ]
 )
-NEW_USER_STATE = T.StructType([T.StructField("seen", T.BooleanType())])
-
-
-def _new_user_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """W5/P11 streaming twin: per-key ValueState marks whether the key was
-    ever seen; the first-ever event keeps is_new='1', every later one is
-    rewritten to '0' (BaseLogApp.java:55-77 — unbounded ValueState, no
-    TTL, matching the reference). Within a micro-batch rows are ordered
-    by (ts, event_id) so replay matches the batch min-struct oracle."""
-    seen = state.get[0] if state.exists else False
-    user_id = key[0]
-    # concat BEFORE sorting: a key's rows may span multiple Arrow chunks,
-    # and per-chunk sorting would misplace the first-ever event
-    ts, ev = _sorted_key_batch(pdfs)
-    # vectorized: every row emits; only the first-ever row is '1'
-    flags = np.full(len(ts), "0", dtype=object)
-    if not seen and len(ts):
-        flags[0] = "1"
-    state.update((True,))
-    yield pd.DataFrame(
-        {
-            "user_id": np.full(len(ts), user_id, dtype=np.int64),
-            "event_id": ev,
-            "ts_us": ts,
-            "is_new": flags,
-        }
-    )
-
 
 _DAY_US = 86_400 * 1_000_000
 
@@ -198,154 +85,15 @@ UV_SCHEMA = T.StructType(
         T.StructField("event_type", T.StringType()),
     ]
 )
-UV_STATE = T.StructType([T.StructField("day_us", T.LongType())])
 
-
-def _uv_ttl_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """W4 with state TTL (UniqueVisitApp.java:43-78): per-key ValueState
-    holds the UTC day already emitted; the first event of a new day
-    passes the filter. The reference configures a 24 h OnCreateAndWrite
-    TTL on that state (UniqueVisitApp.java:51-53); here the event-time
-    timer set to the stored day's end clears the state once the
-    watermark passes it — same bound (<= 24 h after write), and exactly
-    when the value can no longer affect emission (any later event is a
-    different day and emits regardless). Keeps streaming state O(active
-    keys within 24 h), not O(all keys ever)."""
-    if state.hasTimedOut:
-        # TTL expiry: watermark passed the stored day's end — drop state.
-        state.remove()
-        return
-
-    day0 = state.get[0] if state.exists else None
-    user_id = key[0]
-    ts, ev, et = _sorted_key_batch(pdfs, ("event_type",))
-    # Vectorized day-transition (was a per-row loop; same profiling
-    # motivation as _jump_fn). After the sort, the UTC day is monotone
-    # non-decreasing within the batch, so the loop's "emit when d !=
-    # current day" rule reduces to: emit the first row of each distinct-
-    # day run, except a first run equal to the carried-in state day.
-    # Consecutive runs always differ, so no other run can be suppressed.
-    d = ts - ts % _DAY_US
-    emit = np.empty(len(d), dtype=bool)
-    emit[0] = day0 is None or int(d[0]) != day0
-    emit[1:] = d[1:] != d[:-1]
-    idx = np.flatnonzero(emit)
-    state.update((int(d[-1]),))
-    # event-time TTL: clear once the watermark passes the day's end
-    state.setTimeoutTimestamp((int(d[-1]) + _DAY_US) // 1000)
-    if len(idx):
-        d_emit = d[idx]
-        yield pd.DataFrame(
-            {
-                "user_id": np.full(len(idx), user_id, dtype=np.int64),
-                "dt": (d_emit // _DAY_US).astype("datetime64[D]").astype(str),
-                "event_id": ev[idx],
-                "ts_us": ts[idx],
-                "event_type": et[idx],
-            }
-        )
-
-
-def uv_dedup_ttl_stream(events: DataFrame, watermark: str = "0 seconds") -> DataFrame:
-    """W4 streaming twin with per-key 24 h state TTL. `events` needs
-    (user_id, event_id, ts, event_type). Emission is immediate (first
-    event of each (key, day)), so on in-order replay the emitted set
-    equals the batch row_number oracle exactly; the timer only bounds
-    state size."""
-    prepared = events.withWatermark("ts", watermark).select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "event_type",
-        "ts",
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _uv_ttl_fn,
-        UV_SCHEMA,
-        UV_STATE,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def correct_new_user_stream(events: DataFrame) -> DataFrame:
-    """W5 streaming form of operators/dedup.py::correct_new_user_flag.
-    `events` needs (user_id, event_id, ts). No timeout: the reference
-    keeps this state forever (no TTL configured on the ValueState)."""
-    prepared = events.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _new_user_fn,
-        NEW_USER_SCHEMA,
-        NEW_USER_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def jump_detect_stream(events: DataFrame, watermark: str = "0 seconds") -> DataFrame:
-    """W7 streaming twin. `events` needs (user_id, event_id, ts)."""
-    prepared = (
-        events.withWatermark("ts", watermark)
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-            "ts",
-        )
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _jump_fn,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# --------------------------------------------------------------------
-# Bucketed-state variants (VERDICT r12 item 6).
-#
-# The per-key forms above call the state function once PER KEY per
-# micro-batch; the r12 profile showed the residual cost is pure
-# per-group framework overhead — Arrow round-trip, state-store
-# get/commit, output-DataFrame ctor — ~1.3 ms/group, which at a
-# 15k-key replay is ~20 s of overhead for ~0.1 s of kernel math. The
-# variants below group by a HASH BUCKET of the key instead
-# (pmod(xxhash64(user_id), n_buckets)), hold every bucket member's
-# state in parallel sorted int64 arrays, and run the SAME vectorized
-# state machines segment-wise across users — so framework overhead
-# scales with n_buckets (a knob), not with the key count.
-#
-# Semantics preserved exactly (property-tested against the same batch
-# oracles in tests/test_state_machines.py):
-# - Per-key event-time timers become one per-bucket timer armed at the
-#   MIN pending bound across members; when it fires (or on any data
-#   call — timers must be re-armed on every invocation anyway), every
-#   member whose own bound the CURRENT watermark has passed is flushed.
-#   A member flushes in exactly the micro-batch cycle its per-key
-#   timer would have fired in: both fire at the first batch whose
-#   carried-in watermark passes the member's bound.
-# - State TTL eviction (uv dedup) likewise drops exactly the members
-#   whose day-end the watermark passed.
-#
 # At 100 TB the bucket id is the shuffle/state-store key: n_buckets
-# scales with key cardinality (the knob below scales with input size),
-# buckets stay O(keys/n_buckets) and spill-free, and the state store
-# round-trips n_buckets rows per batch instead of n_keys. The
-# trade-off is write amplification — one member's update rewrites the
-# bucket row — which pays off exactly when per-group overhead
-# dominates state size (the measured regime here: 8 state partitions
-# beat 32 at sf0.1 AND 10x because state is small).
-# Flink's analogous move is key-group assignment (keys hash into a
-# fixed number of key groups, MAX_PARALLELISM, state tracked per
-# group) — the reference inherits it implicitly via Flink's runtime.
-
+# scales with key cardinality, buckets stay O(keys/n_buckets) and
+# spill-free, and the state store round-trips n_buckets rows per batch
+# instead of n_keys. The trade-off is write amplification — one
+# member's update rewrites the bucket row — which pays off exactly when
+# per-group overhead dominates state size (the measured regime here: 8
+# state partitions beat 32 at sf0.1 AND 10x because state is small).
+#
 # Measured sweep (uv dedup, solo min-of-3, r13): at 10x (15k keys)
 # 16 buckets 6.5 s (parallelism-starved: fewer buckets than the ~32
 # state-store partitions), 32: 5.3, 64: 4.7, 128: 4.7, 256: 5.3,
@@ -353,7 +101,7 @@ def jump_detect_stream(events: DataFrame, watermark: str = "0 seconds") -> DataF
 # sf0.1, 64: 2.78 vs 256: 3.08. 64 wins both scales on this box
 # (local[32]); on a real cluster the knob scales with executor-core
 # count and key cardinality — per-bucket state must stay
-# O(keys/n_buckets) memory-bounded, which every kernel above is.
+# O(keys/n_buckets) memory-bounded, which every kernel below is.
 N_STATE_BUCKETS = 64
 
 
@@ -362,8 +110,13 @@ def _bucket_sorted_batch(
 ) -> tuple:
     """Concat a bucket's Arrow chunks and sort by (user_id, ts_us,
     event_id), returning int64 numpy arrays (uid, ts, ev, *extra).
-    The user sort groups each member's rows into one contiguous
-    segment so the per-key recurrences vectorize segment-wise."""
+    Chunks are arbitrary slices in arbitrary order (the `pdfs` iterator
+    contract), so concat-then-sort comes before any order-dependent
+    logic. The user sort groups each member's rows into one contiguous
+    segment so the per-key recurrences vectorize segment-wise. numpy
+    lexsort on the int64 columns instead of DataFrame.sort_values: the
+    latter's per-call overhead was 44% of a whole stateful query's
+    Python time (profiled r12, 15k keys at 10x)."""
     chunks = list(pdfs)
     rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
     uid = rows["user_id"].to_numpy(np.int64)
@@ -430,12 +183,20 @@ UV_BUCKET_STATE = T.StructType(
 def _uv_bucket_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Bucketed _uv_ttl_fn: state = (sorted member ids, last-emitted
-    day per member). TTL eviction drops members whose day-end the
-    watermark passed — on the timer AND on every data call (the timer
-    must be re-armed per invocation anyway, so the data path is also a
-    correct eviction point); emission semantics are the per-key
-    kernel's, applied segment-wise."""
+    """W4 UV dedup: state = (sorted member ids, UTC day already emitted
+    per member); the first event of a member's new day passes.
+
+    TTL: the reference sets a 24 h OnCreateAndWrite TTL on its
+    ValueState (UniqueVisitApp.java:51-53). Here a member is evicted
+    once the watermark reaches its stored day's end: the same bound
+    (<= 24 h after the write), and exactly when the value can no longer
+    affect emission, since any later event is a different day and emits
+    regardless. An event at the day end itself is the next day, so
+    eviction at `day_end <= watermark` is safe. State stays O(members
+    active within 24 h), not O(members ever). Eviction runs on the
+    timer AND on every data call (the timer must be re-armed per
+    invocation anyway, so the data path is also a correct eviction
+    point)."""
     wm_us = state.getCurrentWatermarkMs() * 1000
     su, sd = _state_arrays(state, 2)
 
@@ -456,11 +217,15 @@ def _uv_bucket_fn(
         return
 
     uid, ts, ev, et = _bucket_sorted_batch(pdfs, ("event_type",))
+    # After the sort a member's UTC day is non-decreasing within its
+    # segment, so "emit when the day differs from the last emitted one"
+    # reduces to: emit the first row of each distinct-day run, except a
+    # segment's first run when it equals the carried-in day. Consecutive
+    # runs always differ, so no other run can be suppressed.
     d = ts - ts % _DAY_US
     seg, end = _seg_bounds(uid)
     emit = seg.copy()
     emit[1:] |= d[1:] != d[:-1]
-    # suppress each segment's first run when it equals the carried day
     first_idx = np.flatnonzero(seg)
     pos, found = _member_lookup(su, uid[first_idx])
     same_day = found & (sd[pos] == d[first_idx]) if len(su) else found
@@ -490,9 +255,12 @@ NEW_USER_BUCKET_STATE = T.StructType(
 def _new_user_bucket_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Bucketed _new_user_fn: state = sorted ids ever seen in this
-    bucket. Unbounded by contract (the reference configures no TTL on
-    this ValueState — BaseLogApp.java:55-77)."""
+    """W5/P11 new-user flag: state = sorted ids ever seen in this
+    bucket. Every row emits; a member's first-ever row, in (ts,
+    event_id) order, keeps is_new='1' and every later one is '0', so
+    replay matches the batch min-struct oracle. Unbounded by contract
+    (the reference configures no TTL on this ValueState —
+    BaseLogApp.java:55-77)."""
     (su,) = _state_arrays(state, 1)
     uid, ts, ev = _bucket_sorted_batch(pdfs)
     seg, _ = _seg_bounds(uid)
@@ -521,13 +289,25 @@ _NO_PEND = -1  # array-state sentinel for "no pending entry"
 def _jump_bucket_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Bucketed _jump_fn: state = (sorted member ids, last event time,
-    pending-entry time, pending-entry event) with _NO_PEND sentinels.
-    The per-key recurrence already flattened (an entry either bounces
-    against its successor gap or is discarded at the next event); here
-    it runs segment-wise, and the watermark flush — per-key: one timer
-    per key — is one bucket timer at the min pending bound plus a
-    vectorized wm-passed sweep on every invocation."""
+    """W7 bounce detection: state = (sorted member ids, last event
+    time, pending-entry time, pending-entry event), _NO_PEND when a
+    member has no pending entry. On every event of a member:
+
+    - a pending entry whose successor arrives later than the jump
+      timeout is emitted as a bounce (the CEP timeout side-output);
+    - a pending entry with a successor inside the timeout is discarded
+      (strict contiguity: the visit continued);
+    - an event starting a new session (gap > session gap) becomes the
+      new pending entry.
+
+    The recurrence flattens because a pending entry never survives past
+    the member's NEXT event: it either bounces against its successor
+    gap or is discarded, so the in-batch bounces are the entries whose
+    successor gap exceeds the timeout, and only a segment's last row
+    carries a pending entry out of the batch. A pending entry that
+    never sees a successor is flushed once the watermark passes its
+    bound — the reference's `within` timeout — by one bucket timer at
+    the earliest pending bound plus a sweep on every call."""
     gap_us = SESSION_GAP_S * 1_000_000
     timeout_us = JUMP_TIMEOUT_S * 1_000_000
     wm_ms = state.getCurrentWatermarkMs()
@@ -537,15 +317,16 @@ def _jump_bucket_fn(
     out_t: list = []
 
     def _flush_expired(u, l, p, pe):
-        """Emit + clear every pending whose bound the watermark passed
-        (keep last_us: the session context must survive — see the
-        per-key kernel's timeout comment). The condition mirrors the
-        per-key timer bound exactly — fires at (pend+timeout)//1000 + 1
-        ms, STRICTLY after the boundary — so an on-time successor at
-        ts == pend+timeout in a later micro-batch still cancels the
-        bounce, matching the batch oracle's strict gap > timeout rule
-        (ADVICE r13: `<=` at the exact boundary emitted a bounce the
-        per-key layout would not)."""
+        """Emit + clear every pending entry whose bound the watermark
+        passed. last_us is kept: dropping it would make a later event
+        within the session gap of the member's previous activity look
+        like a fresh session entry — a bounce the batch oracle never
+        emits. The bound is STRICT: a pending entry expires only once
+        the watermark is past (pend + timeout) in ms, because a
+        successor at exactly ts == pend + timeout is not late at that
+        watermark, may still arrive in a later micro-batch, and cancels
+        the bounce under the batch oracle's strict gap > timeout rule
+        (pinned by test_jump_bucket_fn_exact_boundary_successor_cancels)."""
         exp = (p != _NO_PEND) & ((p + timeout_us) // 1000 < wm_ms)
         if exp.any():
             out_u.append(u[exp])
@@ -560,6 +341,7 @@ def _jump_bucket_fn(
             state.update((u.tolist(), l.tolist(), p.tolist(), pe.tolist()))
             pend = p != _NO_PEND
             if pend.any():
+                # first ms at which the earliest pending entry expires
                 state.setTimeoutTimestamp(
                     max(
                         (int(p[pend].min()) + timeout_us) // 1000 + 1,
@@ -596,7 +378,7 @@ def _jump_bucket_fn(
     is_entry = (ts - prev) > gap_us
 
     # carried-in pending vs each segment's first event (then cleared
-    # either way — strict contiguity, exactly the per-key kernel)
+    # either way — strict contiguity)
     if len(su):
         carried_pend = np.where(found, sp[pos], _NO_PEND)
         carried_pe = np.where(found, spe[pos], _NO_PEND)
@@ -632,8 +414,9 @@ def _jump_bucket_fn(
         su, (sl, sp, spe), bu, (bl, bp, bpe)
     )
     # members without data this batch whose pending the watermark
-    # passed flush NOW — the same micro-batch cycle their per-key
-    # timer would have fired in (the timer is re-armed below anyway)
+    # passed flush NOW: the first micro-batch whose carried-in
+    # watermark passes a member's bound is the one that flushes it,
+    # whether the call is the timer's or a data call
     _store(*_flush_expired(u2, l2, p2, pe2))
 
     if out_u:
@@ -660,8 +443,11 @@ def uv_dedup_ttl_stream_bucketed(
     watermark: str = "0 seconds",
     n_buckets: int = N_STATE_BUCKETS,
 ) -> DataFrame:
-    """uv_dedup_ttl_stream with bucketed state (see the section comment
-    above): identical emitted set, framework overhead O(n_buckets)."""
+    """W4 UV dedup with a 24 h state TTL. `events` needs (user_id,
+    event_id, ts, event_type). Emission is immediate (the first event
+    of each (key, day)), so on in-order replay the emitted set equals
+    the batch row_number oracle exactly; the TTL timer only bounds
+    state size."""
     prepared = events.withWatermark("ts", watermark).select(
         "user_id",
         "event_id",
@@ -683,7 +469,9 @@ def uv_dedup_ttl_stream_bucketed(
 def correct_new_user_stream_bucketed(
     events: DataFrame, n_buckets: int = N_STATE_BUCKETS
 ) -> DataFrame:
-    """correct_new_user_stream with bucketed state."""
+    """W5 streaming form of operators/dedup.py::correct_new_user_flag.
+    `events` needs (user_id, event_id, ts). No timeout: the reference
+    keeps this state forever (no TTL configured on the ValueState)."""
     prepared = events.select(
         "user_id",
         "event_id",
@@ -705,7 +493,9 @@ def jump_detect_stream_bucketed(
     watermark: str = "0 seconds",
     n_buckets: int = N_STATE_BUCKETS,
 ) -> DataFrame:
-    """jump_detect_stream with bucketed state."""
+    """W7 streaming bounce detection; the batch oracle is
+    operators/cep.py::detect_jumps. `events` needs (user_id, event_id,
+    ts)."""
     prepared = events.withWatermark("ts", watermark).select(
         "user_id",
         "event_id",

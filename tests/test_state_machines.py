@@ -1,22 +1,25 @@
-"""Chunk-boundary + multi-batch property tests for the stateful
-streaming state machines (streaming/stateful.py).
+"""Chunk-boundary + multi-batch property tests for the bucketed
+stateful streaming kernels (streaming/stateful.py).
 
 The Spark-level equivalence tests (test_streaming.py) replay the whole
 table in one micro-batch, so timers only fire in the trailing empty
 batch and a key's rows arrive in one Arrow chunk. These tests drive
-_jump_fn / _uv_ttl_fn DIRECTLY with a fake GroupState under adversarial
-conditions neither fixture produces:
+_jump_bucket_fn / _uv_bucket_fn / _new_user_bucket_fn DIRECTLY with a
+fake GroupState under adversarial conditions neither fixture produces:
 
-- a key's rows split across >= 3 Arrow chunks, shuffled within the
+- a bucket's rows split across >= 3 Arrow chunks, shuffled within the
   chunk (the `pdfs` iterator contract: chunks are arbitrary slices);
 - the stream cut into many micro-batches with state carried across,
   out-of-order WITHIN each batch (what a watermark admits), event-time
   timers fired exactly when the watermark passes their timestamp;
+- many users sharing one bucket, so the kernels must segment correctly
+  and merge per-member state without cross-talk. Every user in ONE
+  bucket is the general case — Spark only routes rows;
 
 and assert the emitted set equals the batch-oracle semantics computed
 by a brute-force Python reference (the lag/lead rules of
-operators/cep.py::detect_jumps and the first-per-(key,day) rule of
-dwm_unique_visit).
+operators/cep.py::detect_jumps, with its strict gap > timeout, and the
+first-per-(key,day) rule of dwm_unique_visit).
 """
 
 from __future__ import annotations
@@ -31,8 +34,9 @@ from gmall2021_flink_dw_spark.streaming.stateful import (
     _DAY_US,
     JUMP_TIMEOUT_S,
     SESSION_GAP_S,
-    _jump_fn,
-    _uv_ttl_fn,
+    _jump_bucket_fn,
+    _new_user_bucket_fn,
+    _uv_bucket_fn,
 )
 
 _GAP_US = SESSION_GAP_S * 1_000_000
@@ -47,12 +51,13 @@ _SETTINGS = dict(
 
 class FakeState:
     """Minimal stand-in for pyspark.sql.streaming.state.GroupState
-    implementing exactly the surface the state machines use."""
+    implementing exactly the surface the bucketed kernels use."""
 
     def __init__(self):
         self._val = None
         self.hasTimedOut = False
         self.timeout_ms = None
+        self.wm_ms = 0
 
     @property
     def exists(self):
@@ -73,34 +78,8 @@ class FakeState:
     def setTimeoutTimestamp(self, ms):
         self.timeout_ms = ms
 
-
-def _run_machine(fn, key, batches, timer_extra_cols=None):
-    """Replay consecutive micro-batches through `fn` with one FakeState,
-    firing the event-time timer between batches whenever the watermark
-    (max event time seen, 0s delay) has passed it — the contract of
-    GroupStateTimeout.EventTimeTimeout. Returns all emitted rows."""
-    state = FakeState()
-    out: list[pd.DataFrame] = []
-    watermark_ms = -1
-    for chunks in batches:
-        batch_max = max(
-            int(ts) for c in chunks for ts in c["ts_us"]
-        )
-        out.extend(fn((key,), iter(chunks), state))
-        # watermark advances to max event time AFTER the batch (Spark
-        # updates the watermark at batch end)
-        watermark_ms = max(watermark_ms, batch_max // 1000)
-        if state.timeout_ms is not None and state.timeout_ms <= watermark_ms:
-            state.hasTimedOut = True
-            state.timeout_ms = None
-            out.extend(fn((key,), iter(()), state))
-            state.hasTimedOut = False
-    # end of stream: a final timer still pending fires once the
-    # watermark passes it (the trailing empty batch in a real run)
-    if state._val is not None and state.timeout_ms is not None:
-        state.hasTimedOut = True
-        out.extend(fn((key,), iter(()), state))
-    return pd.concat(out) if out else pd.DataFrame()
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
 
 
 def _chunked(rows: pd.DataFrame, rng: random.Random, n_chunks: int):
@@ -133,48 +112,6 @@ def _expected_jumps(ts_list):
     return sorted(out)
 
 
-# distinct timestamps: same-instant events tie-break by event_id in both
-# forms, but the brute-force reference above is ts-only — keep the
-# property focused on gap/timeout boundaries (exact multiples included)
-_ts_lists = st.lists(
-    st.integers(min_value=0, max_value=30).map(
-        lambda m: m * (_TIMEOUT_US // 2)
-    ),
-    min_size=1,
-    max_size=12,
-    unique=True,
-)
-
-
-def _mk_rows(ts_list):
-    return pd.DataFrame(
-        {
-            "event_id": list(range(len(ts_list))),
-            "ts_us": ts_list,
-            "event_type": ["pv"] * len(ts_list),
-        }
-    )
-
-
-@given(_ts_lists, st.integers(1, 4), st.randoms(use_true_random=False))
-@settings(**_SETTINGS)
-def test_jump_fn_multibatch_chunked(ts_list, n_batches, rng):
-    """_jump_fn under micro-batch cuts + Arrow chunking must equal the
-    batch lag/lead oracle exactly (every bounce, no spurious ones)."""
-    srt = sorted(ts_list)
-    cut = sorted(rng.sample(range(1, len(srt)), min(n_batches - 1, len(srt) - 1))) if len(srt) > 1 else []
-    batches = []
-    prev = 0
-    for b in cut + [len(srt)]:
-        rows = _mk_rows(srt[prev:b])
-        rows["event_id"] = range(prev, b)
-        batches.append(_chunked(rows, rng, 3))
-        prev = b
-    got = _run_machine(_jump_fn, 7, batches)
-    got_ts = sorted(int(t) for t in got["ts_us"]) if len(got) else []
-    assert got_ts == _expected_jumps(ts_list)
-
-
 def _expected_uv(ts_list):
     """First event per UTC day in (ts, event_id) order."""
     seen_days, out = set(), []
@@ -186,69 +123,12 @@ def _expected_uv(ts_list):
     return sorted(out)
 
 
-_uv_ts_lists = st.lists(
-    st.integers(min_value=0, max_value=40).map(
-        lambda m: m * (_DAY_US // 4)  # quarter-day steps: day boundaries hit
-    ),
-    min_size=1,
-    max_size=14,
-    unique=True,
-)
-
-
-@given(_uv_ts_lists, st.integers(1, 5), st.randoms(use_true_random=False))
-@settings(**_SETTINGS)
-def test_uv_ttl_fn_multibatch_chunked(ts_list, n_batches, rng):
-    """_uv_ttl_fn under micro-batch cuts + chunking + TTL timer firings
-    must emit exactly the first event of each (key, day): the TTL
-    clearing state must never cause a re-emission, because the timer
-    only fires once the watermark (>= some later event's day) has
-    passed the stored day's end."""
-    srt = sorted(ts_list)
-    cut = sorted(rng.sample(range(1, len(srt)), min(n_batches - 1, len(srt) - 1))) if len(srt) > 1 else []
-    batches = []
-    prev = 0
-    for b in cut + [len(srt)]:
-        rows = _mk_rows(srt[prev:b])
-        rows["event_id"] = range(prev, b)
-        batches.append(_chunked(rows, rng, 3))
-        prev = b
-    got = _run_machine(_uv_ttl_fn, 7, batches)
-    got_ts = sorted(int(t) for t in got["ts_us"]) if len(got) else []
-    assert got_ts == _expected_uv(ts_list)
-
-
-# ------------------- bucketed-state kernels (r13) -------------------
-# Same adversarial axes as above (micro-batch cuts, Arrow chunking,
-# timer firings) PLUS the new one: many users share one bucket, so the
-# kernels must segment correctly and merge per-member state without
-# cross-talk. Driving the kernel directly with every user in ONE
-# bucket is the general case — Spark only routes rows.
-
-from gmall2021_flink_dw_spark.streaming.stateful import (  # noqa: E402
-    _jump_bucket_fn,
-    _new_user_bucket_fn,
-    _uv_bucket_fn,
-)
-
-
-class FakeBucketState(FakeState):
-    """FakeState + the watermark surface the bucketed kernels use."""
-
-    def __init__(self):
-        super().__init__()
-        self.wm_ms = 0
-
-    def getCurrentWatermarkMs(self):
-        return self.wm_ms
-
-
 def _run_bucket_machine(fn, batches):
     """Replay micro-batches of multi-user rows through a bucketed
-    kernel with one FakeBucketState; watermark = max event time of all
+    kernel with one FakeState; watermark = max event time of all
     PRIOR batches (Spark updates the watermark at batch end), timers
     fired whenever the new watermark passes them."""
-    state = FakeBucketState()
+    state = FakeState()
     out: list[pd.DataFrame] = []
     for chunks in batches:
         batch_max = max(int(ts) for c in chunks for ts in c["ts_us"])
@@ -259,10 +139,12 @@ def _run_bucket_machine(fn, batches):
             state.timeout_ms = None
             out.extend(fn((0,), iter(()), state))
             state.hasTimedOut = False
-    # end of stream: like the per-key harness, pending timers flush as
-    # if the watermark eventually passed them (wm -> infinity); the
-    # bucketed sweep is wm-checked, so advance the fake watermark. The
-    # loop covers re-arming to a later member after a partial flush.
+    # end of stream: pending timers flush as if the watermark
+    # eventually passed them, because the batch oracle counts an entry
+    # with no successor as a bounce (no gap can be <= the timeout); the
+    # kernels' sweeps are wm-checked, so advance the fake watermark to
+    # infinity. The loop covers re-arming to a later member after a
+    # partial flush.
     state.wm_ms = 2**60
     while state._val is not None and state.timeout_ms is not None:
         state.hasTimedOut = True
@@ -272,17 +154,24 @@ def _run_bucket_machine(fn, batches):
     return pd.concat(out) if out else pd.DataFrame()
 
 
-_user_ts_pairs = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=4),
-        st.integers(min_value=0, max_value=30).map(
-            lambda m: m * (_TIMEOUT_US // 2)
+def _user_ts_pairs(step_us, max_steps):
+    """(user, ts) pairs for five users on a grid of `step_us`: exact
+    multiples land events on the gap/timeout/day boundaries."""
+    return st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=4),
+            st.integers(min_value=0, max_value=max_steps).map(
+                lambda m: m * step_us
+            ),
         ),
-    ),
-    min_size=1,
-    max_size=24,
-    unique=True,
-)
+        min_size=1,
+        max_size=24,
+        unique=True,
+    )
+
+
+# half-timeout steps up to 9000 s: session and bounce boundaries
+_timeout_grid = _user_ts_pairs(_TIMEOUT_US // 2, 30)
 
 
 def _mk_user_rows(pairs):
@@ -314,7 +203,7 @@ def _cut_batches(pairs, n_batches, rng):
     return batches
 
 
-@given(_user_ts_pairs, st.integers(1, 4), st.randoms(use_true_random=False))
+@given(_timeout_grid, st.integers(1, 4), st.randoms(use_true_random=False))
 @settings(**_SETTINGS)
 def test_jump_bucket_fn_multiuser_multibatch(pairs, n_batches, rng):
     """_jump_bucket_fn over a shared bucket must equal the per-user
@@ -332,11 +221,20 @@ def test_jump_bucket_fn_multiuser_multibatch(pairs, n_batches, rng):
     assert got_pairs == sorted(want)
 
 
-@given(_user_ts_pairs, st.integers(1, 5), st.randoms(use_true_random=False))
+@given(
+    # quarter-day steps up to 10 days: day boundaries fall inside and
+    # between micro-batches, so new-day emits and TTL evictions happen
+    # mid-stream
+    st.one_of(_timeout_grid, _user_ts_pairs(_DAY_US // 4, 40)),
+    st.integers(1, 5),
+    st.randoms(use_true_random=False),
+)
 @settings(**_SETTINGS)
 def test_uv_bucket_fn_multiuser_multibatch(pairs, n_batches, rng):
     """_uv_bucket_fn over a shared bucket must emit exactly the first
-    event of each (member, day), with TTL eviction never re-emitting."""
+    event of each (member, day), with TTL eviction never re-emitting:
+    a member is evicted only once the watermark (>= some later event's
+    day) has passed its stored day's end."""
     got = _run_bucket_machine(_uv_bucket_fn, _cut_batches(pairs, n_batches, rng))
     got_pairs = (
         sorted(zip((int(u) for u in got["user_id"]), (int(t) for t in got["ts_us"])))
@@ -349,7 +247,7 @@ def test_uv_bucket_fn_multiuser_multibatch(pairs, n_batches, rng):
     assert got_pairs == sorted(want)
 
 
-@given(_user_ts_pairs, st.integers(1, 4), st.randoms(use_true_random=False))
+@given(_timeout_grid, st.integers(1, 4), st.randoms(use_true_random=False))
 @settings(**_SETTINGS)
 def test_new_user_bucket_fn_multiuser_multibatch(pairs, n_batches, rng):
     """_new_user_bucket_fn: every row emits; exactly one '1' per member
@@ -372,10 +270,11 @@ def test_new_user_bucket_fn_multiuser_multibatch(pairs, n_batches, rng):
 
 def test_jump_bucket_fn_exact_boundary_successor_cancels():
     """ADVICE r13 (stateful.py _flush_expired): at the EXACT boundary
-    (watermark == pend + timeout) the bucketed sweep must NOT flush —
-    the per-key timer fires strictly after the bound, so an on-time
-    successor arriving at ts == pend + timeout in a later micro-batch
-    still cancels the bounce (batch oracle: strict gap > timeout).
+    (watermark == pend + timeout) the sweep must NOT flush. The batch
+    oracle's rule is strict (bounce iff successor gap > timeout), and a
+    successor at ts == pend + timeout is not late at that watermark, so
+    it may still arrive in a later micro-batch and must cancel the
+    bounce.
 
     Staged so the property tests can't reach it (they cut batches in
     (ts, user) order): batch 1 = A's entry at 0 plus user 3's event at

@@ -17,10 +17,12 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall2021_flink_dw_spark.operators.cep import detect_jumps
+from gmall2021_flink_dw_spark.operators.dedup import correct_new_user_flag
 from gmall2021_flink_dw_spark.operators.routing import route, routing_config
 from gmall2021_flink_dw_spark.sources.batch import (
     _ensure_session_confs,
@@ -37,7 +39,11 @@ from gmall2021_flink_dw_spark.streaming.pipelines import (
     visitor_stats_transform,
 )
 from gmall2021_flink_dw_spark.streaming.sources import _as_stream_dir, stream_table
-from gmall2021_flink_dw_spark.streaming.stateful import jump_detect_stream
+from gmall2021_flink_dw_spark.streaming.stateful import (
+    correct_new_user_stream_bucketed,
+    jump_detect_stream_bucketed,
+    uv_dedup_ttl_stream_bucketed,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -160,65 +166,103 @@ def test_uv_dedup_equivalence(spark, events_stream):
         q.stop()
 
 
-@pytest.mark.parametrize("form", ["per_key", "bucketed"])
-def test_uv_dedup_ttl_multibatch(spark, form):
+def _uv_oracle(spark, events):
+    """Batch first-per-(user, day) oracle, in the UV kernel's schema."""
+    return spark.sql(
+        """
+        SELECT user_id, date_format(dt, 'yyyy-MM-dd') AS dt,
+               event_id, unix_micros(cast(ts as timestamp)) AS ts_us,
+               event_type
+        FROM (
+          SELECT user_id, date_trunc('day', ts) AS dt, event_id, ts,
+                 event_type,
+                 row_number() OVER (
+                   PARTITION BY user_id, date_trunc('day', ts)
+                   ORDER BY ts, event_id) AS rn
+          FROM {events}
+        ) WHERE rn = 1
+        """,
+        events=events,
+    ).toPandas()
+
+
+def _new_user_oracle(events):
+    """Batch min-struct new-user oracle, in the kernel's schema."""
+    return (
+        correct_new_user_flag(events)
+        .select(
+            "user_id",
+            "event_id",
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+            "is_new",
+        )
+        .toPandas()
+    )
+
+
+def _jump_oracle(events):
+    """Batch lag/lead bounces, in the kernel's schema."""
+    return (
+        detect_jumps(events)
+        .select(
+            "user_id",
+            "event_id",
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        )
+        .toPandas()
+    )
+
+
+def _time_ordered_writer(events, root):
+    """Return land(i): write the i-th of six (ts, event_id)-ordered
+    slices of `events` as one parquet file under `root`. Read with
+    maxFilesPerTrigger=1, each file is one micro-batch, so day
+    boundaries fall between micro-batches and timers fire."""
+    ntile = F.ntile(6).over(Window.orderBy("ts", "event_id"))
+    parts = events.withColumn("part", ntile)
+
+    def land(i):
+        parts.filter(F.col("part") == i).drop("part").coalesce(1).write.parquet(
+            os.path.join(root, f"b{i}")
+        )
+
+    return land
+
+
+def _one_file_per_trigger(spark, root):
+    """File stream over the files landed under `root`."""
+    schema = spark.read.parquet(os.path.join(root, "b1")).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(root, "b*"))
+    )
+
+
+@pytest.mark.parametrize("n_buckets", [7], ids=["bucketed"])
+def test_uv_dedup_ttl_multibatch(spark, n_buckets):
     """W4 + 24 h TTL (UniqueVisitApp.java:51-53 parity): replay the
     events in multiple time-ordered micro-batches so watermarks advance
     and the per-day timers actually fire between batches; the emitted
     set must STILL equal the batch first-per-(user,day) oracle exactly —
     i.e. TTL cleanup neither re-emits a day nor swallows a new one.
-    Both state layouts: per-key ValueState and the r13 bucketed array
-    state (the bucketed run also round-trips ArrayType state through
-    the real state store across triggers — the surface the FakeState
-    property tests cannot reach)."""
-    import os
-
-    from pyspark.sql import Window
-    from gmall2021_flink_dw_spark.streaming.stateful import (
-        uv_dedup_ttl_stream,
-        uv_dedup_ttl_stream_bucketed,
-    )
-
-    ctor = uv_dedup_ttl_stream if form == "per_key" else (
-        lambda st: uv_dedup_ttl_stream_bucketed(st, n_buckets=7)
-    )
-
+    The run also round-trips ArrayType bucket state through the real
+    state store across triggers — the surface the FakeState property
+    tests cannot reach."""
     events = load_table(spark, SF, "events")
-    # split into 6 time-ordered files: each trigger processes one file,
-    # so day boundaries fall between micro-batches and timers fire
     d = tempfile.mkdtemp(prefix="uv_ttl_")
     try:
-        ntile = F.ntile(6).over(Window.orderBy("ts", "event_id"))
-        parts = events.withColumn("part", ntile)
+        land = _time_ordered_writer(events, d)
         for i in range(1, 7):
-            parts.filter(F.col("part") == i).drop("part").coalesce(1).write.parquet(
-                os.path.join(d, f"b{i}")
-            )
-        schema = spark.read.parquet(os.path.join(d, "b1")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(d, "b*"))
+            land(i)
+        stream = _one_file_per_trigger(spark, d)
+        q = run_to_memory(
+            uv_dedup_ttl_stream_bucketed(stream, n_buckets=n_buckets),
+            "uv_ttl_stream",
         )
-        q = run_to_memory(ctor(stream), "uv_ttl_stream")
         try:
             got = spark.sql("select * from uv_ttl_stream").toPandas()
-            want = spark.sql(
-                """
-                SELECT user_id, date_format(dt, 'yyyy-MM-dd') AS dt,
-                       event_id, unix_micros(cast(ts as timestamp)) AS ts_us,
-                       event_type
-                FROM (
-                  SELECT user_id, date_trunc('day', ts) AS dt, event_id, ts,
-                         event_type,
-                         row_number() OVER (
-                           PARTITION BY user_id, date_trunc('day', ts)
-                           ORDER BY ts, event_id) AS rn
-                  FROM {events}
-                ) WHERE rn = 1
-                """,
-                events=events,
-            ).toPandas()
+            want = _uv_oracle(spark, events)
             assert len(got) == len(want)
             pd.testing.assert_frame_equal(_canon(got), _canon(want))
         finally:
@@ -227,86 +271,70 @@ def test_uv_dedup_ttl_multibatch(spark, form):
         shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.mark.parametrize("form", ["per_key", "bucketed"])
-def test_checkpoint_restart_recovery(spark, form):
-    """W9 exactly-once across a RESTART: run the stateful UV-dedup
-    stream over the first half of the data with a checkpointed parquet
-    sink, stop the query (simulated process death), land more files,
-    start a fresh query on the SAME checkpoint, drain. The final sink
-    contents must equal the batch first-per-(user,day) oracle exactly —
-    duplicates would mean per-key state (applyInPandasWithState) was
-    lost on restore; missing rows would mean source offsets replayed
-    wrong. The bucketed form is the kernel stream_ingest runs: RocksDB
-    state restored from its changelog checkpoints."""
-    import os
+_RESTART_KERNELS = {
+    "uv": uv_dedup_ttl_stream_bucketed,
+    "new_user": correct_new_user_stream_bucketed,
+    "jump": jump_detect_stream_bucketed,
+}
 
-    from pyspark.sql import Window
-    from gmall2021_flink_dw_spark.streaming.stateful import (
-        uv_dedup_ttl_stream,
-        uv_dedup_ttl_stream_bucketed,
-    )
 
-    kernel = (uv_dedup_ttl_stream if form == "per_key"
-              else uv_dedup_ttl_stream_bucketed)
+@pytest.mark.parametrize("kernel", list(_RESTART_KERNELS))
+def test_checkpoint_restart_recovery(spark, kernel):
+    """W9 exactly-once across a RESTART, for each stateful kernel: run
+    the stream over the first half of the data with a checkpointed
+    parquet sink, stop the query (simulated process death), land more
+    files, start a fresh query on the SAME checkpoint, drain.
+    Duplicates would mean bucket state (RocksDB, restored from its
+    changelog checkpoints) was lost on restore; missing rows would mean
+    source offsets replayed wrong.
 
+    uv and new_user emit on arrival, so the sink must equal the batch
+    oracle exactly. A jump entry with no successor stays pending until
+    the watermark passes its bound, which the last one never does; so
+    the jump sink must equal an uninterrupted run of the same kernel
+    over the same files, hold no duplicates, and be a subset of the
+    batch lag/lead oracle."""
+    ctor = _RESTART_KERNELS[kernel]
     events = load_table(spark, SF, "events")
     root = tempfile.mkdtemp(prefix="ckpt_restart_")
     src = os.path.join(root, "src")
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ck")
     os.makedirs(src)
     try:
-        ntile = F.ntile(6).over(Window.orderBy("ts", "event_id"))
-        parts = events.withColumn("part", ntile)
-        def land(i):
-            parts.filter(F.col("part") == i).drop("part").coalesce(1).write.parquet(
-                os.path.join(src, f"b{i}")
-            )
-        for i in range(1, 4):
-            land(i)
-        schema = spark.read.parquet(os.path.join(src, "b1")).schema
+        land = _time_ordered_writer(events, src)
 
-        def start():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(src, "b*"))
-            )
+        def drain(name):
+            out = os.path.join(root, name)
             q = (
-                kernel(stream)
+                ctor(_one_file_per_trigger(spark, src))
                 .writeStream.outputMode("append")
                 .format("parquet")
                 .option("path", out)
-                .option("checkpointLocation", ckpt)
+                .option("checkpointLocation", os.path.join(root, f"ck_{name}"))
                 .start()
             )
             q.processAllAvailable()
-            return q
+            q.stop()
+            return out
 
-        q1 = start()
-        q1.stop()  # simulated failure/redeploy after half the input
+        for i in range(1, 4):
+            land(i)
+        drain("out")  # simulated failure/redeploy after half the input
         for i in range(4, 7):
             land(i)
-        q2 = start()
-        q2.stop()
+        got = spark.read.parquet(drain("out")).toPandas()
 
-        got = spark.read.parquet(out).toPandas()
-        want = spark.sql(
-            """
-            SELECT user_id, date_format(dt, 'yyyy-MM-dd') AS dt,
-                   event_id, unix_micros(cast(ts as timestamp)) AS ts_us,
-                   event_type
-            FROM (
-              SELECT user_id, date_trunc('day', ts) AS dt, event_id, ts,
-                     event_type,
-                     row_number() OVER (
-                       PARTITION BY user_id, date_trunc('day', ts)
-                       ORDER BY ts, event_id) AS rn
-              FROM {events}
-            ) WHERE rn = 1
-            """,
-            events=events,
-        ).toPandas()
+        if kernel == "jump":
+            whole = spark.read.parquet(drain("whole")).toPandas()
+            assert not got.duplicated().any()
+            pd.testing.assert_frame_equal(_canon(got), _canon(whole))
+            want = _jump_oracle(events)
+            got_set = set(got.itertuples(index=False, name=None))
+            assert got_set <= set(want.itertuples(index=False, name=None))
+            return
+        if kernel == "uv":
+            want = _uv_oracle(spark, events)
+        else:
+            want = _new_user_oracle(events)
         assert len(got) == len(want), (
             f"restart broke exactly-once: {len(got)} vs {len(want)}"
         )
@@ -315,32 +343,20 @@ def test_checkpoint_restart_recovery(spark, form):
         shutil.rmtree(root, ignore_errors=True)
 
 
-@pytest.mark.parametrize("form", ["per_key", "bucketed"])
-def test_jump_cep_equivalence(spark, events_stream, form):
+@pytest.mark.parametrize("n_buckets", [7], ids=["bucketed"])
+def test_jump_cep_equivalence(spark, events_stream, n_buckets):
     """W7: applyInPandasWithState streaming CEP == lag/lead batch oracle.
     With watermark 0s and a single replay batch, timers for pendings
     flush in the trailing no-data micro-batch; any still-pending entries
     (no successor AND watermark never passed their bound) are the only
-    legal difference. Both state layouts (see the uv multibatch test)."""
-    from gmall2021_flink_dw_spark.streaming.stateful import (
-        jump_detect_stream_bucketed,
+    legal difference."""
+    q = run_to_memory(
+        jump_detect_stream_bucketed(events_stream, n_buckets=n_buckets),
+        "jump_stream",
     )
-
-    ctor = jump_detect_stream if form == "per_key" else (
-        lambda st: jump_detect_stream_bucketed(st, n_buckets=7)
-    )
-    q = run_to_memory(ctor(events_stream), "jump_stream")
     try:
         got = spark.sql("select * from jump_stream").toPandas()
-        want = (
-            detect_jumps(load_table(spark, SF, "events"))
-            .select(
-                "user_id",
-                "event_id",
-                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-            )
-            .toPandas()
-        )
+        want = _jump_oracle(load_table(spark, SF, "events"))
         got_set = {tuple(r) for r in got.itertuples(index=False)}
         want_set = {tuple(r) for r in want.itertuples(index=False)}
         # streaming must never emit a non-jump
@@ -356,33 +372,17 @@ def test_jump_cep_equivalence(spark, events_stream, form):
         q.stop()
 
 
-@pytest.mark.parametrize("form", ["per_key", "bucketed"])
-def test_new_user_state_equivalence(spark, events_stream, form):
+@pytest.mark.parametrize("n_buckets", [7], ids=["bucketed"])
+def test_new_user_state_equivalence(spark, events_stream, n_buckets):
     """W5/P11: keyed-ValueState new-user correction under streaming must
-    exactly match the batch min-struct oracle on replay. Both state
-    layouts (see the uv multibatch test)."""
-    from gmall2021_flink_dw_spark.operators.dedup import correct_new_user_flag
-    from gmall2021_flink_dw_spark.streaming.stateful import (
-        correct_new_user_stream,
-        correct_new_user_stream_bucketed,
+    exactly match the batch min-struct oracle on replay."""
+    q = run_to_memory(
+        correct_new_user_stream_bucketed(events_stream, n_buckets=n_buckets),
+        "nu_stream",
     )
-
-    ctor = correct_new_user_stream if form == "per_key" else (
-        lambda st: correct_new_user_stream_bucketed(st, n_buckets=7)
-    )
-    q = run_to_memory(ctor(events_stream), "nu_stream")
     try:
         got = spark.sql("select * from nu_stream").toPandas()
-        want = (
-            correct_new_user_flag(load_table(spark, SF, "events"))
-            .select(
-                "user_id",
-                "event_id",
-                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-                "is_new",
-            )
-            .toPandas()
-        )
+        want = _new_user_oracle(load_table(spark, SF, "events"))
         assert len(got) == len(want)
         pd.testing.assert_frame_equal(_canon(got), _canon(want))
         assert (got.groupby("user_id").is_new.apply(lambda s: (s == "1").sum()) == 1).all()
@@ -792,10 +792,6 @@ def test_uv_dedup_no_final_flush_parity(spark):
     (final_flush=False). The TTL timer only evicts state, never emits,
     so the emitted row set must be identical with and without the
     final flush — and the session conf must be restored afterwards."""
-    from gmall2021_flink_dw_spark.streaming.stateful import (
-        uv_dedup_ttl_stream_bucketed,
-    )
-
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
     before = spark.conf.get(key)
     out = {}

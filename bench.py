@@ -143,11 +143,8 @@ HEADLINE = [
     "tokenizer_tokenize_docs",
     # added r09:
     "multimodal_audio_features",
-    "dedup_substring_spans",
     "multimodal_image_stats",
-    "dedup_substring_clean",
     "dedup_substring_spans_hashed",
-    "dedup_substring_clean_keepfirst",
     "dedup_substring_clean_hashed",
     "dedup_substring_keepfirst_hashed",
     "source_jsonl_events",
@@ -182,25 +179,18 @@ HEADLINE = [
 ]
 
 
-# Quadratic-BY-ROLE exact anchors (VERDICT r10 item 4): these queries
-# are the deliberately-exact ground truth for their bucketed/hashed
-# scale paths — all-pairs cosine GEMM for the LSH ANN family, exact
-# 50-char-string grouping for the hashed ExactSubstr family. Their
-# cost is quadratic (or string-shuffle-bound) BY ROLE, so they carry
-# the suite's worst decade ratios by design and must not ride a
-# rising suite sf: anchor CORRECTNESS does not need the full corpus.
-# The gate below drops them from any bench run at sf > ANCHOR_SF_CAP
+# Quadratic-BY-ROLE exact anchor (VERDICT r10 item 4): the all-pairs
+# cosine GEMM is the deliberately-exact ground truth for the LSH ANN
+# scale paths. Its cost is quadratic BY ROLE, so it carries the
+# suite's worst decade ratio by design and must not ride a rising
+# suite sf: anchor CORRECTNESS does not need the full corpus.
+# The gate below drops it from any bench run at sf > ANCHOR_SF_CAP
 # and records the drop in the artifact (no silent caps). Arithmetic
 # pinned by tests/test_bench_contract.py: at the cap the cosine
 # anchor's GEMM is N_EMB_AT_CAP^2 * EMB_DIM = 2.56e8 multiply-adds
 # (sub-second, measured 11.4x per decade); one decade up it is 2.56e10
 # — past ANCHOR_MAC_CEILING and growing 100x per decade.
-QUADRATIC_ANCHORS = (
-    "dedup_embedding_cosine",
-    "dedup_substring_spans",
-    "dedup_substring_clean",
-    "dedup_substring_clean_keepfirst",
-)
+QUADRATIC_ANCHORS = ("dedup_embedding_cosine",)
 ANCHOR_SF_CAP = 0.1
 N_EMB_AT_CAP = 2_000  # embeddings rows at sf0.1 (TESTDATA.md)
 EMB_DIM = 64

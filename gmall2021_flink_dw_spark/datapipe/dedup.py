@@ -626,68 +626,29 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-# ------------------------------------ exact substring-span dedup (r09)
-
-
-def merged_duplicate_spans(docs: DataFrame, min_len: int = 50) -> DataFrame:
-    """EXACT substring-level dedup (the ExactSubstr operator of Lee et
-    al. 2022, "Deduplicating Training Data Makes Language Models
-    Better"): find every position whose ``min_len``-char substring
-    occurs more than once ANYWHERE in the corpus (cross-doc or
-    self-repeat), then merge per-doc hit positions into maximal
-    contiguous duplicated spans. Returns the span table itself —
-    (doc_id, s, e) half-open char intervals — consumed by both the
-    aggregate view (duplicated_substring_spans) and the span remover
-    (remove_duplicate_spans). All-integer kernel, bit-exact.
-
-    Plan: ONE documents scan (doc_id + text only) -> explode to
-    (doc_id, pos, gram) -> the narrow gram stream is persisted and
-    feeds BOTH the corpus-wide frequency agg and the hit join (same
-    shuffle key, so AQE reuses the exchange) -> per-doc window merge
-    (running max of span end over preceding rows; a position beyond it
-    starts a new span -> cumulative sum numbers the spans) -> two
-    same-key aggs. Interval-union correctness: every interval in a
-    merged group starts at or before the running union end, so the
-    union stays one contiguous interval [min(pos), max(pos)+L).
-
-    100 TB shape: the gram stream is corpus_chars rows x ~58 bytes —
-    linear, never collected. The measured bottleneck at the third
-    decade (126M grams) is the high-cardinality STRING aggregation
-    itself (sort-agg over 58-char keys, spill-bound); the scale path is
-    merged_duplicate_spans_hashed below, which shuffles an 8-byte
-    xxhash64 key instead — measured 5.2x faster there (36.7 vs 189.9 s,
-    BASELINE.md r09) — with this exact form as its collision-free
-    oracle anchor.
-    """
-    grams = tracked_persist(
-        _gram_stream(docs, min_len).select(
-            "doc_id",
-            "pos",
-            F.col("text").substr(F.col("pos") + 1, F.lit(min_len)).alias("gram"),
-        )
-    )
-    dup = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > 1)
-        .select("gram")
-    )
-    hits = grams.join(dup, "gram").select("doc_id", "pos")
-    return _merge_hit_positions(hits, min_len)
+# ------------------------------------ substring-span dedup (ExactSubstr)
 
 
 def merged_duplicate_spans_hashed(
     docs: DataFrame, min_len: int = 50
 ) -> DataFrame:
-    """Scale-path twin of merged_duplicate_spans: the corpus-wide
-    frequency key is xxhash64 of the gram (8 bytes, computed in the
-    same projection that builds the substring, so NO gram string is
-    ever shuffled or persisted) instead of the 50-char gram itself.
+    """Substring-level dedup spans (the ExactSubstr operator of Lee et
+    al. 2022, "Deduplicating Training Data Makes Language Models
+    Better"): every position whose ``min_len``-char substring occurs
+    more than once ANYWHERE in the corpus (cross-doc or self-repeat),
+    merged per doc into maximal contiguous duplicated spans. Returns
+    the span table itself — (doc_id, s, e) half-open char intervals —
+    consumed by the per-doc span counts and by the span removers.
 
-    Why it exists (measured, BASELINE.md r09): at the third decade
-    (126M grams) the exact form's string aggregation goes sort-based
-    and spill-bound (189.9 s, a 45x decade ratio); hashing turns it
-    into a fixed-width long key and cuts the shuffled bytes ~3x.
+    The corpus-wide frequency key is xxhash64 of the gram (8 bytes,
+    computed in the same projection that builds the substring, so NO
+    gram string is ever shuffled or persisted), not the gram itself.
+    Why the key is hashed (measured, BASELINE.md r09): at the third
+    decade (126M grams) an aggregation keyed on the 50-char string
+    goes sort-based and spill-bound — 189.9 s, a 45x decade ratio,
+    against 36.7 s for the hashed key (that r09 form still persisted
+    the stream; see the plan shape below). A fixed-width long key cuts
+    the shuffled bytes ~3x and sorts by an 8-byte radix prefix.
     Collision contract: a 64-bit collision would mark a unique
     position as duplicated — odds n^2/2^65 (~5e-4 at 126M grams,
     negligible below ~1e9 grams; swap in a 128-bit hash — e.g. both
@@ -738,51 +699,23 @@ def merged_duplicate_spans_hashed(
     return _merge_hit_positions(hits, min_len)
 
 
-def remove_duplicate_spans_keepfirst(
-    docs: DataFrame, min_len: int = 50
-) -> DataFrame:
-    """Lee et al.'s actual ExactSubstr contract: keep the globally
-    FIRST occurrence of each duplicated substring and cut the rest.
-    First = min (doc_id, pos) over the gram's occurrences — a total
-    order, so the election is layout-independent. Spans are then built
-    only from non-first hit positions and removed exactly like
-    remove_duplicate_spans. Emits (doc_id, clean_text, removed_chars)
-    for every doc.
-
-    Note the asymmetry this buys: a corpus whose every doc is a copy
-    keeps ONE readable copy (the remove-all form would empty them
-    all) — the right contract for dedup, while remove-all remains the
-    right one for contamination scrubbing."""
-    # no persist: the gram stream has exactly ONE consumer (the ranked
-    # window below), so materializing it would be pure cost (the r10
-    # substring-hashed lesson — the persist was that plan's measured
-    # third-decade bound)
-    grams = _gram_stream(docs, min_len).select(
-        "doc_id",
-        "pos",
-        F.col("text").substr(F.col("pos") + 1, F.lit(min_len)).alias("gram"),
-    )
-    w_first = Window.partitionBy("gram").orderBy("doc_id", "pos")
-    ranked = grams.select(
-        "doc_id", "pos", F.row_number().over(w_first).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("gram")).alias("c"),
-    )
-    hits = ranked.where((F.col("c") > 1) & (F.col("rn") > 1)).select(
-        "doc_id", "pos"
-    )
-    spans = _merge_hit_positions(hits, min_len)
-    return _cut_spans(docs, spans)
-
-
 def remove_duplicate_spans_keepfirst_hashed(
     docs: DataFrame, min_len: int = 50
 ) -> DataFrame:
-    """Scale-path twin of remove_duplicate_spans_keepfirst (r10): the
-    per-gram first-occurrence election runs over xxhash64 keys in ONE
-    shuffle — row_number() and count() share the same (k)-partitioned
-    sort, ordering by the packed dp = doc_id << 32 | pos (identical
-    total order to (doc_id, pos) since both fit 31 bits), so no gram
-    string is ever shuffled and nothing is persisted. Collision
+    """Lee et al.'s ExactSubstr contract: keep the globally FIRST
+    occurrence of each duplicated ``min_len``-char substring and cut
+    the rest, emitting (doc_id, clean_text, removed_chars) for every
+    doc. First = min (doc_id, pos) over the gram's occurrences — a
+    total order, so the election is layout-independent. Spans are
+    built only from non-first hit positions and cut exactly as in
+    remove_duplicate_spans_hashed. A corpus whose every doc is a copy
+    keeps ONE readable copy (the remove-all form would empty them all).
+
+    The election runs over xxhash64 keys in ONE shuffle —
+    row_number() and count() share the same (k)-partitioned sort,
+    ordering by the packed dp = doc_id << 32 | pos (identical total
+    order to (doc_id, pos) since both fit 31 bits), so no gram string
+    is ever shuffled and nothing is persisted. Collision
     contract as merged_duplicate_spans_hashed; the driver oracle is the
     exact-string recomputation."""
     grams = _gram_stream(docs, min_len).select(
@@ -852,7 +785,9 @@ def _merge_hit_positions(hits: DataFrame, min_len: int) -> DataFrame:
     """Merge (doc_id, pos) duplicate-gram hits into maximal per-doc
     spans [s, e): running max of span end over preceding rows; a
     position beyond it starts a new span; cumulative sum numbers the
-    spans."""
+    spans. Interval-union correctness: every interval in a merged
+    group starts at or before the running union end, so the union
+    stays one contiguous interval [min(pos), max(pos) + min_len)."""
     w_prev = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -872,47 +807,28 @@ def _merge_hit_positions(hits: DataFrame, min_len: int) -> DataFrame:
     return spans.select("doc_id", "s", "e")
 
 
-def duplicated_substring_spans(docs: DataFrame, min_len: int = 50) -> DataFrame:
-    """Per-doc aggregate view of merged_duplicate_spans: (doc_id,
-    dup_spans, dup_chars) for every doc carrying at least one span."""
-    return merged_duplicate_spans(docs, min_len).groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("dup_spans"),
-        F.sum(F.col("e") - F.col("s")).cast("long").alias("dup_chars"),
-    )
-
-
-def remove_duplicate_spans(docs: DataFrame, min_len: int = 50) -> DataFrame:
+def remove_duplicate_spans_hashed(
+    docs: DataFrame, min_len: int = 50
+) -> DataFrame:
     """ExactSubstr's actionable half: CUT the merged duplicated spans
     out of each doc, emitting (doc_id, clean_text, removed_chars) for
     EVERY doc (removed_chars = 0 when nothing matched).
 
-    Contract: removes every occurrence of a duplicated span (the
-    strictest form — right for contamination scrubbing; Lee et al.'s
-    keep-one-occurrence variant needs a global first-occurrence
-    election per gram, a straightforward min_by extension left to the
-    caller). Reassembly: segments between consecutive spans (window
-    lag over span starts) are concatenated in span order plus the tail
-    after the last span — all string/integer ops, bit-exact.
+    Contract: removes every occurrence of a duplicated span — the
+    strictest form, right for contamination scrubbing. Lee et al.'s
+    keep-one-occurrence form, right for dedup, is
+    remove_duplicate_spans_keepfirst_hashed. Spans come from
+    merged_duplicate_spans_hashed — the persist-free single-shuffle
+    xxhash64 plan, 7.5x per decade (BASELINE.md r10). The driver
+    oracle is the exact-string SQL recomputation, so a 64-bit key
+    collision (odds n^2/2^65) surfaces as a mismatch rather than
+    hiding.
 
     100 TB shape: the span table is tiny relative to the corpus (only
     duplicated regions), so the reassembly join shuffles spans + one
     copy of the affected docs; unaffected docs pass through untouched
-    on the null side of the left join.
-    """
-    return _cut_spans(docs, merged_duplicate_spans(docs, min_len))
-
-
-def remove_duplicate_spans_hashed(
-    docs: DataFrame, min_len: int = 50
-) -> DataFrame:
-    """Scale-path twin of remove_duplicate_spans (r10): spans come from
-    merged_duplicate_spans_hashed — the persist-free single-shuffle
-    xxhash64 plan — so the ACTIONABLE half of ExactSubstr (cutting the
-    duplicated spans out of every doc) inherits the 7.5x-per-decade
-    slope instead of the exact form's string sort-agg wall. Output
-    contract identical to remove_duplicate_spans; the driver oracle is
-    the exact-string SQL recomputation, so a 64-bit key collision
-    (odds n^2/2^65) surfaces as a mismatch rather than hiding."""
+    on the null side of the left join. Reassembly (_cut_spans) is all
+    string/integer ops, bit-exact."""
     return _cut_spans(docs, merged_duplicate_spans_hashed(docs, min_len))
 
 

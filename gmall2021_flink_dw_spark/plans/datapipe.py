@@ -706,58 +706,6 @@ def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_substring_spans",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, u.i AS pos, substr(text, u.i + 1, 50) AS gram
-      FROM documents
-      CROSS JOIN LATERAL unnest(range(0, greatest(len(text) - 49, 0)))
-           AS u(i)
-      WHERE len(text) >= 50
-    ), d AS (
-      SELECT gram FROM g GROUP BY gram HAVING count(*) > 1
-    ), hits AS (
-      SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)
-    ), brk AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos > coalesce(max(pos + 50) OVER (
-                  PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-                  THEN 1 ELSE 0 END AS is_start
-      FROM hits
-    ), grp AS (
-      SELECT doc_id, pos,
-             sum(is_start) OVER (PARTITION BY doc_id ORDER BY pos)
-               AS span_id
-      FROM brk
-    ), spans AS (
-      SELECT doc_id, span_id, min(pos) AS s, max(pos) + 50 AS e
-      FROM grp GROUP BY doc_id, span_id
-    )
-    SELECT doc_id, count(*)::INT AS dup_spans,
-           CAST(sum(e - s) AS BIGINT) AS dup_chars
-    FROM spans GROUP BY doc_id
-    """,
-    doc="EXACT substring-level dedup (ExactSubstr, Lee et al. 2022 — "
-    "the training-data op document/paragraph-level dedup misses: "
-    "boilerplate repeated INSIDE otherwise-unique pages): every "
-    "position whose 50-char substring occurs >1 time anywhere in the "
-    "corpus, merged per doc into maximal spans via a running-max "
-    "window; emits (doc_id, dup_spans, dup_chars), all-integer. One "
-    "2-column scan, gram agg + hit join on the same shuffle key, two "
-    "same-key aggs. datapipe/dedup.py:duplicated_substring_spans.",
-    tags=("datapipe", "dedup", "window"),
-)
-def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.dedup import (
-        duplicated_substring_spans,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return duplicated_substring_spans(docs, min_len=50)
-
-
-@register(
     "dedup_substring_spans_hashed",
     oracle="""
     WITH g AS (
@@ -790,14 +738,20 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(e - s) AS BIGINT) AS dup_chars
     FROM spans GROUP BY doc_id
     """,
-    doc="SCALE-PATH twin of dedup_substring_spans: the corpus-wide "
-    "frequency key is xxhash64(gram) — 8 fixed-width bytes computed in "
-    "the projection that builds the substring, so no gram string is "
-    "ever shuffled, and (r10) NOTHING is persisted: the duplicate "
-    "test is count() OVER (PARTITION BY k) inside the plan's one "
-    "shuffle, with (doc_id,pos) packed into a single long. Third "
-    "decade (126M grams): 36.7 s (r09 persist form) -> 15.8 s, decade "
-    "ratio 14x -> 7.5x (BASELINE.md r10). The oracle is the EXACT "
+    doc="Substring-level dedup spans per doc (ExactSubstr of Lee et "
+    "al., 2022 — the training-data op document/paragraph-level dedup "
+    "misses: boilerplate repeated INSIDE otherwise-unique pages): every "
+    "position whose 50-char substring occurs >1 time anywhere in the "
+    "corpus, merged per doc into maximal spans via a running-max "
+    "window; emits (doc_id, dup_spans, dup_chars), all-integer. The "
+    "corpus-wide frequency key is xxhash64(gram) — 8 fixed-width bytes "
+    "computed in the projection that builds the substring, so no gram "
+    "string is ever shuffled, and (r10) NOTHING is persisted: the "
+    "duplicate test is count() OVER (PARTITION BY k) inside the plan's "
+    "one shuffle, with (doc_id,pos) packed into a single long. Third "
+    "decade (126M grams): 189.9 s keyed on the string, 36.7 s hashed "
+    "with a persisted gram stream (r09), 15.8 s for this plan — decade "
+    "ratio 7.5x (BASELINE.md r10). The oracle is the EXACT "
     "recomputation: a 64-bit collision (odds n^2/2^65, ~4e-10 at "
     "checked scale) would surface as a driver hash mismatch rather "
     "than hide. datapipe/dedup.py:merged_duplicate_spans_hashed.",
@@ -817,74 +771,6 @@ def dedup_substring_spans_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("e") - F.col("s")).cast("long").alias("dup_chars"),
         )
     )
-
-
-@register(
-    "dedup_substring_clean",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, u.i AS pos, substr(text, u.i + 1, 50) AS gram
-      FROM documents
-      CROSS JOIN LATERAL unnest(range(0, greatest(len(text) - 49, 0)))
-           AS u(i)
-      WHERE len(text) >= 50
-    ), d AS (
-      SELECT gram FROM g GROUP BY gram HAVING count(*) > 1
-    ), hits AS (
-      SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)
-    ), brk AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos > coalesce(max(pos + 50) OVER (
-                  PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-                  THEN 1 ELSE 0 END AS is_start
-      FROM hits
-    ), grp AS (
-      SELECT doc_id, pos,
-             sum(is_start) OVER (PARTITION BY doc_id ORDER BY pos)
-               AS span_id
-      FROM brk
-    ), spans AS (
-      SELECT doc_id, span_id, min(pos) AS s, max(pos) + 50 AS e
-      FROM grp GROUP BY doc_id, span_id
-    ), seg AS (
-      SELECT doc_id, s, e,
-             coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0)
-               AS seg_start
-      FROM spans
-    ), per_doc AS (
-      SELECT seg.doc_id,
-             string_agg(substr(text, seg_start + 1, s - seg_start), ''
-                        ORDER BY s) AS head,
-             max(e) AS max_e,
-             CAST(sum(e - s) AS BIGINT) AS removed_chars
-      FROM seg JOIN documents USING (doc_id)
-      GROUP BY seg.doc_id
-    )
-    SELECT documents.doc_id,
-           CASE WHEN head IS NULL THEN text
-                ELSE coalesce(head, '') || substr(text, max_e + 1)
-           END AS clean_text,
-           coalesce(removed_chars, 0)::BIGINT AS removed_chars
-    FROM documents LEFT JOIN per_doc USING (doc_id)
-    """,
-    doc="ExactSubstr's actionable half: CUT the merged duplicated "
-    "50-char spans out of every doc (strictest remove-all-occurrences "
-    "contract — contamination-scrub form; Lee et al.'s keep-one "
-    "variant is a min_by election away), emitting (doc_id, clean_text, "
-    "removed_chars) for all docs. Reassembly = lag-window segments "
-    "concatenated in span order + tail — pure string/integer ops, "
-    "bit-exact including the full cleaned text. "
-    "datapipe/dedup.py:remove_duplicate_spans.",
-    tags=("datapipe", "dedup", "window"),
-)
-def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.dedup import (
-        remove_duplicate_spans,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return remove_duplicate_spans(docs, min_len=50)
 
 
 _EMB_DEDUP_ORACLE = """
@@ -3312,79 +3198,6 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_substring_clean_keepfirst",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, u.i AS pos, substr(text, u.i + 1, 50) AS gram
-      FROM documents
-      CROSS JOIN LATERAL unnest(range(0, greatest(len(text) - 49, 0)))
-           AS u(i)
-      WHERE len(text) >= 50
-    ), r AS (
-      SELECT doc_id, pos,
-             row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos)
-               AS rn,
-             count(*) OVER (PARTITION BY gram) AS c
-      FROM g
-    ), hits AS (
-      SELECT doc_id, pos FROM r WHERE c > 1 AND rn > 1
-    ), brk AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos > coalesce(max(pos + 50) OVER (
-                  PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-                  THEN 1 ELSE 0 END AS is_start
-      FROM hits
-    ), grp AS (
-      SELECT doc_id, pos,
-             sum(is_start) OVER (PARTITION BY doc_id ORDER BY pos)
-               AS span_id
-      FROM brk
-    ), spans AS (
-      SELECT doc_id, span_id, min(pos) AS s, max(pos) + 50 AS e
-      FROM grp GROUP BY doc_id, span_id
-    ), seg AS (
-      SELECT doc_id, s, e,
-             coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0)
-               AS seg_start
-      FROM spans
-    ), per_doc AS (
-      SELECT seg.doc_id,
-             string_agg(substr(text, seg_start + 1, s - seg_start), ''
-                        ORDER BY s) AS head,
-             max(e) AS max_e,
-             CAST(sum(e - s) AS BIGINT) AS removed_chars
-      FROM seg JOIN documents USING (doc_id)
-      GROUP BY seg.doc_id
-    )
-    SELECT documents.doc_id,
-           CASE WHEN head IS NULL THEN text
-                ELSE coalesce(head, '') || substr(text, max_e + 1)
-           END AS clean_text,
-           coalesce(removed_chars, 0)::BIGINT AS removed_chars
-    FROM documents LEFT JOIN per_doc USING (doc_id)
-    """,
-    doc="Lee et al.'s ACTUAL ExactSubstr contract (vs the remove-all "
-    "scrub form of dedup_substring_clean): the globally FIRST "
-    "occurrence of each duplicated 50-gram — min (doc_id, pos), a "
-    "total order, so the election is layout-independent — survives; "
-    "spans built from the non-first hits are cut. A corpus of "
-    "identical docs keeps one readable copy instead of emptying all. "
-    "datapipe/dedup.py:remove_duplicate_spans_keepfirst.",
-    tags=("datapipe", "dedup", "window"),
-)
-def dedup_substring_clean_keepfirst(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.dedup import (
-        remove_duplicate_spans_keepfirst,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return remove_duplicate_spans_keepfirst(docs, min_len=50)
-
-
 _SCRATCH_DIRS: list[str] = []
 
 
@@ -5089,14 +4902,19 @@ _SUBSTR_CLEAN_ORACLE = """
 @register(
     "dedup_substring_clean_hashed",
     oracle=_SUBSTR_CLEAN_ORACLE,
-    doc="SCALE-PATH twin of dedup_substring_clean (r10): the span "
-    "table comes from the persist-free single-shuffle xxhash64 plan "
-    "(dedup_substring_spans_hashed's engine), so the ACTIONABLE half "
-    "of ExactSubstr — cutting every duplicated 50-char span out of "
-    "every doc — inherits the 7.5x-per-decade slope instead of the "
-    "exact form's string sort-agg wall (45x at the third decade, "
-    "BASELINE.md). Oracle = the exact-string recomputation, so a "
-    "64-bit collision surfaces as a mismatch. "
+    doc="Substring-level dedup scrub (ExactSubstr's actionable half, "
+    "remove-all form): CUT every occurrence of each merged duplicated "
+    "50-char span out of every doc, emitting (doc_id, clean_text, "
+    "removed_chars) for all docs — the strictest contract, right for "
+    "contamination scrubbing; dedup_substring_keepfirst_hashed keeps "
+    "one copy. The span table comes from the persist-free "
+    "single-shuffle xxhash64 plan (dedup_substring_spans_hashed's "
+    "engine), 7.5x per decade where a string-keyed sort-agg hit 45x at "
+    "the third decade (BASELINE.md r09/r10). Reassembly = lag-window "
+    "segments concatenated in span order + tail — pure string/integer "
+    "ops, bit-exact including the full cleaned text. Oracle = the "
+    "exact-string recomputation, so a 64-bit collision surfaces as a "
+    "mismatch. "
     "datapipe/dedup.py:remove_duplicate_spans_hashed.",
     tags=("datapipe", "dedup", "window", "approx-scale-path"),
 )
@@ -5162,10 +4980,13 @@ def dedup_substring_clean_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(removed_chars, 0)::BIGINT AS removed_chars
     FROM documents LEFT JOIN per_doc USING (doc_id)
     """,
-    doc="SCALE-PATH twin of dedup_substring_clean_keepfirst (r10): the "
-    "per-gram first-occurrence election (keep the globally first "
-    "(doc_id,pos), cut the rest — Lee et al.'s actual ExactSubstr "
-    "contract) runs over xxhash64 keys in ONE shuffle: row_number() "
+    doc="Substring-level dedup, keep-first form (Lee et al.'s actual "
+    "ExactSubstr contract): the globally FIRST occurrence of each "
+    "duplicated 50-gram — min (doc_id, pos), a total order, so the "
+    "election is layout-independent — survives, and spans built from "
+    "the later hits are cut; a corpus of identical docs keeps one "
+    "readable copy instead of emptying all. The election runs over "
+    "xxhash64 keys in ONE shuffle: row_number() "
     "and count() share the (k)-partitioned sort, ordered by the "
     "packed dp = doc_id << 32 | pos (the same total order), no gram "
     "string shuffled, nothing persisted. Oracle = exact-string "

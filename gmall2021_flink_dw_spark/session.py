@@ -70,7 +70,14 @@ def get_spark(
     streaming query records in its checkpoint at first start, and the
     width of any shuffle that runs with AQE or coalescing off.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    # Checked before the builder exists: local[0] or local[-2] would
+    # start a JVM only to die with a message that names no variable.
+    raw_cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    if not raw_cpus.strip().isdecimal() or int(raw_cpus) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw_cpus!r}"
+        )
+    cpus = int(raw_cpus)
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 

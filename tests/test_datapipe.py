@@ -751,7 +751,7 @@ def test_bpe_train_matches_python_reference(spark):
     assert got == expected
 
 
-# ------------------------------------ exact substring-span dedup (r09)
+# ------------------------------------ substring-span dedup (ExactSubstr)
 
 
 def test_substring_spans_hand_corpus(spark):
@@ -759,7 +759,7 @@ def test_substring_spans_hand_corpus(spark):
     cross-doc repeats, a self-repeat inside one doc, overlap merging,
     and a unique doc that must not appear."""
     from gmall2021_flink_dw_spark.datapipe.dedup import (
-        duplicated_substring_spans,
+        merged_duplicate_spans_hashed,
     )
 
     A = "ABCDEFGHIJ"  # 10 chars, shared by docs 1/2
@@ -780,17 +780,17 @@ def test_substring_spans_hand_corpus(spark):
         ],
         "doc_id long, text string",
     )
-    out = {
-        r["doc_id"]: (r["dup_spans"], r["dup_chars"])
-        for r in duplicated_substring_spans(docs, min_len=10).collect()
-    }
+    spans = sorted(
+        map(tuple, merged_duplicate_spans_hashed(docs, 10).collect())
+    )
     # doc 1: spans [0,10) and [15,25) — NOT merged (gap of 5)
     # doc 2: span [3,13)
     # doc 3: straddling grams at pos 1..9 also occur nowhere else?
     #   gram(pos p) of "BB" = rotation of B; "BB" contains each rotation
     #   twice (pos p and p+10), so positions 0..10 are all hits,
     #   merging to one span [0, 20)
-    assert out == {1: (2, 20), 2: (1, 10), 3: (1, 20)}
+    # (per doc: 2 spans / 20 chars, 1 / 10, 1 / 20; doc 4 absent)
+    assert spans == [(1, 0, 10), (1, 15, 25), (2, 3, 13), (3, 0, 20)]
 
 
 def test_substring_clean_hand_corpus(spark):
@@ -798,7 +798,7 @@ def test_substring_clean_hand_corpus(spark):
     concatenation of kept segments, removed_chars matches the span
     table, and the no-dup doc passes through byte-identical."""
     from gmall2021_flink_dw_spark.datapipe.dedup import (
-        remove_duplicate_spans,
+        remove_duplicate_spans_hashed,
     )
 
     A = "ABCDEFGHIJ"
@@ -814,30 +814,12 @@ def test_substring_clean_hand_corpus(spark):
     )
     out = {
         r["doc_id"]: (r["clean_text"], r["removed_chars"])
-        for r in remove_duplicate_spans(docs, min_len=10).collect()
+        for r in remove_duplicate_spans_hashed(docs, min_len=10).collect()
     }
     assert out[1] == ("xxxxxzzzzz", 20)   # both A spans cut
     assert out[2] == ("qqqwwwwwww", 10)
     assert out[3] == ("", 20)             # the whole doc was duplicated
     assert out[4] == (rows[4], 0)         # untouched pass-through
-
-
-def test_substring_spans_hashed_matches_exact(spark):
-    """The hashed scale path returns bit-identical spans to the exact
-    form on the same corpus (no collisions at this scale)."""
-    from gmall2021_flink_dw_spark.datapipe.dedup import (
-        merged_duplicate_spans,
-        merged_duplicate_spans_hashed,
-    )
-
-    docs = spark.read.parquet(f"{ORACLE_SF}/documents.parquet")
-    exact = sorted(
-        map(tuple, merged_duplicate_spans(docs, 50).collect())
-    )
-    hashed = sorted(
-        map(tuple, merged_duplicate_spans_hashed(docs, 50).collect())
-    )
-    assert exact == hashed and len(exact) > 0
 
 
 def test_substring_clean_keepfirst_hand_corpus(spark):
@@ -846,7 +828,7 @@ def test_substring_clean_keepfirst_hand_corpus(spark):
     Contrast with test_substring_clean_hand_corpus where doc 3 empties
     — here it keeps exactly one copy."""
     from gmall2021_flink_dw_spark.datapipe.dedup import (
-        remove_duplicate_spans_keepfirst,
+        remove_duplicate_spans_keepfirst_hashed,
     )
 
     A = "ABCDEFGHIJ"
@@ -862,7 +844,9 @@ def test_substring_clean_keepfirst_hand_corpus(spark):
     )
     out = {
         r["doc_id"]: (r["clean_text"], r["removed_chars"])
-        for r in remove_duplicate_spans_keepfirst(docs, min_len=10).collect()
+        for r in remove_duplicate_spans_keepfirst_hashed(
+            docs, min_len=10
+        ).collect()
     }
     assert out[1] == (A + "xxxxx" + "zzzzz", 10)  # first A (pos 0) kept
     assert out[2] == ("qqqwwwwwww", 10)           # doc 1 won the election

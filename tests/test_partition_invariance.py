@@ -84,10 +84,14 @@ INVARIANT_QUERIES = [
     # running-max window span merge — span numbering must be identical
     # under any layout (pos is unique per doc, so the window order is
     # total)
-    "dedup_substring_spans",
+    "dedup_substring_spans_hashed",
     # r09: full cleaned-TEXT reassembly (array_sort'd fold over
     # collect_list segments) must be byte-identical under any layout
-    "dedup_substring_clean",
+    "dedup_substring_clean_hashed",
+    # keep-first: the per-gram first-occurrence election orders by the
+    # packed (doc_id, pos) — a total order — so the surviving copy must
+    # not depend on layout
+    "dedup_substring_keepfirst_hashed",
 ]
 
 

@@ -12,6 +12,9 @@ batch shuffles start `shuffle_partitions` wide and AQE coalesces them,
 while a stateful streaming query keeps one state store per four of
 them. These tests pin both widths, and that a restarted query keeps the
 width its checkpoint recorded.
+
+`get_spark` rejects a `SPARK_GRAFT_CPUS` that is not an integer >= 1
+before it builds anything.
 """
 
 from __future__ import annotations
@@ -327,3 +330,12 @@ def test_restart_keeps_recorded_state_width(spark, tmp_path, first_width):
     # [0,10) closed after the first file, [10,20) once the watermark
     # passed 30 s; [30,40) is still open
     assert rows[0] == rows[1] == [("00", 10), ("10", 6)]
+
+
+@pytest.mark.parametrize("value", ["0", "-2", "abc"])
+def test_spark_graft_cpus_rejected_before_session(monkeypatch, value):
+    """A core count that is not an integer >= 1 raises a ValueError
+    naming SPARK_GRAFT_CPUS before any session is built."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.get_spark("cpus-probe")

@@ -323,11 +323,10 @@ def main() -> None:
             ).save()
             el = time.perf_counter() - t0
             times[name] = round(min(times.get(name, float("inf")), el), 3)
-        # Drop per-call persisted intermediates (shingle tables, simhash
-        # signatures, ...) between passes: each call re-persists its own
-        # copy and nothing unpersists, so without this the executor
-        # storage pool fills across passes and later passes measure
-        # eviction/GC pressure instead of the plans.
+        # Cache epochs (cache.py) unpersist each query's intermediates
+        # (shingle tables, simhash signatures, ...) when the next query
+        # starts; only the pass's last query still holds its blocks, so
+        # drop them here and every pass starts from an empty storage pool.
         spark.catalog.clearCache()
         take_probe(f"after_pass{_pass}")
 

@@ -257,12 +257,6 @@ def _signatures_from_exploded(e: DataFrame) -> DataFrame:
     return e.groupBy("doc_id").agg(F.first("n_grams").alias("n_grams"), *aggs)
 
 
-def minhash_signatures(docs: DataFrame, n: int = 5) -> DataFrame:
-    """Per-doc MinHash signature: 32 min-aggregations over shingle hashes.
-    One explode + one groupBy — no all-pairs work."""
-    return _signatures_from_exploded(doc_shingles(docs, n))
-
-
 def minhash_lsh_candidates(sigs: DataFrame) -> DataFrame:
     """Banded LSH: hash each band of r signature values; docs colliding in
     any band become a candidate pair (distinct)."""

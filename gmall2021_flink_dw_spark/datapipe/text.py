@@ -49,10 +49,6 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     return spread_scan(df).withColumn("__tokens", tokenize(text_col))
 
 
-def token_count(tokens: Column) -> Column:
-    return F.size(tokens).cast("bigint")
-
-
 def marker_hits(tokens: Column, markers: tuple[str, ...]) -> Column:
     """Occurrence count (not distinct) of marker words in the token list."""
     arr = F.array(*[F.lit(m) for m in markers])

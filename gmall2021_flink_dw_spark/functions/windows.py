@@ -46,16 +46,3 @@ def duck_window_bounds(ts_col: str, seconds: int) -> tuple[str, str]:
         f"strftime({start}, '{DUCK_FMT}') as stt",
         f"strftime({end}, '{DUCK_FMT}') as edt",
     )
-
-
-def money_sum(col: Column | str, alias: str) -> Column:
-    """Exact, order-independent money aggregation: DECIMAL(18,2) sum cast
-    to double. The reference uses BigDecimal.add for the same reason
-    (``ProductStatsApp.java:212``); decimal summation is associative so
-    partition order can't change the hash."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast("decimal(18,2)")).cast("double").alias(alias)
-
-
-def duck_money_sum(expr: str, alias: str) -> str:
-    return f"cast(sum(cast({expr} as decimal(18,2))) as double) as {alias}"

@@ -17,6 +17,7 @@ from gmall2021_flink_dw_spark.sources.cdc import (
     ORDERS_CHANGELOG_ORACLE,
     orders_changelog,
 )
+from gmall2021_flink_dw_spark.streaming.pipelines import replay_to_delta_log
 
 _RULES_SQL = """
     (VALUES ('order_info','insert','kafka','dwd_order_info'),
@@ -261,82 +262,35 @@ def cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "upsert", "stateful"),
 )
 def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from pyspark.sql import Window as _W
 
-    from gmall2021_flink_dw_spark.sources.cdc import orders_changelog
+    w = _W.partitionBy("id").orderBy(F.col("ts_us").desc(), F.col("op"))
 
-    # Lifecycle (ADVICE r03): a prior invocation's delta tree is only
-    # needed until its returned DataFrame is consumed; bench/driver/
-    # tests consume each result before calling the next query, so the
-    # previous tree is reclaimed here and the last one at exit.
-    # CONTRACT (ADVICE r04): the returned DataFrame reads the delta
-    # files lazily — consume it BEFORE the next streaming_cdc_upsert
-    # call, or the older result raises FileNotFoundException when
-    # collected. Holding multiple live results would require eager
-    # materialization (localCheckpoint) here, paying a full extra
-    # write per call for a usage no consumer of this registry has.
-    for stale in list(_CDC_STREAM_DIRS):
-        shutil.rmtree(stale, ignore_errors=True)
-        _CDC_STREAM_DIRS.remove(stale)
-    cl = orders_changelog(spark, sf_dir)
-    from gmall2021_flink_dw_spark.scratch import stream_scratch_base
+    def _compact_batch(batch_df: DataFrame) -> DataFrame:
+        # Write ONLY this batch, compacted within itself (last-writer-
+        # wins per key among the batch's rows, tombstones kept). No
+        # read of prior state: the write cost is O(batch) however large
+        # the accumulated snapshot grows — the property the r03 verdict
+        # asked for.
+        return (
+            batch_df.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
 
-    base = tempfile.mkdtemp(
-        prefix=f"cdc_stream_{_uuid.uuid4().hex[:8]}_",
-        dir=stream_scratch_base(),
-    )
-    _CDC_STREAM_DIRS.append(base)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    topic_dir = os.path.join(base, "topic")
-    delta_base = os.path.join(base, "delta")
-    ckpt = os.path.join(base, "ckpt")
     # the replayable "topic": 16 files consumed 4-per-trigger, so the
     # stream still runs 4 incremental merges but each micro-batch READ
     # is 4 parallel tasks instead of 1 (a single parquet file under
     # maxPartitionBytes is one task; the serial decode was the batch
     # bottleneck — r12-ext2 A/B: 8.9 -> 6.0 s min-of-3 end-to-end at
     # 10x). The wider topic write is also faster (1.8 vs 2.2 s warm).
-    cl.repartition(16).write.mode("overwrite").parquet(topic_dir)
-
-    def _flush_delta(batch_df: DataFrame, epoch_id: int) -> None:
-        # Write ONLY this batch, compacted within itself (last-writer-
-        # wins per key among the batch's rows, tombstones kept). No
-        # read of prior state: the write cost is O(batch) however large
-        # the accumulated snapshot grows — the property the r03 verdict
-        # asked for.
-        w = _W.partitionBy("id").orderBy(F.col("ts_us").desc(), F.col("op"))
-        (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .write.mode("overwrite")
-            .parquet(os.path.join(delta_base, f"v{epoch_id}"))
-        )
-
-    q = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(topic_dir)
-        .writeStream.foreachBatch(_flush_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    deltas = replay_to_delta_log(
+        orders_changelog(spark, sf_dir), 16, 4, _compact_batch
     )
-    q.awaitTermination()
-    # replay machinery is no longer needed once the deltas exist
-    shutil.rmtree(topic_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     # merge-on-read: compact the delta log lazily in the returned plan —
     # one shuffle on the key, same row_number the batch form uses
-    w = _W.partitionBy("id").orderBy(F.col("ts_us").desc(), F.col("op"))
     merged = (
-        spark.read.parquet(os.path.join(delta_base, "v*"))
+        spark.read.parquet(deltas)
         .withColumn("__rn", F.row_number().over(w))
         .filter((F.col("__rn") == 1) & (F.col("op") != "delete"))
         .drop("__rn")
@@ -347,11 +301,6 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("after_total").cast("double").alias("after_total"),
         "ts_us",
     )
-
-
-# temp trees from prior streaming_cdc_upsert invocations, reclaimed on
-# the next invocation (results are consumed between calls) and at exit
-_CDC_STREAM_DIRS: list[str] = []
 
 
 @register(

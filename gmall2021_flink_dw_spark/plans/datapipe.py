@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall2021_flink_dw_spark.cache import tracked_persist
+from gmall2021_flink_dw_spark.cache import tracked_persist, tracked_tempdir
 
 from gmall2021_flink_dw_spark.datapipe.ann import (
     as_double,
@@ -50,7 +50,8 @@ from gmall2021_flink_dw_spark.datapipe.text import (
 )
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.session import ensure_workers_can_import
-from gmall2021_flink_dw_spark.sources.batch import load_table, spread_scan
+from gmall2021_flink_dw_spark.sources.batch import load_table
+from gmall2021_flink_dw_spark.streaming.pipelines import replay_to_delta_log
 
 
 @register(
@@ -2745,12 +2746,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# temp trees from prior streaming_dedup_ingest invocations, reclaimed on
-# the next invocation (results consumed between calls, same contract as
-# plans/cdc_routing.py) and at exit
-_DEDUP_STREAM_DIRS: list[str] = []
-
-
 @register(
     "streaming_dedup_ingest",
     oracle="""
@@ -2777,56 +2772,20 @@ _DEDUP_STREAM_DIRS: list[str] = []
     tags=("datapipe", "streaming", "dedup", "stateful"),
 )
 def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    for stale in list(_DEDUP_STREAM_DIRS):
-        shutil.rmtree(stale, ignore_errors=True)
-        _DEDUP_STREAM_DIRS.remove(stale)
-    from gmall2021_flink_dw_spark.scratch import stream_scratch_base
-
-    base = tempfile.mkdtemp(
-        prefix=f"dedup_stream_{_uuid.uuid4().hex[:8]}_",
-        dir=stream_scratch_base(),
-    )
-    _DEDUP_STREAM_DIRS.append(base)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    topic_dir = os.path.join(base, "topic")
-    delta_base = os.path.join(base, "delta")
-    ckpt = os.path.join(base, "ckpt")
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.repartition(4).write.mode("overwrite").parquet(topic_dir)
-
-    def _flush_delta(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+    def _fingerprint_batch(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(F.md5("text").alias("fp"), "doc_id")
             .groupBy("fp")
             .agg(
                 F.min("doc_id").alias("survivor_id"),
                 F.count(F.lit(1)).alias("n_copies"),
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(delta_base, f"v{epoch_id}"))
         )
 
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(topic_dir)
-        .writeStream.foreachBatch(_flush_delta)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(topic_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    deltas = replay_to_delta_log(docs, 4, 1, _fingerprint_batch)
     return (
-        spark.read.parquet(os.path.join(delta_base, "v*"))
+        spark.read.parquet(deltas)
         .groupBy("fp")
         .agg(
             F.min("survivor_id").alias("survivor_id"),
@@ -3198,34 +3157,6 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCRATCH_DIRS: list[str] = []
-
-
-def _scratch_dir(prefix: str) -> str:
-    """mkdtemp reclaimed at the NEXT _scratch_dir call (plus an atexit
-    hook for the last one). atexit alone (the ADVICE r09 fix) is not
-    enough at scale: a two-pass 100x suite accumulates every round-trip
-    query's corpus-sized scratch tree until process exit and filled the
-    disk mid-pass-2 (measured r12-ext — 'No space left on device' in
-    the first full-suite 100x attempt). Same consume-before-next
-    contract as _CDC_STREAM_DIRS: the returned DataFrame reads its
-    scratch lazily, and bench/driver/tests consume each result before
-    invoking the next scratch-writing query."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
-    for stale in list(_SCRATCH_DIRS):
-        shutil.rmtree(stale, ignore_errors=True)
-        _SCRATCH_DIRS.remove(stale)
-    base = tempfile.mkdtemp(prefix=f"{prefix}_{uuid.uuid4().hex[:8]}_")
-    _SCRATCH_DIRS.append(base)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return base
-
-
-
 # -------------------------------------------- source-format lane (r09)
 
 
@@ -3257,7 +3188,7 @@ def _scratch_dir(prefix: str) -> str:
 def source_jsonl_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = _scratch_dir("jsonl_src")
+    base = tracked_tempdir("jsonl_src_")
     out = os.path.join(base, "events_jsonl")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -3312,7 +3243,7 @@ def source_jsonl_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = _scratch_dir("orc_src")
+    base = tracked_tempdir("orc_src_")
     out = os.path.join(base, "events_orc")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -3364,7 +3295,7 @@ def source_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_csv_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = _scratch_dir("csv_src")
+    base = tracked_tempdir("csv_src_")
     out = os.path.join(base, "docs_csv")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -3624,7 +3555,7 @@ def shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = _scratch_dir("schevo")
+    base = tracked_tempdir("schevo_")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -3682,7 +3613,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_compact_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = _scratch_dir("compact")
+    base = tracked_tempdir("compact_")
     messy_dir = os.path.join(base, "messy")
     tidy_dir = os.path.join(base, "tidy")
     events = load_table(spark, sf_dir, "events").select(
@@ -4138,11 +4069,6 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# temp trees from prior streaming_heavy_hitters invocations, reclaimed
-# on the next invocation (same contract as streaming_dedup_ingest)
-_HH_STREAM_DIRS: list[str] = []
-
-
 @register(
     "streaming_heavy_hitters",
     oracle=_HH_ORACLE,
@@ -4164,61 +4090,26 @@ _HH_STREAM_DIRS: list[str] = []
     tags=("datapipe", "streaming", "sketch", "stateful"),
 )
 def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from gmall2021_flink_dw_spark.datapipe.sketch import (
         trigram_mg_summaries,
     )
 
     ensure_workers_can_import(spark)
     m = 256
-    for stale in list(_HH_STREAM_DIRS):
-        shutil.rmtree(stale, ignore_errors=True)
-        _HH_STREAM_DIRS.remove(stale)
-    from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 
-    base = tempfile.mkdtemp(
-        prefix=f"hh_stream_{_uuid.uuid4().hex[:8]}_",
-        dir=stream_scratch_base(),
-    )
-    _HH_STREAM_DIRS.append(base)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    topic_dir = os.path.join(base, "topic")
-    delta_base = os.path.join(base, "delta")
-    ckpt = os.path.join(base, "ckpt")
+    def _summarize_batch(batch_df: DataFrame) -> DataFrame:
+        return (
+            trigram_mg_summaries(batch_df.select("t"), m)
+            .groupBy("key")
+            .agg(F.sum("c").alias("c"))
+        )
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.lower(F.col("text")).alias("t")
     )
-    docs.repartition(4).write.mode("overwrite").parquet(topic_dir)
-
-    def _flush_summary(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            trigram_mg_summaries(batch_df.select("t"), m)
-            .groupBy("key")
-            .agg(F.sum("c").alias("c"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(delta_base, f"v{epoch_id}"))
-        )
-
-    q = (
-        spark.readStream.schema("t string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(topic_dir)
-        .writeStream.foreachBatch(_flush_summary)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(topic_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    deltas = replay_to_delta_log(docs, 4, 1, _summarize_batch)
     merged = (
-        spark.read.parquet(os.path.join(delta_base, "v*"))
+        spark.read.parquet(deltas)
         .groupBy("key")
         .agg(F.sum("c").alias("lb"))
     )
@@ -4410,7 +4301,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = _scratch_dir("zorder")
+    base = tracked_tempdir("zorder_")
     zdir, ldir = os.path.join(base, "zorder"), os.path.join(base, "linear")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",

@@ -21,8 +21,10 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.cache import tracked_tempdir, tracked_view
 from gmall2021_flink_dw_spark.functions.windows import duck_window_bounds
 from gmall2021_flink_dw_spark.registry import register
+from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 from gmall2021_flink_dw_spark.session import ensure_workers_can_import
 from gmall2021_flink_dw_spark.streaming.pipelines import (
     product_stats_transform,
@@ -69,6 +71,26 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str | None = None):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)
 
+
+def _replay_to_memory(
+    spark: SparkSession,
+    sf_dir: str,
+    stream: DataFrame,
+    prefix: str,
+    output_mode: str = "append",
+    final_flush: bool = True,
+) -> DataFrame:
+    """Drain `stream` into a fresh memory table and return the table.
+    The state-store width is cloned into the query's conf when it
+    starts, so _stream_state_partitions wraps the start only; the
+    table's view is dropped when the next query opens its cache epoch."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    with _stream_state_partitions(spark, sf_dir):
+        q = run_to_memory(stream, name, output_mode, final_flush)
+    q.stop()
+    return tracked_view(spark, name)
+
+
 _STT, _EDT = duck_window_bounds("ts", 3600)
 
 
@@ -94,16 +116,12 @@ _STT, _EDT = duck_window_bounds("ts", 3600)
     tags=("streaming", "window", "agg"),
 )
 def streaming_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _stream_state_partitions(spark, sf_dir):
-        stream = visitor_stats_transform(
-            stream_table(spark, sf_dir, "events").withWatermark(
-                "ts", f"{_WM_S} seconds"
-            )
-        ).drop("uv_ct_approx")
-        name = f"svs_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(stream, name, output_mode="append")
-        q.stop()
-    return spark.table(name)
+    stream = visitor_stats_transform(
+        stream_table(spark, sf_dir, "events").withWatermark(
+            "ts", f"{_WM_S} seconds"
+        )
+    ).drop("uv_ct_approx")
+    return _replay_to_memory(spark, sf_dir, stream, "svs")
 
 
 @register(
@@ -131,16 +149,12 @@ def streaming_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "agg", "distinct"),
 )
 def streaming_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _stream_state_partitions(spark, sf_dir):
-        stream = product_stats_transform(
-            stream_table(spark, sf_dir, "events").withWatermark(
-                "ts", f"{_WM_S} seconds"
-            )
+    stream = product_stats_transform(
+        stream_table(spark, sf_dir, "events").withWatermark(
+            "ts", f"{_WM_S} seconds"
         )
-        name = f"sed_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(stream, name, output_mode="append")
-        q.stop()
-    return spark.table(name)
+    )
+    return _replay_to_memory(spark, sf_dir, stream, "sed")
 
 
 @register(
@@ -161,14 +175,10 @@ def streaming_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_new_user_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_workers_can_import(spark)
-    with _stream_state_partitions(spark, sf_dir):
-        stream = correct_new_user_stream_bucketed(
-            stream_table(spark, sf_dir, "events")
-        )
-        name = f"snu_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(stream, name)
-        q.stop()
-    return spark.table(name)
+    stream = correct_new_user_stream_bucketed(
+        stream_table(spark, sf_dir, "events")
+    )
+    return _replay_to_memory(spark, sf_dir, stream, "snu")
 
 
 @register(
@@ -225,17 +235,12 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_ts <= p_ts + interval 5 seconds"
         ),
     ).select("pay_event_id", "src_event_id", F.col("p_user").alias("user_id"))
-    name = f"sij_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark, sf_dir):
-        # final_flush=False (r15): an INNER stream-stream join emits on
-        # match during data batches; the watermark only bounds/evicts
-        # the two buffers, so the trailing no-data batch emits nothing
-        # and only re-commits both sides' state stores. Result-identical
-        # (asserted at sf0.001/sf0.01); 2.12 -> 1.48 s solo at sf0.1
-        # (0.70x).
-        q = run_to_memory(joined, name, final_flush=False)
-        q.stop()
-    return spark.table(name)
+    # final_flush=False (r15): an INNER stream-stream join emits on
+    # match during data batches; the watermark only bounds/evicts the
+    # two buffers, so the trailing no-data batch emits nothing and only
+    # re-commits both sides' state stores. Result-identical (asserted
+    # at sf0.001/sf0.01); 2.12 -> 1.48 s solo at sf0.1 (0.70x).
+    return _replay_to_memory(spark, sf_dir, joined, "sij", final_flush=False)
 
 
 @register(
@@ -262,23 +267,17 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_uv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_workers_can_import(spark)
-    with _stream_state_partitions(spark, sf_dir):
-        stream = uv_dedup_ttl_stream_bucketed(
-            stream_table(spark, sf_dir, "events")
-        )
-        name = f"suv_{uuid.uuid4().hex[:8]}"
-        # final_flush=False (r15): emission is immediate (first event
-        # per (user, day) yields on the data invocation); the TTL timer
-        # only EVICTS expired members, never emits — so the trailing
-        # no-data batch contributes zero output rows and exists only to
-        # run that eviction one last time before stop. Skipping it is
-        # result-identical (asserted at sf0.001/sf0.01,
-        # tests/test_streaming.py::test_uv_dedup_no_final_flush_parity)
-        # and saves the per-bucket kernel round-trip + state-store
-        # commit cycle: 1.87 -> 1.27 s solo at sf0.1 (0.68x).
-        q = run_to_memory(stream, name, final_flush=False)
-        q.stop()
-    return spark.table(name)
+    stream = uv_dedup_ttl_stream_bucketed(stream_table(spark, sf_dir, "events"))
+    # final_flush=False (r15): emission is immediate (first event per
+    # (user, day) yields on the data invocation); the TTL timer only
+    # EVICTS expired members, never emits — so the trailing no-data
+    # batch contributes zero output rows and exists only to run that
+    # eviction one last time before stop. Skipping it is result-
+    # identical (asserted at sf0.001/sf0.01,
+    # tests/test_streaming.py::test_uv_dedup_no_final_flush_parity) and
+    # saves the per-bucket kernel round-trip + state-store commit
+    # cycle: 1.87 -> 1.27 s solo at sf0.1 (0.68x).
+    return _replay_to_memory(spark, sf_dir, stream, "suv", final_flush=False)
 
 
 @register(
@@ -316,12 +315,10 @@ def streaming_jump_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.sources.batch import load_table
 
     ensure_workers_can_import(spark)
-    with _stream_state_partitions(spark, sf_dir):
-        stream = jump_detect_stream_bucketed(stream_table(spark, sf_dir, "events"))
-        name = f"sjd_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(stream, name)
-        q.stop()
-    streamed = spark.table(name).select("user_id", "event_id")
+    stream = jump_detect_stream_bucketed(stream_table(spark, sf_dir, "events"))
+    streamed = _replay_to_memory(spark, sf_dir, stream, "sjd").select(
+        "user_id", "event_id"
+    )
     batch = detect_jumps(load_table(spark, sf_dir, "events")).select(
         "user_id",
         "event_id",
@@ -396,36 +393,32 @@ _SESS_GAP_S = 1800  # the engine's session gap (UserJumpDetailApp entry rule)
     tags=("streaming", "window", "session", "agg"),
 )
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _stream_state_partitions(spark, sf_dir):
-        events = stream_table(spark, sf_dir, "events").withWatermark(
-            "ts", "0 seconds"
+    events = stream_table(spark, sf_dir, "events").withWatermark(
+        "ts", "0 seconds"
+    )
+    sess = (
+        events.groupBy(
+            F.session_window("ts", f"{_SESS_GAP_S} seconds"), "user_id"
         )
-        sess = (
-            events.groupBy(
-                F.session_window("ts", f"{_SESS_GAP_S} seconds"), "user_id"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sv_value"),
-            )
-            .select(
-                "user_id",
-                F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "stt"
-                ),
-                F.date_format("session_window.end", "yyyy-MM-dd HH:mm:ss").alias(
-                    "edt"
-                ),
-                "n_events",
-                "sv_value",
-            )
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sv_value"),
         )
-        name = f"ssw_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(sess, name, output_mode="append")
-        q.stop()
-    return spark.table(name)
+        .select(
+            "user_id",
+            F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
+                "stt"
+            ),
+            F.date_format("session_window.end", "yyyy-MM-dd HH:mm:ss").alias(
+                "edt"
+            ),
+            "n_events",
+            "sv_value",
+        )
+    )
+    return _replay_to_memory(spark, sf_dir, sess, "ssw")
 
 
 @register(
@@ -457,33 +450,29 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "hopping", "agg"),
 )
 def streaming_hopping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _stream_state_partitions(spark, sf_dir):
-        events = stream_table(spark, sf_dir, "events").withWatermark(
-            "ts", "0 seconds"
+    events = stream_table(spark, sf_dir, "events").withWatermark(
+        "ts", "0 seconds"
+    )
+    agg = (
+        events.groupBy(
+            F.window("ts", "30 minutes", "10 minutes"), "event_type"
         )
-        agg = (
-            events.groupBy(
-                F.window("ts", "30 minutes", "10 minutes"), "event_type"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("pv"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sv"),
-            )
-            .select(
-                F.unix_micros(F.col("window.start").cast("timestamp")).alias(
-                    "ws"
-                ),
-                "event_type",
-                "pv",
-                "sv",
-            )
+        .agg(
+            F.count(F.lit(1)).alias("pv"),
+            F.sum(F.col("value").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sv"),
         )
-        name = f"shs_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(agg, name, output_mode="append")
-        q.stop()
-    return spark.table(name)
+        .select(
+            F.unix_micros(F.col("window.start").cast("timestamp")).alias(
+                "ws"
+            ),
+            "event_type",
+            "pv",
+            "sv",
+        )
+    )
+    return _replay_to_memory(spark, sf_dir, agg, "shs")
 
 
 _KW_STT, _KW_EDT = duck_window_bounds("ts", 60)
@@ -530,65 +519,39 @@ _KW_TS_SQL = (
 def streaming_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.functions.tokenizer import tokenize
 
-    with _stream_state_partitions(spark, sf_dir):
-        docs = (
-            stream_table(spark, sf_dir, "documents")
-            .filter(F.col("lang") == "en")
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(
-                    F.unix_timestamp(
-                        F.lit("2024-01-01 00:00:00"),
-                        "yyyy-MM-dd HH:mm:ss",
-                    )
-                    + F.col("doc_id")
-                ),
-            )
-            .withWatermark("ts", "11 seconds")
+    docs = (
+        stream_table(spark, sf_dir, "documents")
+        .filter(F.col("lang") == "en")
+        .withColumn(
+            "ts",
+            F.timestamp_seconds(
+                F.unix_timestamp(
+                    F.lit("2024-01-01 00:00:00"),
+                    "yyyy-MM-dd HH:mm:ss",
+                )
+                + F.col("doc_id")
+            ),
         )
-        words = docs.select(
-            "ts", F.explode(tokenize("text")).alias("keyword")
+        .withWatermark("ts", "11 seconds")
+    )
+    words = docs.select(
+        "ts", F.explode(tokenize("text")).alias("keyword")
+    )
+    agg = (
+        words.groupBy(F.window("ts", "60 seconds"), "keyword")
+        .agg(F.count(F.lit(1)).alias("ct"))
+        .select(
+            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
+                "stt"
+            ),
+            F.date_format("window.end", "yyyy-MM-dd HH:mm:ss").alias(
+                "edt"
+            ),
+            "keyword",
+            "ct",
         )
-        agg = (
-            words.groupBy(F.window("ts", "60 seconds"), "keyword")
-            .agg(F.count(F.lit(1)).alias("ct"))
-            .select(
-                F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "stt"
-                ),
-                F.date_format("window.end", "yyyy-MM-dd HH:mm:ss").alias(
-                    "edt"
-                ),
-                "keyword",
-                "ct",
-            )
-        )
-        name = f"skw_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(agg, name, output_mode="append")
-        q.stop()
-    return spark.table(name)
-
-
-# temp trees from prior router/late-drop invocations, reclaimed on the
-# next invocation (results consumed between calls, same contract as
-# plans/cdc_routing.py) and at exit
-_ROUTER_DIRS: list[str] = []
-
-
-def _fresh_stream_dir(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    from gmall2021_flink_dw_spark.scratch import stream_scratch_base
-
-    for stale in list(_ROUTER_DIRS):
-        shutil.rmtree(stale, ignore_errors=True)
-        _ROUTER_DIRS.remove(stale)
-    base = tempfile.mkdtemp(prefix=prefix, dir=stream_scratch_base())
-    _ROUTER_DIRS.append(base)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return base
+    )
+    return _replay_to_memory(spark, sf_dir, agg, "skw")
 
 
 @register(
@@ -624,7 +587,7 @@ def streaming_topic_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         foreach_batch_router,
     )
 
-    base = _fresh_stream_dir("topic_router_")
+    base = tracked_tempdir("topic_router_", stream_scratch_base())
     out_dir = os.path.join(base, "routed")
     ckpt = os.path.join(base, "ckpt")
     routed = stream_table(spark, sf_dir, "events").withColumn(
@@ -697,7 +660,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gmall2021_flink_dw_spark.sources.batch import load_table
 
-    base = _fresh_stream_dir("late_drop_")
+    base = tracked_tempdir("late_drop_", stream_scratch_base())
     topic = os.path.join(base, "topic")
     os.makedirs(topic, exist_ok=True)
     ev = load_table(spark, sf_dir, "events")
@@ -786,11 +749,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pv_ct",
         )
     )
-    name = f"sld_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark, sf_dir):
-        q = run_to_memory(agg, name, output_mode="append")
-        q.stop()
-    return spark.table(name)
+    return _replay_to_memory(spark, sf_dir, agg, "sld")
 
 
 @register(
@@ -834,7 +793,7 @@ def streaming_dws_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_dws_parquet,
     )
 
-    base = _fresh_stream_dir("dws_sink_")
+    base = tracked_tempdir("dws_sink_", stream_scratch_base())
     out_dir = os.path.join(base, "dws")
     ckpt = os.path.join(base, "ckpt")
     with _stream_state_partitions(spark, sf_dir):
@@ -881,27 +840,23 @@ def streaming_dws_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "agg", "ads", "complete-mode"),
 )
 def streaming_gmv_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with _stream_state_partitions(spark, sf_dir):
-        orders = stream_table(spark, sf_dir, "orders")
-        gmv = (
-            orders.filter(
-                (F.col("o_orderdate") >= F.lit("1997-03-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
-            )
-            .groupBy(
-                F.date_format("o_orderdate", "yyyy-MM-dd").alias("dt")
-            )
-            .agg(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("gmv"),
-                F.count(F.lit(1)).alias("order_ct"),
-            )
+    orders = stream_table(spark, sf_dir, "orders")
+    gmv = (
+        orders.filter(
+            (F.col("o_orderdate") >= F.lit("1997-03-01").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
         )
-        name = f"sgd_{uuid.uuid4().hex[:8]}"
-        q = run_to_memory(gmv, name, output_mode="complete")
-        q.stop()
-    return spark.table(name)
+        .groupBy(
+            F.date_format("o_orderdate", "yyyy-MM-dd").alias("dt")
+        )
+        .agg(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("gmv"),
+            F.count(F.lit(1)).alias("order_ct"),
+        )
+    )
+    return _replay_to_memory(spark, sf_dir, gmv, "sgd", output_mode="complete")
 
 
 @register(
@@ -946,7 +901,7 @@ def streaming_gmv_update_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gmall2021_flink_dw_spark.sources.batch import load_table
 
-    base = _fresh_stream_dir("gmv_update_")
+    base = tracked_tempdir("gmv_update_", stream_scratch_base())
     topic = os.path.join(base, "topic")
     os.makedirs(topic, exist_ok=True)
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -998,8 +953,4 @@ def streaming_gmv_update_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("order_ct"),
         )
     )
-    name = f"sgu_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark, sf_dir):
-        q = run_to_memory(gmv, name, output_mode="update")
-        q.stop()
-    return spark.table(name)
+    return _replay_to_memory(spark, sf_dir, gmv, "sgu", output_mode="update")

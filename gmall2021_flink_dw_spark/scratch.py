@@ -16,11 +16,12 @@ the FileSystem-based manager, which forks no `readlink`;
 ``tests/test_session.py::test_micro_batch_forks_no_readlink`` pins that.
 
 The checkpoints written here are per-invocation scaffolding: every
-registered streaming query creates a fresh uuid-named checkpoint,
-replays the parquet topic from scratch, and reclaims the directory at
-the next invocation — nothing is ever reused across runs (the
-no-result-caching bench contract), and /tmp on this sandbox is as
-ephemeral as tmpfs. On a real cluster the checkpointLocation is a
+registered streaming query creates a fresh checkpoint and replays the
+parquet topic from scratch. The next query's cache epoch removes the
+replay's tree (``cache.tracked_tempdir``); ``run_to_memory`` removes
+its stopped queries' checkpoints at its next call. Nothing is ever
+reused across runs (the no-result-caching bench contract), and a local
+replay's /tmp is as ephemeral as tmpfs. On a real cluster the checkpointLocation is a
 durable object-store/HDFS URI supplied by the deployment (exactly-once
 across driver restarts REQUIRES durable checkpoints); this helper only
 places the local replay harness's scaffolding, and
@@ -28,8 +29,9 @@ places the local replay harness's scaffolding, and
 where /dev/shm is absent, too small, or the operator wants disk.
 
 NOT routed through here: the source-format and lake-layout queries'
-scratch (``plans/datapipe.py::_scratch_dir``) — writing and re-reading
-real files on real storage is those queries' measured role.
+scratch (``cache.tracked_tempdir`` under the platform tempdir) — writing
+and re-reading real files on real storage is those queries' measured
+role.
 """
 
 from __future__ import annotations

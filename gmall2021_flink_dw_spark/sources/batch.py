@@ -122,7 +122,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # Size-derived spread width: one round-robin partition per this many
-# input bytes (env-tunable). Calibrated by a 3-way intra-session A/B
+# input bytes. Calibrated by a 3-way intra-session A/B
 # (r15, OPTIMIZATION_r15.md "Dedup-family skew audit"): the
 # per-row compute of the tokenize/shingle/kernel stages is ~1-2 MB/s
 # per core, so ~1 MB per task amortizes the exchange + task-scheduling
@@ -152,14 +152,6 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     exchange-free and real-scale scans are untouched. Batch-only:
     streaming frames cannot enumerate input files pre-execution."""
     sc = df.sparkSession.sparkContext
-    # SPARK_GRAFT_SPREAD_MB re-tunes bytes-per-partition.
-    spread_mb = float(os.environ.get("SPARK_GRAFT_SPREAD_MB", "1"))
-    if not spread_mb > 0:
-        raise ValueError(
-            f"SPARK_GRAFT_SPREAD_MB must be > 0 MB per partition, "
-            f"got {spread_mb}"
-        )
-    per_part = max(1, int(spread_mb * SPREAD_BYTES_PER_PART))
     try:
         total = sum(
             os.path.getsize(unquote(urlparse(uri).path))
@@ -167,7 +159,7 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
         )
     except OSError:  # non-local or vanished input: leave the scan as is
         return df
-    target = min(sc.defaultParallelism * factor, total // per_part)
+    target = min(sc.defaultParallelism * factor, total // SPREAD_BYTES_PER_PART)
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

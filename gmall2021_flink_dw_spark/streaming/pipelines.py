@@ -17,12 +17,16 @@ Parity map:
 from __future__ import annotations
 
 import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from gmall2021_flink_dw_spark.cache import tracked_tempdir
 from gmall2021_flink_dw_spark.functions.windows import FMT
+from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 
 
 def visitor_stats_transform(df: DataFrame, window_s: int = 3600) -> DataFrame:
@@ -120,10 +124,7 @@ def run_to_memory(
     real cluster the equivalent no-data triggers amortize across the
     job's lifetime instead of being ~1/2 of a two-trigger replay."""
     import atexit
-    import shutil
     import tempfile
-
-    from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 
     for stale, prev in list(_MEMORY_CKPTS.items()):
         if prev is None or not prev.isActive:
@@ -182,6 +183,46 @@ def write_dws_parquet(
     )
     q.processAllAvailable()
     return q
+
+
+def replay_to_delta_log(
+    topic: DataFrame,
+    n_files: int,
+    files_per_trigger: int,
+    to_delta: Callable[[DataFrame], DataFrame],
+) -> str:
+    """Log-structured replay (the streaming_cdc_upsert pattern): stage
+    `topic` as an n_files-file parquet topic, replay it
+    files_per_trigger files per micro-batch, and have each trigger write
+    ONLY to_delta(batch) as delta/v{epoch} — O(batch) write cost per
+    trigger however large the accumulated state grows. Returns the glob
+    of the delta versions; the caller merges them at read time. The
+    topic and checkpoint are removed once the replay ends; the delta
+    tree lives until the next query epoch (cache.tracked_tempdir)."""
+    base = tracked_tempdir("delta_log_", stream_scratch_base())
+    topic_dir = os.path.join(base, "topic")
+    delta_base = os.path.join(base, "delta")
+    ckpt = os.path.join(base, "ckpt")
+    topic.repartition(n_files).write.mode("overwrite").parquet(topic_dir)
+
+    def _flush_delta(batch_df: DataFrame, epoch_id: int) -> None:
+        to_delta(batch_df).write.mode("overwrite").parquet(
+            os.path.join(delta_base, f"v{epoch_id}")
+        )
+
+    q = (
+        topic.sparkSession.readStream.schema(topic.schema)
+        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .parquet(topic_dir)
+        .writeStream.foreachBatch(_flush_delta)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    shutil.rmtree(topic_dir, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return os.path.join(delta_base, "v*")
 
 
 def foreach_batch_router(base_dir: str):

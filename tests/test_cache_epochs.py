@@ -1,19 +1,26 @@
-"""Epoch-scoped persist reclamation (ADVICE r03: persist() leak).
+"""Epoch-scoped reclamation (ADVICE r03: persist() leak).
 
 Operators persist shared intermediates (shingle tables, signatures,
-tokenized docs) that must survive until the query's result is consumed
-— but no longer. The registry wraps every query entry to open a new
-cache epoch, so a long session running many queries (the driver's
-50-query correctness gate) holds at most one query's cached blocks at
-a time instead of accumulating all of them.
+tokenized docs), round-trip queries write scratch trees and streaming
+replays leave memory-sink tables; all must survive until the query's
+result is consumed — but no longer. The registry wraps every query
+entry to open a new cache epoch, so a long session running many queries
+(the driver's 50-query correctness gate) holds at most one query's
+scaffolding at a time instead of accumulating all of it.
 """
 
 from __future__ import annotations
+
+import glob
+import os
+import threading
 
 from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark import cache
 from gmall2021_flink_dw_spark.registry import load_all
+from gmall2021_flink_dw_spark.scratch import stream_scratch_base
+from tests.conftest import UNIT_SF
 
 REGISTRY = load_all()
 
@@ -73,3 +80,50 @@ def test_epochs_are_thread_scoped(spark):
     )
     cache.open_cache_epoch()
     assert not df1.storageLevel.useMemory
+
+
+def test_replay_memory_views_do_not_accumulate(spark):
+    """Each memory replay registers its sink's table as a temp view that
+    holds the output rows in the driver. After a replay has run twice
+    and a third query has opened its epoch, at most one of its views
+    may remain."""
+    replay = REGISTRY["streaming_visitor_stats"].fn
+    replay(spark, UNIT_SF).count()
+    replay(spark, UNIT_SF).count()
+    REGISTRY["text_stats"].fn(spark, UNIT_SF).count()
+    views = [t.name for t in spark.catalog.listTables()
+             if t.name.startswith("svs_")]
+    assert len(views) <= 1, views
+
+
+def test_scratch_tree_outlives_other_threads_queries(spark):
+    """A round-trip query's scratch tree belongs to its own thread's
+    epoch: a scratch query on another thread must not delete it before
+    this thread collects the result."""
+    orc = REGISTRY["source_orc_events"].fn(spark, UNIT_SF)
+    errors = []
+
+    def other() -> None:
+        try:
+            REGISTRY["source_csv_docs"].fn(spark, UNIT_SF).count()
+            cache.open_cache_epoch()  # release this thread's tree
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    t = threading.Thread(target=other)
+    t.start()
+    t.join()
+    assert not errors, errors
+    assert orc.count() > 0
+
+
+def test_stream_replay_tree_released_by_next_query(spark):
+    """A stream replay's scratch tree (topic, checkpoint, routed output)
+    is gone once the next query of any family opens its epoch."""
+    pattern = os.path.join(stream_scratch_base(), "topic_router_*")
+    before = set(glob.glob(pattern))
+    REGISTRY["streaming_topic_router"].fn(spark, UNIT_SF).count()
+    made = sorted(set(glob.glob(pattern)) - before)
+    assert len(made) == 1 and os.path.isdir(made[0]), made
+    REGISTRY["text_stats"].fn(spark, UNIT_SF).count()
+    assert not os.path.exists(made[0])

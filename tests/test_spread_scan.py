@@ -1,4 +1,4 @@
-"""sources/batch.py::spread_scan input sizing and its env validation."""
+"""sources/batch.py::spread_scan input sizing."""
 
 from __future__ import annotations
 
@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.sources import batch
 from gmall2021_flink_dw_spark.sources.batch import spread_scan
 
 
@@ -24,16 +25,9 @@ def test_spread_scan_sizes_percent_encoded_paths(spark, tmp_path, monkeypatch):
     assert any("%20" in uri for uri in df.inputFiles())
     assert df.rdd.getNumPartitions() == 1
     # ~1 partition per 4 KB of input: far more than the core count
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MB", str(4 / 1024))
+    monkeypatch.setattr(batch, "SPREAD_BYTES_PER_PART", 4 << 10)
     parallelism = spark.sparkContext.defaultParallelism
     assert spread_scan(df).rdd.getNumPartitions() == parallelism
-
-
-@pytest.mark.parametrize("mb", ["0", "-1"])
-def test_spread_scan_rejects_non_positive_mb(spark, monkeypatch, mb):
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MB", mb)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_SPREAD_MB"):
-        spread_scan(spark.range(10))
 
 
 def test_spread_scan_falls_back_when_input_is_unsizable(
@@ -42,7 +36,7 @@ def test_spread_scan_falls_back_when_input_is_unsizable(
     """A non-local or vanished input file (OSError from getsize) leaves
     the scan as it is, where it would otherwise be spread."""
     df = _one_file_scan(spark, str(tmp_path / "t"))
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MB", str(4 / 1024))
+    monkeypatch.setattr(batch, "SPREAD_BYTES_PER_PART", 4 << 10)
     # factor=2: at least 2 partitions even on a 1-core session
     assert spread_scan(df, factor=2) is not df
 

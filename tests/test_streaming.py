@@ -843,3 +843,55 @@ def test_run_to_memory_keeps_running_queries_checkpoints(spark):
         for q in queries:
             q.stop()
         shutil.rmtree(src, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_visitor_stats", "streaming_uv_dedup"]
+)
+def test_replay_state_width_is_policy_not_session(spark, name):
+    """Registered replays clone the state-store width of
+    plans/streaming_queries.py::_stream_state_partitions (8 at sf0.001)
+    into the query at start, whatever the session's streaming width."""
+    from pyspark.sql.streaming.listener import StreamingQueryListener
+
+    from gmall2021_flink_dw_spark.registry import load_all
+
+    class StateWidths(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.widths: list[tuple[str, int]] = []
+            self.ended: list[str] = []
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            p = event.progress
+            self.widths += [
+                (str(p.id), op.numShufflePartitions) for op in p.stateOperators
+            ]
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            self.ended.append(str(event.id))
+
+    listener = StateWidths()
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    spark.streams.addListener(listener)
+    try:
+        load_all()[name].fn(spark, SF).count()
+        # listener events arrive asynchronously; a query's progress
+        # reports all precede its termination event
+        deadline = time.time() + 60
+        while not {q for q, _ in listener.widths} & set(listener.ended):
+            assert time.time() < deadline, "no terminated replay reported"
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, orig)
+    ended = set(listener.ended)
+    widths = [w for q, w in listener.widths if q in ended]
+    assert widths and set(widths) == {8}, widths

@@ -9,8 +9,9 @@ scaffolding that must outlive the builder until the result is consumed
   call on a cluster, where the alternative is computing the tokenizer
   twice (ADVICE r03: persist() leak);
 - scratch trees: the source-format and lake-layout round trips, the
-  staged replay topics, the routed/partitioned sink trees and the
-  delta logs the returned plan reads back;
+  staged replay topics, the routed/partitioned sink trees, the delta
+  logs the returned plan reads back and the memory-sink checkpoints
+  of ``streaming/pipelines.py::run_to_memory``;
 - memory-sink tables: every memory replay's output rows stay in the
   driver until its temp view is dropped.
 
@@ -22,11 +23,15 @@ QueryFn); what is registered through :func:`tracked_persist`,
 epoch and is released when the NEXT epoch opens on the same thread — by
 which point the previous query's result has been consumed (the driver,
 bench, and the parity tests all materialize each result before invoking
-the next query). Unpersist is non-blocking: Spark drops the blocks in
-the background; executors never stall on reclamation. Scratch trees also
-get an atexit removal, for the last query of a process; atexit alone is
-not enough at scale: a two-pass 100x suite kept every round-trip query's
-corpus-sized tree until exit and filled the disk mid-pass-2 (r12-ext).
+the next query). A streaming query started through ``run_to_memory``
+must likewise be stopped before its thread's next registered query.
+Unpersist is non-blocking: Spark drops the blocks in the background;
+executors never stall on reclamation. The epoch of a thread that has
+exited is released by the next epoch any thread opens. Scratch trees
+still open at interpreter exit are removed by one atexit hook; atexit
+alone is not enough at scale: a two-pass 100x suite kept every
+round-trip query's corpus-sized tree until exit and filled the disk
+mid-pass-2 (r12-ext).
 """
 
 from __future__ import annotations
@@ -46,29 +51,47 @@ from pyspark.sql import DataFrame, SparkSession
 # scaffolding (an unpersist only forces recompute, but a deleted scratch
 # tree fails A's collect with FILE_NOT_EXIST). Per-thread epochs make
 # concurrent drivers independent; the serial consume-before-next-call
-# contract still applies WITHIN a thread. Re-entrancy (a registered
-# query invoking another registered entry mid-build) remains unsupported
-# by design: the inner entry would release the outer's scaffolding.
-_EPOCHS: dict[int, list[Callable[[], object]]] = {}
+# contract still applies WITHIN a thread. The key is the Thread object,
+# not its ident: an ident is reused once its thread exits, while a dead
+# Thread is recognisable and its epoch released. Re-entrancy (a
+# registered query invoking another registered entry mid-build) remains
+# unsupported by design: the inner entry would release the outer's
+# scaffolding.
+_EPOCHS: dict[threading.Thread, list[Callable[[], object]]] = {}
 _LOCK = threading.Lock()
+
+# scratch trees not yet released; whatever is left is removed at exit
+_LIVE_TREES: set[str] = set()
+
+
+@atexit.register
+def _remove_live_trees() -> None:
+    for path in list(_LIVE_TREES):
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _epoch() -> list[Callable[[], object]]:
     with _LOCK:
-        return _EPOCHS.setdefault(threading.get_ident(), [])
+        return _EPOCHS.setdefault(threading.current_thread(), [])
 
 
 def open_cache_epoch() -> None:
     """Release everything this thread's previous query invocation
-    registered. Called by the registry wrapper on every query entry;
-    safe to call at any query boundary."""
-    epoch = _epoch()
-    while epoch:
-        release = epoch.pop()
-        try:
-            release()
-        except Py4JError:
-            pass  # session already stopped; nothing to reclaim
+    registered, and the epochs of threads that have exited. Called by
+    the registry wrapper on every query entry; safe to call at any
+    query boundary."""
+    me = threading.current_thread()
+    with _LOCK:
+        dead = [t for t in _EPOCHS if t is not me and not t.is_alive()]
+        epochs = [_EPOCHS.pop(t) for t in dead]
+        epochs.append(_EPOCHS.setdefault(me, []))
+    for epoch in epochs:
+        while epoch:
+            release = epoch.pop()
+            try:
+                release()
+            except Py4JError:
+                pass  # session already stopped; nothing to reclaim
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -78,13 +101,18 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def _remove_tree(path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)
+    _LIVE_TREES.discard(path)
+
+
 def tracked_tempdir(prefix: str, parent: str | None = None) -> str:
     """mkdtemp (under `parent`, the platform tempdir by default) whose
     tree is removed when the current thread's next epoch opens, or at
     exit."""
     path = tempfile.mkdtemp(prefix=prefix, dir=parent)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    _epoch().append(lambda: shutil.rmtree(path, ignore_errors=True))
+    _LIVE_TREES.add(path)
+    _epoch().append(lambda: _remove_tree(path))
     return path
 
 

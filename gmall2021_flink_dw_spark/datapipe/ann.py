@@ -34,10 +34,6 @@ def _norm2(a: Column) -> Column:
     return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_norm2(a)) * F.sqrt(_norm2(b)))
-
-
 def norm(a: Column) -> Column:
     return F.sqrt(_norm2(a))
 

@@ -669,8 +669,7 @@ def merged_duplicate_spans_hashed(
     JVM explode+substr+xxhash64 path here — 33.2 vs 24.0 s at g10 —
     because unlike the MG sketch the kernel's OUTPUT is the full
     126M-row stream, and shipping it back across Arrow costs more
-    than the JVM's per-window string allocs. The kernel stays in
-    datapipe/sketch.py::window_hash_stream for output-reducing uses.
+    than the JVM's per-window string allocs.
     """
     grams = _gram_stream(docs, min_len).select(
         F.shiftleft(F.col("doc_id").cast("long"), 32)

@@ -215,94 +215,3 @@ def trigram_exact_counts(docs: DataFrame, candidate_ids) -> DataFrame:
             )
 
     return docs.mapInPandas(count, schema="key bigint, c long")
-
-
-# ---------------------------------------------------------------------
-# Vectorized rolling-hash window kernel (r10). The substring-dedup
-# scale path needs a 64-bit key for EVERY L-char window of every doc
-# (126M windows at the third decade). Generating those keys JVM-side
-# (explode + substr + xxhash64) is linear but alloc-bound — codegen
-# materializes a 50-char UTF8String per window just to hash it
-# (measured 9.6 s of the plan's 16 s at g10). Same cure as the trigram
-# kernel above: ship the RAW doc strings through Arrow once (three
-# orders of magnitude fewer rows) and compute all window hashes in
-# numpy with O(total_chars) work via a rolling polynomial hash —
-# prefix sums in the Binv^j basis make every window hash one
-# subtract-and-multiply, no per-window string ever exists.
-#
-# Hash contract: h(w) = mix(sum_j w_j * B^(L-1-j) mod 2^64) with B odd
-# (invertible mod 2^64, so the prefix-basis trick is exact) and a
-# splitmix64 finalizer for bit diffusion. Equal windows ALWAYS hash
-# equal (determinism is the correctness requirement); unequal windows
-# collide with ~n^2/2^65 odds — the same contract the xxhash64 form
-# carried, checked the same way (the driver oracle recomputes exact
-# strings, so a collision at checked scale surfaces as a mismatch).
-# numpy uint64 arithmetic wraps mod 2^64 by construction.
-
-_ROLL_B = 0x9E3779B97F4A7C15  # odd (golden-ratio constant)
-_ROLL_BINV = pow(_ROLL_B, -1, 1 << 64)
-
-
-def _rolling_window_hashes(doc_ids, texts, L: int):
-    """(doc_id int64, pos int32, k int64) arrays for every L-char
-    window of every text, windows never crossing doc boundaries.
-    Character indexing is UTF-32 (identical to Spark substring /
-    DuckDB substr semantics)."""
-    import numpy as np
-
-    bufs = [t.encode("utf-32-le") for t in texts]
-    lens = np.fromiter(
-        (len(b) // 4 for b in bufs), dtype=np.int64, count=len(bufs)
-    )
-    counts = np.maximum(lens - L + 1, 0)
-    total = int(counts.sum())
-    if total == 0:
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int32),
-            np.empty(0, dtype=np.int64),
-        )
-    cp = np.frombuffer(b"".join(bufs), dtype=np.uint32).astype(np.uint64)
-    n = cp.size
-    B = np.uint64(_ROLL_B)
-    with np.errstate(over="ignore"):
-        bpow = np.ones(n, dtype=np.uint64)
-        if n > 1:
-            np.cumprod(np.full(n - 1, B, dtype=np.uint64), out=bpow[1:])
-        binvpow = np.ones(n, dtype=np.uint64)
-        if n > 1:
-            np.cumprod(
-                np.full(n - 1, np.uint64(_ROLL_BINV), dtype=np.uint64),
-                out=binvpow[1:],
-            )
-        s0 = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(cp * binvpow, out=s0[1:])
-
-        offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        doc_rep = np.repeat(np.asarray(doc_ids, dtype=np.int64), counts)
-        local = np.arange(total, dtype=np.int64) - np.repeat(
-            np.cumsum(counts) - counts, counts
-        )
-        g = np.repeat(offsets, counts) + local
-        h = (s0[g + L] - s0[g]) * bpow[g + L - 1]
-        # splitmix64 finalizer
-        h ^= h >> np.uint64(30)
-        h *= np.uint64(0xBF58476D1CE4E5B9)
-        h ^= h >> np.uint64(27)
-        h *= np.uint64(0x94D049BB133111EB)
-        h ^= h >> np.uint64(31)
-    return doc_rep, local.astype(np.int32), h.view(np.int64)
-
-
-def window_hash_stream(docs: DataFrame, L: int) -> DataFrame:
-    """(doc_id long, pos int, k long) for every L-char window of a
-    (doc_id, text) DataFrame, via the Arrow rolling-hash kernel."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            d, p, k = _rolling_window_hashes(
-                batch["doc_id"].to_numpy(), batch["text"].tolist(), L
-            )
-            yield pd.DataFrame({"doc_id": d, "pos": p, "k": k})
-
-    return docs.mapInPandas(gen, schema="doc_id long, pos int, k long")

@@ -130,34 +130,11 @@ def max_token_repetition(tokens: Column) -> Column:
     return F.aggregate(st, acc0, merge, lambda acc: acc.best)
 
 
-def shingles(tokens: Column | str, n: int = 5) -> Column:
-    """Distinct word n-gram strings over a tokens array column/expression.
-    Total: arrays shorter than n yield an empty shingle list (guarded
-    per row — sequence() would otherwise descend on a negative span and
-    trip ANSI element_at, regardless of upstream filters)."""
-    t_in = F.col(tokens) if isinstance(tokens, str) else tokens
-
-    def body(t: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.size(t) - n)
-        built = F.array_distinct(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(t, i + j + 1) for j in range(n)]
-                ),
-            )
-        )
-        empty = F.array().cast(T.ArrayType(T.StringType()))
-        return F.when(F.size(t) >= n, built).otherwise(empty)
-
-    return let(t_in, body)
-
-
 def shingle_hashes(tokens: Column | str, n: int = 5) -> Column:
-    """Distinct word n-gram IDENTITIES as int64 xxhash64 values — the
-    allocation-free twin of :func:`shingles` for consumers that only
-    ever compare shingles for equality (inverted-index joins, distinct,
-    MinHash), which is every dedup-family consumer.
+    """Distinct word n-gram IDENTITIES as int64 xxhash64 values, for
+    consumers that only ever compare shingles for equality
+    (inverted-index joins, distinct, MinHash), which is every
+    dedup-family consumer.
 
     Why (r12, measured at 10x sf0.1): building 2.56M concat_ws string
     shingles and persisting/shuffling them cost 9.5-12.6 s of
@@ -201,10 +178,9 @@ def duck_shingles(n: int = 5) -> str:
 
 
 def bigram_pairs(tokens: Column | str) -> Column:
-    """Ordered (w1, w2) bigram structs over a tokens array — the n=2
-    positional counterpart of `shingles` (which is distinct strings;
-    a language model needs every occurrence, in order). Arrays shorter
-    than 2 yield an empty list, same total-function guard as shingles."""
+    """Ordered (w1, w2) bigram structs over a tokens array: every
+    occurrence, in order, as a language model needs. Arrays shorter
+    than 2 yield an empty list (guarded per row, like shingle_hashes)."""
     t_in = F.col(tokens) if isinstance(tokens, str) else tokens
 
     def body(t: Column) -> Column:

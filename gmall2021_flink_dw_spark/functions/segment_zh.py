@@ -6,10 +6,8 @@ IK's core algorithm is dictionary-driven maximum matching; this module
 re-implements that publicly-documented algorithm — forward maximum
 matching (FMM) over a vendored dictionary — so the pipeline segments
 Chinese search keywords deterministically with zero external deps.
-jieba (public lib), when installed, takes precedence in tokenize_udf;
-this is the always-available fallback, and the golden tests pin ITS
-output so results are stable whether or not jieba is present is a
-per-deployment choice (tests cover both code paths explicitly).
+It is the only segmenter tokenize_udf uses, and the golden tests pin
+its output.
 
 Scale note: the dictionary is a frozen in-process set (~100 KB) — it
 ships with the package zip to every executor; segmentation is pure

@@ -7,12 +7,11 @@ The reference registers an IKAnalyzer-based Chinese-segmentation UDTF
 - the scale path is a pure-SQL tokenizer — lowercase + regexp_extract_all
   — which stays inside whole-stage codegen (no Python in the hot path)
   and is deterministic, so golden tests hold;
-- ``tokenize_udf`` is the extension point for a real segmenter (jieba if
-  installed — public lib, IK-like full-mode segmentation) as an
-  Arrow-batched pandas UDF; it falls back to the same regex so behavior
-  is identical when jieba is absent. Error behavior mirrors the
-  reference (SplitFunction.java:25-29: on failure emit the input row
-  unchanged).
+- ``tokenize_udf`` is the Arrow-batched pandas UDF form: the same regex
+  for ASCII runs, and the deterministic vendored dictionary segmenter
+  (functions/segment_zh.py) for Chinese runs. Error behavior mirrors
+  the reference (SplitFunction.java:25-29: on failure emit the input
+  row unchanged).
 """
 
 from __future__ import annotations
@@ -26,13 +25,6 @@ from pyspark.sql import types as T
 
 TOKEN_RE = "[a-z0-9]+"
 
-try:  # pragma: no cover - jieba is not in the test image
-    import jieba  # noqa: F401
-
-    _HAVE_JIEBA = True
-except Exception:  # pragma: no cover
-    _HAVE_JIEBA = False
-
 
 def tokenize(col: Column | str) -> Column:
     """JVM-side tokenizer: lowercase, extract [a-z0-9]+ runs.
@@ -42,45 +34,19 @@ def tokenize(col: Column | str) -> Column:
 
 
 # alnum runs OR CJK runs, in document order; the CJK branch goes through
-# the dictionary segmenter (jieba when installed, FMM fallback).
+# the dictionary segmenter.
 _RUN_RE = re.compile(f"({TOKEN_RE})|([一-鿿]+)")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf_fmm(texts: pd.Series) -> pd.Series:
-    """tokenize_udf pinned to the vendored FMM segmenter, jieba hook
-    excluded: the CJK golden oracle (dws_keyword_stats_zh) hand-pins
-    expected FMM tokens, so this path must produce byte-identical
-    output on every deployment — including ones where jieba IS
-    installed and the generic tokenize_udf would prefer it."""
-    from gmall2021_flink_dw_spark.functions.segment_zh import fmm_segment
-
-    def _one(t):
-        if t is None:
-            return []
-        try:
-            out = []
-            for m in _RUN_RE.finditer(t.lower()):
-                if m.group(1) is not None:
-                    out.append(m.group(1))
-                else:
-                    out.extend(fmm_segment(m.group(2)))
-            return out
-        except Exception:
-            return [t]
-
-    return texts.map(_one)
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def tokenize_udf(texts: pd.Series) -> pd.Series:
     """D1 as an Arrow-batched pandas UDF (the UDTF slow path, IKAnalyzer
     parity: KeywordUtil.java:13-35). ASCII alnum runs tokenize by the
-    same regex as `tokenize`; Chinese runs segment by dictionary
-    maximum-matching — jieba full-mode when available (public lib,
-    closest to IK's ik_max_word), else the deterministic vendored FMM
-    (functions/segment_zh.py). On any per-row failure, emits the raw
-    input as a single token (reference behavior,
+    same regex as `tokenize`; Chinese runs segment by the vendored
+    forward-maximum-matching segmenter (functions/segment_zh.py), so
+    the output is the same on every deployment — the CJK golden oracle
+    (dws_keyword_stats_zh) pins it token by token. On any per-row
+    failure, emits the raw input as a single token (reference behavior,
     SplitFunction.java:25-29)."""
     from gmall2021_flink_dw_spark.functions.segment_zh import fmm_segment
 
@@ -92,12 +58,6 @@ def tokenize_udf(texts: pd.Series) -> pd.Series:
             for m in _RUN_RE.finditer(t.lower()):
                 if m.group(1) is not None:
                     out.append(m.group(1))
-                elif _HAVE_JIEBA:
-                    out.extend(
-                        w
-                        for w in jieba.lcut(m.group(2), cut_all=True)
-                        if w.strip()
-                    )
                 else:
                     out.extend(fmm_segment(m.group(2)))
             return out

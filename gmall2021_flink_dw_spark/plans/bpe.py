@@ -72,31 +72,6 @@ N_MERGES = 20
 MIN_WORD_COUNT = 1
 BROADCAST_VOCAB_MAX_ROWS = 2_000_000
 
-# Memoized training results per (dataset fingerprint, n_merges)
-# (ADVICE r06 #1): tokenizer_apply_bpe reuses the merges + final word
-# table learned by tokenizer_train_bpe instead of re-running the loop.
-# The cache holds only plain Python lists (never session-bound
-# DataFrames), so it is safe across SparkSessions; training is
-# deterministic per input. The key folds in documents.parquet's
-# (mtime, size) (ADVICE r07 #2) so regenerating the data under an
-# unchanged sf_dir within one process invalidates stale merges.
-_TRAIN_CACHE: dict[
-    tuple[str, float, int, int, int],
-    tuple[list[tuple[int, str, str, str, int]], list[tuple[str, int]]],
-] = {}
-
-
-def _dataset_key(sf_dir: str, n_merges: int) -> tuple[str, float, int, int, int]:
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(path)
-        mtime, size = st.st_mtime, st.st_size
-    except OSError:  # dir-style parquet or exotic layout: fall back
-        mtime, size = 0.0, -1
-    return (sf_dir, mtime, size, MIN_WORD_COUNT, n_merges)
-
 # ---------------------------------------------------------------- Spark side
 
 
@@ -250,16 +225,11 @@ def _train_merges(
     order (total desc, pair string asc — string order == tuple order
     given the sub-alphabet ' ' separator), same greedy rewrite.
     """
-    key = _dataset_key(sf_dir, n_merges)
-    if key in _TRAIN_CACHE:
-        return _TRAIN_CACHE[key]
     word_rows = [
         (r["s"], int(r["cnt"]))
         for r in _word_symbols(spark, sf_dir).collect()
     ]
-    result = _train_merges_local(word_rows, n_merges)
-    _TRAIN_CACHE[key] = result
-    return result
+    return _train_merges_local(word_rows, n_merges)
 
 
 # --------------------------------------------------------------- oracle side
@@ -389,10 +359,10 @@ def tokenizer_train_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_APPLY_ORACLE,
     doc="Apply the learned BPE merges to the corpus: the final symbol "
     "state of the distinct-word table IS the tokenization of every "
-    "word, so apply re-parallelizes the vocab-bounded table (reused "
-    "from the memoized trainer — ADVICE r06 #1) and explodes it "
-    "weighted by word frequency — top-40 BPE tokens by total "
-    "occurrences (TakeOrderedAndProject, no global sort). No corpus "
+    "word, so apply trains the merges itself, re-parallelizes the "
+    "vocab-bounded table and explodes it weighted by word frequency — "
+    "top-40 BPE tokens by total occurrences (TakeOrderedAndProject, no "
+    "global sort). No corpus "
     "rescan: token totals need only (word tokenization x word count).",
     tags=("datapipe", "text", "tokenizer", "topn"),
 )

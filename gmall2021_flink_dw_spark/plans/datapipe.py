@@ -38,7 +38,6 @@ from gmall2021_flink_dw_spark.datapipe.text import (
     DUCK_WINNOW_CTES,
     STOPWORDS,
     TOKENS_SQL,
-    bigram_pairs,
     duck_marker_hits,
     duck_predict_lang,
     duck_shingles,
@@ -49,7 +48,6 @@ from gmall2021_flink_dw_spark.datapipe.text import (
     with_tokens,
 )
 from gmall2021_flink_dw_spark.registry import register
-from gmall2021_flink_dw_spark.session import ensure_workers_can_import
 from gmall2021_flink_dw_spark.sources.batch import load_table
 from gmall2021_flink_dw_spark.streaming.pipelines import replay_to_delta_log
 
@@ -315,7 +313,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "dedup", "lsh"),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_workers_can_import(spark)
     # shared tokenized corpus: the exact-high-Jaccard side shingles it,
     # the simhash side hashes its tokens — one regexp pass, persisted
     docs = tracked_persist(
@@ -440,7 +437,6 @@ def ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "multimodal", "udf"),
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_features(attach_payload(docs))
 
@@ -479,7 +475,6 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_bmp_features,
     )
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_bmp_features(attach_bmp_payload(docs))
 
@@ -545,7 +540,6 @@ def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_mixed_features,
     )
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_mixed_features(attach_mixed_payload(docs))
 
@@ -596,7 +590,6 @@ def multimodal_decode_jpeg_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
         jpeg_ac_features,
     )
 
-    ensure_workers_can_import(spark)
     # The full-IDCT decode is the rare CPU-BOUND Python stage: the
     # sf0.1 documents table is one parquet file -> one partition, so
     # without this round-robin exchange (8-byte doc_id rows — KBs) the
@@ -650,7 +643,6 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_audio_features,
     )
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 4 == 2
     )
@@ -701,7 +693,6 @@ def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_image_stats,
     )
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents")
     return extract_image_stats(attach_patterned_bmp(docs))
 
@@ -814,7 +805,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocked_cosine_pairs,
     )
 
-    ensure_workers_can_import(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("emb")
     )
@@ -952,10 +942,9 @@ def _bigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow kernel pair in datapipe/bigram_lm.py — fit emits per-batch
     DISTINCT (w1, w2, k) partials (one vocabulary-sized shuffle, no
     corpus shuffle), the model broadcasts to a scoring kernel that
-    emits one row per doc (no shuffle at all). The r07-r10 JVM
-    explode+join form (three corpus-scale exchanges) is kept below as
-    _bigram_doc_scores_jvm for the measured decade comparison
-    (BASELINE.md r11)."""
+    emits one row per doc (no shuffle at all), replacing the r07-r10
+    JVM explode+join form (three corpus-scale exchanges; decade
+    comparison in BASELINE.md r11)."""
     from gmall2021_flink_dw_spark.datapipe.bigram_lm import (
         bigram_lm_scores,
         fit_bigram_model,
@@ -964,62 +953,9 @@ def _bigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "__tokens"
     )
-    ensure_workers_can_import(spark)
     model = fit_bigram_model(docs)
     bcast = spark.sparkContext.broadcast(model)
     return bigram_lm_scores(docs, bcast)
-
-
-def _bigram_doc_scores_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r11 JVM form of _bigram_doc_scores (explode + three
-    corpus-scale exchanges), retained unregistered for decade
-    measurements and as the fallback if the kernel ever loses (the
-    rolling-hash precedent, BASELINE.md r10)."""
-    # project BEFORE persisting: persist materializes whatever it is
-    # handed, so caching the full row would defeat parquet column
-    # pruning (the scan must read only doc_id + text)
-    docs = tracked_persist(
-        with_tokens(load_table(spark, sf_dir, "documents")).select(
-            "doc_id", "__tokens"
-        )
-    )
-    t = F.col("__tokens")
-    bg = docs.filter(F.size(t) >= 2).select(
-        "doc_id", F.explode(bigram_pairs(t)).alias("p")
-    )
-    # per-(doc, bigram) counts feed three consumers (model counts x2 +
-    # scoring join) — persist, same rationale as tfidf's tf table.
-    dtf = tracked_persist(
-        bg.select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    bc = dtf.groupBy("w1", "w2").agg(F.sum("k").alias("cb"))
-    # cu re-aggregates bc (not dtf): sum over w2 of cb == sum over dtf of
-    # k, same integers, but the input is the model table — and the
-    # leading-word join lands on the MODEL side, so the big per-doc
-    # table is shuffled once (on the bigram), not twice. At 100 TB dtf
-    # is corpus-sized while bc/uc are vocabulary-sized; joining them
-    # first is the difference between one and two corpus shuffles.
-    uc = bc.groupBy("w1").agg(F.sum("cb").alias("cu"))
-    model = bc.join(uc, ["w1"])
-    voc = docs.select(F.explode(t).alias("tk")).agg(
-        F.count_distinct("tk").alias("v")
-    )
-    lp_term = F.log(
-        (F.col("cb") + F.lit(1)).cast("double") / (F.col("cu") + F.col("v"))
-    )
-    return (
-        dtf.join(model, ["w1", "w2"])
-        .crossJoin(F.broadcast(voc))
-        .withColumn("lpk", F.col("k") * lp_term)
-        .groupBy("doc_id")
-        .agg(
-            (F.sum("lpk") / F.sum("k")).alias("lp"),
-            F.sum("k").cast("bigint").alias("n_bigrams"),
-        )
-    )
-
 
 
 @register(
@@ -1166,7 +1102,6 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.text import winnow_fingerprint_rows
 
-    ensure_workers_can_import(spark)
     # Arrow winnow kernel (r12): the JVM form built a concat string + a
     # 32-char md5 hex string per gram and ran the window mins over
     # strings — 13.4-13.6 s of this query's 17.5-19.8 s at 10x; the
@@ -1350,7 +1285,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.multimodal import sample_frames
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents")
     return sample_frames(attach_payload(docs))
 
@@ -1946,7 +1880,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_cosine_pairs,
     )
 
-    ensure_workers_can_import(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("emb")
     )
@@ -2014,7 +1947,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         clustered_cosine_pairs,
     )
 
-    ensure_workers_can_import(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("emb")
     )
@@ -2067,7 +1999,6 @@ def multimodal_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_embeddings,
     )
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents")
     return extract_embeddings(attach_payload(docs))
 
@@ -2106,7 +2037,6 @@ def multimodal_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.multimodal import resize_images
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents")
     return resize_images(attach_payload(docs))
 
@@ -3011,7 +2941,6 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit_bigram_model,
     )
 
-    ensure_workers_can_import(spark)
     model = fit_bigram_model(qc.select("__tokens"))
     bcast = spark.sparkContext.broadcast(model)
     # persisted: TWO consumers (the mu aggregate and the fluent join)
@@ -3878,7 +3807,6 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         trigram_mg_summaries,
     )
 
-    ensure_workers_can_import(spark)
     m = 256
     docs = load_table(spark, sf_dir, "documents").select(
         F.lower(F.col("text")).alias("t")
@@ -4000,7 +3928,6 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         trigram_count_partials,
     )
 
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         F.lower(F.col("text")).alias("t")
     )
@@ -4094,7 +4021,6 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         trigram_mg_summaries,
     )
 
-    ensure_workers_can_import(spark)
     m = 256
 
     def _summarize_batch(batch_df: DataFrame) -> DataFrame:
@@ -4209,7 +4135,6 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_scores,
     )
 
-    ensure_workers_can_import(spark)
     model_rows = (
         dsir_model_partials(docs, B)
         .groupBy("b")
@@ -4451,7 +4376,6 @@ def _power_iteration_ctes(iters: int = 48) -> str:
 def embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.linalg import gram_partials
 
-    ensure_workers_can_import(spark)
     vecs = load_table(spark, sf_dir, "embeddings").select("embedding")
     return (
         gram_partials(vecs, 64)
@@ -4502,7 +4426,6 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gmall2021_flink_dw_spark.datapipe.linalg import gram_partials
 
-    ensure_workers_can_import(spark)
     vecs = load_table(spark, sf_dir, "embeddings")
     # d^2-bounded collect (2080 rows), the documented driver contract
     cells = (

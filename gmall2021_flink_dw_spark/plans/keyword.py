@@ -17,10 +17,8 @@ from gmall2021_flink_dw_spark.functions.tokenizer import (
     TOKEN_RE,
     tokenize,
     tokenize_udf,
-    tokenize_udf_fmm,
 )
 from gmall2021_flink_dw_spark.registry import register
-from gmall2021_flink_dw_spark.session import ensure_workers_can_import
 from gmall2021_flink_dw_spark.sources.batch import load_table
 
 
@@ -85,7 +83,6 @@ def dws_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dws", "udtf", "udf", "text"),
 )
 def dws_keyword_stats_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_workers_can_import(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "en")
     return (
         docs.select(F.explode(tokenize_udf("text")).alias("word"))
@@ -151,19 +148,18 @@ _ZH_VALUES = ",\n      ".join(f"('{w}', {n})" for w, n in _ZH_EXPECTED)
     "check (KeywordUtil.java:13-35 loads IK's dictionary; here the FMM "
     "re-implementation over the vendored domain+general lexicon, "
     "functions/segment_zh.py + zh_lexicon.py): inline CJK corpus -> "
-    "Arrow pandas-UDF tokenizer (FMM pinned, jieba hook excluded for "
-    "cross-deployment determinism) -> explode -> per-word counts, "
+    "Arrow pandas-UDF tokenizer (deterministic FMM on every "
+    "deployment) -> explode -> per-word counts, "
     "compared against a hand-reviewed golden VALUES expectation. "
     "Mixed-script rows prove ASCII runs bypass the segmenter.",
     tags=("dws", "udtf", "udf", "text", "cjk"),
 )
 def dws_keyword_stats_zh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_workers_can_import(spark)
     corpus = spark.createDataFrame(
         list(_ZH_CORPUS), "doc_id long, text string"
     )
     return (
-        corpus.select(F.explode(tokenize_udf_fmm("text")).alias("keyword"))
+        corpus.select(F.explode(tokenize_udf("text")).alias("keyword"))
         .groupBy("keyword")
         .agg(F.count(F.lit(1)).alias("ct"))
     )

@@ -25,7 +25,6 @@ from gmall2021_flink_dw_spark.cache import tracked_tempdir, tracked_view
 from gmall2021_flink_dw_spark.functions.windows import duck_window_bounds
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.scratch import stream_scratch_base
-from gmall2021_flink_dw_spark.session import ensure_workers_can_import
 from gmall2021_flink_dw_spark.streaming.pipelines import (
     product_stats_transform,
     run_to_memory,
@@ -174,7 +173,6 @@ def streaming_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def streaming_new_user_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_workers_can_import(spark)
     stream = correct_new_user_stream_bucketed(
         stream_table(spark, sf_dir, "events")
     )
@@ -266,7 +264,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "dedup"),
 )
 def streaming_uv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_workers_can_import(spark)
     stream = uv_dedup_ttl_stream_bucketed(stream_table(spark, sf_dir, "events"))
     # final_flush=False (r15): emission is immediate (first event per
     # (user, day) yields on the data invocation); the TTL timer only
@@ -314,7 +311,6 @@ def streaming_jump_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.operators.cep import detect_jumps
     from gmall2021_flink_dw_spark.sources.batch import load_table
 
-    ensure_workers_can_import(spark)
     stream = jump_detect_stream_bucketed(stream_table(spark, sf_dir, "events"))
     streamed = _replay_to_memory(spark, sf_dir, stream, "sjd").select(
         "user_id", "event_id"

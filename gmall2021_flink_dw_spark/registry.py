@@ -24,6 +24,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gmall2021_flink_dw_spark.cache import open_cache_epoch
+from gmall2021_flink_dw_spark.session import ensure_workers_can_import
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -66,12 +69,14 @@ def register(
             raise ValueError(f"duplicate query name: {name}")
 
         def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Every query entry opens a new cache epoch — reclaims the
-            # previous query's tracked persists (see cache.py); that
-            # result is consumed by the time the next query runs.
-            from gmall2021_flink_dw_spark.cache import open_cache_epoch
-
+            # Every query entry opens a new cache epoch — releases what
+            # the previous query on this thread left behind (see
+            # cache.py); that result is consumed by the time the next
+            # query runs. It then ships the package to the executors'
+            # Python workers (once per context; a list lookup after),
+            # so a query that runs a Python UDF needs no call of its own.
             open_cache_epoch()
+            ensure_workers_can_import(spark)
             return fn(spark, sf_dir)
 
         entry.__name__ = fn.__name__

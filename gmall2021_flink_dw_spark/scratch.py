@@ -17,9 +17,9 @@ the FileSystem-based manager, which forks no `readlink`;
 
 The checkpoints written here are per-invocation scaffolding: every
 registered streaming query creates a fresh checkpoint and replays the
-parquet topic from scratch. The next query's cache epoch removes the
-replay's tree (``cache.tracked_tempdir``); ``run_to_memory`` removes
-its stopped queries' checkpoints at its next call. Nothing is ever
+parquet topic from scratch. Each tree made here, ``run_to_memory``'s
+checkpoints included, is a ``cache.tracked_tempdir``: the next
+registered query on the same thread removes it. Nothing is ever
 reused across runs (the no-result-caching bench contract), and a local
 replay's /tmp is as ephemeral as tmpfs. On a real cluster the checkpointLocation is a
 durable object-store/HDFS URI supplied by the deployment (exactly-once

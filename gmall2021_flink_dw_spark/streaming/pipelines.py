@@ -89,10 +89,6 @@ def product_stats_transform(df: DataFrame, window_s: int = 3600) -> DataFrame:
     )
 
 
-# checkpoint dir -> the query writing it (None until start() returns)
-_MEMORY_CKPTS: dict[str, StreamingQuery | None] = {}
-
-
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -104,9 +100,12 @@ def run_to_memory(
     The checkpoint goes under scratch.stream_scratch_base() (r14):
     without an explicit location Spark creates the temp checkpoint under
     java.io.tmpdir, whose per-batch WAL/commit fsyncs cost ~1 s of pure
-    latency per replay on this box's ext4 /tmp (see scratch.py). Each
-    call reclaims the checkpoints of earlier calls whose query has
-    stopped; a still-running query keeps its checkpoint.
+    latency per replay on this box's ext4 /tmp (see scratch.py). It is
+    a scratch tree of the calling thread's cache epoch
+    (cache.tracked_tempdir): the next registered query on that thread
+    removes it, so the query must be stopped by then. A caller that
+    opens no epoch, such as a long-lived ingest loop, keeps it until
+    exit.
 
     final_flush=False (r15, guide §1/§2 — measure first, then remove
     the pass): skip the trailing NO-DATA micro-batch
@@ -123,16 +122,7 @@ def run_to_memory(
     measured 0.68-0.70x solo on uv_dedup/interval_join at sf0.1. On a
     real cluster the equivalent no-data triggers amortize across the
     job's lifetime instead of being ~1/2 of a two-trigger replay."""
-    import atexit
-    import tempfile
-
-    for stale, prev in list(_MEMORY_CKPTS.items()):
-        if prev is None or not prev.isActive:
-            shutil.rmtree(stale, ignore_errors=True)
-            del _MEMORY_CKPTS[stale]
-    ckpt = tempfile.mkdtemp(prefix=f"memckpt_{name}_", dir=stream_scratch_base())
-    _MEMORY_CKPTS[ckpt] = None
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    ckpt = tracked_tempdir(f"memckpt_{name}_", stream_scratch_base())
     spark = stream_df.sparkSession
     conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     orig = spark.conf.get(conf_key, "true")
@@ -151,7 +141,6 @@ def run_to_memory(
             # the query captured a CLONED conf at start; restoring here
             # cannot re-enable no-data batches for the running query
             spark.conf.set(conf_key, orig)
-    _MEMORY_CKPTS[ckpt] = q
     q.processAllAvailable()
     return q
 

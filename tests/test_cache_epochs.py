@@ -11,8 +11,12 @@ scaffolding at a time instead of accumulating all of it.
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
+import subprocess
+import sys
+import tempfile
 import threading
 
 from pyspark.sql import functions as F
@@ -106,7 +110,6 @@ def test_scratch_tree_outlives_other_threads_queries(spark):
     def other() -> None:
         try:
             REGISTRY["source_csv_docs"].fn(spark, UNIT_SF).count()
-            cache.open_cache_epoch()  # release this thread's tree
         except Exception as e:  # surfaced by the assert below
             errors.append(e)
 
@@ -127,3 +130,70 @@ def test_stream_replay_tree_released_by_next_query(spark):
     assert len(made) == 1 and os.path.isdir(made[0]), made
     REGISTRY["text_stats"].fn(spark, UNIT_SF).count()
     assert not os.path.exists(made[0])
+
+
+def test_exited_threads_tree_released_by_next_query(spark):
+    """A thread that ran a round-trip query and exited leaves its
+    scratch tree in an epoch no one reopens; the next query on any
+    thread releases it."""
+    pattern = os.path.join(tempfile.gettempdir(), "csv_src_*")
+    before = set(glob.glob(pattern))
+
+    def other() -> None:
+        REGISTRY["source_csv_docs"].fn(spark, UNIT_SF).count()
+
+    t = threading.Thread(target=other)
+    t.start()
+    t.join()
+    made = sorted(set(glob.glob(pattern)) - before)
+    assert len(made) == 1 and os.path.isdir(made[0]), made
+    REGISTRY["text_stats"].fn(spark, UNIT_SF).count()
+    assert not os.path.exists(made[0])
+
+
+def test_memory_replay_checkpoint_released_by_next_query(spark):
+    """A memory replay's checkpoint is a scratch tree of its query's
+    epoch: the next registered query on the thread removes it."""
+    pattern = os.path.join(stream_scratch_base(), "memckpt_svs_*")
+    before = set(glob.glob(pattern))
+    REGISTRY["streaming_visitor_stats"].fn(spark, UNIT_SF).count()
+    made = sorted(set(glob.glob(pattern)) - before)
+    assert len(made) == 1 and os.path.isdir(made[0]), made
+    REGISTRY["text_stats"].fn(spark, UNIT_SF).count()
+    assert not os.path.exists(made[0])
+
+
+def test_replays_register_no_exit_hooks(spark):
+    """Scratch trees share one atexit hook: repeated replays add no
+    callbacks."""
+    replay = REGISTRY["streaming_visitor_stats"].fn
+    replay(spark, UNIT_SF).count()
+    n0 = atexit._ncallbacks()
+    for _ in range(5):
+        replay(spark, UNIT_SF).count()
+    assert atexit._ncallbacks() == n0
+
+
+_EXIT_PROBE = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from gmall2021_flink_dw_spark import cache
+print(cache.tracked_tempdir("exit_probe_"))
+"""
+
+
+def test_tree_open_at_exit_is_removed(tmp_path):
+    """A scratch tree whose epoch never closes is removed when the
+    interpreter exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _EXIT_PROBE, repo],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    path = res.stdout.strip().splitlines()[-1]
+    assert path.startswith(str(tmp_path)), path
+    assert not os.path.exists(path)

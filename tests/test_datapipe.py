@@ -585,25 +585,6 @@ def test_bpe_min_count_prunes_word_table(spark, monkeypatch):
     assert pruned_df.agg({"cnt": "min"}).collect()[0][0] >= thresh
 
 
-def test_bpe_train_cache_invalidates_on_data_change(tmp_path):
-    """_TRAIN_CACHE keys on documents.parquet (mtime, size): rewriting
-    the data under the same dir must produce a different key
-    (ADVICE r07 #2)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from gmall2021_flink_dw_spark.plans import bpe
-
-    p = tmp_path / "documents.parquet"
-    pq.write_table(pa.table({"doc_id": [1], "text": ["aa"]}), p)
-    k1 = bpe._dataset_key(str(tmp_path), 20)
-    import os
-    pq.write_table(pa.table({"doc_id": [1], "text": ["bb bb"]}), p)
-    os.utime(p, (os.path.getmtime(p) + 5,) * 2)
-    k2 = bpe._dataset_key(str(tmp_path), 20)
-    assert k1 != k2
-
-
 def test_bpe_merge_expr_is_greedy_left_to_right(spark):
     """'aaaa' + (a,a) -> 'aa aa' (non-overlapping), 'aaa' -> 'aa a'."""
     from pyspark.sql import functions as F

@@ -77,13 +77,13 @@ def test_fmm_segment_golden():
 
 def test_tokenize_udf_cjk(spark):
     """The pandas-UDF tokenizer segments CJK runs and interleaves them
-    with ASCII tokens in document order; the keyword-count shape
-    (explode + groupBy, KeywordStatsApp.java:64-75) yields non-empty
-    Chinese keywords — the reference's actual workload."""
-    from gmall2021_flink_dw_spark.functions.tokenizer import (
-        _HAVE_JIEBA,
-        tokenize_udf,
-    )
+    with ASCII tokens in document order, with exact golden tokens: its
+    vendored FMM segmenter gives the same output on every deployment
+    (it feeds the golden-pinned dws_keyword_stats_zh oracle). The
+    keyword-count shape (explode + groupBy, KeywordStatsApp.java:64-75)
+    yields non-empty Chinese keywords — the reference's actual
+    workload."""
+    from gmall2021_flink_dw_spark.functions.tokenizer import tokenize_udf
     from gmall2021_flink_dw_spark.session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
@@ -98,9 +98,8 @@ def test_tokenize_udf_cjk(spark):
     )
     toks = df.select("doc_id", tokenize_udf("text").alias("t"))
     rows = {r.doc_id: r.t for r in toks.collect()}
-    if not _HAVE_JIEBA:  # deterministic vendored path: exact goldens
-        assert rows[1] == ["小米", "手机", "iphone", "15", "优惠券"]
-        assert rows[2] == ["大数据", "项目", "之", "实时", "数仓"]
+    assert rows[1] == ["小米", "手机", "iphone", "15", "优惠券"]
+    assert rows[2] == ["大数据", "项目", "之", "实时", "数仓"]
     assert rows[4] == []
     # keyword aggregation over the segmented stream
     counts = {
@@ -389,29 +388,10 @@ def test_fmm_multiword_ratio_news():
     assert multi / len(toks) >= 0.6, toks
 
 
-def test_tokenize_udf_fmm_deterministic(spark):
-    """tokenize_udf_fmm must ignore the jieba hook entirely — identical
-    output on any deployment (it feeds the golden-pinned
-    dws_keyword_stats_zh oracle)."""
-    from gmall2021_flink_dw_spark.functions.tokenizer import tokenize_udf_fmm
-    from gmall2021_flink_dw_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    df = spark.createDataFrame(
-        [(1, "小米手机 iPhone 15 优惠券"), (2, None)],
-        "doc_id int, text string",
-    )
-    rows = {r.doc_id: r.t for r in df.select(
-        "doc_id", tokenize_udf_fmm("text").alias("t")
-    ).collect()}
-    assert rows[1] == ["小米", "手机", "iphone", "15", "优惠券"]
-    assert rows[2] == []
-
-
 def test_bigram_and_winnow_guards_on_short_docs(spark):
     """Spark 4 ANSI traps: sequence() descends when stop < start, and
     element_at(_, 0) throws — the per-row guards in bigram_pairs /
-    winnow_fingerprints / shingles must make 0/1/short-token docs yield
+    winnow_fingerprints must make 0/1/short-token docs yield
     empty arrays, not errors."""
     from pyspark.sql import functions as F
 

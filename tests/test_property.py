@@ -210,41 +210,3 @@ def test_mg_shrink_never_evicts_heavy_keys(stream_ints, m):
     for k, c in exact.items():
         assert mg.get(k, 0) <= c
         assert c - mg.get(k, 0) <= n / (m + 1)
-
-
-@given(_texts, st.integers(2, 6))
-@settings(**_SETTINGS)
-def test_rolling_window_hash_matches_python_reference(texts, L):
-    """The rolling polynomial-hash window kernel must equal a naive
-    per-window Python recomputation of the SAME hash (base-B horner
-    mod 2^64 + splitmix64 finalizer) at every (doc, pos) — i.e. the
-    prefix-sum-in-Binv-basis trick and the boundary bookkeeping are
-    exact. Determinism (equal windows -> equal hash) follows."""
-    from gmall2021_flink_dw_spark.datapipe.sketch import (
-        _ROLL_B,
-        _rolling_window_hashes,
-    )
-
-    doc_ids = list(range(1, len(texts) + 1))
-    d, p, k = _rolling_window_hashes(doc_ids, texts, L)
-
-    M = (1 << 64) - 1
-
-    def href(w: str) -> int:
-        h = 0
-        for ch in w:
-            h = (h * _ROLL_B + ord(ch)) & M
-        h ^= h >> 30
-        h = (h * 0xBF58476D1CE4E5B9) & M
-        h ^= h >> 27
-        h = (h * 0x94D049BB133111EB) & M
-        h ^= h >> 31
-        return h - (1 << 64) if h >= (1 << 63) else h
-
-    want = [
-        (did, i, href(t[i : i + L]))
-        for did, t in zip(doc_ids, texts)
-        for i in range(len(t) - L + 1)
-    ]
-    got = list(zip(d.tolist(), p.tolist(), k.tolist()))
-    assert got == want

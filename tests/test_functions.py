@@ -388,6 +388,25 @@ def test_fmm_multiword_ratio_news():
     assert multi / len(toks) >= 0.6, toks
 
 
+def test_tokenize_udf_fmm_deterministic(spark):
+    """tokenize_udf segments with the vendored FMM segmenter only —
+    identical output on any deployment (it feeds the golden-pinned
+    dws_keyword_stats_zh oracle)."""
+    from gmall2021_flink_dw_spark.functions.tokenizer import tokenize_udf
+    from gmall2021_flink_dw_spark.session import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)
+    df = spark.createDataFrame(
+        [(1, "小米手机 iPhone 15 优惠券"), (2, None)],
+        "doc_id int, text string",
+    )
+    rows = {r.doc_id: r.t for r in df.select(
+        "doc_id", tokenize_udf("text").alias("t")
+    ).collect()}
+    assert rows[1] == ["小米", "手机", "iphone", "15", "优惠券"]
+    assert rows[2] == []
+
+
 def test_bigram_and_winnow_guards_on_short_docs(spark):
     """Spark 4 ANSI traps: sequence() descends when stop < start, and
     element_at(_, 0) throws — the per-row guards in bigram_pairs /

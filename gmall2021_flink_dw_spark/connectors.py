@@ -26,6 +26,8 @@ the producer's own linger/batch settings).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 CLICKHOUSE_DRIVER = "com.clickhouse.jdbc.ClickHouseDriver"
@@ -41,7 +43,7 @@ def _jvm_class_present(spark: SparkSession, cls: str) -> bool:
     try:
         spark._jvm.java.lang.Class.forName(cls)  # noqa: SLF001
         return True
-    except Exception:
+    except Py4JJavaError:  # ClassNotFoundException
         return False
 
 
@@ -197,7 +199,7 @@ def read_kafka_stream(
             .options(**kafka_source_options(bootstrap, topic, **kw))
             .load()
         )
-    except Exception as e:  # AnalysisException: failed to find source
+    except AnalysisException as e:  # failed to find data source: kafka
         raise ConnectorUnavailable(
             f"Spark Kafka source unavailable ({e.__class__.__name__}) — "
             f"add {KAFKA_PACKAGE}:<spark-version> via "

@@ -3,23 +3,36 @@
 - brute_force_topk: exact cosine top-k — the bounded query set collects
   to a numpy artifact and one Arrow mapInPandas pass scores the corpus,
   emitting only per-batch top-k. Float operation order reproduces the
-  SQL folds exactly (dimension-ordered multiply-adds), so sims stay
-  bit-identical to the DuckDB oracle's list fold; the interpreted
-  zip_with/aggregate per-pair form it replaced (r12) survives in
-  bucketed_topk/ivf_topk where the pair space is already pruned.
+  SQL folds exactly (dimension-ordered multiply-adds, seq_sq_norms /
+  seq_dots), so sims stay bit-identical to the DuckDB oracle's list
+  fold; the interpreted zip_with/aggregate per-pair form it replaced
+  (r12) survives in bucketed_topk/pq_refine_topk where the pair space
+  is already pruned.
 - bucketed_topk: sign-bucket ANN (the scale path): hash each vector to a
   2^d bucket by the signs of its first d dims; queries search only their
   bucket. At 100 TB the bucket id is the partition key, so a query scans
   one partition instead of the corpus. Recall measured in tests (no SQL
   oracle — approximate by construction).
+- ivf_topk / pq_adc_topk / pq_refine_topk: the inverted-file and
+  product-quantization indexes.
+
+The three Arrow kernels (brute force, IVF, PQ-ADC) share one skeleton:
+_collect_queries (bounded collect), _scan_topk (spread + mapInPandas
+scan emitting per-batch _batch_top rows) and _rank_topk (the global
+rank-<=k window all five top-k kernels end in). Their scan closures
+reference module-level helpers, so the Python workers import this
+module; the registry entry ships the package to them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark.cache import tracked_persist
+from gmall2021_flink_dw_spark.sources.batch import spread_scan
 
 SIGN_BITS = 4  # 16 buckets; multi-probe widens recall
 
@@ -43,11 +56,96 @@ def as_double(col: str) -> Column:
 
 
 # Bounded-collect cap shared by the ANN kernels that broadcast the
-# query set as a numpy artifact (brute_force_topk, pq_adc_topk): the
-# per-batch (n_queries x batch) sim matrix is worker-memory-resident,
-# so the query side must stay a lookup-table-sized artifact, never a
-# second corpus. Registered plans pass 10 queries.
+# query set as a numpy artifact (brute_force_topk, ivf_topk,
+# pq_adc_topk): the per-batch (n_queries x batch) sim matrix is
+# worker-memory-resident, so the query side must stay a
+# lookup-table-sized artifact, never a second corpus. Registered plans
+# pass 10 queries.
 _MAX_ANN_QUERIES = 4096
+
+
+def _empty_topk(base: DataFrame) -> DataFrame:
+    """The empty (q_id, vec_id, rank, sim) result: an empty query set
+    or an empty corpus short-circuits to it on the driver, as the lazy
+    DataFrame forms the Arrow kernels replaced returned (ADVICE r12)."""
+    return base.sparkSession.createDataFrame(
+        [], "q_id long, vec_id long, rank int, sim double"
+    )
+
+
+def _collect_queries(queries: DataFrame, who: str):
+    """Collect the bounded query set to (q_ids int64[n], q_e
+    float64[n, dim]); raise before a corpus-sized query set reaches
+    the driver."""
+    q_rows = queries.limit(_MAX_ANN_QUERIES + 1).collect()
+    if len(q_rows) > _MAX_ANN_QUERIES:
+        raise ValueError(
+            f"{who} query set exceeds the bounded-collect cap "
+            f"({_MAX_ANN_QUERIES}); the query side must be a "
+            "broadcastable artifact, not a corpus"
+        )
+    q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
+    q_e = np.array([r["q_emb"] for r in q_rows], dtype=np.float64)
+    return q_ids, q_e
+
+
+def seq_sq_norms(m):
+    """Row L2 norms with the SAME float operation order as the SQL fold
+    `aggregate(a, 0.0, (acc, x) -> acc + x*x)`: one scalar multiply-add
+    per dimension, accumulated in index order. Vectorizing ACROSS rows
+    keeps each row's accumulation sequence unchanged (IEEE754 ops are
+    elementwise-deterministic)."""
+    acc = np.zeros(len(m), dtype=np.float64)
+    for d in range(m.shape[1]):
+        acc += m[:, d] * m[:, d]
+    return np.sqrt(acc)
+
+
+def seq_dots(m, v):
+    """Row dots m @ v folded in dimension order — bit-identical to
+    aggregate(zip_with(a, b, x*y), 0.0, acc + x)."""
+    acc = np.zeros(len(m), dtype=np.float64)
+    for d in range(m.shape[1]):
+        acc += m[:, d] * v[d]
+    return acc
+
+
+def _batch_vectors(pdf: pd.DataFrame):
+    """(vec_id int64[n], emb float64[n, dim]) of one Arrow batch."""
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    e = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+    return ids, e
+
+
+def _batch_top(q_id, ids, sim, k: int) -> pd.DataFrame:
+    """One query's top-k rows of one scored batch in (desc sim, asc
+    vec_id) order; non-finite sims (the -inf self match) drop out."""
+    top = np.lexsort((ids, -sim))[:k]
+    top = top[np.isfinite(sim[top])]
+    return pd.DataFrame(
+        {"q_id": np.full(len(top), q_id), "vec_id": ids[top], "sim": sim[top]}
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per query, the k best (desc sim, asc vec_id) candidates with
+    their rank, sim presented at 6 places as the oracle rounds it."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
+    )
+
+
+def _scan_topk(base: DataFrame, scan, k: int) -> DataFrame:
+    """Run an Arrow scoring kernel over the corpus and rank its
+    per-batch top-k rows globally."""
+    # spread the tiny scan before the scoring kernel (r15, guide §2.5)
+    part_top = spread_scan(base.select("vec_id", "emb")).mapInPandas(
+        scan, "q_id long, vec_id long, sim double"
+    )
+    return _rank_topk(part_top, k)
 
 
 def brute_force_topk(
@@ -62,13 +160,12 @@ def brute_force_topk(
     batch's top-k per query leaves the worker, so the global re-rank
     window sees partitions * k * n_queries narrow rows — never the
     corpus. BIT-PARITY CONTRACT: dot, norm, and sim reproduce the SQL
-    folds' float operation order exactly (see seq_sq_norms; the dot
-    accumulates p_0..p_63 in index order, then sim = dot / (bn * qn) in
-    that association), so `sim` is bit-identical to the DuckDB oracle
-    and to the interpreted zip_with/aggregate form this replaced — the
-    r12 kernel is a plan replan, not a semantics change (the fold form
-    measured 2.0 s at 10x, ~all of it interpreted per-pair lambda
-    evaluation).
+    folds' float operation order exactly (seq_sq_norms, seq_dots; then
+    sim = dot / (bn * qn) in that association), so `sim` is
+    bit-identical to the DuckDB oracle and to the interpreted
+    zip_with/aggregate form this replaced — the r12 kernel is a plan
+    replan, not a semantics change (the fold form measured 2.0 s at
+    10x, ~all of it interpreted per-pair lambda evaluation).
 
     PRECONDITION (ADVICE r12): embeddings must have non-zero norm. A
     zero-norm vector yields sim = 0/0 = NaN; this kernel drops
@@ -76,79 +173,25 @@ def brute_force_topk(
     ORDER BY rank NaN FIRST, so a zero-norm row would diverge from the
     oracle. The testdata embeddings are random-gaussian (zero norm has
     probability 0); at ingest, a norm > 0 filter restores the contract."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    def seq_sq_norms(m):
-        # Row L2 norms with the SAME float operation order as the SQL
-        # fold `aggregate(a, 0.0, (acc, x) -> acc + x*x)`: one scalar
-        # multiply-add per dimension, accumulated in index order.
-        # Vectorizing ACROSS rows keeps each row's accumulation
-        # sequence unchanged (IEEE754 ops are elementwise-
-        # deterministic). Nested (not module-level) so the scan closure
-        # pickles by value and workers never need the package import.
-        acc = np.zeros(len(m), dtype=np.float64)
-        for d in range(m.shape[1]):
-            acc += m[:, d] * m[:, d]
-        return np.sqrt(acc)
-
-    q_rows = queries.limit(_MAX_ANN_QUERIES + 1).collect()
-    if len(q_rows) > _MAX_ANN_QUERIES:
-        raise ValueError(
-            f"brute_force_topk query set exceeds the bounded-collect cap "
-            f"({_MAX_ANN_QUERIES}); the query side must be a "
-            "broadcastable artifact, not a corpus"
-        )
-    q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
-    q_e = np.array([r["q_emb"] for r in q_rows], dtype=np.float64)
-    n_q = len(q_ids)
-    q_n = seq_sq_norms(q_e) if n_q else np.zeros(0)
+    q_ids, q_e = _collect_queries(queries, "brute_force_topk")
+    if not len(q_ids):
+        return _empty_topk(base)
+    q_n = seq_sq_norms(q_e)
 
     def scan(batches):
         for pdf in batches:
-            if not len(pdf) or not n_q:
+            if not len(pdf):
                 continue
-            e = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["emb"]]
-            )
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            ids, e = _batch_vectors(pdf)
             b_n = seq_sq_norms(e)
             outs = []
-            for qi in range(n_q):
-                # dot fold in dimension order — bit-identical to
-                # aggregate(zip_with(a, b, x*y), 0.0, acc + x)
-                acc = np.zeros(len(e), dtype=np.float64)
-                qv = q_e[qi]
-                for d in range(e.shape[1]):
-                    acc += e[:, d] * qv[d]
-                sim = acc / (b_n * q_n[qi])
-                sim[ids == q_ids[qi]] = -np.inf
-                top = np.lexsort((ids, -sim))[:k]
-                top = top[np.isfinite(sim[top])]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(len(top), q_ids[qi]),
-                            "vec_id": ids[top],
-                            "sim": sim[top],
-                        }
-                    )
-                )
+            for qi, q_id in enumerate(q_ids):
+                sim = seq_dots(e, q_e[qi]) / (b_n * q_n[qi])
+                sim[ids == q_id] = -np.inf
+                outs.append(_batch_top(q_id, ids, sim, k))
             yield pd.concat(outs, ignore_index=True)
 
-    from gmall2021_flink_dw_spark.sources.batch import spread_scan
-
-    # spread the tiny scan before the scoring kernel (r15, guide §2.5)
-    part_top = spread_scan(base.select("vec_id", "emb")).mapInPandas(
-        scan, "q_id long, vec_id long, sim double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        part_top.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _scan_topk(base, scan, k)
 
 
 def sign_bucket(emb: Column, bits: int = SIGN_BITS) -> Column:
@@ -174,8 +217,6 @@ def probe_buckets(emb: Column, bits: int = SIGN_BITS) -> Column:
 def bucketed_topk(base: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """ANN: search only the query's probe buckets. Equi-join on bucket id
     replaces the cross join — the join key IS the partition key at scale."""
-    from pyspark.sql import Window
-
     b = base.withColumn("bucket", sign_bucket(F.col("emb"))).withColumn(
         "__bn", norm(F.col("emb"))
     )
@@ -188,12 +229,7 @@ def bucketed_topk(base: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     scored = pairs.withColumn(
         "sim", _dot(F.col("emb"), F.col("q_emb")) / (F.col("__bn") * F.col("__qn"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_assign(
@@ -306,69 +342,38 @@ def ivf_topk(
     still the partition/bucket key — the kernel preserves the
     n_probe/n_lists touched fraction per query. BIT-PARITY: member
     sims accumulate in dimension order (brute_force_topk's contract),
-    so reported sims equal the brute-force sims for the same pairs.
-    Recall vs brute force is asserted in tests.
+    so reported sims equal the brute-force sims for the same pairs;
+    non-finite sims drop out as in the other Arrow kernels (see
+    brute_force_topk's zero-norm precondition). Recall vs brute force
+    is asserted in tests.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
+    q_ids, q_e = _collect_queries(queries, "ivf_topk")
+    if not len(q_ids):
+        return _empty_topk(base)
     b = base.withColumn("__vn", norm(F.col("emb")))
     c_rows = kmeans_centroids(b, n_lists).collect()  # bounded: <= n_lists
     if not c_rows:
-        # empty/near-empty corpus: no centroids fit. Short-circuit to
-        # the empty result the lazy row form produced here, instead of
-        # letting seq_dots index a 0-d array on the driver (ADVICE r12).
-        return base.sparkSession.createDataFrame(
-            [], "q_id long, vec_id long, rank int, sim double"
-        )
+        # empty/near-empty corpus: no centroids fit, and seq_dots would
+        # index a 0-d array on the driver (ADVICE r12)
+        return _empty_topk(base)
     c_ids = np.array([r["__c_id"] for r in c_rows], dtype=np.int64)
     c_e = np.array([r["__c_emb"] for r in c_rows], dtype=np.float64)
     c_n = np.array([r["__c_n"] for r in c_rows], dtype=np.float64)
 
-    q_rows = queries.limit(_MAX_ANN_QUERIES + 1).collect()
-    if len(q_rows) > _MAX_ANN_QUERIES:
-        raise ValueError(
-            f"ivf_topk query set exceeds the bounded-collect cap "
-            f"({_MAX_ANN_QUERIES}); the query side must be a "
-            "broadcastable artifact, not a corpus"
-        )
-    q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
-    q_e = np.array([r["q_emb"] for r in q_rows], dtype=np.float64)
-    n_q = len(q_ids)
-
-    def seq_sq_norms(m):
-        # dimension-ordered multiply-add accumulation — bit-identical
-        # to the SQL fold (see brute_force_topk); nested so the scan
-        # closure pickles by value (no package import on workers)
-        acc = np.zeros(len(m), dtype=np.float64)
-        for d in range(m.shape[1]):
-            acc += m[:, d] * m[:, d]
-        return np.sqrt(acc)
-
-    def seq_dots(m, v):
-        acc = np.zeros(len(m), dtype=np.float64)
-        for d in range(m.shape[1]):
-            acc += m[:, d] * v[d]
-        return acc
-
-    q_n = seq_sq_norms(q_e) if n_q else np.zeros(0)
+    q_n = seq_sq_norms(q_e)
     # per query: the n_probe max-cosine lists (ties -> lowest c_id,
     # matching the row form's (desc sim, asc c_id) window order)
     probe_sets = []
-    for qi in range(n_q):
+    for qi in range(len(q_ids)):
         cs = seq_dots(c_e, q_e[qi]) / (q_n[qi] * c_n)
         order = np.lexsort((c_ids, -cs))[:n_probe]
-        probe_sets.append(set(c_ids[order].tolist()))
+        probe_sets.append(c_ids[order])
 
     def scan(batches):
         for pdf in batches:
-            if not len(pdf) or not n_q:
+            if not len(pdf):
                 continue
-            e = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["emb"]]
-            )
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            ids, e = _batch_vectors(pdf)
             b_n = seq_sq_norms(e)
             # assign: max-cosine centroid per vector (ties -> lowest
             # c_id via lexsort-equivalent argmax on (-sim, c_id))
@@ -382,38 +387,16 @@ def ivf_topk(
                 np.argmax(csims[:, col_order], axis=1)
             ]
             outs = []
-            for qi in range(n_q):
-                member = np.isin(lists, list(probe_sets[qi]))
-                member &= ids != q_ids[qi]
+            for qi, q_id in enumerate(q_ids):
+                member = np.isin(lists, probe_sets[qi]) & (ids != q_id)
                 if not member.any():
                     continue
-                em, idm, bnm = e[member], ids[member], b_n[member]
-                sim = seq_dots(em, q_e[qi]) / (bnm * q_n[qi])
-                top = np.lexsort((idm, -sim))[:k]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(len(top), q_ids[qi]),
-                            "vec_id": idm[top],
-                            "sim": sim[top],
-                        }
-                    )
-                )
+                sim = seq_dots(e[member], q_e[qi]) / (b_n[member] * q_n[qi])
+                outs.append(_batch_top(q_id, ids[member], sim, k))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    from gmall2021_flink_dw_spark.sources.batch import spread_scan
-
-    # spread the tiny scan before the scoring kernel (r15, guide §2.5)
-    part_top = spread_scan(base.select("vec_id", "emb")).mapInPandas(
-        scan, "q_id long, vec_id long, sim double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        part_top.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _scan_topk(base, scan, k)
 
 
 def bucketed_cosine_pairs(
@@ -462,9 +445,6 @@ def _cosine_tile(threshold: float, strip: int | None = None):
     because strip memory is strip * GROUP_SIZE — 4096 rows against a
     500k-wide group is a 16 GB strip. An explicit `strip` overrides
     (tests pin chunking invariance with it)."""
-    import numpy as np
-    import pandas as pd
-
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {"vec_a": pd.Series(dtype="int64"),
@@ -528,8 +508,6 @@ def clustered_cosine_pairs(
     pins n_clusters=16 for the sf0.01 oracle config; knob-scaled 100x
     behavior is measured in BASELINE.md. The strip-chunked tile bounds
     MEMORY even when the knob lags the corpus (see _cosine_tile)."""
-    from pyspark.sql import Window
-
     b = emb.withColumn("__vn", norm(F.col("emb")))
     # sample_cap must keep pace with n_clusters (init takes the first
     # n_clusters sample rows); the fit stays corpus-size-independent
@@ -579,8 +557,6 @@ def _hierarchical_assign(
     candidate pairs on diffuse random embeddings — the hardest routing
     case, no cluster structure for the supers to exploit; 4 probes
     holds the measured floor while keeping the asymptotic win)."""
-    from pyspark.sql import Window
-
     cent = centroids.select(
         F.col("__c_id").alias("vec_id"),
         F.col("__c_emb").alias("emb"),
@@ -668,9 +644,6 @@ def blocked_cosine_pairs(
     Emits RAW sims (no rounding) so callers control the presentation
     rounding; the threshold is applied inside the tile, pre-shuffle.
     """
-    import numpy as np
-    import pandas as pd
-
     def tile(key: tuple, pdf: pd.DataFrame):
         lo, hi = int(key[0]), int(key[1])
         a = pdf[pdf["blk"] == lo]
@@ -760,8 +733,6 @@ def _fit_pq_codebooks(
     subspace, same rows). A code whose cluster empties parks at
     _PQ_EMPTY_CODE (the DataFrame form's inner join dropped it the
     same way). Returns an (n_sub, n_codes, sub_dim) float64 tensor."""
-    import numpy as np
-
     rows = (
         base.select("vec_id", "emb")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -825,29 +796,10 @@ def pq_adc_topk(
     distances (argmin -> lowest code), not exact L2. Only recall_ok is
     sensitive (measured 0.76 vs the 0.40 bound); oracle-hashed output
     is unaffected."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
+    q_ids, q_e = _collect_queries(queries, "pq_adc_topk")
+    if not len(q_ids):
+        return _empty_topk(base)
     cb = _fit_pq_codebooks(base, n_sub, sub_dim, n_codes)
-
-    q_rows = queries.limit(_MAX_ANN_QUERIES + 1).collect()
-    if len(q_rows) > _MAX_ANN_QUERIES:
-        raise ValueError(
-            f"pq_adc_topk query set exceeds the bounded-collect cap "
-            f"({_MAX_ANN_QUERIES}); ADC queries must be a broadcastable "
-            "artifact, not a corpus"
-        )
-    if not q_rows:
-        # empty query set (ADVICE r12 item 1): q_e would be a 1-D
-        # empty array (sum(axis=1) raises on the driver) and the scan's
-        # pd.concat([]) would raise on executors; the old DataFrame
-        # form returned an empty result — match it.
-        return base.sparkSession.createDataFrame(
-            [], "q_id long, vec_id long, rank int, sim double"
-        )
-    q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
-    q_e = np.array([r["q_emb"] for r in q_rows], dtype=np.float64)
     n_q = len(q_ids)
     q_n = np.sqrt((q_e * q_e).sum(axis=1))
     # per-query LUT: dot(q_sub, codeword) per (q, s, code)
@@ -857,15 +809,9 @@ def pq_adc_topk(
 
     def scan(batches):
         for pdf in batches:
-            # `not n_q` guard (ADVICE r12): with an empty query set,
-            # outs stays [] and pd.concat([]) would raise on executors
-            # where the old DataFrame form returned an empty result.
-            if not len(pdf) or not n_q:
+            if not len(pdf):
                 continue
-            e = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["emb"]]
-            )
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            ids, e = _batch_vectors(pdf)
             vn = np.sqrt((e * e).sum(axis=1))
             subs = e.reshape(len(e), n_sub, sub_dim)
             # encode: argmin_c ||sub - cb[s,c]||^2 via the expansion
@@ -881,34 +827,13 @@ def pq_adc_topk(
                 acc += lut[:, s, codes_b[:, s]]
             sim = acc / (q_n[:, None] * vn[None, :])
             outs = []
-            for qi in range(n_q):
+            for qi, q_id in enumerate(q_ids):
                 s_q = sim[qi].copy()
-                s_q[ids == q_ids[qi]] = -np.inf
-                top = np.lexsort((ids, -s_q))[:k]
-                top = top[np.isfinite(s_q[top])]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": np.full(len(top), q_ids[qi]),
-                            "vec_id": ids[top],
-                            "sim": s_q[top],
-                        }
-                    )
-                )
+                s_q[ids == q_id] = -np.inf
+                outs.append(_batch_top(q_id, ids, s_q, k))
             yield pd.concat(outs, ignore_index=True)
 
-    from gmall2021_flink_dw_spark.sources.batch import spread_scan
-
-    # spread the tiny scan before the scoring kernel (r15, guide §2.5)
-    part_top = spread_scan(base.select("vec_id", "emb")).mapInPandas(
-        scan, "q_id long, vec_id long, sim double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        part_top.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _scan_topk(base, scan, k)
 
 
 def pq_refine_topk(
@@ -928,8 +853,6 @@ def pq_refine_topk(
     the corpus-wide scan stays n_sub bytes/vector. On random 64-d
     gaussians (the no-structure worst case) this lifts recall@5 from
     0.24/0.12 (flat ADC, sf0.01/sf0.1) to 0.76/0.64 at shortlist=100."""
-    from pyspark.sql import Window
-
     cand = pq_adc_topk(
         base, queries, n_sub, sub_dim, n_codes, k=shortlist
     ).select("q_id", "vec_id")
@@ -943,9 +866,4 @@ def pq_refine_topk(
             _dot(F.col("emb"), F.col("q_emb")) / (F.col("__vn") * F.col("__qn")),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _rank_topk(rer, k)

@@ -177,36 +177,6 @@ def duck_shingles(n: int = 5) -> str:
     return f"list_distinct(list_transform(range(1, len(w)-{n - 2}), i -> {parts}))"
 
 
-def bigram_pairs(tokens: Column | str) -> Column:
-    """Ordered (w1, w2) bigram structs over a tokens array: every
-    occurrence, in order, as a language model needs. Arrays shorter
-    than 2 yield an empty list (guarded per row, like shingle_hashes)."""
-    t_in = F.col(tokens) if isinstance(tokens, str) else tokens
-
-    def body(t: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.size(t) - 1)
-        built = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.element_at(t, i).alias("w1"),
-                F.element_at(t, i + 1).alias("w2"),
-            ),
-        )
-        empty = F.array().cast(
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("w1", T.StringType()),
-                        T.StructField("w2", T.StringType()),
-                    ]
-                )
-            )
-        )
-        return F.when(F.size(t) >= 2, built).otherwise(empty)
-
-    return let(t_in, body)
-
-
 DUCK_BIGRAMS_SQL = (
     "list_transform(range(1, len(w)), "
     "i -> struct_pack(w1 := w[i], w2 := w[i+1]))"

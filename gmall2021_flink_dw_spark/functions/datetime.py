@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-FMT = "yyyy-MM-dd HH:mm:ss"
+from gmall2021_flink_dw_spark.functions.windows import FMT
 
 
 def epoch_millis_to_ts(ms: Column | str) -> Column:

@@ -21,6 +21,8 @@ from gmall2021_flink_dw_spark.datapipe.ann import (
     as_double,
     brute_force_topk,
     bucketed_topk,
+    ivf_topk,
+    pq_refine_topk,
 )
 from gmall2021_flink_dw_spark.datapipe.dedup import (
     DF_CAP_CEIL,
@@ -30,6 +32,7 @@ from gmall2021_flink_dw_spark.datapipe.dedup import (
     simhash_pairs,
 )
 from gmall2021_flink_dw_spark.datapipe.multimodal import (
+    attach_media,
     attach_payload,
     decode_features,
 )
@@ -364,6 +367,38 @@ _ANN_ORACLE = """
     ) WHERE rank <= 5
 """
 
+# The approximate ANN queries' driver-checkable form: the exact rows
+# plus recall_ok, which the oracle pins TRUE.
+_ANN_RECALL_ORACLE = f"""
+    SELECT q_id, vec_id, rank, sim, TRUE AS recall_ok
+    FROM ({_ANN_ORACLE})
+"""
+
+
+def ann_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(base, queries) of every ANN query: the embeddings corpus as
+    (vec_id, emb) and its vec_id < 10 rows as (q_id, q_emb)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.select("vec_id", as_double("embedding").alias("emb"))
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_emb")
+    )
+    return base, queries
+
+
+def _ann_recall_checked(spark: SparkSession, sf_dir: str, approx) -> DataFrame:
+    """The exact brute-force top-5 plus recall_ok = the approximate
+    kernel `approx(base, queries)` recovered >= 40% of it."""
+    base, queries = ann_inputs(spark, sf_dir)
+    return _recall_checked(
+        brute_force_topk(base, queries, k=5),
+        approx(base, queries),
+        ("q_id", "vec_id"),
+        ["q_id", "vec_id", "rank", "sim"],
+        "recall_ok",
+        0.40,
+    )
+
 
 @register(
     "ann_topk",
@@ -375,20 +410,12 @@ _ANN_ORACLE = """
     tags=("datapipe", "ann"),
 )
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", as_double("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_emb")
-    )
-    return brute_force_topk(base, queries, k=5)
+    return brute_force_topk(*ann_inputs(spark, sf_dir), k=5)
 
 
 @register(
     "ann_bucketed",
-    oracle=f"""
-    SELECT q_id, vec_id, rank, sim, TRUE AS recall_ok
-    FROM ({_ANN_ORACLE})
-    """,
+    oracle=_ANN_RECALL_ORACLE,
     doc="Sign-bucket ANN (2^6 buckets on leading-dim signs, multi-probe): "
     "query scans only its probe buckets — bucket id doubles as the "
     "partition key at scale. Driver-checkable form: rows are the exact "
@@ -402,20 +429,8 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "ann"),
 )
 def ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", as_double("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_emb")
-    )
-    exact = brute_force_topk(base, queries, k=5)
-    approx = bucketed_topk(base, queries, k=5)
-    return _recall_checked(
-        exact,
-        approx,
-        ("q_id", "vec_id"),
-        ["q_id", "vec_id", "rank", "sim"],
-        "recall_ok",
-        0.40,
+    return _ann_recall_checked(
+        spark, sf_dir, lambda b, q: bucketed_topk(b, q, k=5)
     )
 
 
@@ -471,12 +486,14 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        attach_bmp_payload,
         decode_bmp_features,
+        solid_bmp_payload,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_bmp_features(attach_bmp_payload(docs))
+    return decode_bmp_features(
+        attach_media(docs, solid_bmp_payload, F.md5("text"))
+    )
 
 
 @register(
@@ -536,12 +553,14 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        attach_mixed_payload,
         decode_mixed_features,
+        mixed_payload,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_mixed_features(attach_mixed_payload(docs))
+    return decode_mixed_features(
+        attach_media(docs, mixed_payload, F.md5("text"))
+    )
 
 
 @register(
@@ -580,14 +599,14 @@ def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "magnitude via Parseval), ac44_sum (the (4,4) projection = "
     "128*sum(qA) — zero under wrong-position or wrong-sign decode). "
     "100 TB shape: embarrassingly parallel mapInPandas, no shuffle. "
-    "datapipe/multimodal.py:encode_jpeg_gray_blocks_ac/"
+    "datapipe/multimodal.py:encode_jpeg_gray_blocks/"
     "jpeg_ac_features_batch.",
     tags=("datapipe", "multimodal", "udf", "codec"),
 )
 def multimodal_decode_jpeg_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        attach_jpeg_ac_payload,
         jpeg_ac_features,
+        jpeg_ac_payload,
     )
 
     # The full-IDCT decode is the rare CPU-BOUND Python stage: the
@@ -601,7 +620,7 @@ def multimodal_decode_jpeg_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    return jpeg_ac_features(attach_jpeg_ac_payload(docs))
+    return jpeg_ac_features(attach_media(docs, jpeg_ac_payload))
 
 
 @register(
@@ -639,14 +658,16 @@ def multimodal_decode_jpeg_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        attach_mixed_payload,
         extract_audio_features,
+        mixed_payload,
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 4 == 2
     )
-    return extract_audio_features(attach_mixed_payload(docs))
+    return extract_audio_features(
+        attach_media(docs, mixed_payload, F.md5("text"))
+    )
 
 
 @register(
@@ -684,17 +705,17 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "free integer reductions, bit-exact against the oracle's closed-"
     "form pixel recomputation. 100 TB shape: embarrassingly parallel "
     "mapInPandas, zero shuffles. datapipe/multimodal.py:"
-    "encode_bmp_gray/decode_bmp_pixels/image_stats_batch.",
+    "encode_bmp/decode_bmp_pixels/image_stats_batch.",
     tags=("datapipe", "multimodal", "udf", "codec"),
 )
 def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        attach_patterned_bmp,
         extract_image_stats,
+        patterned_bmp_payload,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return extract_image_stats(attach_patterned_bmp(docs))
+    return extract_image_stats(attach_media(docs, patterned_bmp_payload))
 
 
 @register(
@@ -1179,10 +1200,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf",
-    oracle=f"""
-    SELECT q_id, vec_id, rank, sim, TRUE AS recall_ok
-    FROM ({_ANN_ORACLE})
-    """,
+    oracle=_ANN_RECALL_ORACLE,
     doc="IVF ANN (16 inverted lists, 4-probe): a trained coarse "
     "quantizer partitions the corpus; each query scans only its 4 "
     "closest lists (1/4 of the data; the list id is the partition key "
@@ -1194,31 +1212,14 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "ann", "ivf"),
 )
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.ann import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", as_double("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_emb")
-    )
-    exact = brute_force_topk(base, queries, k=5)
-    approx = ivf_topk(base, queries, n_lists=16, n_probe=4, k=5)
-    return _recall_checked(
-        exact,
-        approx,
-        ("q_id", "vec_id"),
-        ["q_id", "vec_id", "rank", "sim"],
-        "recall_ok",
-        0.40,
+    return _ann_recall_checked(
+        spark, sf_dir, lambda b, q: ivf_topk(b, q, n_lists=16, n_probe=4, k=5)
     )
 
 
 @register(
     "ann_pq",
-    oracle=f"""
-    SELECT q_id, vec_id, rank, sim, TRUE AS recall_ok
-    FROM ({_ANN_ORACLE})
-    """,
+    oracle=_ANN_RECALL_ORACLE,
     doc="Product-quantization ANN with ADC + exact re-rank (Jegou et "
     "al. 2011; the FAISS Flat-PQ + RefineFlat pattern) — the MEMORY "
     "path at 100 TB: corpus vectors stored as 8 code bytes (8 "
@@ -1235,22 +1236,8 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "ann", "pq"),
 )
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.ann import pq_refine_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", as_double("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_emb")
-    )
-    exact = brute_force_topk(base, queries, k=5)
-    approx = pq_refine_topk(base, queries, shortlist=100, k=5)
-    return _recall_checked(
-        exact,
-        approx,
-        ("q_id", "vec_id"),
-        ["q_id", "vec_id", "rank", "sim"],
-        "recall_ok",
-        0.40,
+    return _ann_recall_checked(
+        spark, sf_dir, lambda b, q: pq_refine_topk(b, q, shortlist=100, k=5)
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark.functions.windows import (
+    FMT,
     duck_window_bounds,
     window_bounds,
 )
@@ -79,8 +80,8 @@ def dws_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("window", F.col("w"))
         .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format("window.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
+            F.date_format("window.start", FMT).alias("stt"),
+            F.date_format("window.end", FMT).alias("edt"),
             "event_type",
             "pv_ct",
             "uv_ct",
@@ -152,10 +153,8 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(part), F.col("l_partkey") == part.p_partkey)
         .select(
-            F.date_format("day", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format(
-                F.date_add("day", 1), "yyyy-MM-dd HH:mm:ss"
-            ).alias("edt"),
+            F.date_format("day", FMT).alias("stt"),
+            F.date_format(F.date_add("day", 1), FMT).alias("edt"),
             "l_partkey",
             "p_brand",
             "sku_num",
@@ -219,8 +218,8 @@ def dws_province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("window", F.col("w"))
         .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format("window.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
+            F.date_format("window.start", FMT).alias("stt"),
+            F.date_format("window.end", FMT).alias("edt"),
             F.col("n_name").alias("province_name"),
             F.col("r_name").alias("area_code"),
             "order_count",
@@ -498,8 +497,8 @@ def dws_visitor_stats_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("dur").cast("double").alias("dur_sum"),
         )
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
+            F.date_format("w.start", FMT).alias("stt"),
+            F.date_format("w.end", FMT).alias("edt"),
             "event_type",
             "uv_ct",
             "pv_ct",

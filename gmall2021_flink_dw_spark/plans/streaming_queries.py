@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark.cache import tracked_tempdir, tracked_view
-from gmall2021_flink_dw_spark.functions.windows import duck_window_bounds
+from gmall2021_flink_dw_spark.functions.windows import FMT, duck_window_bounds
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 from gmall2021_flink_dw_spark.streaming.pipelines import (
@@ -404,12 +404,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "user_id",
-            F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss").alias(
-                "stt"
-            ),
-            F.date_format("session_window.end", "yyyy-MM-dd HH:mm:ss").alias(
-                "edt"
-            ),
+            F.date_format("session_window.start", FMT).alias("stt"),
+            F.date_format("session_window.end", FMT).alias("edt"),
             "n_events",
             "sv_value",
         )
@@ -521,10 +517,7 @@ def streaming_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "ts",
             F.timestamp_seconds(
-                F.unix_timestamp(
-                    F.lit("2024-01-01 00:00:00"),
-                    "yyyy-MM-dd HH:mm:ss",
-                )
+                F.unix_timestamp(F.lit("2024-01-01 00:00:00"), FMT)
                 + F.col("doc_id")
             ),
         )
@@ -537,12 +530,8 @@ def streaming_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.groupBy(F.window("ts", "60 seconds"), "keyword")
         .agg(F.count(F.lit(1)).alias("ct"))
         .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias(
-                "stt"
-            ),
-            F.date_format("window.end", "yyyy-MM-dd HH:mm:ss").alias(
-                "edt"
-            ),
+            F.date_format("window.start", FMT).alias("stt"),
+            F.date_format("window.end", FMT).alias("edt"),
             "keyword",
             "ct",
         )
@@ -739,8 +728,8 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.groupBy(F.window("ts", "3600 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("pv_ct"))
         .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format("window.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
+            F.date_format("window.start", FMT).alias("stt"),
+            F.date_format("window.end", FMT).alias("edt"),
             "event_type",
             "pv_ct",
         )

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from gmall2021_flink_dw_spark.connectors import kafka_sink_options
+
 
 def kafka_value_sink(
     df: DataFrame, topic: str, brokers: str, checkpoint_dir: str
@@ -27,8 +29,7 @@ def kafka_value_sink(
     payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
     return (
         payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
+        .options(**kafka_sink_options(brokers, topic))
         .option("checkpointLocation", checkpoint_dir)
     )
 
@@ -46,7 +47,7 @@ def kafka_dynamic_topic_sink(
     )
     return (
         payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
+        .options(**kafka_sink_options(brokers))
         .option("checkpointLocation", checkpoint_dir)
     )
 

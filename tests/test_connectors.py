@@ -67,3 +67,10 @@ def test_gated_calls_raise_informative(spark):
         upsert_phoenix_dim(df, "zk:2181", "DIM_X")
     with pytest.raises(ConnectorUnavailable, match="spark-sql-kafka"):
         read_kafka_stream(spark, "k1:9092", "ods_base_log")
+
+
+def test_kafka_reader_misuse_is_not_reported_as_missing_jar(spark):
+    """Only the missing-source AnalysisException means the Kafka package
+    is absent; a caller's bad keyword must surface as itself."""
+    with pytest.raises(TypeError):
+        read_kafka_stream(spark, "k1:9092", "t", bogus=1)

@@ -125,17 +125,15 @@ def test_simhash_finds_near_dups(spark, simhash_raw, exact_pairs):
 
 
 def _emb_base_queries(spark):
-    from pyspark.sql import functions as F
+    """The registered ANN queries' (base, queries) at the oracle SF.
+    Callers run an ANN kernel outside a registered query, so ship the
+    package to the Python workers first (the registry entry does it for
+    registered queries)."""
+    from gmall2021_flink_dw_spark.plans.datapipe import ann_inputs
+    from gmall2021_flink_dw_spark.session import ensure_workers_can_import
 
-    from gmall2021_flink_dw_spark.datapipe.ann import as_double
-    from gmall2021_flink_dw_spark.sources.batch import load_table
-
-    emb = load_table(spark, ORACLE_SF, "embeddings")
-    base = emb.select("vec_id", as_double("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_emb")
-    )
-    return base, queries
+    ensure_workers_can_import(spark)
+    return ann_inputs(spark, ORACLE_SF)
 
 
 def test_bucketed_ann_recall(spark):
@@ -1249,25 +1247,30 @@ def test_brute_force_kernel_bit_parity(spark):
 
 def test_ann_degenerate_inputs_return_empty(spark):
     """ADVICE r12 items 1 and 5: an EMPTY query set must short-circuit
-    pq_adc_topk to an empty result (the old kernel raised twice — a 1-D
-    q_e on the driver, then pd.concat([]) on executors), and an empty
-    corpus must short-circuit ivf_topk the same way (the old path
-    IndexError'd on a 0-d centroid array at the driver) — both matching
-    the lazy DataFrame forms they replaced."""
+    every Arrow ANN kernel to an empty result (the old pq_adc_topk
+    raised twice — a 1-D q_e on the driver, then pd.concat([]) on
+    executors), and an empty corpus must short-circuit ivf_topk the same
+    way (the old path IndexError'd on a 0-d centroid array at the
+    driver) — both matching the lazy DataFrame forms they replaced."""
     from pyspark.sql import functions as F
 
-    from gmall2021_flink_dw_spark.datapipe.ann import ivf_topk, pq_adc_topk
+    from gmall2021_flink_dw_spark.datapipe.ann import (
+        brute_force_topk,
+        ivf_topk,
+        pq_adc_topk,
+    )
 
     base, queries = _emb_base_queries(spark)
     no_queries = queries.filter(F.col("q_id") < 0)
-    out = pq_adc_topk(base, no_queries, k=5)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "q_id",
-        "vec_id",
-        "rank",
-        "sim",
-    ]
+    for kernel in (brute_force_topk, ivf_topk, pq_adc_topk):
+        out = kernel(base, no_queries, k=5)
+        assert out.count() == 0, kernel.__name__
+        assert [f.name for f in out.schema.fields] == [
+            "q_id",
+            "vec_id",
+            "rank",
+            "sim",
+        ]
 
     no_corpus = base.filter(F.col("vec_id") < 0)
     out2 = ivf_topk(no_corpus, queries, k=5)
@@ -1289,6 +1292,7 @@ def test_ann_query_cap_raises(spark):
     from gmall2021_flink_dw_spark.datapipe.ann import (
         _MAX_ANN_QUERIES,
         brute_force_topk,
+        ivf_topk,
         pq_adc_topk,
     )
 
@@ -1301,10 +1305,9 @@ def test_ann_query_cap_raises(spark):
         (F.col("vec_id") * mult + F.col("__i")).alias("q_id"),
         F.col("emb").alias("q_emb"),
     )
-    with _pytest.raises(ValueError, match="bounded-collect cap"):
-        brute_force_topk(base, big, k=5)
-    with _pytest.raises(ValueError, match="bounded-collect cap"):
-        pq_adc_topk(base, big, k=5)
+    for kernel in (brute_force_topk, ivf_topk, pq_adc_topk):
+        with _pytest.raises(ValueError, match="bounded-collect cap"):
+            kernel(base, big, k=5)
 
 
 def test_fit_pq_codebooks_small_sample(spark):

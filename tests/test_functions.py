@@ -409,15 +409,11 @@ def test_tokenize_udf_fmm_deterministic(spark):
 
 def test_bigram_and_winnow_guards_on_short_docs(spark):
     """Spark 4 ANSI traps: sequence() descends when stop < start, and
-    element_at(_, 0) throws — the per-row guards in bigram_pairs /
-    winnow_fingerprints must make 0/1/short-token docs yield
-    empty arrays, not errors."""
+    element_at(_, 0) throws — the per-row guard in winnow_fingerprints
+    must make 0/1/short-token docs yield empty arrays, not errors."""
     from pyspark.sql import functions as F
 
-    from gmall2021_flink_dw_spark.datapipe.text import (
-        bigram_pairs,
-        winnow_fingerprints,
-    )
+    from gmall2021_flink_dw_spark.datapipe.text import winnow_fingerprints
     from gmall2021_flink_dw_spark.functions.tokenizer import tokenize
 
     df = spark.createDataFrame(
@@ -426,7 +422,6 @@ def test_bigram_and_winnow_guards_on_short_docs(spark):
         "text string",
     ).withColumn("t", tokenize("text"))
     out = df.select(
-        F.size(bigram_pairs(F.col("t"))).alias("n_bg"),
         F.size(
             F.when(
                 F.size("t") >= 5, winnow_fingerprints(F.col("t"))
@@ -435,7 +430,6 @@ def test_bigram_and_winnow_guards_on_short_docs(spark):
         F.size("t").alias("n"),
     ).collect()
     for r in out:
-        assert r.n_bg == max(0, r.n - 1), r
         assert r.n_fp >= 0
     # 7-token doc: 5 ordered 3-gram hashes, window-of-3 minima -> 3
     # positions, <= 3 distinct selected hashes

@@ -22,7 +22,7 @@ def test_encode_bmp_layout_is_real_dib():
     """The bytes are a genuine Windows DIB: 'BM' magic, correct file
     size field, 54-byte pixel offset, BITMAPINFOHEADER fields, and
     rows padded to a 4-byte stride (w=3 -> 9 pixel bytes + 3 pad)."""
-    bmp = encode_bmp(3, 2, (10, 20, 30))
+    bmp = encode_bmp(3, 2, [(10, 20, 30)] * 6)
     assert bmp[:2] == b"BM"
     file_size = struct.unpack_from("<I", bmp, 2)[0]
     assert file_size == len(bmp) == 54 + 12 * 2
@@ -38,7 +38,7 @@ def test_decode_real_roundtrip_nonsolid():
     """decode_real parses hand-built NON-solid pixel data correctly
     (the registered query only exercises solid colors)."""
     # 2x2, stride 8: row0 = (1,2,3)(4,5,6) + 2 pad, row1 = (7,8,9)(0,0,255)
-    header = encode_bmp(2, 2, (0, 0, 0))[:54]
+    header = encode_bmp(2, 2, [(0, 0, 0)] * 4)[:54]
     row0 = bytes((1, 2, 3, 4, 5, 6)) + b"\x00\x00"
     row1 = bytes((7, 8, 9, 0, 0, 255)) + b"\x00\x00"
     payload = header + row0 + row1
@@ -61,14 +61,14 @@ def test_decode_real_rejects_non_bmp(payload):
 
 
 def test_decode_real_rejects_unsupported_bpp():
-    bmp = bytearray(encode_bmp(2, 2, (0, 0, 0)))
+    bmp = bytearray(encode_bmp(2, 2, [(0, 0, 0)] * 4))
     struct.pack_into("<H", bmp, 28, 8)  # biBitCount = 8
     with pytest.raises(ValueError, match="24-bit"):
         decode_real(bytes(bmp))
 
 
 def test_decode_real_rejects_compressed():
-    bmp = bytearray(encode_bmp(2, 2, (0, 0, 0)))
+    bmp = bytearray(encode_bmp(2, 2, [(0, 0, 0)] * 4))
     struct.pack_into("<I", bmp, 30, 1)  # biCompression = BI_RLE8
     with pytest.raises(ValueError, match="compression"):
         decode_real(bytes(bmp))
@@ -76,7 +76,7 @@ def test_decode_real_rejects_compressed():
 
 def test_decode_real_topdown_height_is_absolute():
     """Negative biHeight (top-down BMP) decodes with |height|."""
-    bmp = bytearray(encode_bmp(2, 2, (5, 5, 5)))
+    bmp = bytearray(encode_bmp(2, 2, [(5, 5, 5)] * 4))
     struct.pack_into("<i", bmp, 22, -2)
     w, h, bpp, _ = decode_real(bytes(bmp))
     assert (w, h) == (2, 2)
@@ -85,7 +85,7 @@ def test_decode_real_topdown_height_is_absolute():
 def test_decode_real_ignores_trailing_bytes():
     """Trailing data after the pixel array (ICC profile, gap bytes)
     must NOT fold into the checksum (ADVICE r07 #1)."""
-    bmp = encode_bmp(2, 2, (1, 1, 1))
+    bmp = encode_bmp(2, 2, [(1, 1, 1)] * 4)
     _, _, _, clean_sum = decode_real(bmp)
     _, _, _, trailed_sum = decode_real(bmp + b"\xff" * 128)
     assert trailed_sum == clean_sum
@@ -94,7 +94,7 @@ def test_decode_real_ignores_trailing_bytes():
 def test_decode_real_rejects_truncated_pixels():
     """A payload whose pixel array is short of stride*|height| errors
     instead of silently checksumming a partial (or empty) slice."""
-    bmp = encode_bmp(4, 4, (9, 9, 9))
+    bmp = encode_bmp(4, 4, [(9, 9, 9)] * 16)
     with pytest.raises(ValueError, match="truncated"):
         decode_real(bmp[:-1])
     # offset == len(payload): previously yielded pixel_sum 0 silently
@@ -104,7 +104,7 @@ def test_decode_real_rejects_truncated_pixels():
 
 @pytest.mark.parametrize("field_off,value", [(18, 0), (18, -3), (22, 0)])
 def test_decode_real_rejects_nonpositive_dims(field_off, value):
-    bmp = bytearray(encode_bmp(2, 2, (0, 0, 0)))
+    bmp = bytearray(encode_bmp(2, 2, [(0, 0, 0)] * 4))
     struct.pack_into("<i", bmp, field_off, value)
     with pytest.raises(ValueError, match="dimensions"):
         decode_real(bytes(bmp))
@@ -227,7 +227,6 @@ def test_gif_rejects_malformed():
 
 from gmall2021_flink_dw_spark.datapipe.multimodal import (  # noqa: E402
     decode_bmp_pixels,
-    encode_bmp_gray,
 )
 
 
@@ -238,7 +237,7 @@ def test_bmp_gray_roundtrip_pattern():
     for w in (2, 3, 4, 5):
         h = 3
         vals = [(7 * i + 11) % 256 for i in range(w * h)]
-        bmp = encode_bmp_gray(w, h, vals)
+        bmp = encode_bmp(w, h, [(v, v, v) for v in vals])
         iw, ih, bgr = decode_bmp_pixels(bmp)
         assert (iw, ih) == (w, h)
         assert len(bgr) == 3 * w * h
@@ -248,11 +247,11 @@ def test_bmp_gray_roundtrip_pattern():
 
 def test_bmp_gray_rejects_mismatched_values():
     with pytest.raises(ValueError, match="dimensions"):
-        encode_bmp_gray(4, 4, [0] * 15)
+        encode_bmp(4, 4, [(0, 0, 0)] * 15)
 
 
 def test_bmp_gray_decode_validates_like_decode_real():
-    bmp = encode_bmp_gray(5, 2, list(range(10)))
+    bmp = encode_bmp(5, 2, [(v, v, v) for v in range(10)])
     with pytest.raises(ValueError, match="truncated"):
         decode_bmp_pixels(bmp[:-1])
 
@@ -275,7 +274,7 @@ def test_jpeg_flat_block_roundtrip_bit_exact():
         bx, by = rng.randint(1, 4), rng.randint(1, 3)
         w, h = 8 * bx, 8 * by
         vals = [rng.randrange(256) for _ in range(bx * by)]
-        dw, dh, px = decode_jpeg_gray(encode_jpeg_gray_blocks(w, h, vals))
+        dw, dh, px = decode_jpeg_gray(encode_jpeg_gray_blocks(w, h, vals, [0] * len(vals)))
         assert (dw, dh) == (w, h)
         for b, v in enumerate(vals):
             ox, oy = (b % bx) * 8, (b // bx) * 8
@@ -291,13 +290,13 @@ def test_jpeg_extreme_dc_categories():
     negative-diff bit encoding."""
     vals = [0, 255, 0, 255, 128, 1, 254, 2]
     w, h = 16, 32
-    dw, dh, px = decode_jpeg_gray(encode_jpeg_gray_blocks(w, h, vals))
+    dw, dh, px = decode_jpeg_gray(encode_jpeg_gray_blocks(w, h, vals, [0] * len(vals)))
     assert (dw, dh) == (w, h)
     assert px[0] == 0 and px[8] == 255
 
 
 def test_jpeg_rejects_malformed():
-    good = encode_jpeg_gray_blocks(16, 8, [5, 250])
+    good = encode_jpeg_gray_blocks(16, 8, [5, 250], [0, 0])
     # truncations: ValueError or (for cuts that only lose EOI after a
     # complete entropy stream) a successful decode — never another
     # exception type
@@ -320,7 +319,7 @@ def test_jpeg_rejects_malformed():
 
 
 def test_jpeg_rejects_progressive_and_restart():
-    good = bytearray(encode_jpeg_gray_blocks(8, 8, [7]))
+    good = bytearray(encode_jpeg_gray_blocks(8, 8, [7], [0]))
     prog = bytearray(good)
     sof = prog.find(b"\xff\xc0")
     prog[sof + 1] = 0xC2  # SOF2 progressive
@@ -333,11 +332,11 @@ def test_jpeg_rejects_progressive_and_restart():
 
 def test_jpeg_encoder_rejects_bad_input():
     with pytest.raises(ValueError, match="multiple-of-8"):
-        encode_jpeg_gray_blocks(12, 8, [1, 1])
+        encode_jpeg_gray_blocks(12, 8, [1, 1], [0, 0])
     with pytest.raises(ValueError, match="match"):
-        encode_jpeg_gray_blocks(16, 8, [1])
+        encode_jpeg_gray_blocks(16, 8, [1], [0])
     with pytest.raises(ValueError, match="range"):
-        encode_jpeg_gray_blocks(8, 8, [300])
+        encode_jpeg_gray_blocks(8, 8, [300], [0])
 
 
 # --------------------------- GIF decoder adversarial cases (r10, item 8)
@@ -379,7 +378,7 @@ def test_jpeg_header_fill_bytes_and_standalone_markers():
     as a length-prefixed marker. Standalone markers (TEM 0x01,
     RST0-7) carry no length word and must be rejected explicitly, not
     misparsed as segments (ADVICE r10)."""
-    good = encode_jpeg_gray_blocks(16, 8, [5, 250])
+    good = encode_jpeg_gray_blocks(16, 8, [5, 250], [0, 0])
     sof = good.find(b"\xff\xc0")
     # fill bytes before SOF0: still decodes, pixel-identical
     filled = good[:sof] + b"\xff\xff\xff" + good[sof:]
@@ -392,7 +391,7 @@ def test_jpeg_header_fill_bytes_and_standalone_markers():
 
 
 def test_jpeg_ac44_roundtrip_closed_forms():
-    """The AC-exercising corpus (encode_jpeg_gray_blocks_ac) decodes
+    """The AC-exercising corpus (encode_jpeg_gray_blocks) decodes
     to the exact closed forms its oracle recomputes: plain sum (AC
     cancels), sum of squares (64*(v^2 + 4*qA^2) per block), and the
     (4,4) projection (128*qA per block)."""
@@ -400,7 +399,7 @@ def test_jpeg_ac44_roundtrip_closed_forms():
 
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
         decode_jpeg_gray,
-        encode_jpeg_gray_blocks_ac,
+        encode_jpeg_gray_blocks,
     )
 
     s = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
@@ -410,7 +409,7 @@ def test_jpeg_ac44_roundtrip_closed_forms():
         base = [16 + (doc_id * 7 + b * 13) % 224 for b in range(bx * by)]
         qa = [((doc_id + 5 * b) % 15) - 7 for b in range(bx * by)]
         dw, dh, px = decode_jpeg_gray(
-            encode_jpeg_gray_blocks_ac(w, h, base, qa)
+            encode_jpeg_gray_blocks(w, h, base, qa)
         )
         assert (dw, dh) == (w, h)
         p = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w)
@@ -427,22 +426,22 @@ def test_jpeg_ac44_extreme_and_reject():
     lossless; out-of-contract inputs reject."""
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
         decode_jpeg_gray,
-        encode_jpeg_gray_blocks_ac,
+        encode_jpeg_gray_blocks,
     )
 
     w, h, px = decode_jpeg_gray(
-        encode_jpeg_gray_blocks_ac(16, 8, [16, 239], [7, -7])
+        encode_jpeg_gray_blocks(16, 8, [16, 239], [7, -7])
     )
     assert px[0] == 16 + 14 and px[8] == 239 - 14  # s(0)s(0) = +1
     with pytest.raises(ValueError, match="AC"):
-        encode_jpeg_gray_blocks_ac(8, 8, [100], [8])
+        encode_jpeg_gray_blocks(8, 8, [100], [8])
     with pytest.raises(ValueError, match="match"):
-        encode_jpeg_gray_blocks_ac(16, 8, [100, 100], [1])
+        encode_jpeg_gray_blocks(16, 8, [100, 100], [1])
     with pytest.raises(ValueError, match="multiple-of-8"):
-        encode_jpeg_gray_blocks_ac(12, 8, [100, 100], [1, 1])
+        encode_jpeg_gray_blocks(12, 8, [100, 100], [1, 1])
     # single-bit corruption anywhere: ValueError or a decode — never
     # KeyError/IndexError/struct.error (the mixed-lane fuzz contract)
-    good = encode_jpeg_gray_blocks_ac(16, 8, [40, 200], [3, -5])
+    good = encode_jpeg_gray_blocks(16, 8, [40, 200], [3, -5])
     for i in range(2, len(good)):
         mut = bytearray(good)
         mut[i] ^= 0x80
@@ -458,22 +457,21 @@ def test_jpeg_encoder_fuzz_odd_dims_and_huge_values():
     arithmetic error or silent wrap)."""
     from gmall2021_flink_dw_spark.datapipe.multimodal import (
         encode_jpeg_gray_blocks,
-        encode_jpeg_gray_blocks_ac,
     )
 
     for wd, ht in ((7, 8), (8, 9), (1, 1), (0, 8), (8, 0), (1024, 7)):
         with pytest.raises(ValueError):
-            encode_jpeg_gray_blocks(wd, ht, [128])
+            encode_jpeg_gray_blocks(wd, ht, [128], [0])
         with pytest.raises(ValueError):
-            encode_jpeg_gray_blocks_ac(wd, ht, [128], [1])
+            encode_jpeg_gray_blocks(wd, ht, [128], [1])
     for bad in (-1, 256, 10**9, -(10**9)):
         with pytest.raises(ValueError, match="range"):
-            encode_jpeg_gray_blocks(8, 8, [bad])
+            encode_jpeg_gray_blocks(8, 8, [bad], [0])
         with pytest.raises(ValueError, match="range|AC"):
-            encode_jpeg_gray_blocks_ac(8, 8, [bad], [1])
+            encode_jpeg_gray_blocks(8, 8, [bad], [1])
     for bad in (8, -8, 256, 10**9, -(10**9)):  # AC contract is [-7, 7]
         with pytest.raises(ValueError, match="AC"):
-            encode_jpeg_gray_blocks_ac(8, 8, [128], [bad])
+            encode_jpeg_gray_blocks(8, 8, [128], [bad])
 
 
 def test_jpeg_marker_order_permutations():
@@ -488,7 +486,7 @@ def test_jpeg_marker_order_permutations():
         encode_jpeg_gray_blocks,
     )
 
-    good = encode_jpeg_gray_blocks(8, 8, [77])
+    good = encode_jpeg_gray_blocks(8, 8, [77], [0])
     # carve the stream into its marker segments
     segs = []
     pos = 2

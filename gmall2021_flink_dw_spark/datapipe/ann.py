@@ -644,7 +644,7 @@ def blocked_cosine_pairs(
     Emits RAW sims (no rounding) so callers control the presentation
     rounding; the threshold is applied inside the tile, pre-shuffle.
     """
-    def tile(key: tuple, pdf: pd.DataFrame):
+    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         lo, hi = int(key[0]), int(key[1])
         a = pdf[pdf["blk"] == lo]
         b = a if hi == lo else pdf[pdf["blk"] == hi]

@@ -130,6 +130,70 @@ def max_token_repetition(tokens: Column) -> Column:
     return F.aggregate(st, acc0, merge, lambda acc: acc.best)
 
 
+def quality_gate(tokens: Column) -> Column:
+    """The Gopher-style document quality gate over a token array: at
+    least 10 tokens, type-token ratio >= 0.3, top-token repetition
+    share <= 0.2. Both ratios are exact integers divided once in
+    double, so the gate agrees with duck_quality_gate bit for bit."""
+    n = F.size(tokens)
+    return (
+        (n >= 10)
+        & (F.size(F.array_distinct(tokens)).cast("double") / n >= 0.3)
+        & (max_token_repetition(tokens).cast("double") / n <= 0.2)
+    )
+
+
+def duck_quality_gate(w: str) -> str:
+    """DuckDB twin of quality_gate over the list expression `w` (the
+    naive distinct x filter repetition count; same integer)."""
+    return (
+        f"(len({w}) >= 10"
+        f" AND len(list_distinct({w}))::double / len({w}) >= 0.3"
+        f" AND list_max(list_transform(list_distinct({w}),"
+        f" d -> len(list_filter({w}, x -> x = d))))::double / len({w})"
+        f" <= 0.2)"
+    )
+
+
+def md5_u32(col: Column) -> Column:
+    """The first 32 bits of md5(cast(col as string)) as a bigint in
+    [0, 2^32): the deterministic draw behind every hash sampling gate,
+    split bucket and hash-trick weight. No RNG state, so the value is
+    stable under re-runs, retries and repartitioning."""
+    return F.conv(
+        F.substring(F.md5(col.cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+
+
+def duck_md5_u32(sql: str) -> str:
+    """DuckDB twin of md5_u32 over the VARCHAR expression `sql`."""
+    return f"('0x' || substr(md5({sql}), 1, 8))::BIGINT"
+
+
+def classifier_numerator(tokens: Column) -> Column:
+    """The hash-trick quality classifier's integer score numerator,
+    2*sum_w + 1000*n_stop: each token weighs md5_u32(token) % 2001 -
+    1000, an integer in [-1000, 1000], and n_stop counts STOPWORDS
+    hits. The doc score is this over 2000*n_tokens, one exact integer
+    ratio in both engines. The weight sum is an integer fold, so it is
+    exactly associative."""
+    sum_w = F.aggregate(
+        F.transform(tokens, lambda x: md5_u32(x) % 2001 - 1000),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return F.lit(2) * sum_w + F.lit(1000) * marker_hits(tokens, STOPWORDS)
+
+
+def duck_classifier_numerator(w: str) -> str:
+    """DuckDB twin of classifier_numerator over the list expression `w`."""
+    weights = f"list_transform({w}, t -> {duck_md5_u32('t')} % 2001 - 1000)"
+    return (
+        f"(2 * list_sum({weights})"
+        f" + 1000 * {duck_marker_hits(w, STOPWORDS)})"
+    )
+
+
 def shingle_hashes(tokens: Column | str, n: int = 5) -> Column:
     """Distinct word n-gram IDENTITIES as int64 xxhash64 values, for
     consumers that only ever compare shingles for equality

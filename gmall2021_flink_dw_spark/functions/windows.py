@@ -1,34 +1,22 @@
-"""Tumbling event-time window helpers, emitted for BOTH engines.
+"""Event-time window rules, written once for the DuckDB oracles.
 
 The reference's DWS layer aggregates in 10 s tumbling event-time windows
 (``VisitorStatsApp.java:128``, ``ProductStatsApp.java:204``,
 ``ProvinceStatsSqlApp.java:54-72``) and stamps `stt`/`edt` window bounds
 formatted 'yyyy-MM-dd HH:mm:ss' (``ProductStatsApp.java:229-242``).
 
-To keep the Spark query and the DuckDB oracle in lock-step, each helper
-here produces the Spark Column AND the equivalent DuckDB SQL text from one
-definition. Window start = floor(epoch/width)*width — identical math in
-both engines, no timezone involvement (testdata timestamps are naive).
+The Spark side of each rule is a native operator (F.window,
+F.session_window, date_format with FMT). Each helper here is its DuckDB
+twin, shared by every oracle of that window shape, so two oracles cannot
+drift apart on one rule. Window start = floor(epoch/width)*width —
+identical math in both engines, no timezone involvement (testdata
+timestamps are naive).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 FMT = "yyyy-MM-dd HH:mm:ss"
 DUCK_FMT = "%Y-%m-%d %H:%M:%S"
-
-
-def window_bounds(ts_col: str, seconds: int) -> tuple[Column, Column]:
-    """Spark: (stt, edt) formatted-string bounds of the `seconds`-wide
-    tumbling window containing ts. Uses F.window so streaming reuses the
-    same expression."""
-    w = F.window(F.col(ts_col), f"{seconds} seconds")
-    return (
-        F.date_format(w.start, FMT).alias("stt"),
-        F.date_format(w.end, FMT).alias("edt"),
-    )
 
 
 def duck_window_bounds(ts_col: str, seconds: int) -> tuple[str, str]:
@@ -46,3 +34,40 @@ def duck_window_bounds(ts_col: str, seconds: int) -> tuple[str, str]:
         f"strftime({start}, '{DUCK_FMT}') as stt",
         f"strftime({end}, '{DUCK_FMT}') as edt",
     )
+
+
+def duck_sessions_ctes(gap_s: int) -> str:
+    """DuckDB CTEs `marked` and `sessions` rebuilding F.session_window
+    over `events`: per user in (ts, event_id) order, an event opens a new
+    session when it is the user's first or comes MORE than `gap_s`
+    seconds after the previous one. Spark merges an event exactly one
+    gap later into the open session (measured on 4.1 in batch and in a
+    memory-sink stream). `sessions` carries (user_id, ts, value, sid)."""
+    return f"""marked AS (
+      SELECT user_id, ts, event_id, value,
+             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
+                          > {gap_s}*1000000
+                  THEN 1 ELSE 0 END AS is_entry
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), sessions AS (
+      SELECT user_id, ts, value,
+             sum(is_entry) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                 ROWS UNBOUNDED PRECEDING) AS sid
+      FROM marked
+    )"""
+
+
+# DuckDB CTEs `e` and `w` replaying F.window(ts, "30 minutes",
+# "10 minutes") over `events`: each event lands in the 3 epoch-aligned
+# windows whose start `ws` (epoch micros) is within 30 min before it.
+DUCK_HOPPING_CTES = """e AS (
+      SELECT event_type, value, epoch_us(ts) AS te FROM events
+    ), w AS (
+      SELECT event_type, value,
+             unnest(generate_series((te // 600000000) * 600000000 - 1200000000,
+                                    (te // 600000000) * 600000000,
+                                    600000000)) AS ws
+      FROM e
+    )"""

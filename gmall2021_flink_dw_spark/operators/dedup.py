@@ -54,10 +54,3 @@ def correct_new_user_flag(
             F.lit("0")
         ),
     )
-
-
-def dedup_exact(df: DataFrame, cols: list[str], keep_key: str) -> DataFrame:
-    """Exact dedup: one surviving row (min keep_key) per distinct value of
-    `cols`. Hash-shuffle groupBy — the canonical exact-dedup at scale."""
-    w = Window.partitionBy(*cols).orderBy(F.col(keep_key))
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")

@@ -8,6 +8,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.windows import (
+    DUCK_HOPPING_CTES,
+    duck_sessions_ctes,
+)
 from gmall2021_flink_dw_spark.operators.joins import asof_join, salted_aggregate
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
@@ -73,20 +77,8 @@ def cdc_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dws_session_window",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800*1000000
-                  THEN 1 ELSE 0 END AS is_entry
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id, ts, value,
-             sum(is_entry) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS sid
-      FROM marked
-    )
+    oracle=f"""
+    WITH {duck_sessions_ctes(1800)}
     SELECT user_id,
            epoch_us(min(ts)) AS session_start_us,
            epoch_us(max(ts)) + 1800*1000000 AS session_end_us,
@@ -292,16 +284,8 @@ def tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dws_hopping_stats",
-    oracle="""
-    WITH e AS (
-      SELECT event_type, value, epoch_us(ts) AS te FROM events
-    ), w AS (
-      SELECT event_type, value,
-             unnest(generate_series((te // 600000000) * 600000000 - 1200000000,
-                                    (te // 600000000) * 600000000,
-                                    600000000)) AS ws
-      FROM e
-    )
+    oracle=f"""
+    WITH {DUCK_HOPPING_CTES}
     SELECT ws, event_type, count(*) AS pv,
            cast(sum(cast(value as decimal(18,2))) as double) AS sv
     FROM w GROUP BY 1, 2

@@ -41,13 +41,19 @@ from gmall2021_flink_dw_spark.datapipe.text import (
     DUCK_WINNOW_CTES,
     STOPWORDS,
     TOKENS_SQL,
+    classifier_numerator,
+    duck_classifier_numerator,
     duck_marker_hits,
+    duck_md5_u32,
     duck_predict_lang,
+    duck_quality_gate,
     duck_shingles,
     let,
     marker_hits,
     max_token_repetition,
+    md5_u32,
     predict_lang,
+    quality_gate,
     with_tokens,
 )
 from gmall2021_flink_dw_spark.registry import register
@@ -805,6 +811,24 @@ _EMB_DEDUP_ORACLE = """
 """
 
 
+def _emb_exact_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(emb, exact): the (vec_id, emb) frame of double embeddings and its
+    exact all-pairs cosine result at the 0.45 threshold, sim rounded to
+    6 places (_EMB_DEDUP_ORACLE). The ground truth of the three
+    embedding near-dup queries."""
+    from gmall2021_flink_dw_spark.datapipe.ann import blocked_cosine_pairs
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    exact = blocked_cosine_pairs(emb, threshold=0.45, n_blocks=8).select(
+        "vec_a", "vec_b", F.round("sim", 6).alias("sim")
+    )
+    return emb, exact
+
+
 @register(
     "dedup_embedding_cosine",
     oracle=_EMB_DEDUP_ORACLE,
@@ -821,16 +845,7 @@ _EMB_DEDUP_ORACLE = """
     tags=("datapipe", "dedup", "ann"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.ann import (
-        as_double,
-        blocked_cosine_pairs,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("emb")
-    )
-    pairs = blocked_cosine_pairs(emb, threshold=0.45, n_blocks=8)
-    return pairs.select("vec_a", "vec_b", F.round("sim", 6).alias("sim"))
+    return _emb_exact_pairs(spark, sf_dir)[1]
 
 
 @register(
@@ -848,11 +863,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(list_max(list_transform(list_distinct(w),
                  d -> len(list_filter(w, x -> x = d))))::double / len(w), 6)
              AS rep_ratio,
-           (len(w) >= 10
-            AND len(list_distinct(w))::double / len(w) >= 0.3
-            AND list_max(list_transform(list_distinct(w),
-                  d -> len(list_filter(w, x -> x = d))))::double / len(w) <= 0.2)
-             AS passes
+           {duck_quality_gate("w")} AS passes
     FROM t WHERE len(w) > 0
     """,
     doc="Quality scoring per document: mean token length, whitespace "
@@ -872,10 +883,8 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    uniq = F.size(F.array_distinct(t))
-    max_rep = max_token_repetition(t)
-    ttr = uniq.cast("double") / n_tok
-    rep = max_rep.cast("double") / n_tok
+    ttr = F.size(F.array_distinct(t)).cast("double") / n_tok
+    rep = max_token_repetition(t).cast("double") / n_tok
     return docs.filter(n_tok > 0).select(
         "doc_id",
         F.length("text").alias("n_chars"),
@@ -886,11 +895,8 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ws_ratio"),
         F.round(ttr, 6).alias("ttr"),
         F.round(rep, 6).alias("rep_ratio"),
-        ((n_tok >= 10) & (ttr >= 0.3) & (rep <= 0.2)).alias("passes"),
+        quality_gate(t).alias("passes"),
     )
-
-
-_QC_STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
 
 
 @register(
@@ -899,17 +905,11 @@ _QC_STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
     WITH t AS (
       SELECT doc_id, {TOKENS_SQL} AS w FROM documents
     ), feat AS (
-      SELECT doc_id, len(w) AS n_tokens,
-             list_sum(list_transform(w, t ->
-               ('0x' || substr(md5(t), 1, 8))::BIGINT % 2001 - 1000))
-               AS sum_w,
-             len(list_filter(w, t -> t IN ({_QC_STOP_SQL}))) AS n_stop
+      SELECT doc_id, len(w) AS n_tokens, {duck_classifier_numerator("w")} AS num
       FROM t WHERE len(w) > 0
     )
-    SELECT doc_id, n_tokens,
-           (2 * sum_w + 1000 * n_stop)::DOUBLE / (2000.0 * n_tokens)
-             AS score,
-           (2 * sum_w + 1000 * n_stop) > 0 AS keep
+    SELECT doc_id, n_tokens, num::DOUBLE / (2000.0 * n_tokens) AS score,
+           num > 0 AS keep
     FROM feat
     """,
     doc="Hash-trick linear quality classifier (the fastText-style "
@@ -933,17 +933,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
     t = F.col("__tokens")
     n_tok = F.size(t)
-    w_int = lambda x: (  # noqa: E731 — token -> integer weight in [-1000, 1000]
-        F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint") % 2001
-        - 1000
-    )
-    sum_w = F.aggregate(
-        F.transform(t, w_int),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    n_stop = marker_hits(t, STOPWORDS)
-    num = F.lit(2) * sum_w + F.lit(1000) * n_stop
+    num = classifier_numerator(t)
     score = num.cast("double") / (F.lit(2000.0) * n_tok)
     return docs.filter(n_tok > 0).select(
         "doc_id",
@@ -1278,12 +1268,11 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_hash_bucket",
-    oracle="""
-    SELECT doc_id,
-           (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100)
-             AS bucket
-    FROM documents
-    WHERE (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100) < 5
+    oracle=f"""
+    SELECT doc_id, bucket
+    FROM (SELECT doc_id, {duck_md5_u32("doc_id::VARCHAR")} % 100 AS bucket
+          FROM documents)
+    WHERE bucket < 5
     """,
     doc="Deterministic hash-mod sampling: bucket = md5(key) first 8 hex "
     "chars mod 100, keep bucket < rate. THE reproducible way to sample "
@@ -1295,11 +1284,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_hash_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 100
-    )
+    bucket = md5_u32(F.col("doc_id")) % 100
     return docs.select("doc_id", bucket.alias("bucket")).filter(
         F.col("bucket") < 5
     )
@@ -1318,8 +1303,8 @@ _WEIGHTED_K = 200
     k AS (
       SELECT doc_id, weight,
              round(
-               ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-                   + 1) / 4294967296.0) / weight,
+               ln(({duck_md5_u32("doc_id::VARCHAR")} + 1) / 4294967296.0)
+                 / weight,
                6) AS key6
       FROM t
     )
@@ -1347,9 +1332,7 @@ _WEIGHTED_K = 200
 def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
     w = F.size("__tokens")
-    v = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    v = md5_u32(F.col("doc_id"))
     key6 = F.round(
         F.log((v + 1).cast("double") / F.lit(4294967296.0))
         / F.col("weight"),
@@ -1403,11 +1386,7 @@ def text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (SELECT doc_id, text, {TOKENS_SQL} AS w FROM documents),
     q AS (
-      SELECT doc_id, text, w FROM t
-      WHERE len(w) >= 10
-        AND len(list_distinct(w))::double / len(w) >= 0.3
-        AND list_max(list_transform(list_distinct(w),
-              d -> len(list_filter(w, x -> x = d))))::double / len(w) <= 0.2
+      SELECT doc_id, text, w FROM t WHERE {duck_quality_gate("w")}
     ), d AS (
       SELECT doc_id, w,
              row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
@@ -1430,15 +1409,6 @@ def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
     t = F.col("__tokens")
-
-    def quality_gate(tt: Column) -> Column:
-        n = F.size(tt)
-        return (
-            (n >= 10)
-            & (F.size(F.array_distinct(tt)).cast("double") / n >= 0.3)
-            & (max_token_repetition(tt).cast("double") / n <= 0.2)
-        )
-
     # let-binds the gate so the predicate pushed into the scan carries
     # ONE tokenizer evaluation; measured 5.2 -> 4.2 s at 10x
     # (r12-ext2). The outputs stay AFTER the dedup window — the
@@ -1719,6 +1689,21 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SEQ_TOKENS = 4096  # packing width: tokens per training sequence
+
+
+def _seq_id() -> Column:
+    """A doc's packing bin: the _SEQ_TOKENS-token sequence its START
+    offset (running token count `cum` minus its own `n_tokens`) falls
+    in."""
+    return F.floor(
+        (F.col("cum") - F.col("n_tokens")) / F.lit(_SEQ_TOKENS)
+    ).cast("bigint")
+
+
+_DUCK_SEQ_ID = f"cast((cum - n_tokens) // {_SEQ_TOKENS} AS BIGINT)"
+
+
 @register(
     "pack_sequences",
     oracle=f"""
@@ -1730,7 +1715,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  ROWS UNBOUNDED PRECEDING) AS cum
       FROM t WHERE n_tokens > 0
     )
-    SELECT source, cast((cum - n_tokens) // 4096 as bigint) AS seq_id,
+    SELECT source, {_DUCK_SEQ_ID} AS seq_id,
            count(*) AS n_docs,
            cast(sum(n_tokens) as bigint) AS seq_tokens,
            min(doc_id) AS first_doc, max(doc_id) AS last_doc
@@ -1758,11 +1743,8 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     c = t.withColumn("cum", F.sum("n_tokens").over(w))
-    seq = F.floor(
-        (F.col("cum") - F.col("n_tokens")) / F.lit(4096)
-    ).cast("bigint")
     return (
-        c.withColumn("seq_id", seq)
+        c.withColumn("seq_id", _seq_id())
         .groupBy("source", "seq_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1862,38 +1844,22 @@ def dedup_survivors_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "dedup", "ann", "lsh"),
 )
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.ann import (
-        blocked_cosine_pairs,
-        bucketed_cosine_pairs,
-    )
+    from gmall2021_flink_dw_spark.datapipe.ann import bucketed_cosine_pairs
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("emb")
+    emb, exact = _emb_exact_pairs(spark, sf_dir)
+    keys = ("vec_a", "vec_b")
+    lsh = bucketed_cosine_pairs(emb, threshold=0.45, bits=6).select(*keys)
+    spurious = lsh.join(exact.select(*keys), list(keys), "left_anti").agg(
+        F.count(F.lit(1)).alias("_spurious")
     )
-    exact = blocked_cosine_pairs(emb, threshold=0.45, n_blocks=8).select(
-        "vec_a", "vec_b", F.round("sim", 6).alias("sim")
+    checked = _recall_checked(
+        exact, lsh, keys, [*keys, "sim"], "recall_ok", 0.40
     )
-    lsh = bucketed_cosine_pairs(emb, threshold=0.45, bits=6).select(
-        "vec_a", "vec_b"
-    )
-    hit = lsh.dropDuplicates(["vec_a", "vec_b"]).withColumn("_hit", F.lit(1))
-    joined = exact.join(hit, ["vec_a", "vec_b"], "left")
-    stats = joined.agg(
-        (F.count("_hit").cast("double") / F.count(F.lit(1))).alias("_recall")
-    )
-    spurious = lsh.join(
-        exact.select("vec_a", "vec_b"), ["vec_a", "vec_b"], "left_anti"
-    ).agg(F.count(F.lit(1)).alias("_spurious"))
-    return (
-        joined.crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(spurious))
-        .select(
-            "vec_a",
-            "vec_b",
-            "sim",
-            (F.col("_recall") >= 0.40).alias("recall_ok"),
-            (F.col("_spurious") == 0).alias("precision_ok"),
-        )
+    return checked.crossJoin(F.broadcast(spurious)).select(
+        *keys,
+        "sim",
+        "recall_ok",
+        (F.col("_spurious") == 0).alias("precision_ok"),
     )
 
 
@@ -1929,17 +1895,9 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "dedup", "ann", "kmeans"),
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.ann import (
-        blocked_cosine_pairs,
-        clustered_cosine_pairs,
-    )
+    from gmall2021_flink_dw_spark.datapipe.ann import clustered_cosine_pairs
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double("embedding").alias("emb")
-    )
-    exact = blocked_cosine_pairs(emb, threshold=0.45, n_blocks=8).select(
-        "vec_a", "vec_b", F.round("sim", 6).alias("sim")
-    )
+    emb, exact = _emb_exact_pairs(spark, sf_dir)
     approx = clustered_cosine_pairs(
         emb, threshold=0.45, n_clusters=16, n_assign=2
     )
@@ -2082,22 +2040,38 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dominant English, keep all Chinese). Deterministic hash gate — no RNG.
 _MIX_RATES = {"en": 400, "de": 800, "es": 600, "fr": 700, "zh": 1000}
 
-_MIX_RATE_SQL = "CASE lang " + " ".join(
-    f"WHEN '{k}' THEN {v}" for k, v in _MIX_RATES.items()
-) + " ELSE 0 END"
+
+def _mix_gate(doc_id: Column) -> Column:
+    """A doc's per-mille position in the mix gate space."""
+    return md5_u32(doc_id) % 1000
+
+
+def _mix_keep(gate: Column, lang: Column) -> Column:
+    """Keep a doc whose gate position is under its language's rate."""
+    rate = F.lit(0)
+    for k, v in _MIX_RATES.items():
+        rate = F.when(lang == k, F.lit(v)).otherwise(rate)
+    return gate < rate
+
+
+def _duck_mix_gate(doc_id: str) -> str:
+    """DuckDB twin of _mix_gate over the BIGINT expression `doc_id`."""
+    return f"({duck_md5_u32(f'{doc_id}::VARCHAR')} % 1000)"
+
+
+def _duck_mix_keep(gate: str) -> str:
+    """DuckDB twin of _mix_keep, over a row that carries `lang`."""
+    rates = " ".join(f"WHEN '{k}' THEN {v}" for k, v in _MIX_RATES.items())
+    return f"{gate} < (CASE lang {rates} ELSE 0 END)"
 
 
 @register(
     "sample_training_mix",
     oracle=f"""
     WITH g AS (
-      SELECT doc_id, lang,
-             (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000)
-               AS gate
-      FROM documents
+      SELECT doc_id, lang, {_duck_mix_gate("doc_id")} AS gate FROM documents
     )
-    SELECT doc_id, lang, gate FROM g
-    WHERE gate < ({_MIX_RATE_SQL})
+    SELECT doc_id, lang, gate FROM g WHERE {_duck_mix_keep("gate")}
     """,
     doc="Weighted training-mix sampling: per-source keep rates (per "
     "mille) applied through the deterministic hash gate — the standard "
@@ -2110,16 +2084,9 @@ _MIX_RATE_SQL = "CASE lang " + " ".join(
 )
 def sample_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    gate = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 1000
-    )
-    rate = F.lit(0)
-    for k, v in _MIX_RATES.items():
-        rate = F.when(F.col("lang") == k, F.lit(v)).otherwise(rate)
+    gate = _mix_gate(F.col("doc_id"))
     return docs.select("doc_id", "lang", gate.alias("gate")).filter(
-        F.col("gate") < rate
+        _mix_keep(F.col("gate"), F.col("lang"))
     )
 
 
@@ -2131,12 +2098,7 @@ def sample_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     ), per_doc AS (
       SELECT lang, fp, len(w) AS n_tok,
-             CASE WHEN len(w) >= 10
-                   AND len(list_distinct(w))::double / len(w) >= 0.3
-                   AND list_max(list_transform(list_distinct(w),
-                         d -> len(list_filter(w, x -> x = d))))::double
-                       / len(w) <= 0.2
-                  THEN 1 ELSE 0 END AS ok
+             CASE WHEN {duck_quality_gate("w")} THEN 1 ELSE 0 END AS ok
       FROM t WHERE len(w) > 0
     )
     SELECT lang,
@@ -2161,13 +2123,7 @@ def corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
     t = F.col("__tokens")
     n_tok = F.size(t)
-    uniq = F.size(F.array_distinct(t))
-    max_rep = max_token_repetition(t)
-    ok = (
-        (n_tok >= 10)
-        & (uniq.cast("double") / n_tok >= 0.3)
-        & (max_rep.cast("double") / n_tok <= 0.2)
-    ).cast("int")
+    ok = quality_gate(t).cast("int")
     per_doc = docs.filter(n_tok > 0).select(
         "lang",
         F.md5("text").alias("fp"),
@@ -2203,14 +2159,6 @@ def corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUALITY_GATE_SQL = """
-      len(w) >= 10
-        AND len(list_distinct(w))::double / len(w) >= 0.3
-        AND list_max(list_transform(list_distinct(w),
-              d -> len(list_filter(w, x -> x = d))))::double / len(w) <= 0.2
-"""
-
-
 @register(
     "corpus_train_pipeline",
     oracle=f"""
@@ -2218,23 +2166,21 @@ _QUALITY_GATE_SQL = """
       SELECT doc_id, source, lang, text, {TOKENS_SQL} AS w FROM documents
     ), q AS (
       SELECT doc_id, source, lang, text, w FROM t
-      WHERE {_QUALITY_GATE_SQL}
+      WHERE {duck_quality_gate("w")}
     ), d AS (
       SELECT doc_id, source, lang, len(w) AS n_tokens,
              row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
       FROM q
     ), m AS (
       SELECT doc_id, source, n_tokens FROM d
-      WHERE rn = 1
-        AND (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 1000)
-            < ({_MIX_RATE_SQL})
+      WHERE rn = 1 AND {_duck_mix_keep(_duck_mix_gate("doc_id"))}
     ), c AS (
       SELECT source, n_tokens,
              sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
                                  ROWS UNBOUNDED PRECEDING) AS cum
       FROM m
     ), g AS (
-      SELECT source, cast((cum - n_tokens) // 4096 AS BIGINT) AS seq_id,
+      SELECT source, {_DUCK_SEQ_ID} AS seq_id,
              count(*) AS _n, sum(n_tokens) AS _tok
       FROM c GROUP BY 1, 2
     )
@@ -2267,14 +2213,8 @@ def corpus_train_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load_table(spark, sf_dir, "documents"))
     t = F.col("__tokens")
     n_tok = F.size(t)
-    uniq = F.size(F.array_distinct(t))
-    max_rep = max_token_repetition(t)
     # stage 1 — quality gate (same predicate as corpus_clean)
-    quality = docs.filter(
-        (n_tok >= 10)
-        & (uniq.cast("double") / n_tok >= 0.3)
-        & (max_rep.cast("double") / n_tok <= 0.2)
-    )
+    quality = docs.filter(quality_gate(t))
     # stage 2 — exact dedup among survivors (min doc_id per fingerprint)
     w_fp = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     deduped = (
@@ -2290,15 +2230,7 @@ def corpus_train_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # stage 3 — weighted mix gate (same per-mille hash gate as
     # sample_training_mix; deterministic, composes with fold buckets)
-    gate = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 1000
-    )
-    rate = F.lit(0)
-    for k, v in _MIX_RATES.items():
-        rate = F.when(F.col("lang") == k, F.lit(v)).otherwise(rate)
-    mixed = deduped.filter(gate < rate)
+    mixed = deduped.filter(_mix_keep(_mix_gate(F.col("doc_id")), F.col("lang")))
     # stage 4 — sequence packing (same binning as pack_sequences)
     w_src = (
         Window.partitionBy("source")
@@ -2308,9 +2240,7 @@ def corpus_train_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = mixed.withColumn("cum", F.sum("n_tokens").over(w_src)).select(
         "source",
         "n_tokens",
-        F.floor((F.col("cum") - F.col("n_tokens")) / F.lit(4096))
-        .cast("bigint")
-        .alias("seq_id"),
+        _seq_id().alias("seq_id"),
     )
     # stage 5 — report (two-phase so the distinct-seq count needs no
     # Expand: pre-aggregate on the sequence grain, then roll up)
@@ -2823,10 +2753,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     qc AS (
       SELECT doc_id, source, fp, w FROM tok
-      WHERE len(w) > 0
-        AND (2 * list_sum(list_transform(w, t ->
-               ('0x' || substr(md5(t), 1, 8))::BIGINT % 2001 - 1000))
-             + 1000 * len(list_filter(w, t -> t IN ({_QC_STOP_SQL})))) > 0
+      WHERE len(w) > 0 AND {duck_classifier_numerator("w")} > 0
     ),
     bg AS (
       SELECT doc_id, unnest({DUCK_BIGRAMS_SQL}) AS p
@@ -2904,15 +2831,9 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     t = F.col("__tokens")
-    n_tok = F.size(t)
-    w_int = lambda x: (  # noqa: E731 — same weights as quality_classifier
-        F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint") % 2001
-        - 1000
+    qc = tracked_persist(
+        docs.filter((F.size(t) > 0) & (classifier_numerator(t) > 0))
     )
-    num = F.lit(2) * F.aggregate(
-        F.transform(t, w_int), F.lit(0).cast("long"), lambda a, x: a + x
-    ) + F.lit(1000) * marker_hits(t, STOPWORDS)
-    qc = tracked_persist(docs.filter((n_tok > 0) & (num > 0)))
 
     # Fluency stage on the dictionary-encoding bigram-LM kernel
     # (datapipe/bigram_lm.py, the r11 replan both text_perplexity and
@@ -4041,7 +3962,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dtf AS (
       SELECT doc_id, lang,
-             ('0x' || substr(md5(tk), 1, 8))::BIGINT % 512 AS b,
+             {duck_md5_u32("tk")} % 512 AS b,
              count(*)::BIGINT AS k
       FROM tok GROUP BY 1, 2, 3
     ),
@@ -4067,8 +3988,8 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed AS (
       SELECT doc_id, n_feats, logw,
              logw - ln(-ln(
-               (('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
-                % 1000000 + 0.5) / 1000000.0)) AS gk
+               ({duck_md5_u32("doc_id::VARCHAR")} % 1000000 + 0.5)
+               / 1000000.0)) AS gk
       FROM doc
     )
     SELECT doc_id, n_feats, round(logw, 6) AS logw,
@@ -4157,15 +4078,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # logw = sum_b k_b * w_b (the oracle's own association: integer
     # count times weight, summed over buckets).
     per_doc = dsir_scores(docs, weights, B)
-    u = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000000
-        + 0.5
-    ) / 1000000.0
+    u = (md5_u32(F.col("doc_id")) % 1000000 + 0.5) / 1000000.0
     keyed = per_doc.withColumn("gk", F.col("logw") - F.log(-F.log(u)))
     return (
         keyed.orderBy(F.col("gk").desc(), "doc_id")
@@ -4446,7 +4359,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_leakage_free_split",
-    oracle="""
+    oracle=f"""
     WITH fp AS (
       SELECT doc_id, md5(text) AS f FROM documents
     ),
@@ -4454,10 +4367,10 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned AS (
       SELECT fp.doc_id, rep.rep_id,
              CASE
-               WHEN ('0x' || substr(md5(rep.rep_id::VARCHAR), 1, 8))::BIGINT
-                    % 100 < 90 THEN 'train'
-               WHEN ('0x' || substr(md5(rep.rep_id::VARCHAR), 1, 8))::BIGINT
-                    % 100 < 95 THEN 'val'
+               WHEN {duck_md5_u32("rep.rep_id::VARCHAR")} % 100 < 90
+                 THEN 'train'
+               WHEN {duck_md5_u32("rep.rep_id::VARCHAR")} % 100 < 95
+                 THEN 'val'
                ELSE 'test'
              END AS split
       FROM fp JOIN rep USING (f)
@@ -4501,14 +4414,7 @@ def sample_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5("text").alias("f")
     )
     rep = docs.groupBy("f").agg(F.min("doc_id").alias("rep_id"))
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("rep_id").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_u32(F.col("rep_id")) % 100
     assigned = tracked_persist(
         docs.join(rep, "f").select(
             "doc_id",

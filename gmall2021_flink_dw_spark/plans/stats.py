@@ -17,11 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall2021_flink_dw_spark.functions.windows import (
-    FMT,
-    duck_window_bounds,
-    window_bounds,
-)
+from gmall2021_flink_dw_spark.functions.windows import FMT, duck_window_bounds
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
 
@@ -50,7 +46,6 @@ _VS_STT, _VS_EDT = duck_window_bounds("ts", _HOUR)
 )
 def dws_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    stt, edt = window_bounds("ts", _HOUR)
     # Two-phase exact distinct (the dws_product_stats single-shuffle
     # pattern): TWO countDistincts mixed with plain aggregates would
     # plan a 3-branch Expand — triple the shuffled event rows. Instead

@@ -22,7 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark.cache import tracked_tempdir, tracked_view
-from gmall2021_flink_dw_spark.functions.windows import FMT, duck_window_bounds
+from gmall2021_flink_dw_spark.functions.windows import (
+    DUCK_FMT,
+    DUCK_HOPPING_CTES,
+    FMT,
+    duck_sessions_ctes,
+    duck_window_bounds,
+)
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 from gmall2021_flink_dw_spark.streaming.pipelines import (
@@ -38,6 +44,15 @@ from gmall2021_flink_dw_spark.streaming.stateful import (
 )
 
 _WM_S = 11  # VisitorStats out-of-orderness (VisitorStatsApp.java:101)
+
+
+def _duck_wm_closed(src: str) -> str:
+    """Append-mode emission rule under the _WM_S watermark: a window is
+    out once its end `edt` is at or below max(ts) of `src` minus _WM_S."""
+    return (
+        f"edt <= (SELECT strftime(max(ts) - INTERVAL {_WM_S} SECOND,"
+        f" '{DUCK_FMT}') FROM {src})"
+    )
 
 
 @contextmanager
@@ -103,10 +118,7 @@ _STT, _EDT = duck_window_bounds("ts", 3600)
       FROM events GROUP BY 1, 2, 3
     )
     SELECT stt, edt, event_type, pv_ct, dur_sum FROM agg
-    WHERE edt <= (
-      SELECT strftime(max(ts) - INTERVAL {_WM_S} SECOND, '%Y-%m-%d %H:%M:%S')
-      FROM events
-    )
+    WHERE {_duck_wm_closed("events")}
     """,
     doc="W1/W3 under Structured Streaming: tumbling hourly windows with an "
     f"{_WM_S}s watermark, append mode — emits exactly the windows the "
@@ -134,10 +146,7 @@ def streaming_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events GROUP BY 1, 2, 3
     )
     SELECT stt, edt, event_type, user_ct, pv_ct, amount FROM agg
-    WHERE edt <= (
-      SELECT strftime(max(ts) - INTERVAL {_WM_S} SECOND, '%Y-%m-%d %H:%M:%S')
-      FROM events
-    )
+    WHERE {_duck_wm_closed("events")}
     """,
     doc="A3 streaming EXACT COUNT(DISTINCT)-in-window (SURVEY 'hardest "
     "items'): append mode cannot run COUNT(DISTINCT), so the reference's "
@@ -349,20 +358,7 @@ _SESS_GAP_S = 1800  # the engine's session gap (UserJumpDetailApp entry rule)
 @register(
     "streaming_session_window",
     oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                          >= {_SESS_GAP_S}*1000000
-                  THEN 1 ELSE 0 END AS is_entry
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id, ts, value,
-             sum(is_entry) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS sid
-      FROM marked
-    ), agg AS (
+    WITH {duck_sessions_ctes(_SESS_GAP_S)}, agg AS (
       SELECT user_id,
              strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS stt,
              strftime(max(ts) + INTERVAL {_SESS_GAP_S} SECOND,
@@ -381,9 +377,9 @@ _SESS_GAP_S = 1800  # the engine's session gap (UserJumpDetailApp entry rule)
     "keyed state): per-user 30 min-gap sessions aggregated in streaming "
     "state, append mode emits a session once the watermark (max event "
     "time, 0 s delay) passes its end (= last event + gap). The oracle "
-    "reproduces Spark/Flink merge semantics exactly — a new session "
-    "starts when the gap is >= gapDuration (window ends are exclusive) "
-    "— and the emission cut in exact microseconds. Session state is "
+    "reproduces Spark's merge semantics exactly — a new session starts "
+    "only when the gap EXCEEDS gapDuration (an event exactly one gap "
+    "later still merges) — and the emission cut in exact microseconds. Session state is "
     "bounded by the watermark: closed sessions are evicted, so state "
     "~ active users, not history.",
     tags=("streaming", "window", "session", "agg"),
@@ -415,16 +411,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_hopping_stats",
-    oracle="""
-    WITH e AS (
-      SELECT event_type, value, epoch_us(ts) AS te FROM events
-    ), w AS (
-      SELECT event_type, value,
-             unnest(generate_series((te // 600000000) * 600000000 - 1200000000,
-                                    (te // 600000000) * 600000000,
-                                    600000000)) AS ws
-      FROM e
-    )
+    oracle=f"""
+    WITH {DUCK_HOPPING_CTES}
     SELECT ws, event_type, count(*) AS pv,
            cast(sum(cast(value as decimal(18,2))) as double) AS sv
     FROM w
@@ -615,11 +603,7 @@ _LATE_CUTOFF = "2024-01-16 00:00:00"  # testdata spans 2024-01-01..30
       FROM on_time GROUP BY 1, 2, 3
     )
     SELECT stt, edt, event_type, pv_ct FROM agg
-    WHERE edt <= (
-      SELECT strftime(max(ts) - INTERVAL {_WM_S} SECOND,
-                      '%Y-%m-%d %H:%M:%S')
-      FROM on_time
-    )
+    WHERE {_duck_wm_closed("on_time")}
     """,
     doc="W10 late-data drop, driver-checkable: the replay is staged in "
     "three mtime-ordered files (one per trigger) — the on-time bulk, a "
@@ -746,12 +730,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
              cast(sum(cast(value as decimal(18,2))) as double) AS dur_sum
       FROM events GROUP BY 1, 2, 3
     ), closed AS (
-      SELECT * FROM agg
-      WHERE edt <= (
-        SELECT strftime(max(ts) - INTERVAL {_WM_S} SECOND,
-                        '%Y-%m-%d %H:%M:%S')
-        FROM events
-      )
+      SELECT * FROM agg WHERE {_duck_wm_closed("events")}
     )
     SELECT substr(stt, 1, 10) AS dt,
            count(*) AS n_rows,

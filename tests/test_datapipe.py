@@ -78,6 +78,27 @@ def test_checked_query_flags(spark):
             assert df[c].all(), f"{name}.{c} not all TRUE"
 
 
+def test_blocked_cosine_pairs_builds_without_type_hint_warning(spark):
+    """The GEMM tile declares its pandas return type, so applyInPandas
+    takes the grouped-map eval type from the hints instead of warning
+    TYPE_HINT_SHOULD_BE_SPECIFIED on every build."""
+    import warnings
+
+    from gmall2021_flink_dw_spark.datapipe.ann import (
+        as_double,
+        blocked_cosine_pairs,
+    )
+
+    emb = spark.read.parquet(f"{ORACLE_SF}/embeddings.parquet").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        blocked_cosine_pairs(emb, 0.45, 8)
+    hints = [w for w in caught if "eval type" in str(w.message)]
+    assert not hints, [str(w.message) for w in hints]
+
+
 def test_simhash_arrow_matches_sql(spark):
     """The Arrow-tile signature path must be BIT-identical to the
     pure-codegen specification form — same hashes, same bit reads, same

@@ -590,6 +590,61 @@ def test_session_window_equivalence(spark, events_stream):
         q.stop()
 
 
+def test_session_gap_boundary_matches_oracles(spark, tmp_path):
+    """Spark's session_window merges an event that lands EXACTLY one gap
+    (1800 s) after the previous one; one microsecond later opens a new
+    session. No testdata pair sits exactly one gap apart, so the two
+    session queries are checked against their oracles on a crafted
+    events table: user 1 has events 1800 s apart, user 2 events
+    1800 s + 1 us apart, and user 3 a late event that moves the
+    watermark past every other session so the stream emits them."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+
+    from gmall2021_flink_dw_spark.registry import load_all
+
+    t0 = datetime(2024, 1, 1)
+    gap = timedelta(seconds=1800)
+    events = [
+        (1, t0, 1),
+        (2, t0 + gap, 1),
+        (3, t0 + gap + timedelta(seconds=1799), 1),
+        (4, t0, 2),
+        (5, t0 + gap + timedelta(microseconds=1), 2),
+        (6, t0 + timedelta(days=1), 3),
+    ]
+    sf_dir = tmp_path / "sf_session_gap"
+    sf_dir.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([e[0] for e in events], pa.int64()),
+                "ts": pa.array([e[1] for e in events], pa.timestamp("us")),
+                "user_id": pa.array([e[2] for e in events], pa.int64()),
+                "event_type": ["click"] * len(events),
+                "value": [1.5] * len(events),
+                "props": ["{}"] * len(events),
+            }
+        ),
+        str(sf_dir / "events.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{sf_dir / 'events.parquet'}')"
+    )
+    registry = load_all()
+    for name in ("dws_session_window", "streaming_session_window"):
+        got = registry[name].fn(spark, str(sf_dir)).toPandas()
+        want = con.execute(registry[name].oracle).df()
+        per_user = got.groupby("user_id").n_events.apply(sorted).to_dict()
+        assert per_user[1] == [3], f"{name}: exact-gap events must merge"
+        assert per_user[2] == [1, 1], f"{name}: gap + 1 us must split"
+        pd.testing.assert_frame_equal(_canon(got), _canon(want), obj=name)
+    con.close()
+
+
 def test_streaming_keyword_stats_multibatch(spark):
     """A5+D1 multi-batch: replay the documents corpus in 5 time-ordered
     files so the watermark advances BETWEEN micro-batches and windows

@@ -379,9 +379,9 @@ _SESS_GAP_S = 1800  # the engine's session gap (UserJumpDetailApp entry rule)
     "time, 0 s delay) passes its end (= last event + gap). The oracle "
     "reproduces Spark's merge semantics exactly — a new session starts "
     "only when the gap EXCEEDS gapDuration (an event exactly one gap "
-    "later still merges) — and the emission cut in exact microseconds. Session state is "
-    "bounded by the watermark: closed sessions are evicted, so state "
-    "~ active users, not history.",
+    "later still merges) — and the emission cut in exact microseconds. "
+    "Session state is bounded by the watermark: closed sessions are "
+    "evicted, so state ~ active users, not history.",
     tags=("streaming", "window", "session", "agg"),
 )
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:

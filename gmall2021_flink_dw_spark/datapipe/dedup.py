@@ -461,7 +461,8 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     TILE, not per key (per-key applyInPandas measured 5x slower than
     even the codegen aggregate; this form is 3.4x FASTER than the
     64-conditional-sum codegen aggregate at sf0.1 and bit-identical to
-    it — asserted in tests against simhash_sql). Same shuffle count as
+    it — tests/test_datapipe.py keeps that aggregate as the reference
+    and asserts the match). Same shuffle count as
     the aggregate form: one for the token count, one for the doc
     repartition."""
     import numpy as np
@@ -503,31 +504,6 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
         yield pd.DataFrame(out)
 
     return counted.mapInPandas(tile, _SIMHASH_SCHEMA)
-
-
-def simhash_sql(docs: DataFrame, bits: int = 64) -> DataFrame:
-    """Pure-codegen reference form of `simhash` (64 conditional sums +
-    block packing) — kept as the semantic specification; tests assert
-    the Arrow tile form is bit-identical."""
-    counted = _counted_token_hashes(docs)
-    h = F.col("__h")
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.col("cnt")).otherwise(
-                -F.col("cnt")
-            )
-        ).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    sums = counted.groupBy("doc_id").agg(*bit_sums)
-    blocks = []
-    for blk in range(SIMHASH_BLOCKS):
-        expr = F.lit(0)
-        for j in range(SIMHASH_BLOCK_BITS):
-            i = blk * SIMHASH_BLOCK_BITS + j
-            expr = expr + F.when(F.col(f"b{i}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        blocks.append(expr.cast("long").alias(f"block{blk}"))
-    return sums.select("doc_id", *blocks)
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:

@@ -12,9 +12,10 @@ distinct key per task.
 The classic fix (Misra & Gries 1982; merged-summary form per Agarwal et
 al., "Mergeable Summaries", PODS 2012) bounds BOTH to ``m`` counters:
 
-  pass 1  per-partition MG summary (capacity m) over the token stream,
-          Arrow-batched: each batch is counted vectorized
-          (``value_counts``), merged into the running dict, and when the
+  pass 1  per-partition MG summary (capacity m) over the trigram
+          stream, Arrow-batched: each batch is counted vectorized
+          (``np.unique`` over packed trigram ids, ``trigram_mg_summaries``),
+          merged into the running dict, and when the
           dict exceeds m the (len-m)-th smallest count q is subtracted
           from every counter and non-positive ones dropped.  Peak state
           during a merge is therefore O(m + distinct keys in the batch)
@@ -57,38 +58,6 @@ def _mg_shrink(counts: dict, m: int) -> None:
             counts[k] = nv
         else:
             del counts[k]
-
-
-def mg_partition_summaries(
-    keys: DataFrame, m: int, key_type: str = "string"
-) -> DataFrame:
-    """Per-partition Misra-Gries summaries of a 1-column key DataFrame.
-
-    Arrow-batched: the generator persists the MG dict across the
-    partition's batches, counts each batch vectorized, and emits the
-    final <=m (key, lower-bound) rows once the partition is exhausted.
-
-    ``key_type`` sets the key column's Spark type. The hot form is
-    ``bigint`` over JVM-side xxhash64 of the real key: Arrow then ships
-    fixed-width ints instead of strings (measured ~2x on the trigram
-    stream), and a 64-bit collision can only MERGE two counters — a
-    merged count dominates each constituent's true count, so the
-    guaranteed-superset property of the candidate set is unaffected
-    (the exact recount happens on the real key anyway).
-    """
-
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        counts: dict = {}
-        for batch in batches:
-            for key, n in batch.iloc[:, 0].value_counts().items():
-                counts[key] = counts.get(key, 0) + int(n)
-            _mg_shrink(counts, m)
-        if counts:
-            yield pd.DataFrame(
-                {"key": list(counts.keys()), "c": list(counts.values())}
-            )
-
-    return keys.mapInPandas(summarize, schema=f"key {key_type}, c long")
 
 
 # ---------------------------------------------------------------------

@@ -23,6 +23,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gmall2021_flink_dw_spark.functions.segment_zh import CJK_RUN_RE, fmm_segment
+
 TOKEN_RE = "[a-z0-9]+"
 
 
@@ -35,7 +37,7 @@ def tokenize(col: Column | str) -> Column:
 
 # alnum runs OR CJK runs, in document order; the CJK branch goes through
 # the dictionary segmenter.
-_RUN_RE = re.compile(f"({TOKEN_RE})|([一-鿿]+)")
+_RUN_RE = re.compile(f"({TOKEN_RE})|({CJK_RUN_RE.pattern})")
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))
@@ -48,7 +50,6 @@ def tokenize_udf(texts: pd.Series) -> pd.Series:
     (dws_keyword_stats_zh) pins it token by token. On any per-row
     failure, emits the raw input as a single token (reference behavior,
     SplitFunction.java:25-29)."""
-    from gmall2021_flink_dw_spark.functions.segment_zh import fmm_segment
 
     def _one(t):
         if t is None:

@@ -1,11 +1,11 @@
 """Row-level parse / split operators (SURVEY §2.3 P1-P3).
 
 Parity targets:
-- P1 dirty-record split: the reference try-parses each Kafka record and
+- P1 dirty-record parse: the reference try-parses each Kafka record and
   routes failures to a ``Dirty`` side output (``BaseLogApp.java:35-48``).
-  Spark-first form: ``from_json`` yields NULL on corrupt input; the split
-  is two filters over one parsed DataFrame. Catalyst collapses the shared
-  scan; no per-record exception control flow.
+  Spark-first form: ``from_json`` yields NULL on corrupt input, so a
+  query keeps or drops rows with a filter on the parsed column; no
+  per-record exception control flow.
 - P3 page/start/display split: one parsed stream fanned out into N
   filtered DataFrames (``BaseLogApp.java:84-121``) — side outputs become
   plain filters (all pushed to the parquet scan when possible).
@@ -34,14 +34,6 @@ def parse_props(events: DataFrame) -> DataFrame:
     return events.withColumn(
         "parsed", F.from_json(F.col("props"), PROPS_SCHEMA)
     ).withColumn("props_k", F.col("parsed.k")).drop("parsed")
-
-
-def dirty_split(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """P1: (clean, dirty) pair. A row is dirty iff its JSON failed to parse
-    (non-null raw string but null struct)."""
-    parsed = parse_props(events)
-    is_dirty = F.col("props").isNotNull() & F.col("props_k").isNull()
-    return parsed.filter(~is_dirty), parsed.filter(is_dirty)
 
 
 def split_by_type(events: DataFrame) -> dict[str, DataFrame]:

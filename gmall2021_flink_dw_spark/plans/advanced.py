@@ -19,6 +19,7 @@ from gmall2021_flink_dw_spark.sources.cdc import (
     ORDERS_CHANGELOG_ORACLE,
     orders_changelog,
 )
+from gmall2021_flink_dw_spark.streaming.stateful import SESSION_GAP_S
 
 _DISC = "cast(l_extendedprice as decimal(18,2)) * (1 - cast(l_discount as decimal(4,2)))"
 
@@ -78,10 +79,10 @@ def cdc_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dws_session_window",
     oracle=f"""
-    WITH {duck_sessions_ctes(1800)}
+    WITH {duck_sessions_ctes(SESSION_GAP_S)}
     SELECT user_id,
            epoch_us(min(ts)) AS session_start_us,
-           epoch_us(max(ts)) + 1800*1000000 AS session_end_us,
+           epoch_us(max(ts)) + {SESSION_GAP_S}*1000000 AS session_end_us,
            count(*) AS n_events,
            cast(sum(cast(value as decimal(18,2))) as double) AS sv_value
     FROM sessions GROUP BY user_id, sid
@@ -95,7 +96,7 @@ def cdc_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dws_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
-        ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        ev.groupBy(F.session_window("ts", f"{SESSION_GAP_S} seconds"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sv_value"),

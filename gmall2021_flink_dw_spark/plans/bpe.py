@@ -92,40 +92,11 @@ def _word_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _merge_expr(lhs: str, rhs: str) -> F.Column:
-    """Greedy left-to-right merge of adjacent (lhs, rhs) in s.
-
-    Fold over the symbol list with a string accumulator: merging means
-    the accumulator's last symbol is lhs and the incoming symbol is
-    rhs — append WITHOUT the separator. The merged symbol lhs||rhs can
-    never re-match lhs as a suffix boundary within the same pass, which
-    is exactly BPE's non-overlapping greedy semantics ('aaaa' + (a,a)
-    -> 'aa aa', not 'aa a a').
-
-    This is the distributed single-merge rewrite primitive (the
-    per-row JVM-codegen form a corpus-side apply would chain); the
-    driver-local trainer uses `_greedy_merge`, unit-tested to agree
-    with this expression symbol-for-symbol.
-    """
-    # The interpolation below is safe ONLY because symbols are [a-z]+
-    # (pre-tokenization keeps 1-16 char lowercase words). Make the
-    # invariant local and loud (ADVICE r06 #2): a future charset
-    # widening must fail here, not become a SQL parse/injection hazard.
-    for sym in (lhs, rhs):
-        if not (sym.isascii() and sym.isalpha() and sym.islower()):
-            raise ValueError(f"BPE symbol escaped [a-z]+: {sym!r}")
-    return F.expr(
-        "aggregate(slice(split(s, ' '), 2, size(split(s, ' ')) - 1), "
-        "element_at(split(s, ' '), 1), "
-        "(acc, x) -> CASE WHEN (acc = '{a}' OR endswith(acc, ' {a}')) "
-        "AND x = '{b}' THEN concat(acc, x) "
-        "ELSE concat(acc, ' ', x) END)".format(a=lhs, b=rhs)
-    )
-
-
 def _greedy_merge(w: list[str], lhs: str, rhs: str) -> list[str]:
-    """Driver-local twin of `_merge_expr`: greedy left-to-right,
-    non-overlapping ('aaaa' + (a,a) -> ['aa','aa'])."""
+    """One BPE merge of (lhs, rhs) over a symbol list: greedy
+    left-to-right, non-overlapping ('aaaa' + (a,a) -> ['aa','aa']).
+    tests/test_datapipe.py checks it against a Spark SQL fold of the
+    same rule."""
     out: list[str] = []
     i, n = 0, len(w)
     while i < n:

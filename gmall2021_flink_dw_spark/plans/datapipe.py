@@ -31,6 +31,11 @@ from gmall2021_flink_dw_spark.datapipe.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+from gmall2021_flink_dw_spark.datapipe.dsir import (
+    B_BUCKETS,
+    dsir_model_partials,
+    dsir_scores,
+)
 from gmall2021_flink_dw_spark.datapipe.multimodal import (
     attach_media,
     attach_payload,
@@ -3962,7 +3967,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dtf AS (
       SELECT doc_id, lang,
-             {duck_md5_u32("tk")} % 512 AS b,
+             {duck_md5_u32("tk")} % {B_BUCKETS} AS b,
              count(*)::BIGINT AS k
       FROM tok GROUP BY 1, 2, 3
     ),
@@ -3977,8 +3982,8 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc AS (
       SELECT d.doc_id,
              sum(d.k * (ln((coalesce(t.ct, 0) + 1)::DOUBLE
-                           / (tots.t_tot + 512))
-                        - ln((r.cr + 1)::DOUBLE / (tots.r_tot + 512))))
+                           / (tots.t_tot + {B_BUCKETS}))
+                        - ln((r.cr + 1)::DOUBLE / (tots.r_tot + {B_BUCKETS}))))
                AS logw,
              sum(d.k)::BIGINT AS n_feats
       FROM dtf d JOIN raw r USING (b) LEFT JOIN tgt t USING (b)
@@ -4028,7 +4033,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "sampling", "quality", "join"),
 )
 def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    B = 512
+    B = B_BUCKETS
     docs = with_tokens(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", "__tokens"
     )
@@ -4036,13 +4041,8 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dictionary-encoding Arrow kernel (datapipe/dsir.py — one md5 per
     # DISTINCT feature per batch, not per instance; the JVM explode+
     # md5 form measured ~40 s/pass at g10 on instance-wise hashing).
-    # Each partition emits <= B=512 histogram rows, so the groupBy
+    # Each partition emits <= B histogram rows, so the groupBy
     # shuffles B rows per task regardless of corpus size.
-    from gmall2021_flink_dw_spark.datapipe.dsir import (
-        dsir_model_partials,
-        dsir_scores,
-    )
-
     model_rows = (
         dsir_model_partials(docs, B)
         .groupBy("b")
@@ -4052,7 +4052,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_tot = sum(r["cr"] for r in model_rows)
     t_tot = sum(r["ct"] for r in model_rows)
     # ln() stays in the JVM (the engine the oracle was calibrated
-    # against): a 512-row local frame computes the per-bucket weight
+    # against): a B-row local frame computes the per-bucket weight
     # w_b = ln p_tgt(b) - ln p_raw(b), collected into a literal array.
     # Gram-style bounded-collect contract: B rows, corpus-independent.
     spark_l = docs.sparkSession

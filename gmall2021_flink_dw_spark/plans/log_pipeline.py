@@ -85,8 +85,9 @@ def dwd_clean_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "timestamp, timestampType — streaming/sources.py::KAFKA_WIRE_SCHEMA) "
     "— JSON payload in value, keyed by user, murmur-free deterministic "
     "partitioner (user_id % 8) so the oracle can reproduce it — then "
-    "CONSUMED through the same decode projection kafka_stream uses "
-    "(decode_kafka_records: plan-identical by construction) + from_json "
+    "CONSUMED through decode_kafka_records, the projection a deployment "
+    "applies to Spark's format('kafka') source (plan-identical by "
+    "construction) + from_json "
     "with pinned schema + the dwd_clean_events P1 dirty-split. The "
     "oracle recomputes the clean projection from the raw table, so a "
     "green row proves the serialize->decode->parse round trip is "
@@ -184,7 +185,7 @@ def kafka_wire_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     want = [(f.name, f.dataType) for f in KAFKA_WIRE_SCHEMA.fields]
     if got != want:
         raise ValueError(f"wire schema drift: {wire.schema}")
-    # --- consume side: identical projection to kafka_stream, then the
+    # --- consume side: the projection a broker-fed stream uses, then the
     # pinned-schema from_json (S2) and the P1 clean split
     event_schema = T.StructType(
         [

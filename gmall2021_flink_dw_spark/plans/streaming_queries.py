@@ -38,12 +38,13 @@ from gmall2021_flink_dw_spark.streaming.pipelines import (
 )
 from gmall2021_flink_dw_spark.streaming.sources import stream_table
 from gmall2021_flink_dw_spark.streaming.stateful import (
+    SESSION_GAP_S,
     correct_new_user_stream_bucketed,
     jump_detect_stream_bucketed,
     uv_dedup_ttl_stream_bucketed,
 )
 
-_WM_S = 11  # VisitorStats out-of-orderness (VisitorStatsApp.java:101)
+_WM_S = 11  # watermark delay of the windowed streams (VisitorStatsApp.java:101)
 
 
 def _duck_wm_closed(src: str) -> str:
@@ -352,18 +353,15 @@ def streaming_jump_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SESS_GAP_S = 1800  # the engine's session gap (UserJumpDetailApp entry rule)
-
-
 @register(
     "streaming_session_window",
     oracle=f"""
-    WITH {duck_sessions_ctes(_SESS_GAP_S)}, agg AS (
+    WITH {duck_sessions_ctes(SESSION_GAP_S)}, agg AS (
       SELECT user_id,
              strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS stt,
-             strftime(max(ts) + INTERVAL {_SESS_GAP_S} SECOND,
+             strftime(max(ts) + INTERVAL {SESSION_GAP_S} SECOND,
                       '%Y-%m-%d %H:%M:%S') AS edt,
-             epoch_us(max(ts)) + {_SESS_GAP_S}*1000000 AS end_us,
+             epoch_us(max(ts)) + {SESSION_GAP_S}*1000000 AS end_us,
              count(*) AS n_events,
              cast(sum(cast(value as decimal(18,2))) as double) AS sv_value
       FROM sessions GROUP BY user_id, sid
@@ -390,7 +388,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sess = (
         events.groupBy(
-            F.session_window("ts", f"{_SESS_GAP_S} seconds"), "user_id"
+            F.session_window("ts", f"{SESSION_GAP_S} seconds"), "user_id"
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -459,6 +457,8 @@ _KW_STT, _KW_EDT = duck_window_bounds("ts", 60)
 _KW_TS_SQL = (
     "TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (doc_id) SECOND"
 )
+# the replayed stream's rows: every 'en' document at its event time
+_KW_DOCS_SQL = f"(SELECT {_KW_TS_SQL} AS ts FROM documents WHERE lang = 'en')"
 
 
 @register(
@@ -473,11 +473,7 @@ _KW_TS_SQL = (
       FROM base GROUP BY 1, 2, 3
     )
     SELECT stt, edt, keyword, ct FROM agg
-    WHERE edt <= (
-      SELECT strftime(max({_KW_TS_SQL}) - INTERVAL 11 SECOND,
-                      '%Y-%m-%d %H:%M:%S')
-      FROM documents WHERE lang = 'en'
-    )
+    WHERE {_duck_wm_closed(_KW_DOCS_SQL)}
     """,
     doc="A5+D1+P10 as a REAL stream — the reference's KeywordStatsApp "
     "end-to-end shape (KeywordStatsApp.java:41-75: SQL filter -> "
@@ -509,7 +505,7 @@ def streaming_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.col("doc_id")
             ),
         )
-        .withWatermark("ts", "11 seconds")
+        .withWatermark("ts", f"{_WM_S} seconds")
     )
     words = docs.select(
         "ts", F.explode(tokenize("text")).alias("keyword")

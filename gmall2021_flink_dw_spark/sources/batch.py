@@ -33,8 +33,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Defensive runtime confs so queries behave identically on ANY

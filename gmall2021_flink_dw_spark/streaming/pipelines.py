@@ -8,10 +8,10 @@ equivalence tests and the streaming queries.
 Parity map:
 - W1/W2 watermarks  -> withWatermark (bounded out-of-orderness)
 - W3 tumbling agg   -> groupBy(window(...)) in append mode
-- W4 UV dedup       -> dropDuplicates([key, day]) with watermark
+- W4 UV dedup       -> streaming/stateful.py (first event per user and day)
 - K1/K3 sinks       -> memory sink (tests) / parquet partitioned-by-day
                        (ClickHouse-table analog, toYYYYMMDD partitioning)
-- K2/K4 dynamic routing -> foreachBatch fan-out writer
+- K2/K4 routing     -> foreachBatch fan-out writer
 """
 
 from __future__ import annotations
@@ -48,15 +48,6 @@ def visitor_stats_transform(df: DataFrame, window_s: int = 3600) -> DataFrame:
             "uv_ct_approx",
             "dur_sum",
         )
-    )
-
-
-def uv_dedup_transform(df: DataFrame) -> DataFrame:
-    """W4 streaming dedup: first event per (user, day). In streaming the
-    watermark bounds state (the reference bounds it with a 24 h state
-    TTL, UniqueVisitApp.java:51-53)."""
-    return df.withColumn("dt", F.to_date("ts")).dropDuplicates(
-        ["user_id", "dt"]
     )
 
 
@@ -230,30 +221,6 @@ def foreach_batch_router(base_dir: str):
         (
             batch_df.write.mode("overwrite")
             .partitionBy("sink_table")
-            .parquet(os.path.join(base_dir, f"epoch={epoch_id}"))
-        )
-
-    return _write
-
-
-def dynamic_foreach_batch_router(base_dir: str, config_provider):
-    """W6 dynamic broadcast-state refresh: the reference streams
-    table_process rule CHANGES into a broadcast state, so routing reacts
-    mid-job (BaseDBApp.java:74-98, TableProcessFunction.java:49-63). In
-    micro-batch Spark the equivalent is re-resolving the config at every
-    batch boundary: `config_provider(spark)` is called per epoch and its
-    (tiny) result broadcast-joined against the batch — a rule change
-    takes effect at the next micro-batch, the same granularity at which
-    the reference's broadcast state becomes visible to all tasks. The
-    config source can be a JDBC table, a CDC snapshot, or any
-    DataFrame-producing callable; no restart, no re-deploy."""
-    from gmall2021_flink_dw_spark.operators.routing import route
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        cfg = config_provider(batch_df.sparkSession)
-        routed = route(batch_df, cfg)
-        (
-            routed.write.mode("overwrite")
             .parquet(os.path.join(base_dir, f"epoch={epoch_id}"))
         )
 

@@ -1,9 +1,9 @@
-"""Streaming sources (SURVEY §2.1 S1/S2/S7/S8).
+"""Streaming sources (SURVEY §2.1 S1/S2/S8).
 
-Production source is Kafka (``MyKafkaUtil.java:40-53``):
-``spark.readStream.format("kafka").option("subscribe", topic)`` +
-``from_json`` — schema pinned exactly like the DDL sources of the SQL
-apps. In this environment there is no broker, so the test sources are:
+The reference's source is Kafka (``MyKafkaUtil.java:40-53``). A
+deployment reads it with Spark's stock ``format("kafka")`` source and
+applies ``decode_kafka_records`` + ``from_json`` with a pinned schema,
+as the SQL apps pin their DDL sources. Without a broker, the sources are:
 
 - file stream over the driver's parquet (S1-analog: replayable, ordered);
 - an in-memory rows source via a parquet tempdir (S8-analog of
@@ -61,17 +61,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_ts(stream, schema)
 
 
-def socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """S7 test source (FlinkDataStreamJoinTest.java:40,52): line stream
-    from a socket; parse with from_json downstream."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-
-
 # The EXACT record schema Spark's Kafka source produces (field names,
 # types, and order) — the wire-format twin (plans/log_pipeline.py::
 # kafka_wire_events) synthesizes frames with this schema so the consume
@@ -93,24 +82,12 @@ def decode_kafka_records(records: DataFrame) -> DataFrame:
     """Consume-side projection over Kafka-source-schema records
     (MyKafkaUtil.java:40-53's SimpleStringSchema step): value bytes ->
     string; broker metadata carried through for offset bookkeeping.
-    Shared by kafka_stream (real broker) and kafka_wire_events (file
-    twin) so the two plans are identical by construction."""
+    A deployment applies it to Spark's stock ``format("kafka")`` source;
+    kafka_wire_events applies it to the file twin, so the two plans are
+    identical by construction."""
     return records.selectExpr(
         "CAST(value AS STRING) AS value",
         "timestamp AS kafka_ts",
         "partition AS kafka_partition",
         "offset AS kafka_offset",
-    )
-
-
-def kafka_stream(spark: SparkSession, topic: str, brokers: str) -> DataFrame:
-    """S1/S2 production source (no broker in the test image — used on a
-    real cluster): value bytes -> string, schema applied by the caller
-    via from_json, startingOffsets=latest like MyKafkaUtil.java:46-53."""
-    return decode_kafka_records(
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "latest")
-        .load()
     )

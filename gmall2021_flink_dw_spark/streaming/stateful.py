@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-SESSION_GAP_S = 1800
+SESSION_GAP_S = 1800  # the engine's session gap (UserJumpDetailApp entry rule)
 JUMP_TIMEOUT_S = 600
 
 OUTPUT_SCHEMA = T.StructType(

@@ -2,8 +2,9 @@
 
 S1/K1 are the only SURVEY rows the image cannot exercise against a real
 broker. These tests close them on evidence: frames with the EXACT Kafka
-source schema flow through the same decode projection `kafka_stream`
-uses (shared function — plan-identical by construction), both as a batch
+source schema flow through `decode_kafka_records`, the projection a
+deployment applies to Spark's stock `format("kafka")` source
+(plan-identical by construction), both as a batch
 DataFrame and as a real file STREAM, producing the same clean DWD rows
 the oracle recomputes from the raw table
 (tests/test_oracle_parity.py::test_oracle_parity[kafka_wire_events]).

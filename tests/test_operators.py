@@ -22,7 +22,6 @@ from gmall2021_flink_dw_spark.operators.dedup import (
 )
 from gmall2021_flink_dw_spark.operators.joins import enrich_dims, interval_join
 from gmall2021_flink_dw_spark.operators.routing import upsert_snapshot
-from gmall2021_flink_dw_spark.operators.split import dirty_split
 
 
 def ts(minute: int, second: int = 0):
@@ -132,17 +131,6 @@ class TestJoins:
         assert left.filter(F.col("name").isNull()).count() == 1
         dropped = enrich_dims(fact, [(dim, cond)], drop_on_miss=True)
         assert dropped.count() == 1  # DimUtil.java:27 drop semantics
-
-
-class TestSplit:
-    def test_dirty_split_routes_corrupt_json(self, spark):
-        df = spark.createDataFrame(
-            [(1, '{"k": 5}'), (2, "not json"), (3, None)],
-            "event_id long, props string",
-        )
-        clean, dirty = dirty_split(df)
-        assert sorted(r.event_id for r in clean.collect()) == [1, 3]
-        assert [r.event_id for r in dirty.collect()] == [2]
 
 
 class TestAsofSubsecond:

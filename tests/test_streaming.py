@@ -35,7 +35,6 @@ from gmall2021_flink_dw_spark.streaming.pipelines import (
     foreach_batch_router,
     product_stats_transform,
     run_to_memory,
-    uv_dedup_transform,
     visitor_stats_transform,
 )
 from gmall2021_flink_dw_spark.streaming.sources import _as_stream_dir, stream_table
@@ -91,77 +90,6 @@ def test_exact_distinct_in_window_equivalence(spark, events_stream):
         assert len(got) > 0
         want_sub = want[want.stt.isin(set(got.stt))]
         pd.testing.assert_frame_equal(_canon(got), _canon(want_sub))
-    finally:
-        q.stop()
-
-
-def test_socket_source_live(spark):
-    """S7 socket source end-to-end: a real TCP server feeds lines to
-    format('socket'); the drained memory sink must hold exactly those
-    lines (MyKafkaUtil's test harness uses the same source,
-    FlinkDataStreamJoinTest.java:40,52)."""
-    import socket
-    import threading
-
-    from gmall2021_flink_dw_spark.streaming.sources import socket_stream
-
-    lines = ["alpha,1", "beta,2", "gamma,3"]
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(1)
-    port = srv.getsockname()[1]
-    stop = threading.Event()
-
-    def serve():
-        conn, _ = srv.accept()
-        conn.sendall(("\n".join(lines) + "\n").encode())
-        stop.wait(timeout=30)  # keep the pipe open until the query drains
-        conn.close()
-
-    t = threading.Thread(target=serve, daemon=True)
-    t.start()
-    q = (
-        socket_stream(spark, "127.0.0.1", port)
-        .writeStream.format("memory")
-        .queryName("sock_stream")
-        .start()
-    )
-    try:
-        deadline = 30
-        import time
-
-        while deadline > 0:
-            q.processAllAvailable()
-            if spark.sql("select * from sock_stream").count() >= len(lines):
-                break
-            time.sleep(0.5)
-            deadline -= 0.5
-        got = sorted(
-            r.value for r in spark.sql("select * from sock_stream").collect()
-        )
-        assert got == sorted(lines)
-    finally:
-        stop.set()
-        q.stop()
-        srv.close()
-
-
-def test_uv_dedup_equivalence(spark, events_stream):
-    """W4: dropDuplicates under streaming == row_number batch dedup
-    (same survivor per (user, day) because event-time order is replayed)."""
-    q = run_to_memory(
-        uv_dedup_transform(events_stream.withWatermark("ts", "1 hour")),
-        "uv_stream",
-    )
-    try:
-        got = spark.sql(
-            "select user_id, dt, count(*) as n from uv_stream group by 1,2"
-        ).toPandas()
-        batch = uv_dedup_transform(load_table(spark, SF, "events")).toPandas()
-        # one survivor per key either way
-        assert (got.n == 1).all()
-        assert len(got) == len(batch)
     finally:
         q.stop()
 
@@ -410,81 +338,6 @@ def test_foreach_batch_router(spark):
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
-
-def test_dynamic_routing_config_update(spark):
-    """W6 dynamic broadcast state: routing rules change BETWEEN
-    micro-batches and the router must pick up the new rules at the next
-    epoch without a restart (BaseDBApp's broadcast rule stream). Batch 1
-    routes inserts+updates; the rules then drop the update route; batch
-    2 must route inserts only."""
-    import os
-
-    from gmall2021_flink_dw_spark.streaming.pipelines import (
-        dynamic_foreach_batch_router,
-    )
-
-    root = tempfile.mkdtemp(prefix="dynroute_")
-    src = os.path.join(root, "src")
-    out = os.path.join(root, "out")
-    os.makedirs(src)
-    try:
-        cl = orders_changelog(spark, SF)
-        half = cl.filter(F.col("id") % 2 == 0)
-        other = cl.filter(F.col("id") % 2 == 1)
-        half.coalesce(1).write.parquet(os.path.join(src, "b1"))
-
-        rules_v1 = [
-            ("order_info", "insert", "kafka", "dwd_order_info", "id"),
-            ("order_info", "update", "kafka", "dwd_order_info", "id"),
-        ]
-        rules_v2 = rules_v1[:1]  # update route removed mid-stream
-        current = {"rules": rules_v1}
-
-        def provider(sess):
-            return sess.createDataFrame(
-                current["rules"],
-                "source_table string, operate_type string, sink_type string, "
-                "sink_table string, sink_columns string",
-            )
-
-        schema = spark.read.parquet(os.path.join(src, "b1")).schema
-
-        def start():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(src, "b*"))
-            )
-            q = (
-                stream.writeStream.foreachBatch(
-                    dynamic_foreach_batch_router(out, provider)
-                )
-                .option("checkpointLocation", os.path.join(root, "ck"))
-                .start()
-            )
-            q.processAllAvailable()
-            return q
-
-        q = start()
-        # rule change lands between micro-batches
-        current["rules"] = rules_v2
-        other.coalesce(1).write.parquet(os.path.join(src, "b2"))
-        q.processAllAvailable()
-        q.stop()
-
-        e0 = spark.read.parquet(os.path.join(out, "epoch=0"))
-        e1 = spark.read.parquet(os.path.join(out, "epoch=1"))
-        ops0 = {r.op for r in e0.select("op").distinct().collect()}
-        ops1 = {r.op for r in e1.select("op").distinct().collect()}
-        assert "update" in ops0 and "insert" in ops0
-        assert ops1 == {"insert"}, f"new rules not applied: {ops1}"
-        # routed counts match the rule set in force at each epoch
-        want0 = half.filter(F.col("op") != "delete").count()
-        want1 = other.filter(F.col("op") == "insert").count()
-        assert e0.count() == want0
-        assert e1.count() == want1
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_stream_stream_interval_join(spark):

@@ -3,14 +3,12 @@
 The reference's source is Kafka (``MyKafkaUtil.java:40-53``). A
 deployment reads it with Spark's stock ``format("kafka")`` source and
 applies ``decode_kafka_records`` + ``from_json`` with a pinned schema,
-as the SQL apps pin their DDL sources. Without a broker, the sources are:
-
-- file stream over the driver's parquet (S1-analog: replayable, ordered);
-- an in-memory rows source via a parquet tempdir (S8-analog of
-  ``fromElements``, UserJumpDetailApp.java:52-60).
-
-Both produce DataFrames with the same schema as the batch loader, so
-every operator runs unchanged on either.
+as the SQL apps pin their DDL sources. Without a broker, the source is
+a file stream over the driver's parquet (S1-analog: replayable,
+ordered) with the same schema as the batch loader, so every operator
+runs unchanged on either. S8 (``fromElements``,
+UserJumpDetailApp.java:52-60) maps to ``spark.createDataFrame``
+micro-tables in the tests.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ The reference's source is Kafka (``MyKafkaUtil.java:40-53``). A
 deployment reads it with Spark's stock ``format("kafka")`` source and
 applies ``decode_kafka_records`` + ``from_json`` with a pinned schema,
 as the SQL apps pin their DDL sources. Without a broker, the source is
-a file stream over the driver's parquet (S1-analog: replayable,
+a file stream over the parquet tables (S1-analog: replayable,
 ordered) with the same schema as the batch loader, so every operator
 runs unchanged on either. S8 (``fromElements``,
 UserJumpDetailApp.java:52-60) maps to ``spark.createDataFrame``

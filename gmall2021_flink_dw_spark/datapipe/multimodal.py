@@ -6,6 +6,11 @@ metadata alongside; decode / feature-extract / resize / frame-sample run
 as Arrow-batched ``mapInPandas`` stages so bytes never round-trip through
 Python row-at-a-time.
 
+Every stage, the encoding ingest included, is ONE ``row_stage``: a row
+function next to its codec takes an input row's values and returns an
+iterable of output rows (1->1 for decoders, 1->N for frame sampling),
+and the stage builds each Arrow batch in the lane's DDL schema.
+
 The heavyweight codec libraries (PIL/ffmpeg/librosa) are NOT in this
 image; ``decode_stub`` is the deterministic fake the plumbing queries
 use. The codec lanes run REAL stdlib codecs on real-format bytes that
@@ -19,13 +24,41 @@ so every decoded field has a closed form a SQL oracle recomputes.
 
 from __future__ import annotations
 
+import array
+import hashlib
 import math
 import struct
-from collections.abc import Callable, Iterator
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def row_stage(
+    df: DataFrame, row_fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """The one Python stage of every multimodal lane: one mapInPandas
+    pass calling row_fn(*values) on each input row and building each
+    output batch from the returned tuples, in the column order of the
+    DDL `schema`. Columns stay Python objects until Arrow converts them
+    to the declared types, so a nullable int column needs no dtype
+    bookkeeping and a long never passes through float."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def apply_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in row_fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return df.mapInPandas(apply_rows, schema)
+
 
 DECODED_SCHEMA = (
     "doc_id long, payload_len long, content_hash string, "
@@ -82,17 +115,11 @@ def encode_bmp(
     )
 
 
-def decode_real(payload: bytes) -> tuple[int, int, int, int]:
-    """REAL decoder for uncompressed 24-bit BMP bytes (r07, VERDICT r06
-    item 6 — previously a NotImplementedError stub).
-
-    Parses the actual headers with struct: validates the 'BM' magic,
-    reads the pixel-array offset from BITMAPFILEHEADER and
-    (width, height, bpp, compression) from BITMAPINFOHEADER, rejects
-    anything but BI_RGB 24-bit, and checksums the pixel array. Returns
-    (width, height, bpp, pixel_sum). Other formats still need codec
-    libs not in this image — they raise ValueError, not silence.
-    """
+def _bmp_layout(payload: bytes) -> tuple[int, int, int, int, int]:
+    """Parse and validate a 24-bit BMP's headers once: 'BM' magic, the
+    pixel-array offset from BITMAPFILEHEADER and (width, height, bpp,
+    compression) from BITMAPINFOHEADER; anything but BI_RGB 24-bit is
+    rejected. Returns (width, |height|, bpp, pixel offset, row stride)."""
     if len(payload) < 54 or payload[:2] != b"BM":
         raise ValueError("not a BMP payload (missing 'BM' magic)")
     offset = struct.unpack_from("<I", payload, 10)[0]
@@ -108,14 +135,26 @@ def decode_real(payload: bytes) -> tuple[int, int, int, int]:
         )
     if width <= 0 or height == 0:
         raise ValueError(f"invalid BMP dimensions {width}x{height}")
-    # Checksum EXACTLY the pixel array (ADVICE r07 #1): real BMPs may
-    # carry trailing data (ICC profiles, gap bytes) that must not fold
-    # into the checksum, and a truncated file must error, not yield 0.
+    # The pixel array must lie EXACTLY inside the payload (ADVICE r07
+    # #1): real BMPs may carry trailing data (ICC profiles, gap bytes)
+    # that must not fold into a checksum, and a truncated file must
+    # error, not yield 0.
     stride = (3 * width + 3) // 4 * 4
     end = offset + stride * abs(height)
     if offset > len(payload) or end > len(payload):
         raise ValueError("pixel array truncated or offset beyond payload")
-    return width, abs(height), bpp, sum(payload[offset:end])
+    return width, abs(height), bpp, offset, stride
+
+
+def decode_real(payload: bytes) -> tuple[int, int, int, int]:
+    """REAL decoder for uncompressed 24-bit BMP bytes (r07, VERDICT r06
+    item 6 — previously a NotImplementedError stub): the headers parsed
+    by ``_bmp_layout`` plus a checksum of exactly the pixel array.
+    Returns (width, height, bpp, pixel_sum). Other formats still need
+    codec libs not in this image — they raise ValueError, not silence.
+    """
+    width, height, bpp, offset, stride = _bmp_layout(payload)
+    return width, height, bpp, sum(payload[offset : offset + stride * height])
 
 
 def decode_stub(payload: bytes) -> tuple[int, int]:
@@ -125,25 +164,12 @@ def decode_stub(payload: bytes) -> tuple[int, int]:
     return (n % 640) + 1, (n % 480) + 1
 
 
-def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage: per Arrow batch, decode payloads vectorized-ish.
-    This is the real plumbing a production decoder would drop into."""
-    for pdf in batches:
-        dims = pdf["payload"].map(decode_stub)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload_len": pdf["payload"].map(len).astype("int64"),
-                "content_hash": pdf["content_hash"],
-                "modality": pdf["modality"],
-                "width": dims.map(lambda d: d[0]).astype("int32"),
-                "height": dims.map(lambda d: d[1]).astype("int32"),
-            }
-        )
-
-
-def decode_features(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(decode_batch, schema=DECODED_SCHEMA)
+def stub_decode_row(
+    doc_id: int, payload: bytes, content_hash: str, modality: str
+) -> Iterator[tuple]:
+    """DECODED_SCHEMA row of one attach_payload row — the real plumbing
+    a production decoder would drop into."""
+    yield (doc_id, len(payload), content_hash, modality, *decode_stub(payload))
 
 
 FRAME_SCHEMA = (
@@ -158,8 +184,6 @@ def sample_frames_stub(payload: bytes, every_ms: int = 1000) -> list[tuple]:
     whose duration is len(payload) ms and cut one _FRAME_LEN-byte slice
     per `every_ms`. A real ffmpeg-backed sampler has the identical
     signature and output shape."""
-    import hashlib
-
     n = len(payload)
     frames = []
     for idx, ts in enumerate(range(0, max(n, 1), every_ms)):
@@ -169,30 +193,12 @@ def sample_frames_stub(payload: bytes, every_ms: int = 1000) -> list[tuple]:
     return frames
 
 
-def frame_sample_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage: explode each payload into sampled frames.
-    1->N output per input row — the batch shape a real decoder needs
-    (yielding multiple frames per video without collecting them all)."""
-    for pdf in batches:
-        out: dict[str, list] = {
-            "doc_id": [], "frame_idx": [], "frame_ts_ms": [],
-            "frame_hash": [], "frame_len": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            for idx, ts, h, ln in sample_frames_stub(bytes(payload)):
-                out["doc_id"].append(doc_id)
-                out["frame_idx"].append(idx)
-                out["frame_ts_ms"].append(ts)
-                out["frame_hash"].append(h)
-                out["frame_len"].append(ln)
-        yield pd.DataFrame(out).astype(
-            {"doc_id": "int64", "frame_idx": "int32",
-             "frame_ts_ms": "int64", "frame_len": "int32"}
-        )
-
-
-def sample_frames(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(frame_sample_batch, schema=FRAME_SCHEMA)
+def frame_rows(doc_id: int, payload: bytes, *_: object) -> Iterator[tuple]:
+    """FRAME_SCHEMA rows of one payload: 1->N, one row per sampled frame
+    (the explode shape a video decoder needs, without collecting a
+    video's frames anywhere but its own row)."""
+    for frame in sample_frames_stub(payload):
+        yield (doc_id, *frame)
 
 
 EMBED_DIM = 16
@@ -210,42 +216,28 @@ def embed_stub(payload: bytes) -> list[float]:
     the ascii codes of the digest hex chars scaled to [0, 1] —
     reproducible in ANY engine from the content hash alone, which is
     what makes the stage oracle-checkable."""
-    import hashlib
-
     h = hashlib.md5(payload).hexdigest()
     return [ord(c) / 255.0 for c in h[:EMBED_DIM]]
 
 
-def embed_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage: payload bytes -> feature vector per row, one
-    Arrow batch at a time (a production encoder would run its model on
-    the whole batch — the iteration contract is identical). Emits
-    scalar projections of the vector (norm/sum/head) rather than the
-    raw array so cross-engine value-hash comparison is formatting-free;
-    the vector itself feeds the ANN operators in a real pipeline."""
-    import math
-
-    for pdf in batches:
-        embs = [embed_stub(p) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "dim": [len(e) for e in embs],
-                "emb_norm": [
-                    round(math.sqrt(sum(x * x for x in e)), 6) for e in embs
-                ],
-                "emb_sum": [round(sum(e), 6) for e in embs],
-                "emb_head": [round(e[0], 6) for e in embs],
-                "content_hash": pdf["content_hash"],
-            }
-        )
-
-
-def extract_embeddings(with_payload: DataFrame) -> DataFrame:
-    """Feature-extraction stage over the payload column (SURVEY
-    'multimodal feature-extract'): binary in, typed features out, Arrow
-    batches end to end."""
-    return with_payload.mapInPandas(embed_batch, EMBED_SCHEMA)
+def embed_row(
+    doc_id: int, payload: bytes, content_hash: str, *_: object
+) -> Iterator[tuple]:
+    """EMBED_SCHEMA row: payload bytes -> feature vector (a production
+    encoder would run its model on the whole batch — the iteration
+    contract is identical). Emits scalar projections of the vector
+    (norm/sum/head) rather than the raw array so cross-engine
+    value-hash comparison is formatting-free; the vector itself feeds
+    the ANN operators in a real pipeline."""
+    e = embed_stub(payload)
+    yield (
+        doc_id,
+        len(e),
+        round(math.sqrt(sum(x * x for x in e)), 6),
+        round(sum(e), 6),
+        round(e[0], 6),
+        content_hash,
+    )
 
 
 RESIZE_SCHEMA = (
@@ -260,8 +252,6 @@ def resize_stub(payload: bytes, max_side: int = 256) -> tuple:
     aspect ratio (never upscale), and fingerprint the 'resized pixels'
     as md5(payload || out_w x out_h). A real PIL/opencv resize has the
     identical signature and output shape."""
-    import hashlib
-
     w, h = decode_stub(payload)
     scale = min(1.0, max_side / max(w, h))
     out_w, out_h = max(1, int(w * scale)), max(1, int(h * scale))
@@ -269,28 +259,11 @@ def resize_stub(payload: bytes, max_side: int = 256) -> tuple:
     return w, h, out_w, out_h, round(scale, 6), digest
 
 
-def resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage: per-row resize, 1:1, Arrow-batched — the
-    standard image-preprocessing stage of a multimodal training
-    pipeline (decode -> resize -> encode), with the pixel work stubbed
-    and every surrounding contract (schema, dtypes, batching) real."""
-    for pdf in batches:
-        rs = [resize_stub(p) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": pd.Series([r[0] for r in rs], dtype="int32"),
-                "height": pd.Series([r[1] for r in rs], dtype="int32"),
-                "out_w": pd.Series([r[2] for r in rs], dtype="int32"),
-                "out_h": pd.Series([r[3] for r in rs], dtype="int32"),
-                "scale": [r[4] for r in rs],
-                "resized_hash": [r[5] for r in rs],
-            }
-        )
-
-
-def resize_images(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(resize_batch, schema=RESIZE_SCHEMA)
+def resize_row(doc_id: int, payload: bytes, *_: object) -> Iterator[tuple]:
+    """RESIZE_SCHEMA row: the standard image-preprocessing step of a
+    multimodal training pipeline (decode -> resize -> encode), with the
+    pixel work stubbed and every surrounding contract real."""
+    yield (doc_id, *resize_stub(payload))
 
 
 # ------------------------------------------------- real BMP encode/decode
@@ -305,20 +278,15 @@ def attach_media(
     docs: DataFrame, encode: Callable[..., bytes], *cols: Column
 ) -> DataFrame:
     """Ingest stage producing REAL-format media bytes: doc d's payload
-    is encode(d, *values of cols), one Arrow mapInPandas pass to
+    is encode(d, *values of cols), one row_stage pass to
     (doc_id, payload). The per-doc encoders below derive every image
     parameter from doc_id (and md5(text)), so each decode has a closed
     form a SQL oracle recomputes."""
-    src = docs.select("doc_id", *cols)
-
-    def encode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            args = zip(*(pdf[c] for c in pdf.columns))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [encode(*a) for a in args]}
-            )
-
-    return src.mapInPandas(encode_batch, "doc_id long, payload binary")
+    return row_stage(
+        docs.select("doc_id", *cols),
+        lambda *row: [(row[0], encode(*row))],
+        "doc_id long, payload binary",
+    )
 
 
 def solid_bmp_payload(doc_id: int, content_hash: str) -> bytes:
@@ -329,28 +297,10 @@ def solid_bmp_payload(doc_id: int, content_hash: str) -> bytes:
     return encode_bmp(w, h, [(c, c, c)] * (w * h))
 
 
-def decode_bmp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage running the REAL decoder (struct-parsed BMP
-    headers + pixel checksum) — same batch contract as decode_batch,
-    no stub in the path."""
-    for pdf in batches:
-        decoded = [decode_real(bytes(p)) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload_len": pdf["payload"].map(len).astype("int64"),
-                "width": pd.Series([d[0] for d in decoded], dtype="int32"),
-                "height": pd.Series([d[1] for d in decoded], dtype="int32"),
-                "bpp": pd.Series([d[2] for d in decoded], dtype="int32"),
-                "pixel_sum": pd.Series(
-                    [d[3] for d in decoded], dtype="int64"
-                ),
-            }
-        )
-
-
-def decode_bmp_features(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(decode_bmp_batch, BMP_DECODED_SCHEMA)
+def bmp_decode_row(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """BMP_DECODED_SCHEMA row from the REAL decoder (struct-parsed BMP
+    headers + pixel checksum), no stub in the path."""
+    yield (doc_id, len(payload), *decode_real(payload))
 
 
 # --------------------------------------------------------- PNG codec (r08)
@@ -365,8 +315,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + tag
@@ -375,35 +323,36 @@ def _png_chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
+def _png_predict(ftype: int, a: int, b: int, c: int) -> int:
+    """The PNG filter predictor from the left (a), up (b) and upper-left
+    (c) raw bytes: None / Sub / Up / Average / Paeth. The encoder
+    subtracts it and the decoder adds it back."""
+    if ftype == 0:
+        return 0
+    if ftype == 1:
+        return a
+    if ftype == 2:
+        return b
+    if ftype == 3:
+        return (a + b) // 2
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+
+
 def _png_filter_row(ftype: int, raw: bytes, prev: bytes, bpp: int = 3) -> bytes:
     """Apply PNG filter `ftype` to one raw scanline (encoder side)."""
-    n = len(raw)
-    out = bytearray(n)
-    for i in range(n):
-        a = raw[i - bpp] if i >= bpp else 0          # left
-        b = prev[i]                                   # up
-        c = prev[i - bpp] if i >= bpp else 0          # upper-left
-        if ftype == 0:
-            pred = 0
-        elif ftype == 1:
-            pred = a
-        elif ftype == 2:
-            pred = b
-        elif ftype == 3:
-            pred = (a + b) // 2
-        else:  # Paeth
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-        out[i] = (raw[i] - pred) & 0xFF
+    out = bytearray(len(raw))
+    for i in range(len(raw)):
+        a = raw[i - bpp] if i >= bpp else 0
+        c = prev[i - bpp] if i >= bpp else 0
+        out[i] = (raw[i] - _png_predict(ftype, a, prev[i], c)) & 0xFF
     return bytes(out)
 
 
 def encode_png(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
     """Write a real 8-bit truecolor PNG (solid color), cycling filter
     types 0..4 across rows."""
-    import zlib
-
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
     raw_row = bytes(rgb) * width
     prev = b"\x00" * (3 * width)
@@ -427,8 +376,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, int]:
     (width, height, bit_depth, pixel_sum). Interlaced / paletted /
     alpha PNGs raise ValueError — codec libs for the general case are
     not in this image."""
-    import zlib
-
     if len(payload) < 8 or payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload (missing signature)")
     pos, width = 8, -1
@@ -473,21 +420,8 @@ def decode_png(payload: bytes) -> tuple[int, int, int, int]:
             raise ValueError(f"invalid PNG filter type {ftype}")
         for i in range(stride):
             a = row[i - bpp] if i >= bpp else 0
-            b = prev[i]
             c = prev[i - bpp] if i >= bpp else 0
-            if ftype == 0:
-                pred = 0
-            elif ftype == 1:
-                pred = a
-            elif ftype == 2:
-                pred = b
-            elif ftype == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-            row[i] = (row[i] + pred) & 0xFF
+            row[i] = (row[i] + _png_predict(ftype, a, prev[i], c)) & 0xFF
         pixel_sum += sum(row)
         prev = row
     return width, height, bit_depth, pixel_sum
@@ -499,8 +433,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, int]:
 def encode_wav(samples: list[int], sample_rate: int = 16000) -> bytes:
     """Write a real RIFF/WAVE file: PCM 16-bit mono little-endian.
     Opens in any audio player/editor."""
-    import array
-
     data = array.array("h", samples).tobytes()
     fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     return (
@@ -512,12 +444,10 @@ def encode_wav(samples: list[int], sample_rate: int = 16000) -> bytes:
     )
 
 
-def decode_wav(payload: bytes) -> tuple[int, int, int, int]:
-    """REAL RIFF/WAVE decoder: chunk walk, PCM-16 fmt validation, int16
-    sample parse. Returns (sample_rate, n_channels, n_samples,
-    sample_sum). Compressed / float / multi-byte formats raise."""
-    import array
-
+def _wav_pcm(payload: bytes) -> tuple[int, int, array.array]:
+    """The one RIFF/WAVE parse: chunk walk, PCM-16 fmt validation, int16
+    sample parse. Returns (sample_rate, n_channels, interleaved
+    samples). Compressed / float / multi-byte formats raise."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos = 12
@@ -549,6 +479,13 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, int]:
         raise ValueError("odd PCM-16 data length")
     samples = array.array("h")
     samples.frombytes(data)
+    return sample_rate, n_channels, samples
+
+
+def decode_wav(payload: bytes) -> tuple[int, int, int, int]:
+    """REAL RIFF/WAVE decoder over ``_wav_pcm``. Returns (sample_rate,
+    n_channels, n_samples, sample_sum)."""
+    sample_rate, n_channels, samples = _wav_pcm(payload)
     return sample_rate, n_channels, len(samples) // n_channels, sum(samples)
 
 
@@ -1006,10 +943,11 @@ _IDCT_COS = [
 _IDCT_C = [math.sqrt(0.5) if u == 0 else 1.0 for u in range(8)]
 
 # N[u][x] = C(u) * cos((2x+1) u pi / 16): the separable IDCT collapses
-# to out = 0.25 * N^T A N over the 8x8 coefficient matrix A. Built
-# lazily so importing the module never requires numpy on a worker that
-# only touches the stdlib codecs.
-_IDCT_N = None
+# to out = 0.25 * N^T A N over the 8x8 coefficient matrix A.
+_IDCT_N = np.array(
+    [[_IDCT_C[u] * _IDCT_COS[x][u] for x in range(8)] for u in range(8)],
+    dtype=np.float64,
+)
 
 
 def _idct8x8(coeffs: list[int]) -> list[int]:
@@ -1023,15 +961,6 @@ def _idct8x8(coeffs: list[int]) -> list[int]:
     parity: np.rint and Python round() are both half-to-even, and the
     generated corpora reconstruct to exact integers (sub-epsilon float
     error), so the matmul summation-order change cannot move a pixel."""
-    global _IDCT_N
-    import numpy as np
-
-    if _IDCT_N is None:
-        _IDCT_N = np.array(
-            [[_IDCT_C[u] * _IDCT_COS[x][u] for x in range(8)]
-             for u in range(8)],
-            dtype=np.float64,
-        )
     a = np.asarray(coeffs, dtype=np.float64).reshape(8, 8)
     v = 0.25 * (_IDCT_N.T @ a @ _IDCT_N)
     p = np.rint(v).astype(np.int64) + 128
@@ -1232,54 +1161,28 @@ def mixed_payload(doc_id: int, content_hash: str) -> bytes:
     return encode_gif(w, h, [(c, c, c)], [0] * (w * h))
 
 
-def decode_mixed_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """ONE decode stage dispatching on magic bytes — the shape of a real
-    heterogeneous media pipeline (a lake directory is never one format).
-    Unknown magics raise: silent skips would hide corrupt data."""
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in (
-            "doc_id", "fmt", "width", "height",
-            "sample_rate", "n_samples", "checksum")}
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            p = bytes(p)
-            if p[:2] == b"BM":
-                w, h, _, s = decode_real(p)
-                row = ("bmp", w, h, None, None, s)
-            elif p[:2] == b"\xff\xd8":
-                w, h, px = decode_jpeg_gray(p)
-                row = ("jpeg", w, h, None, None, sum(px))
-            elif p[:8] == _PNG_SIG:
-                w, h, _, s = decode_png(p)
-                row = ("png", w, h, None, None, s)
-            elif p[:4] == b"RIFF":
-                sr, _, n, s = decode_wav(p)
-                row = ("wav", None, None, sr, n, s)
-            elif p[:6] in _GIF_SIGS:
-                w, h, _, s = decode_gif(p)
-                row = ("gif", w, h, None, None, s)
-            else:
-                raise ValueError(f"unknown media magic {p[:8]!r}")
-            fmt, w, h, sr, n, s = row
-            out["doc_id"].append(doc_id)
-            out["fmt"].append(fmt)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["sample_rate"].append(sr)
-            out["n_samples"].append(n)
-            out["checksum"].append(s)
-        yield pd.DataFrame({
-            "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-            "fmt": out["fmt"],
-            "width": pd.Series(out["width"], dtype="Int32"),
-            "height": pd.Series(out["height"], dtype="Int32"),
-            "sample_rate": pd.Series(out["sample_rate"], dtype="Int32"),
-            "n_samples": pd.Series(out["n_samples"], dtype="Int32"),
-            "checksum": pd.Series(out["checksum"], dtype="int64"),
-        })
-
-
-def decode_mixed_features(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(decode_mixed_batch, MIXED_DECODED_SCHEMA)
+def mixed_decode_row(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """MIXED_DECODED_SCHEMA row from ONE decoder dispatching on magic
+    bytes — the shape of a real heterogeneous media pipeline (a lake
+    directory is never one format). Unknown magics raise: silent skips
+    would hide corrupt data."""
+    if payload[:2] == b"BM":
+        w, h, _, s = decode_real(payload)
+        yield doc_id, "bmp", w, h, None, None, s
+    elif payload[:2] == b"\xff\xd8":
+        w, h, px = decode_jpeg_gray(payload)
+        yield doc_id, "jpeg", w, h, None, None, sum(px)
+    elif payload[:8] == _PNG_SIG:
+        w, h, _, s = decode_png(payload)
+        yield doc_id, "png", w, h, None, None, s
+    elif payload[:4] == b"RIFF":
+        sr, _, n, s = decode_wav(payload)
+        yield doc_id, "wav", None, None, sr, n, s
+    elif payload[:6] in _GIF_SIGS:
+        w, h, _, s = decode_gif(payload)
+        yield doc_id, "gif", w, h, None, None, s
+    else:
+        raise ValueError(f"unknown media magic {payload[:8]!r}")
 
 
 # --------------------------------------- audio feature extraction (r09)
@@ -1290,57 +1193,26 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def audio_features_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Decode each RIFF/WAVE payload and extract the classic integer-
+def audio_features_row(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """Decode one RIFF/WAVE payload and extract the classic integer-
     exact audio features: total energy (sum of squared PCM-16 samples —
     max 32768^2 * n, far inside int64), zero-crossing count (strict
     sign change: s[i-1]*s[i] < 0), peak amplitude, and duration in
-    integer microseconds. numpy int64 vector math per payload — no
-    float enters, so the features are bit-identical on any engine."""
-    import array
-
-    import numpy as np
-
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in (
-            "doc_id", "sample_rate", "n_samples", "duration_us",
-            "energy", "zero_crossings", "peak")}
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            sr, _, n, _ = decode_wav(bytes(p))
-            samples = array.array("h")
-            # re-extract the PCM block: decode_wav validated the layout
-            body = bytes(p)
-            pos, data = 12, b""
-            while pos + 8 <= len(body):
-                tag = body[pos : pos + 4]
-                (length,) = struct.unpack_from("<I", body, pos + 4)
-                if tag == b"data":
-                    data = body[pos + 8 : pos + 8 + length]
-                pos += 8 + length + (length & 1)
-            samples.frombytes(data)
-            s = np.asarray(samples, dtype=np.int64)
-            out["doc_id"].append(doc_id)
-            out["sample_rate"].append(sr)
-            out["n_samples"].append(n)
-            out["duration_us"].append(n * 1_000_000 // sr)
-            out["energy"].append(int(np.sum(s * s)))
-            out["zero_crossings"].append(int(np.sum(s[:-1] * s[1:] < 0)))
-            out["peak"].append(int(np.max(np.abs(s))) if len(s) else 0)
-        yield pd.DataFrame({
-            "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-            "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-            "n_samples": pd.Series(out["n_samples"], dtype="int32"),
-            "duration_us": pd.Series(out["duration_us"], dtype="int64"),
-            "energy": pd.Series(out["energy"], dtype="int64"),
-            "zero_crossings": pd.Series(out["zero_crossings"], dtype="int32"),
-            "peak": pd.Series(out["peak"], dtype="int32"),
-        })
-
-
-def extract_audio_features(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(audio_features_batch, AUDIO_FEATURES_SCHEMA)
+    integer microseconds. numpy int64 vector math over the samples of
+    the one ``_wav_pcm`` parse — no float enters, so the features are
+    bit-identical on any engine."""
+    sr, n_channels, pcm = _wav_pcm(payload)
+    n = len(pcm) // n_channels
+    s = np.asarray(pcm, dtype=np.int64)
+    yield (
+        doc_id,
+        sr,
+        n,
+        n * 1_000_000 // sr,
+        int(np.sum(s * s)),
+        int(np.sum(s[:-1] * s[1:] < 0)),
+        int(np.max(np.abs(s))) if len(s) else 0,
+    )
 
 
 # --------------------------------------- image feature extraction (r09)
@@ -1353,16 +1225,13 @@ def extract_audio_features(with_payload: DataFrame) -> DataFrame:
 
 def decode_bmp_pixels(payload: bytes) -> tuple[int, int, bytes]:
     """Decode a 24-bit BMP to (width, height, packed BGR bytes with the
-    row padding stripped, rows in storage order). Validates exactly
-    like decode_real, then extracts the pixel array row by row."""
-    w, h, _, _ = decode_real(payload)
-    offset = struct.unpack_from("<I", payload, 10)[0]
-    stride = (3 * w + 3) // 4 * 4
-    rows = bytearray()
-    for y in range(h):
-        start = offset + y * stride
-        rows += payload[start : start + 3 * w]
-    return w, h, bytes(rows)
+    row padding stripped, rows in storage order), from the same
+    ``_bmp_layout`` parse and validation as decode_real."""
+    w, h, _, offset, stride = _bmp_layout(payload)
+    return w, h, b"".join(
+        payload[offset + y * stride : offset + y * stride + 3 * w]
+        for y in range(h)
+    )
 
 
 IMAGE_STATS_SCHEMA = (
@@ -1372,42 +1241,19 @@ IMAGE_STATS_SCHEMA = (
 )
 
 
-def image_stats_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Decode each patterned BMP and reduce the gray channel to
+def image_stats_row(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """Decode one patterned BMP and reduce the gray channel to
     integer-exact features: total brightness, min/max value, and an
     8-bin histogram (bin = v >> 5). numpy int64 vector math; the
     reductions are order-free, so row layout and padding handling
     cannot affect them."""
-    import numpy as np
-
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in (
-            "doc_id", "width", "height", "brightness_sum",
-            "v_min", "v_max", *(f"h{b}" for b in range(8)))}
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, bgr = decode_bmp_pixels(bytes(p))
-            gray = np.frombuffer(bgr, dtype=np.uint8)[0::3].astype(np.int64)
-            out["doc_id"].append(doc_id)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["brightness_sum"].append(int(gray.sum()))
-            out["v_min"].append(int(gray.min()))
-            out["v_max"].append(int(gray.max()))
-            hist = np.bincount(gray >> 5, minlength=8)
-            for b in range(8):
-                out[f"h{b}"].append(int(hist[b]))
-        yield pd.DataFrame({
-            "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-            "width": pd.Series(out["width"], dtype="int32"),
-            "height": pd.Series(out["height"], dtype="int32"),
-            "brightness_sum": pd.Series(out["brightness_sum"], dtype="int64"),
-            "v_min": pd.Series(out["v_min"], dtype="int32"),
-            "v_max": pd.Series(out["v_max"], dtype="int32"),
-            **{f"h{b}": pd.Series(out[f"h{b}"], dtype="int32")
-               for b in range(8)},
-        })
+    w, h, bgr = decode_bmp_pixels(payload)
+    gray = np.frombuffer(bgr, dtype=np.uint8)[0::3].astype(np.int64)
+    hist = np.bincount(gray >> 5, minlength=8)
+    yield (
+        doc_id, w, h, int(gray.sum()), int(gray.min()), int(gray.max()),
+        *(int(c) for c in hist),
+    )
 
 
 def patterned_bmp_payload(doc_id: int) -> bytes:
@@ -1419,10 +1265,6 @@ def patterned_bmp_payload(doc_id: int) -> bytes:
     return encode_bmp(w, h, [(v, v, v) for v in vals])
 
 
-def extract_image_stats(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(image_stats_batch, IMAGE_STATS_SCHEMA)
-
-
 # ------------------------------ JPEG AC-exercising lane (r11, item 5)
 
 JPEG_AC_SCHEMA = (
@@ -1431,7 +1273,7 @@ JPEG_AC_SCHEMA = (
 )
 
 # sign of cos((2x+1)pi/4) for x = 0..7 — the AC(4,4) basis pattern
-_S44 = (1, -1, -1, 1, 1, -1, -1, 1)
+_S44 = np.array((1, -1, -1, 1, 1, -1, -1, 1), dtype=np.int64)
 
 
 def jpeg_ac_payload(doc_id: int) -> bytes:
@@ -1450,48 +1292,17 @@ def jpeg_ac_payload(doc_id: int) -> bytes:
     return encode_jpeg_gray_blocks(8 * bx, 8 * by, base, qa)
 
 
-def jpeg_ac_features_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Decode each payload with the REAL decoder and reduce the pixel
+def jpeg_ac_row(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """Decode one payload with the REAL decoder and reduce the pixel
     array to three integer-exact features chosen to pin distinct
     failure modes: pixel_sum (DC path — the AC pattern cancels in the
     plain sum), pixel_sq_sum (AC magnitude — Parseval makes it
     sensitive to |qA| but not its position), and ac44_sum (the DCT
     projection onto the (4,4) basis = 128 * sum qA — zero under any
     wrong-position or wrong-sign decode)."""
-    import numpy as np
-
-    s = np.array(_S44, dtype=np.int64)
-    for pdf in batches:
-        out = {
-            "doc_id": [], "width": [], "height": [],
-            "pixel_sum": [], "pixel_sq_sum": [], "ac44_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, px = decode_jpeg_gray(bytes(payload))
-            p = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-            p = p.reshape(h, w)
-            proj = np.outer(s[np.arange(h) % 8], s[np.arange(w) % 8])
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["pixel_sum"].append(int(p.sum()))
-            out["pixel_sq_sum"].append(int((p * p).sum()))
-            out["ac44_sum"].append(int((p * proj).sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "width": pd.Series(out["width"], dtype="int32"),
-                "height": pd.Series(out["height"], dtype="int32"),
-                "pixel_sum": pd.Series(out["pixel_sum"], dtype="int64"),
-                "pixel_sq_sum": pd.Series(
-                    out["pixel_sq_sum"], dtype="int64"
-                ),
-                "ac44_sum": pd.Series(out["ac44_sum"], dtype="int64"),
-            }
-        )
-
-
-def jpeg_ac_features(with_payload: DataFrame) -> DataFrame:
-    return with_payload.mapInPandas(jpeg_ac_features_batch, JPEG_AC_SCHEMA)
+    w, h, px = decode_jpeg_gray(payload)
+    p = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w)
+    proj = np.outer(_S44[np.arange(h) % 8], _S44[np.arange(w) % 8])
+    yield (
+        doc_id, w, h, int(p.sum()), int((p * p).sum()), int((p * proj).sum()),
+    )

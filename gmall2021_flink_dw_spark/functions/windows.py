@@ -59,15 +59,21 @@ def duck_sessions_ctes(gap_s: int) -> str:
     )"""
 
 
-# DuckDB CTEs `e` and `w` replaying F.window(ts, "30 minutes",
-# "10 minutes") over `events`: each event lands in the 3 epoch-aligned
-# windows whose start `ws` (epoch micros) is within 30 min before it.
-DUCK_HOPPING_CTES = """e AS (
+# The hopping window: 30 min long, a new one every 10 min.
+HOP_SIZE_S = 1800
+HOP_SLIDE_S = 600
+_SLIDE_US = HOP_SLIDE_S * 1_000_000
+_BACK_US = (HOP_SIZE_S - HOP_SLIDE_S) * 1_000_000  # earliest start's lag
+
+# DuckDB CTEs `e` and `w` replaying F.window(ts, HOP_SIZE_S, HOP_SLIDE_S)
+# over `events`: each event lands in the 3 epoch-aligned windows whose
+# start `ws` (epoch micros) is within one window size before it.
+DUCK_HOPPING_CTES = f"""e AS (
       SELECT event_type, value, epoch_us(ts) AS te FROM events
     ), w AS (
       SELECT event_type, value,
-             unnest(generate_series((te // 600000000) * 600000000 - 1200000000,
-                                    (te // 600000000) * 600000000,
-                                    600000000)) AS ws
+             unnest(generate_series((te // {_SLIDE_US}) * {_SLIDE_US} - {_BACK_US},
+                                    (te // {_SLIDE_US}) * {_SLIDE_US},
+                                    {_SLIDE_US})) AS ws
       FROM e
     )"""

@@ -29,13 +29,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.streaming.stateful import JUMP_TIMEOUT_S, SESSION_GAP_S
+
 
 def mark_sessions(
     df: DataFrame,
     key: str = "user_id",
     ts: str = "ts",
     order_tiebreak: str = "event_id",
-    session_gap_s: int = 1800,
+    session_gap_s: int = SESSION_GAP_S,
 ) -> DataFrame:
     """Add `is_entry` (session-entry flag) and `session_id` (count of
     entries so far per key — a deterministic session surrogate)."""
@@ -56,8 +58,8 @@ def detect_jumps(
     key: str = "user_id",
     ts: str = "ts",
     order_tiebreak: str = "event_id",
-    session_gap_s: int = 1800,
-    jump_timeout_s: int = 600,
+    session_gap_s: int = SESSION_GAP_S,
+    jump_timeout_s: int = JUMP_TIMEOUT_S,
 ) -> DataFrame:
     """W7: rows that are session entries with no follow-up event within
     `jump_timeout_s` (bounce by timeout) or whose immediate successor is

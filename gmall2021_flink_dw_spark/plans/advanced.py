@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark.functions.windows import (
     DUCK_HOPPING_CTES,
+    HOP_SIZE_S,
+    HOP_SLIDE_S,
     duck_sessions_ctes,
 )
 from gmall2021_flink_dw_spark.operators.joins import asof_join, salted_aggregate
@@ -302,7 +304,10 @@ def tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dws_hopping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
-        ev.groupBy(F.window("ts", "30 minutes", "10 minutes"), "event_type")
+        ev.groupBy(
+            F.window("ts", f"{HOP_SIZE_S} seconds", f"{HOP_SLIDE_S} seconds"),
+            "event_type",
+        )
         .agg(
             F.count(F.lit(1)).alias("pv"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sv"),

@@ -37,9 +37,31 @@ from gmall2021_flink_dw_spark.datapipe.dsir import (
     dsir_scores,
 )
 from gmall2021_flink_dw_spark.datapipe.multimodal import (
+    AUDIO_FEATURES_SCHEMA,
+    BMP_DECODED_SCHEMA,
+    DECODED_SCHEMA,
+    EMBED_SCHEMA,
+    FRAME_SCHEMA,
+    IMAGE_STATS_SCHEMA,
+    JPEG_AC_SCHEMA,
+    MIXED_DECODED_SCHEMA,
+    RESIZE_SCHEMA,
     attach_media,
     attach_payload,
-    decode_features,
+    audio_features_row,
+    bmp_decode_row,
+    embed_row,
+    frame_rows,
+    image_stats_row,
+    jpeg_ac_payload,
+    jpeg_ac_row,
+    mixed_decode_row,
+    mixed_payload,
+    patterned_bmp_payload,
+    resize_row,
+    row_stage,
+    solid_bmp_payload,
+    stub_decode_row,
 )
 from gmall2021_flink_dw_spark.datapipe.text import (
     DUCK_BIGRAMS_SQL,
@@ -464,7 +486,7 @@ def ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return decode_features(attach_payload(docs))
+    return row_stage(attach_payload(docs), stub_decode_row, DECODED_SCHEMA)
 
 
 @register(
@@ -496,14 +518,11 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "multimodal", "udf", "codec"),
 )
 def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        decode_bmp_features,
-        solid_bmp_payload,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return decode_bmp_features(
-        attach_media(docs, solid_bmp_payload, F.md5("text"))
+    return row_stage(
+        attach_media(docs, solid_bmp_payload, F.md5("text")),
+        bmp_decode_row,
+        BMP_DECODED_SCHEMA,
     )
 
 
@@ -559,18 +578,15 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the oracle recomputes (PNG/BMP/GIF checksum = sum of decoded RGB "
     "bytes = 3*w*h*color; WAV checksum = sum of the deterministic "
     "int16 ramp). datapipe/multimodal.py:encode_png/decode_png/"
-    "encode_wav/decode_wav/encode_gif/decode_gif/decode_mixed_batch.",
+    "encode_wav/decode_wav/encode_gif/decode_gif/mixed_decode_row.",
     tags=("datapipe", "multimodal", "udf", "codec"),
 )
 def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        decode_mixed_features,
-        mixed_payload,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return decode_mixed_features(
-        attach_media(docs, mixed_payload, F.md5("text"))
+    return row_stage(
+        attach_media(docs, mixed_payload, F.md5("text")),
+        mixed_decode_row,
+        MIXED_DECODED_SCHEMA,
     )
 
 
@@ -610,16 +626,10 @@ def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "magnitude via Parseval), ac44_sum (the (4,4) projection = "
     "128*sum(qA) — zero under wrong-position or wrong-sign decode). "
     "100 TB shape: embarrassingly parallel mapInPandas, no shuffle. "
-    "datapipe/multimodal.py:encode_jpeg_gray_blocks/"
-    "jpeg_ac_features_batch.",
+    "datapipe/multimodal.py:encode_jpeg_gray_blocks/jpeg_ac_row.",
     tags=("datapipe", "multimodal", "udf", "codec"),
 )
 def multimodal_decode_jpeg_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        jpeg_ac_features,
-        jpeg_ac_payload,
-    )
-
     # The full-IDCT decode is the rare CPU-BOUND Python stage: the
     # sf0.1 documents table is one parquet file -> one partition, so
     # without this round-robin exchange (8-byte doc_id rows — KBs) the
@@ -631,7 +641,9 @@ def multimodal_decode_jpeg_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    return jpeg_ac_features(attach_media(docs, jpeg_ac_payload))
+    return row_stage(
+        attach_media(docs, jpeg_ac_payload), jpeg_ac_row, JPEG_AC_SCHEMA
+    )
 
 
 @register(
@@ -664,20 +676,17 @@ def multimodal_decode_jpeg_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the kernel, so every field is bit-exact against the oracle's "
     "closed-form ramp recomputation. 100 TB shape: embarrassingly "
     "parallel mapInPandas (numpy int64 vector math per payload), no "
-    "shuffle at all. datapipe/multimodal.py:audio_features_batch.",
+    "shuffle at all. datapipe/multimodal.py:audio_features_row.",
     tags=("datapipe", "multimodal", "udf", "audio"),
 )
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        extract_audio_features,
-        mixed_payload,
-    )
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 4 == 2
     )
-    return extract_audio_features(
-        attach_media(docs, mixed_payload, F.md5("text"))
+    return row_stage(
+        attach_media(docs, mixed_payload, F.md5("text")),
+        audio_features_row,
+        AUDIO_FEATURES_SCHEMA,
     )
 
 
@@ -716,17 +725,16 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "free integer reductions, bit-exact against the oracle's closed-"
     "form pixel recomputation. 100 TB shape: embarrassingly parallel "
     "mapInPandas, zero shuffles. datapipe/multimodal.py:"
-    "encode_bmp/decode_bmp_pixels/image_stats_batch.",
+    "encode_bmp/decode_bmp_pixels/image_stats_row.",
     tags=("datapipe", "multimodal", "udf", "codec"),
 )
 def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        extract_image_stats,
-        patterned_bmp_payload,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return extract_image_stats(attach_media(docs, patterned_bmp_payload))
+    return row_stage(
+        attach_media(docs, patterned_bmp_payload),
+        image_stats_row,
+        IMAGE_STATS_SCHEMA,
+    )
 
 
 @register(
@@ -1265,10 +1273,8 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "multimodal", "udf"),
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import sample_frames
-
     docs = load_table(spark, sf_dir, "documents")
-    return sample_frames(attach_payload(docs))
+    return row_stage(attach_payload(docs), frame_rows, FRAME_SCHEMA)
 
 
 @register(
@@ -1935,7 +1941,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Multimodal feature extraction: binary payload -> embedding "
     "vector through a real Arrow mapInPandas stage "
-    "(datapipe/multimodal.py::extract_embeddings) — the batch-iteration "
+    "(datapipe/multimodal.py::embed_row) — the batch-iteration "
     "contract a production vision/audio encoder drops into (encoder "
     "itself stubbed: libs absent by design; the stub derives the vector "
     "from the content hash, which is exactly what makes the stage "
@@ -1945,12 +1951,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "multimodal", "udf", "ann"),
 )
 def multimodal_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import (
-        extract_embeddings,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return extract_embeddings(attach_payload(docs))
+    return row_stage(attach_payload(docs), embed_row, EMBED_SCHEMA)
 
 
 @register(
@@ -1985,10 +1987,8 @@ def multimodal_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datapipe", "multimodal", "udf"),
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall2021_flink_dw_spark.datapipe.multimodal import resize_images
-
     docs = load_table(spark, sf_dir, "documents")
-    return resize_images(attach_payload(docs))
+    return row_stage(attach_payload(docs), resize_row, RESIZE_SCHEMA)
 
 
 # GPT-2-style pretokenizer, RE2-compatible (no lookahead — DuckDB's RE2

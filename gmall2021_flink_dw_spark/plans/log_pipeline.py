@@ -23,6 +23,7 @@ from gmall2021_flink_dw_spark.operators.split import (
 )
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
+from gmall2021_flink_dw_spark.streaming.stateful import JUMP_TIMEOUT_S, SESSION_GAP_S
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,7 +305,7 @@ def dwd_new_user_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dwm_user_jump",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
       SELECT user_id, event_id, epoch_us(ts) AS ts_us,
              lag(epoch_us(ts))  OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us,
@@ -313,8 +314,8 @@ def dwd_new_user_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id, event_id, ts_us
     FROM ordered
-    WHERE (prev_us IS NULL OR ts_us - prev_us > 1800*1000000)
-      AND (next_us IS NULL OR next_us - ts_us > 600*1000000)
+    WHERE (prev_us IS NULL OR ts_us - prev_us > {SESSION_GAP_S}*1000000)
+      AND (next_us IS NULL OR next_us - ts_us > {JUMP_TIMEOUT_S}*1000000)
     """,
     doc="W7 CEP bounce detection (UserJumpDetailApp.java:77-134): strict-"
     "contiguity NFA + 10s timeout re-expressed as lag/lead over the key; "
@@ -332,11 +333,11 @@ def dwm_user_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dwm_session_stats",
-    oracle="""
+    oracle=f"""
     WITH marked AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800*1000000
+                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_S}*1000000
                   THEN 1 ELSE 0 END AS is_entry
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from gmall2021_flink_dw_spark.functions.windows import FMT, duck_window_bounds
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
+from gmall2021_flink_dw_spark.streaming.stateful import SESSION_GAP_S
 
 _HOUR = 3600
 _DAY = 86400
@@ -430,7 +431,7 @@ _CVS_STT, _CVS_EDT = duck_window_bounds("ts", _HOUR)
              CASE WHEN lag(epoch_us(ts)) OVER (
                     PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                   OR epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id) > 1800*1000000
+                    PARTITION BY user_id ORDER BY ts, event_id) > {SESSION_GAP_S}*1000000
                   THEN 1 ELSE 0 END AS sv_ct,
              cast(value as decimal(18,2)) AS dur
       FROM events
@@ -475,7 +476,7 @@ def dws_visitor_stats_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.row_number().over(w_day) == 1, 1).otherwise(0).alias("uv_ct"),
         F.lit(0).alias("pv_ct"),
         F.when(
-            prev_us.isNull() | (ts_us - prev_us > 1800 * 1_000_000), 1
+            prev_us.isNull() | (ts_us - prev_us > SESSION_GAP_S * 1_000_000), 1
         )
         .otherwise(0)
         .alias("sv_ct"),

@@ -26,6 +26,8 @@ from gmall2021_flink_dw_spark.functions.windows import (
     DUCK_FMT,
     DUCK_HOPPING_CTES,
     FMT,
+    HOP_SIZE_S,
+    HOP_SLIDE_S,
     duck_sessions_ctes,
     duck_window_bounds,
 )
@@ -38,6 +40,7 @@ from gmall2021_flink_dw_spark.streaming.pipelines import (
 )
 from gmall2021_flink_dw_spark.streaming.sources import stream_table
 from gmall2021_flink_dw_spark.streaming.stateful import (
+    JUMP_TIMEOUT_S,
     SESSION_GAP_S,
     correct_new_user_stream_bucketed,
     jump_detect_stream_bucketed,
@@ -289,7 +292,7 @@ def streaming_uv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_jump_detect",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
       SELECT user_id, event_id, epoch_us(ts) AS ts_us,
              lag(epoch_us(ts))  OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us,
@@ -299,8 +302,8 @@ def streaming_uv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, event_id, ts_us,
            TRUE AS containment_ok, TRUE AS coverage_ok
     FROM ordered
-    WHERE (prev_us IS NULL OR ts_us - prev_us > 1800*1000000)
-      AND (next_us IS NULL OR next_us - ts_us > 600*1000000)
+    WHERE (prev_us IS NULL OR ts_us - prev_us > {SESSION_GAP_S}*1000000)
+      AND (next_us IS NULL OR next_us - ts_us > {JUMP_TIMEOUT_S}*1000000)
     """,
     doc="W7 CEP under Structured Streaming (applyInPandasWithState with "
     "event-time timers): emitted bounces are a subset of the batch "
@@ -415,7 +418,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(sum(cast(value as decimal(18,2))) as double) AS sv
     FROM w
     GROUP BY 1, 2
-    HAVING ws + 1800000000 <= (SELECT max(te) FROM e)
+    HAVING ws + {HOP_SIZE_S * 1_000_000} <= (SELECT max(te) FROM e)
     """,
     doc="W3 HOPPING windows under Structured Streaming (size 30 min, "
     "slide 10 min — the overlap form the reference runs as Flink "
@@ -433,7 +436,8 @@ def streaming_hopping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = (
         events.groupBy(
-            F.window("ts", "30 minutes", "10 minutes"), "event_type"
+            F.window("ts", f"{HOP_SIZE_S} seconds", f"{HOP_SLIDE_S} seconds"),
+            "event_type",
         )
         .agg(
             F.count(F.lit(1)).alias("pv"),

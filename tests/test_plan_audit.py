@@ -23,6 +23,8 @@ compile (not execute) the physical plan at sf0.001 and assert:
    Python entry points anywhere.
 5. The package is what the engine runs: no top-level package function
    or class is reached from tests/ alone.
+6. Each window constant is written once: no plan or operator spells
+   out the session gap, the jump timeout or the hopping size again.
 """
 
 from __future__ import annotations
@@ -311,3 +313,25 @@ def test_package_defs_are_reached_outside_tests():
         and node.name not in names
     ]
     assert not unreached, f"package code only tests reach: {unreached}"
+
+
+# The session gap (1800 s), the jump timeout (600 s) and the hopping
+# size (1800 s) written out in micros, or as a default argument.
+_BARE_WINDOW_LITERAL = re.compile(
+    r"\b(?:1800|600)\s*\*\s*1_?000_?000\b|\b1800000000\b|\bint = (?:1800|600)\b"
+)
+
+
+def test_window_constants_are_written_once():
+    """Plans and operators take streaming/stateful.py's SESSION_GAP_S
+    and JUMP_TIMEOUT_S and functions/windows.py's HOP_SIZE_S and
+    HOP_SLIDE_S, so an oracle and its query cannot drift apart on a
+    window bound."""
+    hits = [
+        f"{f.relative_to(_ROOT)}:{i}: {line.strip()}"
+        for sub in ("plans", "operators")
+        for f in sorted((_PKG / sub).rglob("*.py"))
+        for i, line in enumerate(f.read_text(encoding="utf-8").splitlines(), 1)
+        if _BARE_WINDOW_LITERAL.search(line)
+    ]
+    assert not hits, f"window constants written out again: {hits}"

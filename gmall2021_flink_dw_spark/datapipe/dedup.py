@@ -647,23 +647,10 @@ def merged_duplicate_spans_hashed(
     126M-row stream, and shipping it back across Arrow costs more
     than the JVM's per-window string allocs.
     """
-    grams = _gram_stream(docs, min_len).select(
-        F.shiftleft(F.col("doc_id").cast("long"), 32)
-        .bitwiseOR(F.col("pos").cast("long"))
-        .alias("dp"),
-        F.xxhash64(
-            F.col("text").substr(F.col("pos") + 1, F.lit(min_len))
-        ).alias("k"),
-    )
     hits = (
-        grams.withColumn(
-            "c", F.count(F.lit(1)).over(Window.partitionBy("k"))
-        )
+        _gram_stream(docs, min_len)
+        .withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("k")))
         .where(F.col("c") > 1)
-        .select(
-            F.shiftright(F.col("dp"), 32).alias("doc_id"),
-            F.col("dp").bitwiseAND(F.lit(4294967295)).cast("int").alias("pos"),
-        )
     )
     return _merge_hit_positions(hits, min_len)
 
@@ -687,30 +674,21 @@ def remove_duplicate_spans_keepfirst_hashed(
     is ever shuffled and nothing is persisted. Collision
     contract as merged_duplicate_spans_hashed; the driver oracle is the
     exact-string recomputation."""
-    grams = _gram_stream(docs, min_len).select(
-        F.shiftleft(F.col("doc_id").cast("long"), 32)
-        .bitwiseOR(F.col("pos").cast("long"))
-        .alias("dp"),
-        F.xxhash64(
-            F.col("text").substr(F.col("pos") + 1, F.lit(min_len))
-        ).alias("k"),
-    )
     w_first = Window.partitionBy("k").orderBy("dp")
-    ranked = grams.select(
+    ranked = _gram_stream(docs, min_len).select(
         "dp",
         F.row_number().over(w_first).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy("k")).alias("c"),
     )
-    hits = ranked.where((F.col("c") > 1) & (F.col("rn") > 1)).select(
-        F.shiftright(F.col("dp"), 32).alias("doc_id"),
-        F.col("dp").bitwiseAND(F.lit(4294967295)).cast("int").alias("pos"),
-    )
+    hits = ranked.where((F.col("c") > 1) & (F.col("rn") > 1))
     spans = _merge_hit_positions(hits, min_len)
     return _cut_spans(docs, spans)
 
 
 def _gram_stream(docs: DataFrame, min_len: int) -> DataFrame:
-    """(doc_id, pos, text) exploded to every gram start position.
+    """Every gram start position of docs.text as (dp, k): the packed
+    dp = doc_id << 32 | pos and k = xxhash64 of the ``min_len``-char
+    gram there.
 
     Repartition BEFORE the explode: the gram stream is ~min_len x the
     input, so parallelism must track the OUTPUT volume, not the scan's
@@ -747,14 +725,22 @@ def _gram_stream(docs: DataFrame, min_len: int) -> DataFrame:
             ).alias("pos"),
             "text",
         )
+        .select(
+            F.shiftleft(F.col("doc_id").cast("long"), 32)
+            .bitwiseOR(F.col("pos").cast("long"))
+            .alias("dp"),
+            F.xxhash64(
+                F.col("text").substr(F.col("pos") + 1, F.lit(min_len))
+            ).alias("k"),
+        )
     )
 
 
 def _merge_hit_positions(hits: DataFrame, min_len: int) -> DataFrame:
-    """Merge (doc_id, pos) duplicate-gram hits into maximal per-doc
-    spans [s, e): running max of span end over preceding rows; a
-    position beyond it starts a new span; cumulative sum numbers the
-    spans. Interval-union correctness: every interval in a merged
+    """Unpack the `dp` of duplicate-gram hits to (doc_id, pos) and merge
+    them into maximal per-doc spans [s, e): running max of span end
+    over preceding rows; a position beyond it starts a new span;
+    cumulative sum numbers the spans. Interval-union correctness: every interval in a merged
     group starts at or before the running union end, so the union
     stays one contiguous interval [min(pos), max(pos) + min_len)."""
     w_prev = (
@@ -763,7 +749,10 @@ def _merge_hit_positions(hits: DataFrame, min_len: int) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     run_end = F.max(F.col("pos") + min_len).over(w_prev)
-    marked = hits.withColumn(
+    marked = hits.select(
+        F.shiftright(F.col("dp"), 32).alias("doc_id"),
+        F.col("dp").bitwiseAND(F.lit(4294967295)).cast("int").alias("pos"),
+    ).withColumn(
         "is_start",
         F.when(F.col("pos") > F.coalesce(run_end, F.lit(-1)), 1).otherwise(0),
     )

@@ -36,19 +36,27 @@ def duck_window_bounds(ts_col: str, seconds: int) -> tuple[str, str]:
     )
 
 
+def duck_is_entry(gap_s: int) -> str:
+    """DuckDB 1/0 flag of the session-entry rule over `events`: an event
+    opens a session when it is the user's first or comes MORE than
+    `gap_s` seconds after the previous one. Spark merges an event exactly
+    one gap later into the open session (measured on 4.1 in batch and in
+    a memory-sink stream). The SELECT must define
+    `WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)`."""
+    prev_us = "lag(epoch_us(ts)) OVER w"
+    return (
+        f"CASE WHEN {prev_us} IS NULL OR epoch_us(ts) - {prev_us} > {gap_s}*1000000 "
+        "THEN 1 ELSE 0 END"
+    )
+
+
 def duck_sessions_ctes(gap_s: int) -> str:
     """DuckDB CTEs `marked` and `sessions` rebuilding F.session_window
-    over `events`: per user in (ts, event_id) order, an event opens a new
-    session when it is the user's first or comes MORE than `gap_s`
-    seconds after the previous one. Spark merges an event exactly one
-    gap later into the open session (measured on 4.1 in batch and in a
-    memory-sink stream). `sessions` carries (user_id, ts, value, sid)."""
+    over `events`: per user in (ts, event_id) order, each entry
+    (duck_is_entry) opens the next session. `sessions` carries
+    (user_id, ts, value, sid)."""
     return f"""marked AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                          > {gap_s}*1000000
-                  THEN 1 ELSE 0 END AS is_entry
+      SELECT user_id, ts, event_id, value, {duck_is_entry(gap_s)} AS is_entry
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), sessions AS (
@@ -56,6 +64,23 @@ def duck_sessions_ctes(gap_s: int) -> str:
              sum(is_entry) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                  ROWS UNBOUNDED PRECEDING) AS sid
       FROM marked
+    )"""
+
+
+def duck_jumps_cte(gap_s: int, timeout_s: int) -> str:
+    """DuckDB CTE `jumps` replaying operators/cep.py::detect_jumps over
+    `events`: (user_id, event_id, ts_us) of each session entry whose next
+    event is absent or more than `timeout_s` seconds later."""
+    return f"""jumps AS (
+      SELECT user_id, event_id, ts_us FROM (
+        SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+               {duck_is_entry(gap_s)} AS is_entry,
+               lead(epoch_us(ts)) OVER w AS next_us
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+      )
+      WHERE is_entry = 1
+        AND (next_us IS NULL OR next_us - ts_us > {timeout_s}*1000000)
     )"""
 
 

@@ -14,12 +14,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gmall2021_flink_dw_spark.functions.money import (
+    duck_disc_price,
+    duck_disc_price_sum,
+    duck_money_sum,
+)
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
-
-_DISC_AMOUNT = (
-    "cast(l_extendedprice as decimal(18,2)) * (1 - cast(l_discount as decimal(4,2)))"
-)
 
 
 def _sql(spark: SparkSession, sf_dir: str, tables: list[str], sql: str) -> DataFrame:
@@ -28,9 +29,9 @@ def _sql(spark: SparkSession, sf_dir: str, tables: list[str], sql: str) -> DataF
     return spark.sql(sql)
 
 
-_GMV_SQL = """
+_GMV_SQL = f"""
 SELECT strftime(o_orderdate, '%Y-%m-%d') AS dt,
-       cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS gmv,
+       {duck_money_sum("o_totalprice")} AS gmv,
        count(*) AS order_ct
 FROM orders
 WHERE o_orderdate >= timestamp '1997-03-01' AND o_orderdate < timestamp '1997-04-01'
@@ -51,98 +52,67 @@ def ads_gmv_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, ["orders"], sql)
 
 
+_TOP_BRANDS_SQL = f"""
+SELECT p_brand,
+       {duck_disc_price_sum()} AS order_amount
+FROM lineitem JOIN part ON l_partkey = p_partkey
+GROUP BY p_brand
+HAVING sum({duck_disc_price()}) > 0
+ORDER BY order_amount DESC, p_brand
+LIMIT 10
+"""
+
+
 @register(
     "ads_top_brands",
-    oracle=f"""
-    SELECT p_brand,
-           cast(sum({_DISC_AMOUNT}) as double) AS order_amount
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_brand
-    HAVING sum({_DISC_AMOUNT}) > 0
-    ORDER BY order_amount DESC, p_brand
-    LIMIT 10
-    """,
+    oracle=_TOP_BRANDS_SQL,
     doc="A7 trademark top-N (ProductStatsMapper.java:34-38): GROUP BY + "
     "SUM + HAVING>0 + ORDER BY DESC + LIMIT 10 (SugarController default).",
     tags=("ads", "agg", "topn", "sql"),
 )
 def ads_top_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
-        spark,
-        sf_dir,
-        ["lineitem", "part"],
-        f"""
-        SELECT p_brand,
-               cast(sum({_DISC_AMOUNT}) as double) AS order_amount
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY p_brand
-        HAVING sum({_DISC_AMOUNT}) > 0
-        ORDER BY order_amount DESC, p_brand
-        LIMIT 10
-        """,
-    )
+    return _sql(spark, sf_dir, ["lineitem", "part"], _TOP_BRANDS_SQL)
+
+
+_TOP_TYPES_SQL = f"""
+SELECT p_type,
+       {duck_disc_price_sum()} AS order_amount,
+       count(DISTINCT l_orderkey) AS order_ct
+FROM lineitem JOIN part ON l_partkey = p_partkey
+GROUP BY p_type
+HAVING sum({duck_disc_price()}) > 0
+ORDER BY order_amount DESC, p_type
+LIMIT 4
+"""
 
 
 @register(
     "ads_top_types",
-    oracle=f"""
-    SELECT p_type,
-           cast(sum({_DISC_AMOUNT}) as double) AS order_amount,
-           count(DISTINCT l_orderkey) AS order_ct
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_type
-    HAVING sum({_DISC_AMOUNT}) > 0
-    ORDER BY order_amount DESC, p_type
-    LIMIT 4
-    """,
+    oracle=_TOP_TYPES_SQL,
     doc="A7 category3 top-N analog (limit 4 = SugarController.java:118 "
     "default); p_type stands in for category.",
     tags=("ads", "agg", "topn", "sql"),
 )
 def ads_top_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
-        spark,
-        sf_dir,
-        ["lineitem", "part"],
-        f"""
-        SELECT p_type,
-               cast(sum({_DISC_AMOUNT}) as double) AS order_amount,
-               count(DISTINCT l_orderkey) AS order_ct
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY p_type
-        HAVING sum({_DISC_AMOUNT}) > 0
-        ORDER BY order_amount DESC, p_type
-        LIMIT 4
-        """,
-    )
+    return _sql(spark, sf_dir, ["lineitem", "part"], _TOP_TYPES_SQL)
+
+
+_TOP_PARTS_SQL = f"""
+SELECT p_partkey, p_name,
+       {duck_disc_price_sum()} AS order_amount
+FROM lineitem JOIN part ON l_partkey = p_partkey
+GROUP BY p_partkey, p_name
+HAVING sum({duck_disc_price()}) > 0
+ORDER BY order_amount DESC, p_partkey
+LIMIT 20
+"""
 
 
 @register(
     "ads_top_parts",
-    oracle=f"""
-    SELECT p_partkey, p_name,
-           cast(sum({_DISC_AMOUNT}) as double) AS order_amount
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_partkey, p_name
-    HAVING sum({_DISC_AMOUNT}) > 0
-    ORDER BY order_amount DESC, p_partkey
-    LIMIT 20
-    """,
+    oracle=_TOP_PARTS_SQL,
     doc="A7 spu top-N analog (limit 20 = SugarController.java:159 default).",
     tags=("ads", "agg", "topn", "sql"),
 )
 def ads_top_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
-        spark,
-        sf_dir,
-        ["lineitem", "part"],
-        f"""
-        SELECT p_partkey, p_name,
-               cast(sum({_DISC_AMOUNT}) as double) AS order_amount
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY p_partkey, p_name
-        HAVING sum({_DISC_AMOUNT}) > 0
-        ORDER BY order_amount DESC, p_partkey
-        LIMIT 20
-        """,
-    )
+    return _sql(spark, sf_dir, ["lineitem", "part"], _TOP_PARTS_SQL)

@@ -14,6 +14,13 @@ from gmall2021_flink_dw_spark.functions.windows import (
     HOP_SLIDE_S,
     duck_sessions_ctes,
 )
+from gmall2021_flink_dw_spark.functions.money import (
+    disc_price_sum,
+    duck_disc_price_sum,
+    duck_money_sum,
+    money,
+    money_sum,
+)
 from gmall2021_flink_dw_spark.operators.joins import asof_join, salted_aggregate
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
@@ -22,8 +29,6 @@ from gmall2021_flink_dw_spark.sources.cdc import (
     orders_changelog,
 )
 from gmall2021_flink_dw_spark.streaming.stateful import SESSION_GAP_S
-
-_DISC = "cast(l_extendedprice as decimal(18,2)) * (1 - cast(l_discount as decimal(4,2)))"
 
 
 @register(
@@ -86,7 +91,7 @@ def cdc_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(min(ts)) AS session_start_us,
            epoch_us(max(ts)) + {SESSION_GAP_S}*1000000 AS session_end_us,
            count(*) AS n_events,
-           cast(sum(cast(value as decimal(18,2))) as double) AS sv_value
+           {duck_money_sum("value")} AS sv_value
     FROM sessions GROUP BY user_id, sid
     """,
     doc="W3 extension: Spark's NATIVE session_window (gap 30 min) — "
@@ -101,7 +106,7 @@ def dws_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.session_window("ts", f"{SESSION_GAP_S} seconds"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sv_value"),
+            money_sum("value").alias("sv_value"),
         )
         .select(
             "user_id",
@@ -119,10 +124,10 @@ def dws_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dws_salted_agg",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            count(*) AS n,
-           cast(sum(cast(value as decimal(18,2))) as double) AS total
+           {duck_money_sum("value")} AS total
     FROM events GROUP BY event_type
     """,
     doc="Skew-resistant aggregation: pre-aggregate on (key, salt) then "
@@ -138,7 +143,7 @@ def dws_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["event_type"],
         aggs={
             "n": (F.count(F.lit(1)), "sum"),
-            "total": (F.sum(F.col("value").cast("decimal(18,2)")), "sum"),
+            "total": (F.sum(money("value")), "sum"),
         },
         salt_buckets=16,
     )
@@ -153,7 +158,7 @@ def dws_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q10_returns",
     oracle=f"""
     SELECT c_custkey, c_name, n_name,
-           cast(sum({_DISC}) as double) AS revenue
+           {duck_disc_price_sum()} AS revenue
     FROM customer JOIN orders   ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
                   JOIN nation   ON c_nationkey = n_nationkey
@@ -175,15 +180,12 @@ def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     nation = load_table(spark, sf_dir, "nation")
-    disc = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(disc).cast("double").alias("revenue"))
+        .agg(disc_price_sum().alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
     )
@@ -194,7 +196,7 @@ def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             cast(sum({_DISC}) as double) AS total_revenue
+             {duck_disc_price_sum()} AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= timestamp '1996-01-01'
         AND l_shipdate <  timestamp '1996-04-01'
@@ -213,11 +215,8 @@ def tpch_q15_topsupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp_ntz"))
     )
-    disc = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(disc).cast("double").alias("total_revenue")
+        disc_price_sum().alias("total_revenue")
     )
     supp = load_table(spark, sf_dir, "supplier")
     mx = revenue.agg(F.max("total_revenue").alias("__mx"))
@@ -233,7 +232,7 @@ def tpch_q15_topsupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            strftime(l_shipdate, '%Y') AS l_year,
-           cast(sum({_DISC}) as double) AS revenue
+           {duck_disc_price_sum()} AS revenue
     FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
                   JOIN orders   ON o_orderkey = l_orderkey
                   JOIN customer ON c_custkey = o_custkey
@@ -263,9 +262,6 @@ def tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
-    disc = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
     pair = (
         (F.col("supp_nation") == "NATION_9") & (F.col("cust_nation") == "NATION_3")
     ) | ((F.col("supp_nation") == "NATION_3") & (F.col("cust_nation") == "NATION_9"))
@@ -281,7 +277,7 @@ def tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.date_format("l_shipdate", "yyyy").alias("l_year"),
         )
-        .agg(F.sum(disc).cast("double").alias("revenue"))
+        .agg(disc_price_sum().alias("revenue"))
     )
 
 
@@ -290,7 +286,7 @@ def tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {DUCK_HOPPING_CTES}
     SELECT ws, event_type, count(*) AS pv,
-           cast(sum(cast(value as decimal(18,2))) as double) AS sv
+           {duck_money_sum("value")} AS sv
     FROM w GROUP BY 1, 2
     """,
     doc="W3 extension: HOPPING window (size 30 min, slide 10 min) — each "
@@ -310,7 +306,7 @@ def dws_hopping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("pv"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sv"),
+            money_sum("value").alias("sv"),
         )
         .select(
             F.unix_micros(F.col("window.start").cast("timestamp")).alias("ws"),

@@ -83,6 +83,7 @@ from gmall2021_flink_dw_spark.datapipe.text import (
     quality_gate,
     with_tokens,
 )
+from gmall2021_flink_dw_spark.functions.money import duck_money_sum, money_sum
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
 from gmall2021_flink_dw_spark.streaming.pipelines import replay_to_delta_log
@@ -737,20 +738,24 @@ def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_substring_spans_hashed",
-    oracle="""
-    WITH g AS (
+# DuckDB blocks of the ExactSubstr oracles (50-char grams), built once:
+# `g` is every (doc_id, pos, gram); `d`/`hits` the positions whose gram
+# occurs more than once; `brk`/`grp`/`spans` merge (doc_id, pos) `hits`
+# into maximal spans [s, e); _DUCK_CUT_SPANS cuts `spans` out of every
+# doc as (doc_id, clean_text, removed_chars).
+_DUCK_GRAMS = """g AS (
       SELECT doc_id, u.i AS pos, substr(text, u.i + 1, 50) AS gram
       FROM documents
       CROSS JOIN LATERAL unnest(range(0, greatest(len(text) - 49, 0)))
            AS u(i)
       WHERE len(text) >= 50
-    ), d AS (
+    )"""
+_DUCK_DUP_HITS = """d AS (
       SELECT gram FROM g GROUP BY gram HAVING count(*) > 1
     ), hits AS (
       SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)
-    ), brk AS (
+    )"""
+_DUCK_SPANS = """brk AS (
       SELECT doc_id, pos,
              CASE WHEN pos > coalesce(max(pos + 50) OVER (
                   PARTITION BY doc_id ORDER BY pos
@@ -765,7 +770,33 @@ def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), spans AS (
       SELECT doc_id, span_id, min(pos) AS s, max(pos) + 50 AS e
       FROM grp GROUP BY doc_id, span_id
+    )"""
+_DUCK_CUT_SPANS = """seg AS (
+      SELECT doc_id, s, e,
+             coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0)
+               AS seg_start
+      FROM spans
+    ), per_doc AS (
+      SELECT seg.doc_id,
+             string_agg(substr(text, seg_start + 1, s - seg_start), ''
+                        ORDER BY s) AS head,
+             max(e) AS max_e,
+             CAST(sum(e - s) AS BIGINT) AS removed_chars
+      FROM seg JOIN documents USING (doc_id)
+      GROUP BY seg.doc_id
     )
+    SELECT documents.doc_id,
+           CASE WHEN head IS NULL THEN text
+                ELSE coalesce(head, '') || substr(text, max_e + 1)
+           END AS clean_text,
+           coalesce(removed_chars, 0)::BIGINT AS removed_chars
+    FROM documents LEFT JOIN per_doc USING (doc_id)"""
+
+
+@register(
+    "dedup_substring_spans_hashed",
+    oracle=f"""
+    WITH {_DUCK_GRAMS}, {_DUCK_DUP_HITS}, {_DUCK_SPANS}
     SELECT doc_id, count(*)::INT AS dup_spans,
            CAST(sum(e - s) AS BIGINT) AS dup_chars
     FROM spans GROUP BY doc_id
@@ -3058,12 +3089,12 @@ def source_jsonl_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_orc_events",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            count(*)::BIGINT AS n_events,
            CAST(min(epoch_us(ts)) AS BIGINT) AS ts_min_us,
            CAST(max(epoch_us(ts)) AS BIGINT) AS ts_max_us,
-           cast(sum(cast(value as decimal(18,2))) as double) AS sum_value,
+           {duck_money_sum("value")} AS sum_value,
            CAST(sum(event_id) AS BIGINT) AS id_sum
     FROM events WHERE event_type <> 'view' GROUP BY event_type
     """,
@@ -3096,9 +3127,7 @@ def source_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.unix_micros(F.min("ts")).alias("ts_min_us"),
         F.unix_micros(F.max("ts")).alias("ts_max_us"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_value"),
+        money_sum("value").alias("sum_value"),
         F.sum("event_id").alias("id_sum"),
     )
 
@@ -4557,52 +4586,8 @@ def sample_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SUBSTR_CLEAN_ORACLE = """
-    WITH g AS (
-      SELECT doc_id, u.i AS pos, substr(text, u.i + 1, 50) AS gram
-      FROM documents
-      CROSS JOIN LATERAL unnest(range(0, greatest(len(text) - 49, 0)))
-           AS u(i)
-      WHERE len(text) >= 50
-    ), d AS (
-      SELECT gram FROM g GROUP BY gram HAVING count(*) > 1
-    ), hits AS (
-      SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)
-    ), brk AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos > coalesce(max(pos + 50) OVER (
-                  PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-                  THEN 1 ELSE 0 END AS is_start
-      FROM hits
-    ), grp AS (
-      SELECT doc_id, pos,
-             sum(is_start) OVER (PARTITION BY doc_id ORDER BY pos)
-               AS span_id
-      FROM brk
-    ), spans AS (
-      SELECT doc_id, span_id, min(pos) AS s, max(pos) + 50 AS e
-      FROM grp GROUP BY doc_id, span_id
-    ), seg AS (
-      SELECT doc_id, s, e,
-             coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0)
-               AS seg_start
-      FROM spans
-    ), per_doc AS (
-      SELECT seg.doc_id,
-             string_agg(substr(text, seg_start + 1, s - seg_start), ''
-                        ORDER BY s) AS head,
-             max(e) AS max_e,
-             CAST(sum(e - s) AS BIGINT) AS removed_chars
-      FROM seg JOIN documents USING (doc_id)
-      GROUP BY seg.doc_id
-    )
-    SELECT documents.doc_id,
-           CASE WHEN head IS NULL THEN text
-                ELSE coalesce(head, '') || substr(text, max_e + 1)
-           END AS clean_text,
-           coalesce(removed_chars, 0)::BIGINT AS removed_chars
-    FROM documents LEFT JOIN per_doc USING (doc_id)
+_SUBSTR_CLEAN_ORACLE = f"""
+    WITH {_DUCK_GRAMS}, {_DUCK_DUP_HITS}, {_DUCK_SPANS}, {_DUCK_CUT_SPANS}
 """
 
 
@@ -4636,14 +4621,8 @@ def dedup_substring_clean_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_substring_keepfirst_hashed",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, u.i AS pos, substr(text, u.i + 1, 50) AS gram
-      FROM documents
-      CROSS JOIN LATERAL unnest(range(0, greatest(len(text) - 49, 0)))
-           AS u(i)
-      WHERE len(text) >= 50
-    ), r AS (
+    oracle=f"""
+    WITH {_DUCK_GRAMS}, r AS (
       SELECT doc_id, pos,
              row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos)
                AS rn,
@@ -4651,41 +4630,7 @@ def dedup_substring_clean_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM g
     ), hits AS (
       SELECT doc_id, pos FROM r WHERE c > 1 AND rn > 1
-    ), brk AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos > coalesce(max(pos + 50) OVER (
-                  PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-                  THEN 1 ELSE 0 END AS is_start
-      FROM hits
-    ), grp AS (
-      SELECT doc_id, pos,
-             sum(is_start) OVER (PARTITION BY doc_id ORDER BY pos)
-               AS span_id
-      FROM brk
-    ), spans AS (
-      SELECT doc_id, span_id, min(pos) AS s, max(pos) + 50 AS e
-      FROM grp GROUP BY doc_id, span_id
-    ), seg AS (
-      SELECT doc_id, s, e,
-             coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0)
-               AS seg_start
-      FROM spans
-    ), per_doc AS (
-      SELECT seg.doc_id,
-             string_agg(substr(text, seg_start + 1, s - seg_start), ''
-                        ORDER BY s) AS head,
-             max(e) AS max_e,
-             CAST(sum(e - s) AS BIGINT) AS removed_chars
-      FROM seg JOIN documents USING (doc_id)
-      GROUP BY seg.doc_id
-    )
-    SELECT documents.doc_id,
-           CASE WHEN head IS NULL THEN text
-                ELSE coalesce(head, '') || substr(text, max_e + 1)
-           END AS clean_text,
-           coalesce(removed_chars, 0)::BIGINT AS removed_chars
-    FROM documents LEFT JOIN per_doc USING (doc_id)
+    ), {_DUCK_SPANS}, {_DUCK_CUT_SPANS}
     """,
     doc="Substring-level dedup, keep-first form (Lee et al.'s actual "
     "ExactSubstr contract): the globally FIRST occurrence of each "

@@ -11,6 +11,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.money import (
+    duck_money,
+    duck_money_sum,
+    money,
+    money_sum,
+)
+from gmall2021_flink_dw_spark.functions.windows import duck_jumps_cte, duck_sessions_ctes
 from gmall2021_flink_dw_spark.operators.cep import detect_jumps, mark_sessions
 from gmall2021_flink_dw_spark.operators.dedup import (
     correct_new_user_flag,
@@ -32,11 +39,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dwd_clean_events",
-    oracle="""
+    oracle=f"""
     SELECT event_id, user_id, event_type,
            epoch_us(ts) AS ts_us,
            cast(json_extract_string(props, '$.k') as bigint) AS props_k,
-           cast(cast(value as decimal(18,2)) as double) AS value
+           cast({duck_money("value")} as double) AS value
     FROM events
     WHERE event_type <> 'error'
       AND json_extract_string(props, '$.k') IS NOT NULL
@@ -57,13 +64,13 @@ def dwd_clean_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         "props_k",
-        F.col("value").cast("decimal(18,2)").cast("double").alias("value"),
+        money("value").cast("double").alias("value"),
     )
 
 
 @register(
     "kafka_wire_events",
-    oracle="""
+    oracle=f"""
     WITH wire AS (
       SELECT *, cast(user_id % 8 AS int) AS kafka_partition FROM events
     ), off AS (
@@ -74,7 +81,7 @@ def dwd_clean_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, user_id, event_type,
            epoch_us(ts) AS ts_us,
            cast(json_extract_string(props, '$.k') as bigint) AS props_k,
-           cast(cast(value as decimal(18,2)) as double) AS value,
+           cast({duck_money("value")} as double) AS value,
            kafka_partition, kafka_offset
     FROM off
     WHERE event_type <> 'error'
@@ -216,7 +223,7 @@ def kafka_wire_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts_us",
         "props_k",
-        F.col("value").cast("decimal(18,2)").cast("double").alias("value"),
+        money("value").cast("double").alias("value"),
         "kafka_partition",
         "kafka_offset",
     )
@@ -306,16 +313,8 @@ def dwd_new_user_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dwm_user_jump",
     oracle=f"""
-    WITH ordered AS (
-      SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             lag(epoch_us(ts))  OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us,
-             lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_us
-      FROM events
-    )
-    SELECT user_id, event_id, ts_us
-    FROM ordered
-    WHERE (prev_us IS NULL OR ts_us - prev_us > {SESSION_GAP_S}*1000000)
-      AND (next_us IS NULL OR next_us - ts_us > {JUMP_TIMEOUT_S}*1000000)
+    WITH {duck_jumps_cte(SESSION_GAP_S, JUMP_TIMEOUT_S)}
+    SELECT user_id, event_id, ts_us FROM jumps
     """,
     doc="W7 CEP bounce detection (UserJumpDetailApp.java:77-134): strict-"
     "contiguity NFA + 10s timeout re-expressed as lag/lead over the key; "
@@ -334,25 +333,12 @@ def dwm_user_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dwm_session_stats",
     oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts, event_id, value,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_S}*1000000
-                  THEN 1 ELSE 0 END AS is_entry
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id,
-             sum(is_entry) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS session_id,
-             value
-      FROM marked
-    )
-    SELECT user_id, cast(session_id as bigint) AS session_id,
+    WITH {duck_sessions_ctes(SESSION_GAP_S)}
+    SELECT user_id, cast(sid as bigint) AS session_id,
            count(*) AS n_events,
-           cast(sum(cast(value as decimal(18,2))) as double) AS sv_value
+           {duck_money_sum("value")} AS sv_value
     FROM sessions
-    GROUP BY user_id, session_id
+    GROUP BY user_id, sid
     """,
     doc="Sessionization (gap=30min) per key: lag+cumulative-sum session "
     "surrogate, then per-session aggregates — the sv_ct building block of "
@@ -363,5 +349,5 @@ def dwm_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     marked = mark_sessions(_events(spark, sf_dir))
     return marked.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sv_value"),
+        money_sum("value").alias("sv_value"),
     )

@@ -16,6 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.money import (
+    disc_price,
+    duck_disc_price,
+    duck_money,
+    money,
+)
 from gmall2021_flink_dw_spark.operators.joins import enrich_dims, interval_join
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
@@ -23,11 +29,10 @@ from gmall2021_flink_dw_spark.sources.batch import load_table
 
 @register(
     "dwm_order_wide",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderkey, l.l_linenumber, l.l_partkey,
            cast(l.l_quantity as bigint) AS quantity,
-           cast(cast(l.l_extendedprice as decimal(18,2))
-                * (1 - cast(l.l_discount as decimal(4,2))) as double) AS split_amount,
+           cast({duck_disc_price("l.")} as double) AS split_amount,
            strftime(o.o_orderdate, '%Y-%m-%d') AS create_date,
            cast(strftime(l.l_shipdate, '%H') as int) AS create_hour,
            o.o_orderstatus,
@@ -79,12 +84,7 @@ def dwm_order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.l_linenumber").alias("l_linenumber"),
         F.col("l.l_partkey").alias("l_partkey"),
         F.col("l.l_quantity").cast("bigint").alias("quantity"),
-        (
-            F.col("l.l_extendedprice").cast("decimal(18,2)")
-            * (F.lit(1) - F.col("l.l_discount").cast("decimal(4,2)"))
-        )
-        .cast("double")
-        .alias("split_amount"),
+        disc_price("l.").cast("double").alias("split_amount"),
         F.date_format("o.o_orderdate", "yyyy-MM-dd").alias("create_date"),
         F.date_format("l.l_shipdate", "HH").cast("int").alias("create_hour"),
         F.col("o.o_orderstatus").alias("o_orderstatus"),
@@ -154,13 +154,13 @@ def dwm_order_wide_missdrop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dwm_payment_wide",
-    oracle="""
+    oracle=f"""
     SELECT p.event_id AS pay_event_id,
            c.event_id AS src_event_id,
            p.user_id,
            epoch_us(p.ts) AS pay_ts_us,
            epoch_us(c.ts) AS src_ts_us,
-           cast(cast(p.value as decimal(18,2)) as double) AS pay_amount
+           cast({duck_money("p.value")} as double) AS pay_amount
     FROM events p
     JOIN events c ON p.user_id = c.user_id
                  AND c.event_type = 'click'
@@ -192,5 +192,5 @@ def dwm_payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.user_id").alias("user_id"),
         F.unix_micros(F.col("p.ts").cast("timestamp")).alias("pay_ts_us"),
         F.unix_micros(F.col("c.ts").cast("timestamp")).alias("src_ts_us"),
-        F.col("p.value").cast("decimal(18,2)").cast("double").alias("pay_amount"),
+        money("p.value").cast("double").alias("pay_amount"),
     )

@@ -17,7 +17,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall2021_flink_dw_spark.functions.windows import FMT, duck_window_bounds
+from gmall2021_flink_dw_spark.functions.money import (
+    disc_price,
+    duck_disc_price_sum,
+    duck_money,
+    duck_money_sum,
+    money,
+)
+from gmall2021_flink_dw_spark.functions.windows import (
+    FMT,
+    duck_is_entry,
+    duck_window_bounds,
+)
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
 from gmall2021_flink_dw_spark.streaming.stateful import SESSION_GAP_S
@@ -35,7 +46,7 @@ _VS_STT, _VS_EDT = duck_window_bounds("ts", _HOUR)
            count(*) AS pv_ct,
            count(DISTINCT user_id) AS uv_ct,
            count(DISTINCT CASE WHEN event_type = 'signup' THEN user_id END) AS new_uv_ct,
-           cast(sum(cast(value as decimal(18,2))) as double) AS dur_sum
+           {duck_money_sum("value")} AS dur_sum
     FROM events
     GROUP BY 1, 2, 3
     """,
@@ -63,7 +74,7 @@ def dws_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("event_type") == "signup", 1).otherwise(0)).alias(
                 "_signup"
             ),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("_dur"),
+            F.sum(money("value")).alias("_dur"),
         )
     )
     return (
@@ -94,9 +105,8 @@ _PS_STT, _PS_EDT = duck_window_bounds("l_shipdate", _DAY)
     "dws_product_stats",
     oracle=f"""
     SELECT {_PS_STT}, {_PS_EDT}, l_partkey, p_brand,
-           cast(sum(cast(l_quantity as decimal(18,2))) as double) AS sku_num,
-           cast(sum(cast(l_extendedprice as decimal(18,2))
-                * (1 - cast(l_discount as decimal(4,2)))) as double) AS order_amount,
+           {duck_money_sum("l_quantity")} AS sku_num,
+           {duck_disc_price_sum()} AS order_amount,
            count(DISTINCT l_orderkey) AS order_ct,
            count(*) AS line_ct
     FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -131,11 +141,8 @@ def dws_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(F.col("day"), F.col("l_partkey"))
         .groupBy("day", "l_partkey", "l_orderkey")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("_qty"),
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)"))
-            ).alias("_amount"),
+            F.sum(money("l_quantity")).alias("_qty"),
+            F.sum(disc_price()).alias("_amount"),
             F.count(F.lit(1)).alias("_lines"),
         )
     )
@@ -169,7 +176,7 @@ _PR_STT, _PR_EDT = duck_window_bounds("o_orderdate", 7 * _DAY)
     oracle=f"""
     SELECT {_PR_STT}, {_PR_EDT}, n_name AS province_name, r_name AS area_code,
            count(DISTINCT o_orderkey) AS order_count,
-           cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS order_amount
+           {duck_money_sum("o_totalprice")} AS order_amount
     FROM orders JOIN customer ON o_custkey = c_custkey
                 JOIN nation   ON c_nationkey = n_nationkey
                 JOIN region   ON n_regionkey = r_regionkey
@@ -202,9 +209,7 @@ def dws_province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = (
         enriched.repartition(F.col("w"), F.col("n_name"), F.col("r_name"))
         .groupBy("w", "n_name", "r_name", "o_orderkey")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("_amt")
-        )
+        .agg(F.sum(money("o_totalprice")).alias("_amt"))
     )
     return (
         pre.groupBy("w", "n_name", "r_name")
@@ -428,13 +433,10 @@ _CVS_STT, _CVS_EDT = duck_window_bounds("ts", _HOUR)
                     PARTITION BY user_id, date_trunc('day', ts)
                     ORDER BY ts, event_id) = 1 THEN 1 ELSE 0 END AS uv_ct,
              0 AS pv_ct,
-             CASE WHEN lag(epoch_us(ts)) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  OR epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id) > {SESSION_GAP_S}*1000000
-                  THEN 1 ELSE 0 END AS sv_ct,
-             cast(value as decimal(18,2)) AS dur
+             {duck_is_entry(SESSION_GAP_S)} AS sv_ct,
+             {duck_money("value")} AS dur
       FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), ranked AS (
       SELECT {_CVS_STT}, {_CVS_EDT}, event_type, uv_ct, pv_ct, sv_ct, dur,
              row_number() OVER (
@@ -480,7 +482,7 @@ def dws_visitor_stats_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("sv_ct"),
-        F.col("value").cast("decimal(18,2)").alias("dur"),
+        money("value").alias("dur"),
     ).withColumn("w", F.window("ts", f"{_HOUR} seconds"))
     w_grp = Window.partitionBy("w", "event_type").orderBy("ts", "event_id")
     ranked = measures.withColumn("rn", F.row_number().over(w_grp))

@@ -22,12 +22,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall2021_flink_dw_spark.cache import tracked_tempdir, tracked_view
+from gmall2021_flink_dw_spark.functions.money import (
+    duck_money,
+    duck_money_sum,
+    money_sum,
+)
 from gmall2021_flink_dw_spark.functions.windows import (
     DUCK_FMT,
     DUCK_HOPPING_CTES,
     FMT,
     HOP_SIZE_S,
     HOP_SLIDE_S,
+    duck_jumps_cte,
     duck_sessions_ctes,
     duck_window_bounds,
 )
@@ -118,7 +124,7 @@ _STT, _EDT = duck_window_bounds("ts", 3600)
     WITH agg AS (
       SELECT {_STT}, {_EDT}, event_type,
              count(*) AS pv_ct,
-             cast(sum(cast(value as decimal(18,2))) as double) AS dur_sum
+             {duck_money_sum("value")} AS dur_sum
       FROM events GROUP BY 1, 2, 3
     )
     SELECT stt, edt, event_type, pv_ct, dur_sum FROM agg
@@ -146,7 +152,7 @@ def streaming_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT {_STT}, {_EDT}, event_type,
              count(DISTINCT user_id) AS user_ct,
              count(*) AS pv_ct,
-             cast(sum(cast(value as decimal(18,2))) as double) AS amount
+             {duck_money_sum("value")} AS amount
       FROM events GROUP BY 1, 2, 3
     )
     SELECT stt, edt, event_type, user_ct, pv_ct, amount FROM agg
@@ -293,17 +299,10 @@ def streaming_uv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_jump_detect",
     oracle=f"""
-    WITH ordered AS (
-      SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             lag(epoch_us(ts))  OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us,
-             lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_us
-      FROM events
-    )
+    WITH {duck_jumps_cte(SESSION_GAP_S, JUMP_TIMEOUT_S)}
     SELECT user_id, event_id, ts_us,
            TRUE AS containment_ok, TRUE AS coverage_ok
-    FROM ordered
-    WHERE (prev_us IS NULL OR ts_us - prev_us > {SESSION_GAP_S}*1000000)
-      AND (next_us IS NULL OR next_us - ts_us > {JUMP_TIMEOUT_S}*1000000)
+    FROM jumps
     """,
     doc="W7 CEP under Structured Streaming (applyInPandasWithState with "
     "event-time timers): emitted bounces are a subset of the batch "
@@ -366,7 +365,7 @@ def streaming_jump_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
                       '%Y-%m-%d %H:%M:%S') AS edt,
              epoch_us(max(ts)) + {SESSION_GAP_S}*1000000 AS end_us,
              count(*) AS n_events,
-             cast(sum(cast(value as decimal(18,2))) as double) AS sv_value
+             {duck_money_sum("value")} AS sv_value
       FROM sessions GROUP BY user_id, sid
     )
     SELECT user_id, stt, edt, n_events, sv_value FROM agg
@@ -395,9 +394,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sv_value"),
+            money_sum("value").alias("sv_value"),
         )
         .select(
             "user_id",
@@ -415,7 +412,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {DUCK_HOPPING_CTES}
     SELECT ws, event_type, count(*) AS pv,
-           cast(sum(cast(value as decimal(18,2))) as double) AS sv
+           {duck_money_sum("value")} AS sv
     FROM w
     GROUP BY 1, 2
     HAVING ws + {HOP_SIZE_S * 1_000_000} <= (SELECT max(te) FROM e)
@@ -441,9 +438,7 @@ def streaming_hopping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("pv"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sv"),
+            money_sum("value").alias("sv"),
         )
         .select(
             F.unix_micros(F.col("window.start").cast("timestamp")).alias(
@@ -727,7 +722,7 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH agg AS (
       SELECT {_STT}, {_EDT}, event_type,
              count(*) AS pv_ct,
-             cast(sum(cast(value as decimal(18,2))) as double) AS dur_sum
+             {duck_money_sum("value")} AS dur_sum
       FROM events GROUP BY 1, 2, 3
     ), closed AS (
       SELECT * FROM agg WHERE {_duck_wm_closed("events")}
@@ -778,9 +773,9 @@ def streaming_dws_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_gmv_dashboard",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m-%d') AS dt,
-           cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS gmv,
+           {duck_money_sum("o_totalprice")} AS gmv,
            count(*) AS order_ct
     FROM orders
     WHERE o_orderdate >= timestamp '1997-03-01'
@@ -814,9 +809,7 @@ def streaming_gmv_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("dt")
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("gmv"),
+            money_sum("o_totalprice").alias("gmv"),
             F.count(F.lit(1)).alias("order_ct"),
         )
     )
@@ -825,7 +818,7 @@ def streaming_gmv_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_gmv_update_log",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT strftime(o_orderdate, '%Y-%m-%d') AS dt,
              o_orderkey % 4 AS b,
@@ -835,7 +828,7 @@ def streaming_gmv_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND o_orderdate < timestamp '1997-04-01'
     ), per_batch AS (
       SELECT dt, b,
-             sum(cast(o_totalprice as decimal(18,2))) AS gmv_b,
+             sum({duck_money("o_totalprice")}) AS gmv_b,
              count(*) AS ct_b
       FROM o GROUP BY dt, b
     )
@@ -911,9 +904,7 @@ def streaming_gmv_update_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("dt")
         )
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("gmv"),
+            money_sum("o_totalprice").alias("gmv"),
             F.count(F.lit(1)).alias("order_ct"),
         )
     )

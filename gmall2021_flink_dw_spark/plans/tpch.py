@@ -6,9 +6,9 @@ partial/final hash aggregation, total-order top-N — i.e. the Spark
 realization of the reference's aggregate layer (SURVEY §2.5, §2.7)
 at TPC-H shape so the benchmark is comparable and scale-meaningful.
 
-Determinism: money math in DECIMAL(18,2) then cast DOUBLE on both
-engines; averages derived from the exact decimal sums with one final
-double division + round(6); top-N tie-broken by key.
+Determinism: money math by the rules of functions/money.py; averages
+derived from the exact decimal sums with one final double division +
+round(6); top-N tie-broken by key.
 """
 
 from __future__ import annotations
@@ -16,44 +16,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.money import (
+    RATE_SUM,
+    disc_price,
+    disc_price_sum,
+    duck_disc_price,
+    duck_disc_price_sum,
+    duck_money,
+    duck_money_sum,
+    duck_rate,
+    money,
+    money_sum,
+    rate,
+)
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
-
-
-def _dec(c, scale: str = "decimal(18,2)"):
-    return (F.col(c) if isinstance(c, str) else c).cast(scale)
 
 
 def _avg6(sum_dec_col, cnt_col):
     return F.round(sum_dec_col.cast("double") / cnt_col, 6)
 
 
-def _disc_price():
-    """extendedprice*(1-discount) in exact decimal: inputs cast to decimal
-    ONCE, all arithmetic decimal (no double rounding anywhere), matching
-    the oracle expression term for term."""
-    return _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount", "decimal(4,2)"))
-
-
-def _charge():
-    return (
-        _dec("l_extendedprice")
-        * (F.lit(1) - _dec("l_discount", "decimal(4,2)"))
-        * (F.lit(1) + _dec("l_tax", "decimal(4,2)"))
-    )
-
-
 @register(
     "tpch_q1",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           cast(sum(cast(l_quantity as decimal(18,2))) as double) AS sum_qty,
-           cast(sum(cast(l_extendedprice as decimal(18,2))) as double) AS sum_base_price,
-           cast(sum(cast(l_extendedprice as decimal(18,2))*(1-cast(l_discount as decimal(4,2)))) as double) AS sum_disc_price,
-           cast(sum(cast(l_extendedprice as decimal(18,2))*(1-cast(l_discount as decimal(4,2)))*(1+cast(l_tax as decimal(4,2)))) as double) AS sum_charge,
-           round(cast(sum(cast(l_quantity as decimal(18,2))) as double)/count(*), 6) AS avg_qty,
-           round(cast(sum(cast(l_extendedprice as decimal(18,2))) as double)/count(*), 6) AS avg_price,
-           round(cast(sum(cast(l_discount as decimal(18,4))) as double)/count(*), 6) AS avg_disc,
+           {duck_money_sum("l_quantity")} AS sum_qty,
+           {duck_money_sum("l_extendedprice")} AS sum_base_price,
+           {duck_disc_price_sum()} AS sum_disc_price,
+           cast(sum({duck_disc_price()} * (1 + {duck_rate("l_tax")})) as double) AS sum_charge,
+           round({duck_money_sum("l_quantity")}/count(*), 6) AS avg_qty,
+           round({duck_money_sum("l_extendedprice")}/count(*), 6) AS avg_price,
+           round(cast(sum(cast(l_discount as {RATE_SUM})) as double)/count(*), 6) AS avg_disc,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= timestamp '1998-09-02'
@@ -70,13 +64,15 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(_disc_price()).cast("double").alias("sum_disc_price"),
-            F.sum(_charge()).cast("double").alias("sum_charge"),
-            _avg6(F.sum(_dec("l_quantity")), cnt).alias("avg_qty"),
-            _avg6(F.sum(_dec("l_extendedprice")), cnt).alias("avg_price"),
-            _avg6(F.sum(_dec("l_discount", "decimal(18,4)")), cnt).alias("avg_disc"),
+            money_sum("l_quantity").alias("sum_qty"),
+            money_sum("l_extendedprice").alias("sum_base_price"),
+            disc_price_sum().alias("sum_disc_price"),
+            F.sum(disc_price() * (F.lit(1) + rate("l_tax")))
+            .cast("double")
+            .alias("sum_charge"),
+            _avg6(F.sum(money("l_quantity")), cnt).alias("avg_qty"),
+            _avg6(F.sum(money("l_extendedprice")), cnt).alias("avg_price"),
+            _avg6(F.sum(F.col("l_discount").cast(RATE_SUM)), cnt).alias("avg_disc"),
             cnt.alias("count_order"),
         )
     )
@@ -84,9 +80,9 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q3",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           cast(sum(cast(l_extendedprice as decimal(18,2))*(1-cast(l_discount as decimal(4,2)))) as double) AS revenue,
+           {duck_disc_price_sum()} AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
            o_orderpriority
     FROM customer JOIN orders ON c_custkey = o_custkey
@@ -117,7 +113,7 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            F.sum(_disc_price()).cast("double").alias("revenue")
+            disc_price_sum().alias("revenue")
         )
         .select(
             "l_orderkey",
@@ -132,9 +128,9 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q5",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           cast(sum(cast(l_extendedprice as decimal(18,2))*(1-cast(l_discount as decimal(4,2)))) as double) AS revenue
+           {duck_disc_price_sum()} AS revenue
     FROM customer JOIN orders   ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
                   JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -170,15 +166,16 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
-            F.sum(_disc_price()).cast("double").alias("revenue")
+            disc_price_sum().alias("revenue")
         )
     )
 
 
 @register(
     "tpch_q6",
-    oracle="""
-    SELECT cast(sum(cast(l_extendedprice as decimal(18,2))*cast(l_discount as decimal(4,2))) as double) AS revenue,
+    oracle=f"""
+    SELECT cast(sum({duck_money("l_extendedprice")}*{duck_rate("l_discount")}) as double)
+             AS revenue,
            count(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= timestamp '1996-01-01'
@@ -201,7 +198,7 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(_dec("l_extendedprice") * _dec("l_discount", "decimal(4,2)"))
+            F.sum(money("l_extendedprice") * rate("l_discount"))
             .cast("double")
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_rows"),

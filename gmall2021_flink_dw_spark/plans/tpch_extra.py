@@ -12,10 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.money import (
+    disc_price,
+    disc_price_sum,
+    duck_disc_price,
+    duck_disc_price_sum,
+    duck_money,
+    duck_money_sum,
+    money,
+    money_sum,
+)
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
-
-_DISC = "cast(l_extendedprice as decimal(18,2)) * (1 - cast(l_discount as decimal(4,2)))"
 
 
 def _ts(s: str):
@@ -125,9 +133,9 @@ def tpch_q12_caseagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q14_promo",
     oracle=f"""
     SELECT round(
-      100.0 * cast(sum(CASE WHEN p_type = 'PROMO' THEN {_DISC}
-                            ELSE cast(0 as decimal(18,2)) END) as double)
-      / cast(sum({_DISC}) as double), 6) AS promo_revenue_pct
+      100.0 * cast(sum(CASE WHEN p_type = 'PROMO' THEN {duck_disc_price()}
+                            ELSE {duck_money("0")} END) as double)
+      / {duck_disc_price_sum()}, 6) AS promo_revenue_pct
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= timestamp '1996-09-01'
       AND l_shipdate <  timestamp '1996-10-01'
@@ -142,10 +150,8 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < _ts("1996-10-01"))
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    disc = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
-    zero = F.lit(0).cast("decimal(18,2)")
+    disc = disc_price()
+    zero = money(F.lit(0))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .agg(
@@ -154,7 +160,7 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.sum(F.when(F.col("p_type") == "PROMO", disc).otherwise(zero)).cast(
                     "double"
                 )
-                / F.sum(disc).cast("double"),
+                / disc_price_sum(),
                 6,
             ).alias("promo_revenue_pct")
         )
@@ -166,8 +172,8 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT c_name, o_orderkey,
            strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-           cast(cast(o_totalprice as decimal(18,2)) as double) AS o_totalprice,
-           cast(sum(cast(l_quantity as decimal(18,2))) as double) AS total_qty
+           cast({duck_money("o_totalprice")} as double) AS o_totalprice,
+           {duck_money_sum("l_quantity")} AS total_qty
     FROM customer JOIN orders ON c_custkey = o_custkey
                   JOIN lineitem ON o_orderkey = l_orderkey
     WHERE o_orderkey IN (
@@ -198,16 +204,12 @@ def tpch_q18_bigorders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
         .groupBy("c_name", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_qty")
-        )
+        .agg(money_sum("l_quantity").alias("total_qty"))
         .select(
             "c_name",
             "o_orderkey",
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            F.col("o_totalprice").cast("decimal(18,2)").cast("double").alias("o_totalprice"),
+            money("o_totalprice").cast("double").alias("o_totalprice"),
             "total_qty",
         )
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -218,7 +220,7 @@ def tpch_q18_bigorders(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tpch_q19_disjunct",
     oracle=f"""
-    SELECT cast(sum({_DISC}) as double) AS revenue, count(*) AS n_rows
+    SELECT {duck_disc_price_sum()} AS revenue, count(*) AS n_rows
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#15' AND l_quantity BETWEEN 1 AND 11 AND p_size <= 5)
        OR (p_brand = 'Brand#23' AND l_quantity BETWEEN 10 AND 20 AND p_size <= 10)
@@ -238,11 +240,8 @@ def tpch_q19_disjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((F.col("p_brand") == "Brand#23") & q.between(10, 20) & (F.col("p_size") <= 10))
         | ((F.col("p_brand") == "Brand#19") & q.between(20, 30) & (F.col("p_size") <= 15))
     )
-    disc = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
     return j.filter(cond).agg(
-        F.sum(disc).cast("double").alias("revenue"),
+        disc_price_sum().alias("revenue"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -252,10 +251,10 @@ def tpch_q19_disjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT p_brand, p_partkey, order_amount, rnk FROM (
       SELECT p_brand, p_partkey,
-             cast(sum({_DISC}) as double) AS order_amount,
+             {duck_disc_price_sum()} AS order_amount,
              row_number() OVER (
                PARTITION BY p_brand
-               ORDER BY cast(sum({_DISC}) as double) DESC, p_partkey) AS rnk
+               ORDER BY {duck_disc_price_sum()} DESC, p_partkey) AS rnk
       FROM lineitem JOIN part ON l_partkey = p_partkey
       GROUP BY p_brand, p_partkey
     ) WHERE rnk <= 3
@@ -267,13 +266,10 @@ def tpch_q19_disjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ads_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    disc = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
     agg = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_partkey")
-        .agg(F.sum(disc).cast("double").alias("order_amount"))
+        .agg(disc_price_sum().alias("order_amount"))
     )
     w = Window.partitionBy("p_brand").orderBy(
         F.desc("order_amount"), F.asc("p_partkey")
@@ -287,11 +283,11 @@ def ads_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dws_sales_rollup",
-    oracle="""
+    oracle=f"""
     SELECT coalesce(r_name, 'ALL') AS region_name,
            coalesce(CASE WHEN r_name IS NULL THEN NULL ELSE n_name END, 'ALL')
              AS nation_name,
-           cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS order_amount,
+           {duck_money_sum("o_totalprice")} AS order_amount,
            count(*) AS order_ct
     FROM orders JOIN customer ON o_custkey = c_custkey
                 JOIN nation ON c_nationkey = n_nationkey
@@ -315,9 +311,7 @@ def dws_sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.rollup("r_name", "n_name")
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("order_amount"),
+            money_sum("o_totalprice").alias("order_amount"),
             F.count(F.lit(1)).alias("order_ct"),
         )
         .select(
@@ -364,13 +358,12 @@ def ads_order_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dws_sales_cube",
-    oracle="""
+    oracle=f"""
     SELECT coalesce(r_name, 'ALL') AS region_name,
            coalesce(n_name, 'ALL') AS nation_name,
            grouping(r_name) AS g_region,
            grouping(n_name) AS g_nation,
-           cast(sum(cast(o_totalprice as decimal(18,2))) as double)
-             AS order_amount,
+           {duck_money_sum("o_totalprice")} AS order_amount,
            count(*) AS order_ct
     FROM orders JOIN customer ON o_custkey = c_custkey
                 JOIN nation   ON c_nationkey = n_nationkey
@@ -398,9 +391,7 @@ def dws_sales_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping("r_name").cast("bigint").alias("g_region"),
             F.grouping("n_name").cast("bigint").alias("g_nation"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("order_amount"),
+            money_sum("o_totalprice").alias("order_amount"),
             F.count(F.lit(1)).alias("order_ct"),
         )
         .select(

@@ -9,8 +9,8 @@ global-scalar-threshold HAVING (Q11), outer-join count distribution
 (Q13), correlated-AVG filter (Q17), EXISTS/NOT-EXISTS multi-correlation
 (Q21), and anti-join + scalar-avg gate (Q22).
 
-Float-parity rules (registry.py docstring): money sums in DECIMAL(18,2)
-then cast DOUBLE; averages only over integral doubles (exact in IEEE
+Float-parity rules (registry.py docstring): money sums by the rules of
+functions/money.py; averages only over integral doubles (exact in IEEE
 regardless of order); scalar-threshold comparisons are done multiply-
 style in decimal (``x * n > total``) instead of dividing, so no engine
 ever rounds before the comparison.
@@ -21,27 +21,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.money import (
+    disc_price,
+    duck_disc_price,
+    duck_money,
+    duck_money_sum,
+    money,
+    money_sum,
+)
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
-
-_DISC = "cast(l_extendedprice as decimal(18,2)) * (1 - cast(l_discount as decimal(4,2)))"
 
 
 def _ts(s: str):
     return F.lit(f"{s} 00:00:00").cast("timestamp_ntz")
 
 
-def _disc_expr():
-    return F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(4,2)")
-    )
-
-
 # lineitem-derived stand-in for partsupp: the cheapest observed sale
 # price per (part, supplier) is the "supply cost".
-_SUPPLY_SQL = """
+_SUPPLY_SQL = f"""
   SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-         min(cast(l_extendedprice as decimal(18,2))) AS ps_supplycost
+         min({duck_money("l_extendedprice")}) AS ps_supplycost
   FROM lineitem GROUP BY 1, 2
 """
 
@@ -51,7 +51,7 @@ def _supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy(
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
-    ).agg(F.min(F.col("l_extendedprice").cast("decimal(18,2)")).alias("ps_supplycost"))
+    ).agg(F.min(money("l_extendedprice")).alias("ps_supplycost"))
 
 
 @register(
@@ -99,9 +99,7 @@ def tpch_q2_mincost(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_type",
         )
         .agg(
-            F.min(F.col("l_extendedprice").cast("decimal(18,2)")).alias(
-                "ps_supplycost"
-            )
+            F.min(money("l_extendedprice")).alias("ps_supplycost")
         )
     )
     w = Window.partitionBy("ps_partkey")
@@ -126,7 +124,7 @@ def tpch_q2_mincost(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH flat AS (
       SELECT strftime(l_shipdate, '%Y') AS o_year,
-             {_DISC} AS volume,
+             {duck_disc_price()} AS volume,
              n2.n_name AS supp_nation
       FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
@@ -143,7 +141,7 @@ def tpch_q2_mincost(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT o_year,
            cast(sum(CASE WHEN supp_nation = 'NATION_9' THEN volume
-                         ELSE cast(0 as decimal(18,2)) END) as double)
+                         ELSE {duck_money("0")} END) as double)
              / cast(sum(volume) as double) AS mkt_share
     FROM flat GROUP BY o_year
     """,
@@ -184,11 +182,11 @@ def tpch_q8_marketshare(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nkey"))
         .select(
             F.date_format("l_shipdate", "yyyy").alias("o_year"),
-            _disc_expr().alias("volume"),
+            disc_price().alias("volume"),
             "supp_nation",
         )
     )
-    zero = F.lit(0).cast("decimal(18,2)")
+    zero = money(F.lit(0))
     return flat.groupBy("o_year").agg(
         (
             F.sum(
@@ -205,9 +203,9 @@ def tpch_q8_marketshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q9_profit",
     oracle=f"""
     SELECT n_name AS nation, strftime(l_shipdate, '%Y') AS o_year,
-           cast(sum({_DISC}
-                    - cast(p_retailprice as decimal(18,2))
-                      * cast(l_quantity as decimal(18,2))) as double) AS sum_profit
+           cast(sum({duck_disc_price()}
+                    - {duck_money("p_retailprice")}
+                      * {duck_money("l_quantity")}) as double) AS sum_profit
     FROM lineitem
       JOIN part     ON l_partkey = p_partkey
       JOIN supplier ON l_suppkey = s_suppkey
@@ -225,10 +223,7 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
-    profit = _disc_expr() - (
-        F.col("p_retailprice").cast("decimal(18,2)")
-        * F.col("l_quantity").cast("decimal(18,2)")
-    )
+    profit = disc_price() - money("p_retailprice") * money("l_quantity")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -246,7 +241,7 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pv AS (
       SELECT l_partkey,
-             sum({_DISC}) AS value
+             sum({duck_disc_price()}) AS value
       FROM lineitem GROUP BY l_partkey
     )
     SELECT l_partkey, cast(value as double) AS value
@@ -262,7 +257,7 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tpch_q11_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    pv = li.groupBy("l_partkey").agg(F.sum(_disc_expr()).alias("value"))
+    pv = li.groupBy("l_partkey").agg(F.sum(disc_price()).alias("value"))
     total = pv.agg(F.sum("value").alias("__total"))
     return (
         pv.join(F.broadcast(total))
@@ -307,12 +302,12 @@ def tpch_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q17_smallqty",
-    oracle="""
+    oracle=f"""
     WITH pq AS (
       SELECT l_partkey AS pq_partkey, avg(l_quantity) AS avg_qty
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT cast(cast(sum(cast(l_extendedprice as decimal(18,2))) as double) / 7.0
+    SELECT cast({duck_money_sum("l_extendedprice")} / 7.0
            as double) AS avg_yearly
     FROM lineitem JOIN part ON l_partkey = p_partkey
                   JOIN pq ON l_partkey = pq_partkey
@@ -335,10 +330,7 @@ def tpch_q17_smallqty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(pq, li.l_partkey == pq.pq_partkey)
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-                / F.lit(7.0)
-            )
+            (money_sum("l_extendedprice") / F.lit(7.0))
             .cast("double")
             .alias("avg_yearly")
         )
@@ -403,15 +395,15 @@ def tpch_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q22_inactive",
-    oracle="""
+    oracle=f"""
     WITH pos AS (
-      SELECT count(*) AS n, sum(cast(c_acctbal as decimal(18,2))) AS total
+      SELECT count(*) AS n, sum({duck_money("c_acctbal")}) AS total
       FROM customer WHERE c_acctbal > 0.0
     )
     SELECT c_mktsegment, count(*) AS numcust,
-           cast(sum(cast(c_acctbal as decimal(18,2))) as double) AS totacctbal
+           {duck_money_sum("c_acctbal")} AS totacctbal
     FROM customer, pos
-    WHERE cast(c_acctbal as decimal(18,2)) * n > total
+    WHERE {duck_money("c_acctbal")} * n > total
       AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                       AND o_orderdate >= timestamp '2000-01-01')
     GROUP BY c_mktsegment
@@ -430,18 +422,16 @@ def tpch_q22_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pos = cust.filter(F.col("c_acctbal") > 0.0).agg(
         F.count(F.lit(1)).alias("__n"),
-        F.sum(F.col("c_acctbal").cast("decimal(18,2)")).alias("__total"),
+        F.sum(money("c_acctbal")).alias("__total"),
     )
     return (
         cust.join(F.broadcast(pos))
-        .filter(F.col("c_acctbal").cast("decimal(18,2)") * F.col("__n") > F.col("__total"))
+        .filter(money("c_acctbal") * F.col("__n") > F.col("__total"))
         .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("totacctbal"),
+            money_sum("c_acctbal").alias("totacctbal"),
         )
     )
 
@@ -452,7 +442,7 @@ def tpch_q22_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH supply AS ({_SUPPLY_SQL}),
     shipped AS (
       SELECT l_partkey, l_suppkey,
-             sum(cast(l_quantity as decimal(18,2))) AS qty
+             sum({duck_money("l_quantity")}) AS qty
       FROM lineitem
       WHERE l_shipdate >= timestamp '1996-01-01'
         AND l_shipdate <  timestamp '1997-01-01'
@@ -485,7 +475,7 @@ def tpch_q20_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < _ts("1997-01-01"))
         )
         .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty"))
+        .agg(F.sum(money("l_quantity")).alias("qty"))
         .filter(F.col("qty") > 50)
     )
     qualifying = (

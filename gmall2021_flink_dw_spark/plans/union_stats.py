@@ -20,13 +20,14 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.money import duck_money, money
 from gmall2021_flink_dw_spark.registry import register
 from gmall2021_flink_dw_spark.sources.batch import load_table
 
 
 @register(
     "dws_event_measures",
-    oracle="""
+    oracle=f"""
     WITH unioned AS (
       SELECT user_id,
              CASE WHEN event_type='view' THEN 1 ELSE 0 END AS view_ct,
@@ -35,7 +36,7 @@ from gmall2021_flink_dw_spark.sources.batch import load_table
              CASE WHEN event_type='purchase' THEN 1 ELSE 0 END AS purchase_ct,
              CASE WHEN event_type='error' THEN 1 ELSE 0 END AS error_ct,
              CASE WHEN event_type='purchase'
-                  THEN cast(value as decimal(18,2)) ELSE cast(0 as decimal(18,2))
+                  THEN {duck_money("value")} ELSE {duck_money("0")}
              END AS purchase_amount,
              CASE WHEN event_type='purchase' AND value >= 100 THEN 1 ELSE 0 END
                AS big_purchase_ct
@@ -59,7 +60,7 @@ from gmall2021_flink_dw_spark.sources.batch import load_table
 )
 def dws_event_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    zero_money = F.lit(0).cast("decimal(18,2)")
+    zero_money = money(F.lit(0))
 
     def proj(etype: str, **measures):
         base = {
@@ -83,7 +84,7 @@ def dws_event_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
         proj(
             "purchase",
             purchase_ct=F.lit(1),
-            purchase_amount=F.col("value").cast("decimal(18,2)"),
+            purchase_amount=money("value"),
             big_purchase_ct=F.when(F.col("value") >= 100, 1).otherwise(0),
         ),
         proj("error", error_ct=F.lit(1)),

@@ -10,7 +10,8 @@ same check.
 
 Determinism rules (so value-hashes match across engines):
 - money/double aggregates are computed in DECIMAL(18,2) (exact, order
-  independent) then cast to DOUBLE in BOTH engines;
+  independent) then cast to DOUBLE in BOTH engines; functions/money.py
+  holds the money types and each rule as a Spark/DuckDB pair;
 - timestamps in outputs are formatted 'yyyy-MM-dd HH:mm:ss' strings;
 - every computed column is explicitly aliased identically on both sides;
 - ORDER BY ... LIMIT queries use a total order (tie-broken by key).

@@ -135,7 +135,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 SPREAD_BYTES_PER_PART = 1 << 20
 
 
-def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Raise the parallelism of a tiny compute-heavy scan (guide §2.5
     "input skew": one unsplittable file -> repartition immediately
     after the read).
@@ -157,7 +157,7 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
         )
     except OSError:  # non-local or vanished input: leave the scan as is
         return df
-    target = min(sc.defaultParallelism * factor, total // SPREAD_BYTES_PER_PART)
+    target = min(sc.defaultParallelism, total // SPREAD_BYTES_PER_PART)
     if target > 1 and df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

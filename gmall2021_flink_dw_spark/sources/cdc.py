@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall2021_flink_dw_spark.functions.money import duck_money, money
 from gmall2021_flink_dw_spark.sources.batch import load_table
 
 # Shared derivation constants (mirrored in the oracle SQL).
@@ -40,9 +41,9 @@ def orders_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("insert").alias("op"),
         F.col("o_orderkey").alias("id"),
         F.lit(None).cast("string").alias("before_status"),
-        F.lit(None).cast("decimal(18,2)").alias("before_total"),
+        money(F.lit(None)).alias("before_total"),
         F.col("o_orderstatus").alias("after_status"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("after_total"),
+        money("o_totalprice").alias("after_total"),
         F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("ts_us"),
     )
     upd = (
@@ -53,9 +54,9 @@ def orders_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("update").alias("op"),
             F.col("o_orderkey").alias("id"),
             F.col("o_orderstatus").alias("before_status"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("before_total"),
+            money("o_totalprice").alias("before_total"),
             F.lit("U").alias("after_status"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("after_total"),
+            money("o_totalprice").alias("after_total"),
             (
                 F.unix_micros(F.col("o_orderdate").cast("timestamp"))
                 + 86400 * 1_000_000
@@ -70,9 +71,9 @@ def orders_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("delete").alias("op"),
             F.col("o_orderkey").alias("id"),
             F.col("o_orderstatus").alias("before_status"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("before_total"),
+            money("o_totalprice").alias("before_total"),
             F.lit(None).cast("string").alias("after_status"),
-            F.lit(None).cast("decimal(18,2)").alias("after_total"),
+            money(F.lit(None)).alias("after_total"),
             (
                 F.unix_micros(F.col("o_orderdate").cast("timestamp"))
                 + 2 * 86400 * 1_000_000
@@ -82,24 +83,24 @@ def orders_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(upd).unionByName(dele)
 
 
-ORDERS_CHANGELOG_ORACLE = """
+ORDERS_CHANGELOG_ORACLE = f"""
     SELECT 'gmall' AS database, 'order_info' AS table_name, 'insert' AS op,
            o_orderkey AS id,
            CAST(NULL AS VARCHAR) AS before_status,
-           CAST(NULL AS DECIMAL(18,2)) AS before_total,
+           {duck_money("NULL")} AS before_total,
            o_orderstatus AS after_status,
-           cast(o_totalprice as decimal(18,2)) AS after_total,
+           {duck_money("o_totalprice")} AS after_total,
            epoch_us(o_orderdate) AS ts_us
     FROM orders
     UNION ALL
     SELECT 'gmall', 'order_info', 'update', o_orderkey,
-           o_orderstatus, cast(o_totalprice as decimal(18,2)), 'U',
-           cast(o_totalprice as decimal(18,2)),
+           o_orderstatus, {duck_money("o_totalprice")}, 'U',
+           {duck_money("o_totalprice")},
            epoch_us(o_orderdate) + 86400000000
     FROM orders WHERE o_orderkey % 10 IN (1,2)
     UNION ALL
     SELECT 'gmall', 'order_info', 'delete', o_orderkey,
-           o_orderstatus, cast(o_totalprice as decimal(18,2)), NULL, NULL,
+           o_orderstatus, {duck_money("o_totalprice")}, NULL, NULL,
            epoch_us(o_orderdate) + 172800000000
     FROM orders WHERE o_orderkey % 10 = 0
 """

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from gmall2021_flink_dw_spark.cache import tracked_tempdir
+from gmall2021_flink_dw_spark.functions.money import money_sum
 from gmall2021_flink_dw_spark.functions.windows import FMT
 from gmall2021_flink_dw_spark.scratch import stream_scratch_base
 
@@ -38,7 +39,7 @@ def visitor_stats_transform(df: DataFrame, window_s: int = 3600) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("pv_ct"),
             F.approx_count_distinct("user_id").alias("uv_ct_approx"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("dur_sum"),
+            money_sum("value").alias("dur_sum"),
         )
         .select(
             F.date_format("window.start", FMT).alias("stt"),
@@ -67,7 +68,7 @@ def product_stats_transform(df: DataFrame, window_s: int = 3600) -> DataFrame:
         .agg(
             F.size(F.collect_set("user_id")).alias("user_ct"),
             F.count(F.lit(1)).alias("pv_ct"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("amount"),
+            money_sum("value").alias("amount"),
         )
         .select(
             F.date_format("window.start", FMT).alias("stt"),

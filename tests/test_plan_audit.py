@@ -23,8 +23,9 @@ compile (not execute) the physical plan at sf0.001 and assert:
    Python entry points anywhere.
 5. The package is what the engine runs: no top-level package function
    or class is reached from tests/ alone.
-6. Each window constant is written once: no plan or operator spells
-   out the session gap, the jump timeout or the hopping size again.
+6. Each window constant and money type is written once: no plan,
+   operator, source or streaming module spells out the session gap, the
+   jump timeout, the hopping size or a DECIMAL money type again.
 """
 
 from __future__ import annotations
@@ -316,22 +317,25 @@ def test_package_defs_are_reached_outside_tests():
 
 
 # The session gap (1800 s), the jump timeout (600 s) and the hopping
-# size (1800 s) written out in micros, or as a default argument.
-_BARE_WINDOW_LITERAL = re.compile(
+# size (1800 s) written out in micros, or as a default argument; and the
+# money types DECIMAL(18,2), DECIMAL(4,2) and DECIMAL(18,4).
+_BARE_SHARED_LITERAL = re.compile(
     r"\b(?:1800|600)\s*\*\s*1_?000_?000\b|\b1800000000\b|\bint = (?:1800|600)\b"
+    r"|decimal\(\s*(?:18\s*,\s*[24]|4\s*,\s*2)\s*\)",
+    re.IGNORECASE,
 )
 
 
 def test_window_constants_are_written_once():
-    """Plans and operators take streaming/stateful.py's SESSION_GAP_S
-    and JUMP_TIMEOUT_S and functions/windows.py's HOP_SIZE_S and
-    HOP_SLIDE_S, so an oracle and its query cannot drift apart on a
-    window bound."""
+    """Plans, operators, sources and streaming take streaming/stateful.py's
+    SESSION_GAP_S and JUMP_TIMEOUT_S, functions/windows.py's HOP_SIZE_S
+    and HOP_SLIDE_S and functions/money.py's money types, so an oracle
+    and its query cannot drift apart on a window bound or a money cast."""
     hits = [
         f"{f.relative_to(_ROOT)}:{i}: {line.strip()}"
-        for sub in ("plans", "operators")
+        for sub in ("plans", "operators", "sources", "streaming")
         for f in sorted((_PKG / sub).rglob("*.py"))
         for i, line in enumerate(f.read_text(encoding="utf-8").splitlines(), 1)
-        if _BARE_WINDOW_LITERAL.search(line)
+        if _BARE_SHARED_LITERAL.search(line)
     ]
-    assert not hits, f"window constants written out again: {hits}"
+    assert not hits, f"shared constants written out again: {hits}"

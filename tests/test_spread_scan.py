@@ -37,14 +37,17 @@ def test_spread_scan_falls_back_when_input_is_unsizable(
     the scan as it is, where it would otherwise be spread."""
     df = _one_file_scan(spark, str(tmp_path / "t"))
     monkeypatch.setattr(batch, "SPREAD_BYTES_PER_PART", 4 << 10)
-    # factor=2: at least 2 partitions even on a 1-core session
-    assert spread_scan(df, factor=2) is not df
+    # a width of 2 spreads the one-file scan even on a 1-core session
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 2)
+    )
+    assert spread_scan(df) is not df
 
     def vanished(path):
         raise FileNotFoundError(path)
 
     monkeypatch.setattr(os.path, "getsize", vanished)
-    assert spread_scan(df, factor=2) is df
+    assert spread_scan(df) is df
 
 
 def test_spread_scan_propagates_sizing_bugs(spark, tmp_path, monkeypatch):

@@ -7,8 +7,7 @@ oracle. Rates (discount, tax) are DECIMAL(4,2); tpch Q1 averages the
 discount from a DECIMAL(18,4) sum.
 
 Each rule is a pair: a Spark Column builder and its DuckDB SQL twin.
-Columns are named as strings; the discounted price takes the lineitem
-alias as a `prefix` (``"l."``) where its columns are qualified.
+Columns are named as strings.
 """
 
 from __future__ import annotations
@@ -35,10 +34,10 @@ def money_sum(c: str) -> Column:
     return F.sum(money(c)).cast("double")
 
 
-def disc_price(prefix: str = "") -> Column:
+def disc_price() -> Column:
     """extendedprice * (1 - discount), all decimal: inputs cast once,
     no double rounding anywhere."""
-    return money(f"{prefix}l_extendedprice") * (F.lit(1) - rate(f"{prefix}l_discount"))
+    return money("l_extendedprice") * (F.lit(1) - rate("l_discount"))
 
 
 def disc_price_sum() -> Column:
@@ -58,9 +57,8 @@ def duck_money_sum(c: str) -> str:
     return f"cast(sum({duck_money(c)}) as double)"
 
 
-def duck_disc_price(prefix: str = "") -> str:
-    price = duck_money(f"{prefix}l_extendedprice")
-    return f"{price} * (1 - {duck_rate(f'{prefix}l_discount')})"
+def duck_disc_price() -> str:
+    return f"{duck_money('l_extendedprice')} * (1 - {duck_rate('l_discount')})"
 
 
 def duck_disc_price_sum() -> str:

@@ -36,14 +36,17 @@ def duck_window_bounds(ts_col: str, seconds: int) -> tuple[str, str]:
     )
 
 
+# Per user in (ts, event_id) order: the ordering half of the session rule.
+_DUCK_USER_W = "OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+
+
 def duck_is_entry(gap_s: int) -> str:
     """DuckDB 1/0 flag of the session-entry rule over `events`: an event
     opens a session when it is the user's first or comes MORE than
     `gap_s` seconds after the previous one. Spark merges an event exactly
     one gap later into the open session (measured on 4.1 in batch and in
-    a memory-sink stream). The SELECT must define
-    `WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)`."""
-    prev_us = "lag(epoch_us(ts)) OVER w"
+    a memory-sink stream)."""
+    prev_us = f"lag(epoch_us(ts)) {_DUCK_USER_W}"
     return (
         f"CASE WHEN {prev_us} IS NULL OR epoch_us(ts) - {prev_us} > {gap_s}*1000000 "
         "THEN 1 ELSE 0 END"
@@ -58,7 +61,6 @@ def duck_sessions_ctes(gap_s: int) -> str:
     return f"""marked AS (
       SELECT user_id, ts, event_id, value, {duck_is_entry(gap_s)} AS is_entry
       FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), sessions AS (
       SELECT user_id, ts, value,
              sum(is_entry) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -75,9 +77,8 @@ def duck_jumps_cte(gap_s: int, timeout_s: int) -> str:
       SELECT user_id, event_id, ts_us FROM (
         SELECT user_id, event_id, epoch_us(ts) AS ts_us,
                {duck_is_entry(gap_s)} AS is_entry,
-               lead(epoch_us(ts)) OVER w AS next_us
+               lead(epoch_us(ts)) {_DUCK_USER_W} AS next_us
         FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       )
       WHERE is_entry = 1
         AND (next_us IS NULL OR next_us - ts_us > {timeout_s}*1000000)

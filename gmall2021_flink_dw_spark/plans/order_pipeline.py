@@ -32,7 +32,7 @@ from gmall2021_flink_dw_spark.sources.batch import load_table
     oracle=f"""
     SELECT o.o_orderkey, l.l_linenumber, l.l_partkey,
            cast(l.l_quantity as bigint) AS quantity,
-           cast({duck_disc_price("l.")} as double) AS split_amount,
+           cast({duck_disc_price()} as double) AS split_amount,
            strftime(o.o_orderdate, '%Y-%m-%d') AS create_date,
            cast(strftime(l.l_shipdate, '%H') as int) AS create_hour,
            o.o_orderstatus,
@@ -84,7 +84,7 @@ def dwm_order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.l_linenumber").alias("l_linenumber"),
         F.col("l.l_partkey").alias("l_partkey"),
         F.col("l.l_quantity").cast("bigint").alias("quantity"),
-        disc_price("l.").cast("double").alias("split_amount"),
+        disc_price().cast("double").alias("split_amount"),
         F.date_format("o.o_orderdate", "yyyy-MM-dd").alias("create_date"),
         F.date_format("l.l_shipdate", "HH").cast("int").alias("create_hour"),
         F.col("o.o_orderstatus").alias("o_orderstatus"),

@@ -436,7 +436,6 @@ _CVS_STT, _CVS_EDT = duck_window_bounds("ts", _HOUR)
              {duck_is_entry(SESSION_GAP_S)} AS sv_ct,
              {duck_money("value")} AS dur
       FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), ranked AS (
       SELECT {_CVS_STT}, {_CVS_EDT}, event_type, uv_ct, pv_ct, sv_ct, dur,
              row_number() OVER (

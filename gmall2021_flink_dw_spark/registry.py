@@ -9,7 +9,7 @@ locally, so the pytest suite and the driver's correctness gate are the
 same check.
 
 Determinism rules (so value-hashes match across engines):
-- money/double aggregates are computed in DECIMAL(18,2) (exact, order
+- money/double aggregates are computed in exact decimal (order
   independent) then cast to DOUBLE in BOTH engines; functions/money.py
   holds the money types and each rule as a Spark/DuckDB pair;
 - timestamps in outputs are formatted 'yyyy-MM-dd HH:mm:ss' strings;
